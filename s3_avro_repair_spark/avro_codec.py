@@ -25,7 +25,8 @@ forward to the next sync-marker occurrence. A damaged header is
 unrepairable — the schema is gone.
 
 Everything here runs inside executors (``mapInPandas`` over
-``binaryFile`` rows) — never on the driver, never a whole-directory
+``binaryFile`` rows, the CLI's per-bin tasks, the ``avro_ocf``
+DataSource) — never on the driver, never a whole-directory
 buffer; one file's bytes at a time, exactly the unit the reference
 processed sequentially (``repair-avro.ts:52-71``) but parallelized
 per-task.
@@ -891,6 +892,7 @@ class SalvageResult:
     header_ok: bool
     schema: dict | None = None
     records: list = field(default_factory=list)
+    n_records: int = 0  # salvaged, whether or not ``records`` kept them
     n_blocks_ok: int = 0
     n_blocks_resynced: int = 0  # payload fine, trailing sync damaged
     n_blocks_bad: int = 0
@@ -909,14 +911,14 @@ class SalvageResult:
         return self.header_ok
 
 
-def salvage_ocf(data: bytes) -> SalvageResult:
-    """Block-salvage read: never raises. Decodes every block it can,
-    resyncs on the 16-byte marker after damage, reports the rest."""
-    try:
-        schema, codec, sync, pos = read_header(data)
-    except CorruptHeader as exc:
-        return SalvageResult(header_ok=False, errors=[str(exc)])
-    res = SalvageResult(header_ok=True, schema=schema)
+def salvage_blocks(data: bytes, schema, codec: str, sync: bytes, pos: int):
+    """The salvage walk from the first block at ``pos``: one
+    ``(outcome, records, error)`` per block, never raises. ``outcome``
+    is ``"ok"``, ``"resynced"`` (payload decoded byte-exactly, trailing
+    sync marker damaged — recovered, like avro-tools repair) or
+    ``"bad"`` (no records; the walk scans forward to the next sync
+    marker). Records live one block at a time, so a caller that only
+    counts them holds one block's worth, not the file's."""
     n = len(data)
     while pos < n:
         block_start = pos
@@ -930,23 +932,52 @@ def salvage_ocf(data: bytes) -> SalvageResult:
             payload = _decompress(data[p : p + size], codec)
             recs = _decode_block(payload, schema, count)
         except (CorruptBlock, CorruptHeader, ValueError, OverflowError) as exc:
-            res.n_blocks_bad += 1
-            res.errors.append(f"block@{block_start}: {exc}")
+            yield "bad", [], f"block@{block_start}: {exc}"
             nxt = data.find(sync, block_start + 1)
             if nxt == -1:
-                break
+                return
             pos = nxt + SYNC_SIZE
             continue
-        # Payload decoded byte-exactly; accept even if the trailing sync
-        # marker is damaged (recover-past-bad-sync, like avro-tools repair).
         if data[p + size : p + size + SYNC_SIZE] != sync:
+            yield "resynced", recs, f"block@{block_start}: sync marker damaged"
+        else:
+            yield "ok", recs, ""
+        pos = p + size + SYNC_SIZE
+
+
+def salvage_ocf(data: bytes, keep_records: bool = True) -> SalvageResult:
+    """Block-salvage read: never raises. Decodes every block it can,
+    resyncs on the 16-byte marker after damage, reports the rest.
+    ``keep_records=False`` only counts the salvaged records
+    (``n_records``) — a health check of a 2 GiB container then holds
+    one block's records, not the file's."""
+    try:
+        schema, codec, sync, pos = read_header(data)
+    except CorruptHeader as exc:
+        return SalvageResult(header_ok=False, errors=[str(exc)])
+    res = SalvageResult(header_ok=True, schema=schema)
+    for outcome, recs, error in salvage_blocks(data, schema, codec, sync, pos):
+        if outcome == "bad":
+            res.n_blocks_bad += 1
+        elif outcome == "resynced":
             res.n_blocks_resynced += 1
-            res.errors.append(f"block@{block_start}: sync marker damaged")
         else:
             res.n_blocks_ok += 1
-        res.records.extend(recs)
-        pos = p + size + SYNC_SIZE
+        if error:
+            res.errors.append(error)
+        res.n_records += len(recs)
+        if keep_records:
+            res.records.extend(recs)
     return res
+
+
+def salvaged_records(data: bytes):
+    """Every record :func:`salvage_ocf` would keep, streamed block by
+    block (a repair rewrite feeds this to :func:`write_ocf`). The
+    header must be intact."""
+    schema, codec, sync, pos = read_header(data)
+    for _outcome, recs, _error in salvage_blocks(data, schema, codec, sync, pos):
+        yield from recs
 
 
 def read_ocf(data: bytes) -> tuple[dict, list]:

@@ -76,7 +76,16 @@ def _list_container_files(path: str) -> list[str]:
 
 def _list_container_files_sized(path: str) -> list[tuple[str, int]]:
     """(path, size) pairs — sizes come free with the listing, and are
-    all the split planner needs (no data bytes read at plan time)."""
+    all the split planner needs (no data bytes read at plan time).
+
+    Lists the set Spark's own file index lists for ``binaryFile`` with
+    ``recursiveFileLookup``: a file or directory below ``path`` whose
+    name Spark treats as hidden (:func:`_spark_hidden`) is skipped. The
+    root itself is never filtered, so a tree under a hidden directory
+    (the ``.avro_cache/`` fixtures) still lists. Paths carry ``path``'s
+    scheme and authority, so ``fsio.resolve`` in a task reaches the same
+    filesystem (``s3://bucket/key``, not a bare ``bucket/key`` that
+    would resolve as local)."""
     from .. import fsio
 
     fs, p = fsio.resolve(path)
@@ -85,12 +94,31 @@ def _list_container_files_sized(path: str) -> list[tuple[str, int]]:
     info = fs.get_file_info(p)
     if info.type == pafs.FileType.File:
         return [(path, info.size)]
+    base = p.rstrip("/")
+    at = path.find(base) if base else -1
+    prefix = path[:at] if at > 0 else ""  # "s3://", "file://", "hdfs://nn:8020"
     sel = pafs.FileSelector(p, recursive=True)
     return sorted(
-        (f.path, f.size)
+        (prefix + f.path, f.size)
         for f in fs.get_file_info(sel)
-        if f.type == pafs.FileType.File and f.path.endswith(".avro")
+        if f.type == pafs.FileType.File
+        and f.path.endswith(".avro")
+        and not any(map(_spark_hidden, f.path[len(base) + 1 :].split("/")))
     )
+
+
+def _spark_hidden(name: str) -> bool:
+    """Spark's ``HadoopFSUtils.shouldFilterOutPathName``: names starting
+    with ``_`` (unless they hold ``=``, a partition directory) or ``.``,
+    and in-flight ``._COPYING_`` uploads; ``_metadata`` and
+    ``_common_metadata`` are kept."""
+    exclude = (
+        (name.startswith("_") and "=" not in name)
+        or name.startswith(".")
+        or name.endswith("._COPYING_")
+    )
+    keep = name.startswith("_common_metadata") or name.startswith("_metadata")
+    return exclude and not keep
 
 
 def _pa_type(spark_type):

@@ -18,6 +18,7 @@ from s3_avro_repair_spark.avro_codec import (
     block_spans,
     read_ocf,
     salvage_ocf,
+    salvaged_records,
     write_ocf,
     write_ocf_bytes,
 )
@@ -99,6 +100,25 @@ def test_bad_sync_recovers_all_records(data):
     # payload decoded byte-exactly -> records kept, marker resynced
     assert res.n_blocks_bad == 0 and res.n_blocks_resynced == 1
     assert keyset(res.records) == keyset(RECS)
+
+
+@pytest.mark.parametrize(
+    "inject", [lambda d: d, inject_truncate, inject_flip, inject_bad_sync]
+)
+def test_counting_walk_matches_keeping_walk(data, inject):
+    """One block walker behind every salvage mode: counting keeps no
+    records but reports the same outcome, and the streamed records are
+    exactly the kept ones."""
+    hurt = inject(data)
+    kept = salvage_ocf(hurt)
+    counted = salvage_ocf(hurt, keep_records=False)
+    assert counted.records == []
+    assert counted.n_records == kept.n_records == len(kept.records)
+    assert (counted.n_blocks_ok, counted.n_blocks_resynced, counted.n_blocks_bad) == (
+        kept.n_blocks_ok, kept.n_blocks_resynced, kept.n_blocks_bad
+    )
+    assert counted.errors == kept.errors
+    assert list(salvaged_records(hurt)) == kept.records
 
 
 def test_bad_header_is_unrepairable(data):

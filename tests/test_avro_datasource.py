@@ -13,6 +13,7 @@ from s3_avro_repair_spark.avro_codec import write_ocf_bytes
 from s3_avro_repair_spark.sources.avro_datasource import (
     _field_ddl,
     _list_container_files,
+    _list_container_files_sized,
     mount,
 )
 
@@ -93,6 +94,42 @@ def test_listing_single_file(tmp_path):
     f = os.path.join(d, "part-0.avro")
     assert _list_container_files(f) == [f]
     assert len(_list_container_files(d)) == 1
+
+
+def test_listing_matches_spark_file_index(spark, tmp_path):
+    """The driver-side lister lists what binaryFile lists: hidden and
+    underscore names below the root are skipped (partition directories
+    and _metadata kept), the hidden root itself is not, and the paths
+    keep the input's scheme."""
+    from s3_avro_repair_spark import fsio
+
+    root = tmp_path / ".cache" / "tree"
+    for rel in (
+        "a.avro", "sub/b.avro", "d=1/ok.avro", "_d=2/p.avro",
+        "_metadata/m.avro", "_tmp/x.avro", ".staging/y.avro",
+        "d=1/_z.avro", "d=1/.w.avro", "sub/c.avro._COPYING_", "sub/notes.txt",
+    ):
+        (root / rel).parent.mkdir(parents=True, exist_ok=True)
+        (root / rel).write_bytes(b"x")
+    spark_paths = {
+        fsio.resolve(r.path)[1]
+        for r in spark.read.format("binaryFile")
+        .option("pathGlobFilter", "*.avro")
+        .option("recursiveFileLookup", "true")
+        .load(str(root))
+        .select("path")
+        .collect()
+    }
+    listed = _list_container_files(str(root))
+    assert set(listed) == spark_paths
+    assert spark_paths == {
+        str(root / rel)
+        for rel in ("a.avro", "sub/b.avro", "d=1/ok.avro", "_d=2/p.avro", "_metadata/m.avro")
+    }
+    uri = f"file://{root}"
+    sized = _list_container_files_sized(uri)
+    assert all(p.startswith(f"file://{root}/") and n == 1 for p, n in sized)
+    assert {fsio.resolve(p)[1] for p, _n in sized} == spark_paths
 
 
 def test_write_read_roundtrip_with_nulls(spark, tmp_path):
