@@ -29,7 +29,9 @@ Everything here runs inside executors (``mapInPandas`` over
 DataSource) — never on the driver, never a whole-directory
 buffer; one file's bytes at a time, exactly the unit the reference
 processed sequentially (``repair-avro.ts:52-71``) but parallelized
-per-task.
+per-task. A large container splits further: :func:`salvage_range`
+walks one byte range of it through a bounded :class:`ByteWindow`, and
+the counters of ranges tiling the file sum to the whole-file salvage.
 """
 
 from __future__ import annotations
@@ -38,8 +40,10 @@ import bz2
 import datetime as _dt
 import hashlib
 import io
+import itertools
 import json
 import lzma
+import re
 import struct
 import zlib
 from dataclasses import dataclass, field
@@ -51,6 +55,9 @@ SYNC_SIZE = 16
 # rather than letting a flipped size byte allocate gigabytes.
 MAX_BLOCK_RECORDS = 1 << 30
 MAX_BLOCK_BYTES = 1 << 31
+# Read size of a ByteWindow: a byte-range walk holds about this plus
+# one block.
+_CHUNK = 4 * 1024 * 1024
 
 
 class CorruptHeader(ValueError):
@@ -677,10 +684,10 @@ def read_header(data: bytes) -> tuple[dict, str, bytes, int]:
     return schema, codec, sync, pos
 
 
-_DECODER_CACHE: dict[str, object] = {}
+_DECODER_CACHE: dict[tuple[str, bool], object] = {}
 
 
-def compile_decoder(schema):
+def compile_decoder(schema, build: bool = True):
     """Source-codegen a decoder specialized to ``schema`` (the fastavro
     approach): one generated function decodes a whole top-level value
     with varints, strings, and scalars INLINED — no per-value schema
@@ -696,8 +703,16 @@ def compile_decoder(schema):
     and subtypes the generator does not inline (arrays, maps, enums,
     fixed) fall back to decode_value itself; nested records compile
     recursively. Cached per schema JSON — one codegen per schema per
-    worker process, microseconds against millions of avoided calls."""
-    key = json.dumps(schema, sort_keys=True)
+    worker process, microseconds against millions of avoided calls.
+
+    ``build=False`` generates the count-only twin for a salvage pass
+    that only counts records: the same checks in the same order,
+    raising the same messages, but no dict, string, or number is built
+    (a string is only checked for UTF-8) and the function returns the
+    end position alone. A run of int/long fields is skipped by one regex
+    match, and a one-byte length or union index is read inline; the
+    exact loops run only when those fail, to raise their error."""
+    key = (json.dumps(schema, sort_keys=True), build)
     fn = _DECODER_CACHE.get(key)
     if fn is not None:
         return fn
@@ -710,10 +725,12 @@ def compile_decoder(schema):
     lines: list[str] = ["def _decoder(buf, pos):", "    blen = len(buf)"]
     n_fallbacks = [0]
 
-    def varint(ind: str, out: str) -> None:
+    def varint(ind: str, out: str | None) -> None:
+        """``out=None`` checks the varint's length and keeps no value."""
+        keep = out is not None
         lines.extend(
-            [
-                f"{ind}acc = 0",
+            ([f"{ind}acc = 0"] if keep else [])
+            + [
                 f"{ind}shift = 0",
                 f"{ind}while True:",
                 f"{ind}    if pos >= blen:",
@@ -724,18 +741,45 @@ def compile_decoder(schema):
                 "'varint longer than 64 bits')",
                 f"{ind}    b = buf[pos]",
                 f"{ind}    pos += 1",
-                f"{ind}    acc |= (b & 0x7F) << shift",
+            ]
+            + ([f"{ind}    acc |= (b & 0x7F) << shift"] if keep else [])
+            + [
                 f"{ind}    if not (b & 0x80):",
                 f"{ind}        break",
                 f"{ind}    shift += 7",
-                f"{ind}{out} = (acc >> 1) ^ -(acc & 1)",
+            ]
+            + ([f"{ind}{out} = (acc >> 1) ^ -(acc & 1)"] if keep else [])
+        )
+
+    def skip_varints(ind: str, k: int) -> None:
+        # k varints of at most 10 bytes each — exactly the ones the
+        # loop accepts — matched in one C-level scan
+        sub = f"_run{k}"
+        ns[sub] = re.compile(rb"(?:[\x80-\xff]{0,9}[\x00-\x7f]){%d}" % k).match
+        lines.extend([f"{ind}m_ = {sub}(buf, pos)", f"{ind}if m_ is None:"])
+        for _ in range(k):
+            varint(ind + "    ", None)
+        lines.extend([f"{ind}else:", f"{ind}    pos = m_.end()"])
+
+    def value_varint(ind: str, out: str) -> None:
+        if build:
+            varint(ind, out)
+            return
+        lines.extend(
+            [
+                f"{ind}if pos < blen and buf[pos] < 0x80:",
+                f"{ind}    b = buf[pos]",
+                f"{ind}    pos += 1",
+                f"{ind}    {out} = (b >> 1) ^ -(b & 1)",
+                f"{ind}else:",
             ]
         )
+        varint(ind + "    ", out)
 
     def emit(s, ind: str, out: str) -> None:
         t = _schema_type(s)
         if t == "null":
-            lines.append(f"{ind}{out} = None")
+            lines.append(f"{ind}{out} = None" if build else f"{ind}pass")
         elif t == "boolean":
             lines.extend(
                 [
@@ -745,44 +789,44 @@ def compile_decoder(schema):
                     f"{ind}if b > 1:",
                     f"{ind}    raise CorruptBlock("
                     "'invalid boolean byte %d' % b)",
-                    f"{ind}{out} = b == 1",
-                    f"{ind}pos += 1",
                 ]
+                + ([f"{ind}{out} = b == 1"] if build else [])
+                + [f"{ind}pos += 1"]
             )
         elif t in ("int", "long"):
-            varint(ind, out)
-        elif t == "float":
+            if build:
+                varint(ind, out)
+            else:
+                skip_varints(ind, 1)
+        elif t in ("float", "double"):
+            width, fmt = (4, "<f") if t == "float" else (8, "<d")
             lines.extend(
                 [
-                    f"{ind}if pos + 4 > blen:",
-                    f"{ind}    raise CorruptBlock('float past end')",
-                    f"{ind}{out} = unpack_from('<f', buf, pos)[0]",
-                    f"{ind}pos += 4",
+                    f"{ind}if pos + {width} > blen:",
+                    f"{ind}    raise CorruptBlock('{t} past end')",
                 ]
-            )
-        elif t == "double":
-            lines.extend(
-                [
-                    f"{ind}if pos + 8 > blen:",
-                    f"{ind}    raise CorruptBlock('double past end')",
-                    f"{ind}{out} = unpack_from('<d', buf, pos)[0]",
-                    f"{ind}pos += 8",
-                ]
+                + ([f"{ind}{out} = unpack_from('{fmt}', buf, pos)[0]"] if build else [])
+                + [f"{ind}pos += {width}"]
             )
         elif t in ("bytes", "string"):
-            varint(ind, "size_")
+            value_varint(ind, "size_")
             lines.extend(
                 [
                     f"{ind}if size_ < 0 or pos + size_ > blen:",
                     f"{ind}    raise CorruptBlock("
                     "'sized value of %d bytes exceeds buffer' % size_)",
-                    f"{ind}raw_ = buf[pos:pos + size_]",
-                    f"{ind}pos += size_",
                 ]
             )
+            if build or t == "string":
+                lines.append(f"{ind}raw_ = buf[pos:pos + size_]")
+            lines.append(f"{ind}pos += size_")
             if t == "bytes":
-                lines.append(f"{ind}{out} = raw_")
+                if build:
+                    lines.append(f"{ind}{out} = raw_")
             else:
+                if not build:  # ASCII is valid UTF-8: skip the decode
+                    lines.append(f"{ind}if not raw_.isascii():")
+                    ind += "    "
                 lines.extend(
                     [
                         f"{ind}try:",
@@ -793,7 +837,7 @@ def compile_decoder(schema):
                     ]
                 )
         elif t == "union":
-            varint(ind, "idx_")
+            value_varint(ind, "idx_")
             lines.extend(
                 [
                     f"{ind}if not 0 <= idx_ < {len(s)}:",
@@ -807,15 +851,28 @@ def compile_decoder(schema):
         elif t == "record":
             sub = f"_rec{n_fallbacks[0]}"
             n_fallbacks[0] += 1
-            ns[sub] = compile_decoder(s)
-            lines.append(f"{ind}{out}, pos = {sub}(buf, pos)")
+            ns[sub] = compile_decoder(s, build)
+            lines.append(
+                f"{ind}{out}, pos = {sub}(buf, pos)" if build else f"{ind}pos = {sub}(buf, pos)"
+            )
         else:  # array / map / enum / fixed: rare in row data — delegate
             sub = f"_sch{n_fallbacks[0]}"
             n_fallbacks[0] += 1
             ns[sub] = s
             lines.append(f"{ind}{out}, pos = decode_value({sub}, buf, pos)")
 
-    if _schema_type(schema) == "record":
+    if not build:  # every value lands in the throwaway name ``_``
+        is_record = _schema_type(schema) == "record"
+        types = [f["type"] for f in schema["fields"]] if is_record else [schema]
+        for is_int, run in itertools.groupby(types, lambda s: _schema_type(s) in ("int", "long")):
+            run = list(run)
+            if is_int:
+                skip_varints("    ", len(run))
+            else:
+                for s in run:
+                    emit(s, "    ", "_")
+        lines.append("    return pos")
+    elif _schema_type(schema) == "record":
         pairs = []
         for i, f in enumerate(schema["fields"]):
             emit(f["type"], "    ", f"v{i}")
@@ -849,6 +906,18 @@ def _decode_block(payload: bytes, schema, count: int) -> list:
     if pos != len(payload):
         raise CorruptBlock(f"{len(payload) - pos} trailing bytes in block")
     return recs
+
+
+def _count_block(payload: bytes, schema, count: int) -> int:
+    """:func:`_decode_block`'s checks with the count-only decoder:
+    returns ``count``, or raises exactly where it would."""
+    pos = 0
+    skip = compile_decoder(schema, build=False)
+    for _ in range(count):
+        pos = skip(payload, pos)
+    if pos != len(payload):
+        raise CorruptBlock(f"{len(payload) - pos} trailing bytes in block")
+    return count
 
 
 def block_spans(data: bytes) -> list[tuple[int, int, int, int]]:
@@ -911,52 +980,159 @@ class SalvageResult:
         return self.header_ok
 
 
-def salvage_blocks(data: bytes, schema, codec: str, sync: bytes, pos: int):
-    """The salvage walk from the first block at ``pos``: one
-    ``(outcome, records, error)`` per block, never raises. ``outcome``
-    is ``"ok"``, ``"resynced"`` (payload decoded byte-exactly, trailing
-    sync marker damaged — recovered, like avro-tools repair) or
-    ``"bad"`` (no records; the walk scans forward to the next sync
-    marker). Records live one block at a time, so a caller that only
-    counts them holds one block's worth, not the file's."""
-    n = len(data)
-    while pos < n:
+class ByteWindow:
+    """A bounded, forward-moving view of one container file: ``buf``
+    holds the file's bytes ``[base, base + len(buf))``.
+
+    :meth:`ensure` extends it by reads of at least ``chunk`` bytes and
+    first drops the prefix a walk has moved past, so walking any byte
+    range holds about one chunk plus one block, never the file. A file
+    no larger than one chunk is read by the first extension and never
+    trimmed. Over in-memory bytes (:meth:`of`) nothing is ever read."""
+
+    def __init__(self, f, size: int, chunk: int = _CHUNK):
+        self.f, self.size, self.chunk = f, size, chunk
+        self.buf, self.base = b"", 0  # the file is read from offset 0
+
+    @classmethod
+    def of(cls, data: bytes) -> "ByteWindow":
+        win = cls(None, len(data), chunk=len(data))
+        win.buf = data
+        return win
+
+    def ensure(self, pos: int, to: int) -> None:
+        """Cover ``[pos, to)``, or up to EOF. The walk never looks back
+        before ``pos``, so the bytes before it go once they exceed a
+        chunk."""
+        if pos - self.base > self.chunk:
+            self.buf = self.buf[pos - self.base :]
+            self.base = pos
+        have = self.base + len(self.buf)
+        if have >= to or have >= self.size:
+            return
+        parts = [self.buf]
+        while have < to and have < self.size:
+            got = self.f.read(max(self.chunk, to - have))
+            if not got:
+                break
+            parts.append(got)
+            have += len(got)
+        self.buf = b"".join(parts)
+
+    def find(self, needle: bytes, at: int) -> int:
+        """Offset of the first ``needle`` at or after ``at``, reading
+        forward chunk by chunk; -1 if there is none before EOF."""
+        if at > self.base + len(self.buf):  # jump, don't read the gap
+            self.f.seek(at)
+            self.buf, self.base = b"", at
+        while True:
+            i = self.buf.find(needle, at - self.base)
+            if i >= 0:
+                return self.base + i
+            have = self.base + len(self.buf)
+            if have >= self.size:
+                return -1
+            # keep the last len-1 bytes: a marker may straddle two reads
+            at = max(at, have - len(needle) + 1)
+            self.ensure(at, have + self.chunk)
+
+    def read_header(self) -> tuple[dict, str, bytes, int]:
+        """:func:`read_header` over a growing prefix of the file (the
+        header is tiny: schema JSON, codec and sync marker). Call it
+        first, on a fresh window."""
+        while True:
+            try:
+                return read_header(self.buf)
+            except CorruptHeader:
+                have = len(self.buf)
+                if have >= self.size or (have >= 4 and self.buf[:4] != MAGIC):
+                    raise
+                self.buf += self.f.read(min(max(have, 64 * 1024), self.size - have))
+
+    def first_block(self, start: int, end: int, hdr_end: int, sync: bytes) -> int | None:
+        """Offset of the first block a byte range ``[start, end)`` owns
+        (the blocks whose header offset lies in it), or None. The range
+        holding the header starts right after it; a later range starts
+        after the first sync marker ENDING at or after ``start`` — the
+        marker may begin up to 16 bytes before the range, owned by the
+        previous range's last block. This is the splittable-input rule
+        of Hadoop's Avro reader."""
+        if start <= hdr_end:
+            pos = hdr_end
+        else:
+            at = self.find(sync, start - SYNC_SIZE)
+            if at < 0:
+                return None
+            pos = at + SYNC_SIZE
+        return pos if pos < end else None
+
+
+def salvage_blocks(
+    data, schema, codec: str, sync: bytes, pos: int,
+    end: int | None = None, keep_records: bool = True,
+):
+    """The salvage walk from the block at ``pos``: one
+    ``(outcome, n_records, records, error)`` per block, never raises.
+    ``outcome`` is ``"ok"``, ``"resynced"`` (payload decoded
+    byte-exactly, trailing sync marker damaged — recovered, like
+    avro-tools repair) or ``"bad"`` (no records; the walk scans forward
+    to the next sync marker). Records live one block at a time, so a
+    caller that only counts them holds one block's worth, not the
+    file's; ``keep_records=False`` checks payloads with the count-only
+    decoder and yields no records at all.
+
+    ``data`` is the whole container or a :class:`ByteWindow` over it.
+    With ``end``, the walk owns the blocks whose header offset lies in
+    ``[pos, end)``: it stops at the first block at or past ``end`` it
+    reached over an intact marker or by a sync scan — the next range's
+    :meth:`ByteWindow.first_block` finds that one. A block reached over
+    a DAMAGED marker is walked wherever it starts, because no sync scan
+    can find it. Summed over ranges tiling the file, the outcomes are
+    the whole-file walk's."""
+    win = data if isinstance(data, ByteWindow) else ByteWindow.of(data)
+    n = win.size
+    end = n if end is None else end
+    decode = _decode_block if keep_records else _count_block
+    damaged = False  # reached over a damaged sync marker
+    while pos < n and (pos < end or damaged):
         block_start = pos
         try:
-            count, p = _read_long(data, pos)
+            # two varints; 11 bytes each tells an overlong varint from
+            # one cut by the window, as on the whole file
+            win.ensure(pos, pos + 22)
+            buf, base = win.buf, win.base
+            count, p = _read_long(buf, pos - base)
             if not 0 <= count <= MAX_BLOCK_RECORDS:
                 raise CorruptBlock(f"record count {count} out of bounds")
-            size, p = _read_long(data, p)
+            size, p = _read_long(buf, p)
+            p += base
             if not 0 <= size <= MAX_BLOCK_BYTES or p + size + SYNC_SIZE > n:
                 raise CorruptBlock(f"block size {size} exceeds file")
-            payload = _decompress(data[p : p + size], codec)
-            recs = _decode_block(payload, schema, count)
+            win.ensure(pos, p + size + SYNC_SIZE)
+            buf, base = win.buf, win.base
+            payload = _decompress(buf[p - base : p - base + size], codec)
+            recs = decode(payload, schema, count)
         except (CorruptBlock, CorruptHeader, ValueError, OverflowError) as exc:
-            yield "bad", [], f"block@{block_start}: {exc}"
-            nxt = data.find(sync, block_start + 1)
+            yield "bad", 0, [], f"block@{block_start}: {exc}"
+            nxt = win.find(sync, block_start + 1)
             if nxt == -1:
                 return
             pos = nxt + SYNC_SIZE
+            damaged = False
             continue
-        if data[p + size : p + size + SYNC_SIZE] != sync:
-            yield "resynced", recs, f"block@{block_start}: sync marker damaged"
+        tail = p - base + size
+        damaged = buf[tail : tail + SYNC_SIZE] != sync
+        if not keep_records:
+            recs = []
+        if damaged:
+            yield "resynced", count, recs, f"block@{block_start}: sync marker damaged"
         else:
-            yield "ok", recs, ""
+            yield "ok", count, recs, ""
         pos = p + size + SYNC_SIZE
 
 
-def salvage_ocf(data: bytes, keep_records: bool = True) -> SalvageResult:
-    """Block-salvage read: never raises. Decodes every block it can,
-    resyncs on the 16-byte marker after damage, reports the rest.
-    ``keep_records=False`` only counts the salvaged records
-    (``n_records``) — a health check of a 2 GiB container then holds
-    one block's records, not the file's."""
-    try:
-        schema, codec, sync, pos = read_header(data)
-    except CorruptHeader as exc:
-        return SalvageResult(header_ok=False, errors=[str(exc)])
-    res = SalvageResult(header_ok=True, schema=schema)
-    for outcome, recs, error in salvage_blocks(data, schema, codec, sync, pos):
+def _tally(res: SalvageResult, walk) -> SalvageResult:
+    for outcome, n_records, recs, error in walk:
         if outcome == "bad":
             res.n_blocks_bad += 1
         elif outcome == "resynced":
@@ -965,10 +1141,45 @@ def salvage_ocf(data: bytes, keep_records: bool = True) -> SalvageResult:
             res.n_blocks_ok += 1
         if error:
             res.errors.append(error)
-        res.n_records += len(recs)
-        if keep_records:
-            res.records.extend(recs)
+        res.n_records += n_records
+        res.records.extend(recs)
     return res
+
+
+def salvage_ocf(data: bytes, keep_records: bool = True) -> SalvageResult:
+    """Block-salvage read: never raises. Decodes every block it can,
+    resyncs on the 16-byte marker after damage, reports the rest.
+    ``keep_records=False`` only counts the salvaged records
+    (``n_records``) — a health check of a 2 GiB container then holds
+    one block's records, not the file's, and builds no record at all."""
+    try:
+        schema, codec, sync, pos = read_header(data)
+    except CorruptHeader as exc:
+        return SalvageResult(header_ok=False, errors=[str(exc)])
+    return _tally(
+        SalvageResult(header_ok=True, schema=schema),
+        salvage_blocks(data, schema, codec, sync, pos, keep_records=keep_records),
+    )
+
+
+def salvage_range(f, size: int, start: int, end: int, chunk: int = _CHUNK) -> SalvageResult:
+    """Count-only salvage of the blocks one byte range ``[start, end)``
+    of a container owns (see :func:`salvage_blocks`), read from the
+    seekable file ``f`` of ``size`` bytes through a :class:`ByteWindow`:
+    the header prefix, the range, and the tail of its last block.
+    Every range reports the header verdict; the block and record
+    counters of ranges tiling ``[0, size)`` sum to
+    ``salvage_ocf(file, keep_records=False)``'s."""
+    win = ByteWindow(f, size, chunk)
+    try:
+        schema, codec, sync, hdr_end = win.read_header()
+    except CorruptHeader as exc:
+        return SalvageResult(header_ok=False, errors=[str(exc)])
+    res = SalvageResult(header_ok=True, schema=schema)
+    pos = win.first_block(start, end, hdr_end, sync)
+    if pos is None:
+        return res
+    return _tally(res, salvage_blocks(win, schema, codec, sync, pos, end, keep_records=False))
 
 
 def salvaged_records(data: bytes):
@@ -976,7 +1187,7 @@ def salvaged_records(data: bytes):
     block (a repair rewrite feeds this to :func:`write_ocf`). The
     header must be intact."""
     schema, codec, sync, pos = read_header(data)
-    for _outcome, recs, _error in salvage_blocks(data, schema, codec, sync, pos):
+    for _outcome, _n, recs, _error in salvage_blocks(data, schema, codec, sync, pos):
         yield from recs
 
 

@@ -5,21 +5,31 @@ object list SEQUENTIALLY: download → sampled validate → repair →
 re-validate → conditional re-upload, aborting the run on the first
 hard error (`/root/reference/src/services/repair-avro.ts:52-104`).
 This CLI keeps that UX contract — point it at a tree of Avro files,
-optionally write repairs back — but executes as ONE distributed job:
-a corrupt file is a report row instead of a crashed run, and
+optionally write repairs back — but executes as one distributed job
+(two when a split file needs a rewrite): a corrupt file is a report
+row instead of a crashed run, and
 `--replace` commits each repaired file atomically (write-to-.tmp +
 rename, the engine-side analog of the reference's delete+swap at
 :152-153).
 
 The job's shape: the driver lists the tree (metadata only, no Spark
-job) and packs the files into byte-balanced bins; a JVM-only
-``range`` source feeds one bin to each task, and each task reads its
-files through ``fsio``, salvages, and commits repairs. No file byte
-crosses a shuffle or the Arrow boundary — only bin ids go in and
-report rows come out. The per-file report is written to parquet in
-that one job (``--report PATH``, default a temp dir removed on exit)
-and read back on the driver for the counts and the detail table, so
-the repair side effect runs exactly once.
+job) and cuts it into units. The unit size is Spark's own split size,
+``min(maxPartitionBytes, max(openCostInBytes, bytes / bins))``; a file
+at or below it is one unit, a larger one is cut into equal byte
+ranges, so the job's wall follows bytes / cores rather than the
+largest file. The units are packed into byte-balanced bins, and a
+JVM-only ``range`` source feeds one bin to each task. A task reads a
+whole-file unit through ``fsio``, salvages it and commits its repair.
+For a range unit it counts only the blocks whose header lies in the
+range (``avro_codec.salvage_range``: resync on the sync marker,
+bounded chunked reads, nothing decoded into records). No file byte
+crosses a shuffle or the Arrow boundary — only bin ids go in and one
+report row per unit comes out, written to parquet in that one job and
+read back on the driver, which sums a split file's ranges into one
+row. A split file that comes back damaged under ``--out``/``--replace``
+is repaired whole by a second job over those files alone; the fleets
+this CLI meets mostly need none. Every repair side effect runs exactly
+once, and ``--report PATH`` keeps the per-file report as parquet.
 
     python -m s3_avro_repair_spark.cli --path /data/avro-tree \\
         [--replace] [--out /data/repaired] [--report /data/report.parquet] [--cpus 8]
@@ -50,13 +60,18 @@ _REPORT_FIELDS = (
     ("records_salvaged", "long"),
     ("written_to", "string"),
 )
+_COUNTERS = ("blocks_ok", "blocks_resynced", "blocks_lost", "records_salvaged")
+_STATUSES = ("healthy", "repaired", "unrepairable")
+# A unit row also carries its file's full path (the merge key: base
+# names repeat across directories) and size (to plan a rewrite).
+_UNIT_FIELDS = (("path", "string"), ("size", "long")) + _REPORT_FIELDS
 
 
 def _pack_bins(sizes: list[int], n_bins: int) -> list[list[int]]:
-    """Longest-processing-time packing: file indices, largest first,
-    each into the bin with the fewest bytes (ties: fewest files, then
+    """Longest-processing-time packing: unit indices, largest first,
+    each into the bin with the fewest bytes (ties: fewest units, then
     lowest bin), so no bin stays empty while ``n_bins <= len(sizes)``
-    and a file larger than the mean load sits alone."""
+    and a unit larger than the mean load sits alone."""
     bins: list[list[int]] = [[] for _ in range(n_bins)]
     heap = [(0, 0, b) for b in range(n_bins)]
     for i in sorted(range(len(sizes)), key=lambda i: (-sizes[i], i)):
@@ -66,28 +81,60 @@ def _pack_bins(sizes: list[int], n_bins: int) -> list[list[int]]:
     return bins
 
 
-def _n_bins(spark, n_files: int, total_bytes: int) -> int:
+def _n_bins(spark, n_units: float, total_bytes: int) -> int:
     """One bin per core, or one per ``spark.sql.files.maxPartitionBytes``
     of input when that is more (Spark's own settings); never more bins
-    than files."""
+    than units."""
     split = spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
     want = max(spark.sparkContext.defaultParallelism, math.ceil(total_bytes / split))
-    return min(n_files, want)
+    return min(n_units, want)
 
 
-def _repair_file(path: str, root: str, replace: bool, out_dir: str | None) -> dict:
-    """Validate one container and, when asked, commit its repair: the
-    reference's per-object loop body, run inside a task."""
+def _units(spark, sizes: list[int]) -> list[tuple[int, int, int]]:
+    """``(file index, start, end)`` byte ranges covering every file. The
+    unit size is Spark's own file-split rule (``FilePartition.maxSplitBytes``):
+    ``min(maxPartitionBytes, max(openCostInBytes, ceil(bytes / bins)))``
+    with as many bins as the input's bytes want, whatever the file count.
+    A file at or below it stays whole; a larger one is cut into
+    ``ceil(size / unit)`` equal ranges."""
+    conf = spark._jsparkSession.sessionState().conf()
+    total = sum(sizes)
+    bins = _n_bins(spark, math.inf, total)
+    unit = max(
+        1,
+        min(
+            conf.filesMaxPartitionBytes(),
+            max(conf.filesOpenCostInBytes(), math.ceil(total / bins)),
+        ),
+    )
+    units = []
+    for i, size in enumerate(sizes):
+        k = max(1, math.ceil(size / unit))
+        units.extend((i, size * j // k, size * (j + 1) // k) for j in range(k))
+    return units
+
+
+def _run_unit(
+    path: str, start: int, end: int, size: int, root: str, replace: bool, out_dir: str | None
+) -> dict:
+    """Validate one unit inside a task. A whole file also commits its
+    repair when asked — the reference's per-object loop body. A range
+    of a split file only counts the blocks it owns, through bounded
+    reads; the driver sums the ranges."""
     import posixpath
 
     from . import fsio
-    from .avro_codec import salvage_ocf, salvaged_records, write_ocf_bytes
+    from .avro_codec import salvage_ocf, salvage_range, salvaged_records, write_ocf_bytes
 
     fs_, local = fsio.resolve(path)
+    whole = start == 0 and end == size
     with fs_.open_input_file(local) as f:
-        data = f.read()
-    # Counting pass: a healthy container's records are never kept.
-    res = salvage_ocf(data, keep_records=False)
+        if whole:
+            data = f.read()
+            # Counting pass: a healthy container's records are never built.
+            res = salvage_ocf(data, keep_records=False)
+        else:
+            res = salvage_range(f, size, start, end)
     written = ""
     if res.healthy:
         status = "healthy"
@@ -95,7 +142,7 @@ def _repair_file(path: str, root: str, replace: bool, out_dir: str | None) -> di
         status = "unrepairable"
     else:
         status = "repaired"
-        if replace or out_dir:
+        if whole and (replace or out_dir):
             repaired = write_ocf_bytes(res.schema, salvaged_records(data))
             if replace:
                 # Write back over the original via ITS OWN filesystem
@@ -112,6 +159,8 @@ def _repair_file(path: str, root: str, replace: bool, out_dir: str | None) -> di
                     out_fs.create_dir(parent, recursive=True)
                 written = fsio.atomic_write_bytes(out_path, repaired, filesystem=out_fs)
     return {
+        "path": path,
+        "size": size,
         "file": posixpath.basename(local),
         "status": status,
         "blocks_ok": res.n_blocks_ok,
@@ -122,61 +171,141 @@ def _repair_file(path: str, root: str, replace: bool, out_dir: str | None) -> di
     }
 
 
-def _build_report(spark, path: str, replace: bool, out_dir: str | None):
-    """The lazy per-file report over ``path`` and the number of files
-    listed, or ``(None, 0)`` for an empty tree. Running the report
-    commits the repairs, so run it once."""
+def _tree(path: str) -> tuple[str, str]:
+    """``path`` made absolute unless it is a URI, and its filesystem
+    path (the root ``--out`` copies are relative to)."""
     from . import fsio
-    from .sources.avro_datasource import _list_container_files_sized
 
     if "://" not in path and not path.startswith("file:"):
         path = os.path.abspath(path)
-    _, root = fsio.resolve(path)
-    files = _list_container_files_sized(path)
-    if not files:
-        return None, 0
-    n_bins = _n_bins(spark, len(files), sum(size for _, size in files))
+    return path, fsio.resolve(path)[1]
+
+
+def _unit_report(spark, units: list[tuple[str, int, int, int]], root: str,
+                 replace: bool, out_dir: str | None):
+    """The lazy per-unit report over ``units`` ``(path, start, end,
+    size)``, packed into byte-balanced bins, one bin per task."""
+    lengths = [end - start for _, start, end, _ in units]
+    n_bins = _n_bins(spark, len(units), sum(lengths))
     bins = spark.sparkContext.broadcast(
-        [[files[i][0] for i in b] for b in _pack_bins([s for _, s in files], n_bins)]
+        [[units[i] for i in b] for b in _pack_bins(lengths, n_bins)]
     )
 
     def process(batches):
         import pyarrow as pa
 
         schema = pa.schema(
-            [(n, pa.string() if t == "string" else pa.int64()) for n, t in _REPORT_FIELDS]
+            [(n, pa.string() if t == "string" else pa.int64()) for n, t in _UNIT_FIELDS]
         )
         for batch in batches:
             for b in batch.column(0).to_pylist():
-                rows = [_repair_file(f, root, replace, out_dir) for f in bins.value[b]]
+                rows = [_run_unit(*u, root, replace, out_dir) for u in bins.value[b]]
                 yield pa.RecordBatch.from_pylist(rows, schema=schema)
 
-    report = spark.range(n_bins, numPartitions=n_bins).mapInArrow(
-        process, ", ".join(f"{n} {t}" for n, t in _REPORT_FIELDS)
+    return spark.range(n_bins, numPartitions=n_bins).mapInArrow(
+        process, ", ".join(f"{n} {t}" for n, t in _UNIT_FIELDS)
     )
-    return report, len(files)
 
 
-def _print_report(report_path: str, n_files: int) -> int:
-    """Counts and the bounded non-healthy detail table from the written
-    report, read on the driver without a Spark job; returns the exit
-    code."""
-    import pandas as pd
+def _build_report(spark, path: str, replace: bool, out_dir: str | None):
+    """The lazy per-unit report over ``path`` and the number of files
+    listed, or ``(None, 0)`` for an empty tree. A file no larger than
+    the unit size is one row with its own status; a larger file is one
+    row per byte range. Running the report commits the whole-file
+    repairs, so run it once."""
+    from .sources.avro_datasource import _list_container_files_sized
+
+    path, root = _tree(path)
+    files = _list_container_files_sized(path)
+    if not files:
+        return None, 0
+    units = [
+        (files[i][0], start, end, files[i][1])
+        for i, start, end in _units(spark, [size for _, size in files])
+    ]
+    return _unit_report(spark, units, root, replace, out_dir), len(files)
+
+
+def _merge_units(rows):
+    """One row per file, in path order, from the unit ``rows``: a split
+    file's counters are the sum of its ranges' and its status the worst
+    of theirs (every range reads the same header). Column ``units``
+    counts the rows merged."""
+    import pyarrow as pa
     import pyarrow.compute as pc
-    import pyarrow.dataset as ds
+
+    rank = pc.index_in(rows["status"], value_set=pa.array(_STATUSES))
+    merged = (
+        rows.append_column("rank", rank)
+        .group_by("path", use_threads=False)
+        .aggregate(
+            [("size", "min"), ("file", "min"), ("rank", "max")]
+            + [(c, "sum") for c in _COUNTERS]
+            + [("written_to", "max"), ("path", "count")]
+        )
+        .sort_by("path")
+    )
+    cols = {
+        "path": merged["path"],
+        "size": merged["size_min"],
+        "units": merged["path_count"],
+        "file": merged["file_min"],
+        "status": pc.take(pa.array(_STATUSES), merged["rank_max"]),
+        **{c: merged[f"{c}_sum"] for c in _COUNTERS},
+        "written_to": merged["written_to_max"],
+    }
+    return pa.table(cols)
+
+
+def _rewrite_split(spark, files, root: str, replace: bool, out_dir: str):
+    """Repair the damaged split files whole, in a second job over them
+    alone (a range task sees only a slice of its file), and fill in
+    their ``written_to``."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    redo = files.filter((pc.field("units") > 1) & (pc.field("status") == "repaired"))
+    if not redo.num_rows:
+        return files
+    units = [(p, 0, s, s) for p, s in zip(redo["path"].to_pylist(), redo["size"].to_pylist())]
+    done = dict(
+        _unit_report(spark, units, root, replace, out_dir).select("path", "written_to").collect()
+    )
+    written = [done.get(p, w) for p, w in zip(files["path"].to_pylist(),
+                                              files["written_to"].to_pylist())]
+    return files.set_column(
+        files.schema.get_field_index("written_to"), "written_to", pa.array(written, pa.string())
+    )
+
+
+def _write_report(files, report_path: str) -> None:
+    """The per-file report, the columns of ``_REPORT_FIELDS``."""
+    import posixpath
+
+    import pyarrow.parquet as pq
 
     from . import fsio
 
     fs_, p = fsio.resolve(report_path)
-    dataset = ds.dataset(p, filesystem=fs_, format="parquet")
+    if posixpath.dirname(p):
+        fs_.create_dir(posixpath.dirname(p), recursive=True)
+    pq.write_table(files.select([n for n, _ in _REPORT_FIELDS]), p, filesystem=fs_)
+
+
+def _print_report(files, n_files: int) -> int:
+    """Counts and the bounded non-healthy detail table from the per-file
+    report; returns the exit code."""
+    import pandas as pd
+    import pyarrow.compute as pc
+
     counts = {
-        r["values"]: r["counts"]
-        for r in pc.value_counts(dataset.to_table(columns=["status"])["status"]).to_pylist()
+        r["values"]: r["counts"] for r in pc.value_counts(files["status"]).to_pylist()
     }
     detail = (
-        dataset.to_table(filter=pc.field("status") != "healthy")
+        files.filter(pc.field("status") != "healthy")
         .sort_by("file")
         .slice(0, _DETAIL_ROWS)
+        .select([n for n, _ in _REPORT_FIELDS])
         .to_pandas()
     )
     if len(detail):
@@ -188,7 +317,7 @@ def _print_report(report_path: str, n_files: int) -> int:
             print(f"... ({n_bad - shown_bad} more non-healthy files)")
     print(
         f"\n{n_files} files: "
-        + ", ".join(f"{counts.get(s, 0)} {s}" for s in ("healthy", "repaired", "unrepairable"))
+        + ", ".join(f"{counts.get(s, 0)} {s}" for s in _STATUSES)
     )
     return 2 if counts.get("unrepairable", 0) else 0
 
@@ -208,7 +337,7 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument(
         "--report",
         default=None,
-        help="write the per-file parquet report here (must not exist); default: a temp dir removed on exit",
+        help="write the per-file parquet report here (must not exist); default: print only",
     )
     ap.add_argument("--cpus", default=os.environ.get("SPARK_GRAFT_CPUS", "8"))
     args = ap.parse_args(argv)
@@ -225,13 +354,29 @@ def main(argv: list[str] | None = None) -> int:
     if report is None:
         print(f"no .avro files under {args.path}", file=sys.stderr)
         return 1
+    if args.report:
+        import pyarrow.fs as pafs
+
+        from . import fsio
+
+        fs_, p = fsio.resolve(args.report)
+        if fs_.get_file_info(p).type != pafs.FileType.NotFound:
+            raise FileExistsError(f"--report {args.report} already exists")
+    import pyarrow.parquet as pq
+
     # The CLI always runs local[N], so a driver temp dir is visible to
     # its tasks.
     with tempfile.TemporaryDirectory(prefix="avro-repair-report-") as tmp:
-        report_path = args.report or os.path.join(tmp, "report.parquet")
-        # The one action: repairs commit and report rows land together.
-        report.write.parquet(report_path)
-        return _print_report(report_path, n_files)
+        # The one action over the tree: whole-file repairs commit and
+        # unit rows land together.
+        units_path = os.path.join(tmp, "units.parquet")
+        report.write.parquet(units_path)
+        files = _merge_units(pq.read_table(units_path))
+        if args.replace or args.out:
+            files = _rewrite_split(spark, files, _tree(args.path)[1], args.replace, args.out)
+        if args.report:
+            _write_report(files, args.report)
+        return _print_report(files, n_files)
 
 
 if __name__ == "__main__":

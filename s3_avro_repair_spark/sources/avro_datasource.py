@@ -151,7 +151,7 @@ def _pa_type(spark_type):
 # block (MAX_BLOCK_BYTES-capped by the codec).
 _SPLIT_BYTES_DEFAULT = 128 * 1024 * 1024
 _BATCH_ROWS = 8192
-_CHUNK = 4 * 1024 * 1024
+_CHUNK = 4 * 1024 * 1024  # read size of a split's ByteWindow
 
 
 class AvroOCFReader(DataSourceReader):
@@ -191,12 +191,11 @@ class AvroOCFReader(DataSourceReader):
         from .. import fsio
         from ..avro_codec import (
             SYNC_SIZE,
+            ByteWindow,
             CorruptBlock,
-            CorruptHeader,
             _decode_block,
             _decompress,
             _read_long,
-            read_header,
         )
 
         if partition is None:
@@ -221,81 +220,20 @@ class AvroOCFReader(DataSourceReader):
             )
 
         with fs.open_input_file(p) as f:
-            # Header is tiny (schema JSON + codec + sync); read it with
-            # a growing bounded prefix, never the whole file.
-            head = f.read(min(64 * 1024, fsize))
-            while True:
-                try:
-                    schema, codec, sync, hdr_end = read_header(head)
-                    break
-                except CorruptHeader:
-                    if len(head) >= fsize:
-                        raise
-                    head += f.read(min(len(head), fsize - len(head)))
+            # The header comes from a growing bounded prefix, and the
+            # range through chunked reads: memory stays O(chunk + one
+            # block). A file no larger than one chunk is read whole by
+            # the first chunk and never trimmed.
+            win = ByteWindow(f, fsize, _CHUNK)
+            schema, codec, sync, hdr_end = win.read_header()
             names = [fl["name"] for fl in schema["fields"]]
-
-            # Whole-file fast path (r11): when the container fits one
-            # split (the common case at fixture scale; at 100 TB most
-            # files span many splits and take the streamed path), read
-            # it once and decode from memory — the chunked grow/trim
-            # machinery below copies the buffer on every trim, pure
-            # overhead when the bytes all fit anyway. Planning is
-            # untouched: partitions() still emits byte-range splits.
-            whole = start == 0 and end >= fsize
-            if whole and len(head) < fsize:
-                head += f.read()
-
-            # Locate the first block whose header offset lies in
-            # [start, end): the first split starts right after the
-            # header; later splits scan for a sync marker ENDING at an
-            # offset >= start (the sync may begin 16 bytes before the
-            # range, owned by the previous split's last block).
-            buf = head if whole else b""
-            base = 0  # absolute offset of buf[0]
-            pos = 0   # absolute offset of the next block header
-
-            def ensure(abs_to: int) -> None:
-                # grow buf until it covers [base, abs_to) or EOF; trim
-                # consumed prefix so memory stays O(chunk + one block)
-                nonlocal buf, base
-                if whole:
-                    return
-                if pos - base > _CHUNK:
-                    buf = buf[pos - base :]
-                    base = pos
-                while base + len(buf) < abs_to:
-                    chunk = f.read(max(_CHUNK, abs_to - base - len(buf)))
-                    if not chunk:
-                        break
-                    buf += chunk
-
-            if whole:
-                pos = hdr_end
-            elif start <= hdr_end:
-                pos = hdr_end
-                f.seek(pos)
-                base = pos
-            else:
-                scan_from = start - SYNC_SIZE
-                f.seek(scan_from)
-                base = scan_from
-                found = -1
-                while found < 0:
-                    ensure(base + len(buf) + _CHUNK)
-                    found = buf.find(sync, max(0, pos - base))
-                    if found >= 0:
-                        sync_end = base + found + SYNC_SIZE
-                        if sync_end >= end:
-                            return  # first block belongs to the next split
-                        pos = sync_end
-                        break
-                    if base + len(buf) >= fsize:
-                        return  # no sync at/after start: nothing ours
-                    # keep the last 15 bytes: a marker may straddle reads
-                    pos = base + len(buf) - (SYNC_SIZE - 1)
+            pos = win.first_block(start, end, hdr_end, sync)
+            if pos is None:
+                return  # no block header lies in this split
 
             while pos < end:
-                ensure(pos + 20)  # two varints are <= 10 bytes each
+                win.ensure(pos, pos + 20)  # two varints are <= 10 bytes each
+                buf, base = win.buf, win.base
                 try:
                     count, q = _read_long(buf, pos - base)
                     size, q = _read_long(buf, q)
@@ -304,7 +242,8 @@ class AvroOCFReader(DataSourceReader):
                 payload_at = base + q
                 if count < 0 or size < 0 or payload_at + size + SYNC_SIZE > fsize:
                     raise CorruptBlock(f"block@{pos}: bad block structure")
-                ensure(payload_at + size + SYNC_SIZE)
+                win.ensure(pos, payload_at + size + SYNC_SIZE)
+                buf, base = win.buf, win.base
                 payload = _decompress(
                     buf[payload_at - base : payload_at - base + size], codec
                 )

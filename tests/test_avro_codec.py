@@ -13,11 +13,14 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from s3_avro_repair_spark.avro_codec import (
+    SYNC_SIZE,
     CorruptBlock,
     CorruptHeader,
     block_spans,
+    read_header,
     read_ocf,
     salvage_ocf,
+    salvage_range,
     salvaged_records,
     write_ocf,
     write_ocf_bytes,
@@ -102,23 +105,132 @@ def test_bad_sync_recovers_all_records(data):
     assert keyset(res.records) == keyset(RECS)
 
 
+# Every Avro type the generated decoders handle: scalars, a union, a
+# nested record, and the array/map/enum/fixed fallbacks.
+RICH_SCHEMA = {
+    "type": "record",
+    "name": "rich",
+    "fields": [
+        {"name": "flag", "type": "boolean"},
+        {"name": "ratio", "type": "float"},
+        {"name": "pick", "type": ["null", "int", "string"]},
+        {
+            "name": "inner",
+            "type": {
+                "type": "record",
+                "name": "inner",
+                "fields": [{"name": "id", "type": "long"}, {"name": "blob", "type": "bytes"}],
+            },
+        },
+        {"name": "xs", "type": {"type": "array", "items": "double"}},
+        {"name": "kv", "type": {"type": "map", "values": "string"}},
+        {"name": "color", "type": {"type": "enum", "name": "color", "symbols": ["R", "G", "B"]}},
+        {"name": "tag", "type": {"type": "fixed", "name": "tag", "size": 4}},
+    ],
+}
+RICH_RECS = [
+    {
+        "flag": i % 2 == 0,
+        "ratio": i / 4.0,
+        "pick": [None, i, f"p{i}-é"][i % 3],
+        "inner": {"id": -i, "blob": bytes([i % 256]) * (i % 5)},
+        "xs": [i * 0.5] * (i % 3),
+        "kv": {f"k{i % 4}": "v中"} if i % 2 else {},
+        "color": "RGB"[i % 3],
+        "tag": i.to_bytes(4, "little"),
+    }
+    for i in range(1000)
+]
+
+
+def _scramble(data: bytes) -> bytes:
+    """Injure every block so that blocks fail different checks and some
+    still decode: odd blocks get an invalid UTF-8 continuation byte in
+    their first "é" (found in uncompressed payloads only), the others
+    one XOR'd byte at a different offset each."""
+    b = bytearray(data)
+    for i, (_, payload_start, size, _) in enumerate(block_spans(data)):
+        at = data.find("é".encode(), payload_start, payload_start + size)
+        if i % 2 and at >= 0:
+            b[at + 1] = 0x28
+        else:
+            b[payload_start + (37 * i + 5) % size] ^= 0x9C
+    return bytes(b)
+
+
 @pytest.mark.parametrize(
-    "inject", [lambda d: d, inject_truncate, inject_flip, inject_bad_sync]
+    "inject",
+    [lambda d: d, inject_truncate, inject_flip, inject_bad_sync, inject_bad_header],
 )
 def test_counting_walk_matches_keeping_walk(data, inject):
     """One block walker behind every salvage mode: counting keeps no
-    records but reports the same outcome, and the streamed records are
-    exactly the kept ones."""
+    records but reports the same outcome — the count-only decoder fails
+    on exactly the blocks, with exactly the messages, of the keeping
+    one — and the streamed records are exactly the kept ones. Inputs:
+    the suite's container, one over every Avro type, and that one with
+    a byte flipped in every block."""
+    codec = read_header(data)[1]
+    rich = write_ocf_bytes(RICH_SCHEMA, RICH_RECS, codec=codec, block_records=BLOCK)
+    for clean in (data, rich, _scramble(rich)):
+        hurt = inject(clean)
+        kept = salvage_ocf(hurt)
+        counted = salvage_ocf(hurt, keep_records=False)
+        assert counted.records == []
+        assert counted.header_ok == kept.header_ok
+        assert counted.n_records == kept.n_records == len(kept.records)
+        assert (counted.n_blocks_ok, counted.n_blocks_resynced, counted.n_blocks_bad) == (
+            kept.n_blocks_ok, kept.n_blocks_resynced, kept.n_blocks_bad
+        )
+        assert counted.errors == kept.errors
+        if kept.header_ok:
+            assert list(salvaged_records(hurt)) == kept.records
+
+
+def _cuts(clean: bytes) -> list[int]:
+    """Cut points: the header end, every block start, and ±1, ±16 and
+    ±17 bytes from each — a range then starts inside a varint, on and
+    next to a sync marker, and one byte past one."""
+    starts = [start for start, _, _, _ in block_spans(clean)]
+    return sorted({s + d for s in starts for d in (0, -1, 1, -16, 16, -17, 17)})
+
+
+def _sum_ranges(hurt: bytes, bounds: list[int], chunk: int):
+    total = [True, 0, 0, 0, 0]
+    for start, end in zip(bounds, bounds[1:]):
+        r = salvage_range(io.BytesIO(hurt), len(hurt), start, end, chunk=chunk)
+        total[0] &= r.header_ok
+        total[1:] = [
+            a + b for a, b in zip(
+                total[1:], (r.n_blocks_ok, r.n_blocks_resynced, r.n_blocks_bad, r.n_records)
+            )
+        ]
+    return total
+
+
+@pytest.mark.parametrize(
+    "inject",
+    [lambda d: d, inject_truncate, inject_flip, inject_bad_sync, inject_bad_header],
+)
+def test_range_walks_sum_to_whole_file(data, inject):
+    """The byte-range law the CLI's split units rest on: cut a container
+    anywhere, salvage each range on its own, and the counters sum to
+    the whole-file salvage — no block counted twice or missed, even
+    when a damaged sync marker starts or ends exactly on a cut
+    (``inject_bad_sync`` zeroes the marker ending at block 1's start,
+    and the cuts include that start and 16 bytes before it). Every
+    range reports the header verdict. A 64-byte chunk makes the window
+    grow and trim inside every block."""
     hurt = inject(data)
-    kept = salvage_ocf(hurt)
-    counted = salvage_ocf(hurt, keep_records=False)
-    assert counted.records == []
-    assert counted.n_records == kept.n_records == len(kept.records)
-    assert (counted.n_blocks_ok, counted.n_blocks_resynced, counted.n_blocks_bad) == (
-        kept.n_blocks_ok, kept.n_blocks_resynced, kept.n_blocks_bad
-    )
-    assert counted.errors == kept.errors
-    assert list(salvaged_records(hurt)) == kept.records
+    whole = salvage_ocf(hurt, keep_records=False)
+    want = [whole.header_ok, whole.n_blocks_ok, whole.n_blocks_resynced,
+            whole.n_blocks_bad, whole.n_records]
+    cuts = [c for c in _cuts(data) if 0 < c < len(hurt)]
+    if inject is inject_bad_sync:
+        marker_end = block_spans(data)[1][0]
+        assert {marker_end, marker_end - SYNC_SIZE} <= set(cuts)
+    for c in cuts:
+        assert _sum_ranges(hurt, [0, c, len(hurt)], 1 << 20) == want, c
+    assert _sum_ranges(hurt, [0, *cuts, len(hurt)], 64) == want
 
 
 def test_bad_header_is_unrepairable(data):

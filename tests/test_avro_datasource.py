@@ -251,3 +251,51 @@ def test_corruption_fails_split_scans_too(spark, tmp_path):
         # the message text is the practical pin.
         with pytest.raises(Exception, match="sync marker damaged|block@"):
             rd.load(str(d)).count()
+
+
+def test_single_split_above_chunk_reads_chunked(tmp_path, monkeypatch):
+    """The whole-file read is bounded by ``_CHUNK``: a
+    one-split container no larger than a chunk is read at once, a larger
+    one goes through the chunked window — which never holds the file —
+    and returns the same rows."""
+    import pyarrow as pa
+
+    from s3_avro_repair_spark import avro_codec
+    from s3_avro_repair_spark.sources import avro_datasource as ds
+
+    d = tmp_path / "one"
+    d.mkdir()
+    recs = [
+        {"k": i, "s": f"row-{i}" if i % 3 else None, "x": i / 8.0}
+        for i in range(20000)
+    ]
+    raw = write_ocf_bytes(SCHEMA, recs, block_records=100)
+    (d / "one.avro").write_bytes(raw)
+    reader = ds.AvroOCFReader(
+        {"path": str(d)}, [("k", pa.int64()), ("s", pa.string()), ("x", pa.float64())]
+    )
+    (part,) = reader.partitions()
+    held = []
+    ensure = avro_codec.ByteWindow.ensure
+
+    def spy(self, pos, to):
+        ensure(self, pos, to)
+        held.append(len(self.buf))
+
+    monkeypatch.setattr(avro_codec.ByteWindow, "ensure", spy)
+
+    def rows():
+        held.clear()
+        return [
+            tuple(r.values())
+            for b in reader.read(part)
+            for r in b.to_pylist()
+        ]
+
+    want = [(r["k"], r["s"], r["x"]) for r in recs]
+    assert rows() == want
+    assert max(held) == len(raw)  # one chunk covers it: read at once
+    monkeypatch.setattr(ds, "_CHUNK", 4096)
+    assert len(raw) > 4 * 64 * 1024  # well past the header prefix too
+    assert rows() == want
+    assert max(held) < len(raw) // 4

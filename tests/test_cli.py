@@ -12,7 +12,7 @@ import pyarrow.parquet as pq
 import pytest
 
 from s3_avro_repair_spark.avro_codec import salvage_ocf
-from s3_avro_repair_spark.cli import _build_report, _n_bins, _pack_bins, main
+from s3_avro_repair_spark.cli import _build_report, _n_bins, _pack_bins, _units, main
 from s3_avro_repair_spark.sources.avro_pipeline import ensure_avro_fixtures
 
 
@@ -185,3 +185,107 @@ def test_stdout_matches_golden(spark, sf_dir, tmp_path, mode):
     got = f"rc={rc}\n" + buf.getvalue().replace(str(root), "<ROOT>".ljust(_ROOT_LEN, "_"))
     with open(golden) as f:
         assert got == f.read()
+
+
+def test_units_follow_spark_split_size(spark):
+    """The unit size is Spark's split size over the whole input: files
+    at or below it stay whole, a larger file is cut into equal ranges
+    that tile it."""
+    cores = spark.sparkContext.defaultParallelism
+    spark.conf.set("spark.sql.files.maxPartitionBytes", "1000")
+    spark.conf.set("spark.sql.files.openCostInBytes", "100")
+    try:
+        sizes = [2500, 0, 1000, 999, 1]
+        # Spark's split size: 4500 bytes over max(cores, ceil(4500 /
+        # maxPartitionBytes)) bins, at least openCostInBytes
+        unit = min(1000, max(100, -(-4500 // max(cores, 5))))
+        units = _units(spark, sizes)
+    finally:
+        spark.conf.unset("spark.sql.files.maxPartitionBytes")
+        spark.conf.unset("spark.sql.files.openCostInBytes")
+    for i, size in enumerate(sizes):
+        mine = [(s, e) for f, s, e in units if f == i]
+        assert len(mine) == max(1, -(-size // unit))
+        assert mine[0][0] == 0 and mine[-1][1] == size
+        assert all(a[1] == b[0] for a, b in zip(mine, mine[1:]))
+        assert max(e - s for s, e in mine) - min(e - s for s, e in mine) <= 1
+
+
+def _main_jobs(spark, args) -> tuple[str, int, int]:
+    """main(args) under a job group: (stdout, exit code, Spark jobs)."""
+    sc = spark.sparkContext
+    group = f"cli-jobs-{abs(hash(tuple(args)))}"
+    sc.setLocalProperty("spark.jobGroup.id", group)
+    buf = io.StringIO()
+    try:
+        with contextlib.redirect_stdout(buf):
+            rc = main(args)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return buf.getvalue(), rc, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _tree_bytes(d) -> dict[str, bytes]:
+    return {
+        os.path.relpath(os.path.join(r, n), d): open(os.path.join(r, n), "rb").read()
+        for r, _, names in os.walk(d)
+        for n in names
+    }
+
+
+@pytest.mark.parametrize("mode", ["out", "replace"])
+def test_split_units_match_unsplit_run(spark, sf_dir, tmp_path, mode):
+    """With split settings low enough that every fixture file is cut
+    into byte ranges, the CLI prints the golden output byte for byte and
+    writes the same repaired bytes as an unsplit run. Damaged split
+    files are rewritten by a second job: 2 jobs with --out/--replace, 1
+    without, and 1 when only healthy files are split."""
+    golden = os.path.join(
+        os.path.dirname(__file__), "golden",
+        f"cli_corrupt_{os.path.basename(sf_dir)}_{mode}.txt",
+    )
+    if not os.path.exists(golden):
+        pytest.skip(f"no golden for {sf_dir}")
+    flag = ["--replace"] if mode == "replace" else None
+
+    def args_for(root):
+        indir = root / "in"
+        return ["--path", str(indir)] + (flag or ["--out", str(root / "out")])
+
+    plain = tmp_path / "plain"
+    _corrupt_copy(sf_dir, plain)
+    with contextlib.redirect_stdout(io.StringIO()):
+        main(args_for(plain))
+
+    root = tmp_path / ("g" * (_ROOT_LEN - len(str(tmp_path)) - 1))
+    assert len(str(root)) == _ROOT_LEN
+    indir = _corrupt_copy(sf_dir, root)
+    count_only = _corrupt_copy(sf_dir, tmp_path / "count")
+    healthy = tmp_path / "healthy"
+    healthy.mkdir()
+    for name in ("orders_0.avro", "orders_5.avro", "orders_6.avro", "orders_7.avro"):
+        shutil.copy(indir / name, healthy / name)
+    spark.conf.set("spark.sql.files.maxPartitionBytes", "2048")
+    spark.conf.set("spark.sql.files.openCostInBytes", "1024")
+    try:
+        sizes = [p.stat().st_size for p in indir.iterdir()]
+        split = {f for f, s, e in _units(spark, sizes) if (s, e) != (0, sizes[f])}
+        assert split == set(range(len(sizes)))
+        text, rc, jobs = _main_jobs(spark, args_for(root))
+        _, rc_count, jobs_count = _main_jobs(spark, ["--path", str(count_only)])
+        _, rc_healthy, jobs_healthy = _main_jobs(
+            spark, ["--path", str(healthy), "--out", str(tmp_path / "healthy_out")]
+        )
+    finally:
+        spark.conf.unset("spark.sql.files.maxPartitionBytes")
+        spark.conf.unset("spark.sql.files.openCostInBytes")
+    got = f"rc={rc}\n" + text.replace(str(root), "<ROOT>".ljust(_ROOT_LEN, "_"))
+    with open(golden) as f:
+        assert got == f.read()
+    written = "out" if mode == "out" else "in"
+    assert _tree_bytes(root / written) == _tree_bytes(plain / written)
+    assert jobs == 2
+    assert (rc_count, jobs_count) == (2, 1)
+    assert (rc_healthy, jobs_healthy) == (0, 1)
+    assert not os.listdir(tmp_path / "healthy_out")
