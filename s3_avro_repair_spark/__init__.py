@@ -9,8 +9,10 @@ surface described in ``SURVEY.md §2B``.
 Design principles (100 TB posture):
 - Declare logical plans with the DataFrame/SQL API; let Catalyst pick
   physical strategies (pushdown, pruning, join selection, AQE).
-- One Spark task per file for the Avro pipeline ops — never buffer
-  whole datasets on the driver (the reference buffers every file in
+- One Spark job for every batch Avro pass: the driver lists the files
+  and packs them into byte-balanced per-core bins, each task reads its
+  own files, and no file byte is shuffled — never buffer whole
+  datasets on the driver (the reference buffers every file in
   RAM and processes them strictly sequentially,
   ``repair-avro.ts:52-71``; we invert that).
 - Python only at Arrow-vectorized boundaries (``pandas_udf``,

@@ -24,14 +24,18 @@ byte-exactly but whose trailing sync marker is damaged is RECOVERED
 forward to the next sync-marker occurrence. A damaged header is
 unrepairable — the schema is gone.
 
-Everything here runs inside executors (``mapInPandas`` over
-``binaryFile`` rows, the CLI's per-bin tasks, the ``avro_ocf``
-DataSource) — never on the driver, never a whole-directory
-buffer; one file's bytes at a time, exactly the unit the reference
-processed sequentially (``repair-avro.ts:52-71``) but parallelized
-per-task. A large container splits further: :func:`salvage_range`
-walks one byte range of it through a bounded :class:`ByteWindow`, and
-the counters of ranges tiling the file sum to the whole-file salvage.
+Everything here runs inside executors (the per-bin tasks of
+``sources/avro_jobs.py`` that every batch Avro op and the CLI run on,
+the ``avro_ocf`` DataSource) — never on the driver, never a
+whole-directory buffer; one file's bytes at a time, exactly the unit
+the reference processed sequentially (``repair-avro.ts:52-71``) but
+parallelized per-task. A large container splits further:
+:func:`salvage_range` walks one byte range of it through a bounded
+:class:`ByteWindow`, and the counters of ranges tiling the file sum to
+the whole-file salvage. Every decoding walk — salvage, the strict
+reads, reader-schema reads — is :func:`salvage_blocks` with a block
+decoder passed in; only :func:`sampled_validate` walks on its own,
+because it skips payloads on purpose.
 """
 
 from __future__ import annotations
@@ -895,11 +899,11 @@ def compile_decoder(schema, build: bool = True):
     return fn
 
 
-def _decode_block(payload: bytes, schema, count: int) -> list:
-    """Strict: exactly `count` records consuming exactly the payload."""
+def _decode_with(dec, payload: bytes, count: int) -> list:
+    """Strict: exactly `count` records of ``dec`` consuming exactly the
+    payload."""
     recs = []
     pos = 0
-    dec = compile_decoder(schema)
     for _ in range(count):
         rec, pos = dec(payload, pos)
         recs.append(rec)
@@ -908,32 +912,52 @@ def _decode_block(payload: bytes, schema, count: int) -> list:
     return recs
 
 
-def _count_block(payload: bytes, schema, count: int) -> int:
-    """:func:`_decode_block`'s checks with the count-only decoder:
-    returns ``count``, or raises exactly where it would."""
+def _decode_block(payload: bytes, schema, count: int) -> list:
+    """The block decoder of :func:`salvage_blocks`: ``schema``'s own
+    generated decoder."""
+    return _decode_with(compile_decoder(schema), payload, count)
+
+
+def _count_block(payload: bytes, schema, count: int) -> list:
+    """:func:`_decode_block`'s checks with the count-only decoder: builds
+    no record, or raises exactly where it would."""
     pos = 0
     skip = compile_decoder(schema, build=False)
     for _ in range(count):
         pos = skip(payload, pos)
     if pos != len(payload):
         raise CorruptBlock(f"{len(payload) - pos} trailing bytes in block")
-    return count
+    return []
+
+
+def block_decoder(writer, reader=None):
+    """The block decoder that reads ``writer``'s records as ``reader``
+    (Avro schema resolution); the writer's own generated decoder when
+    there is no reader or it is the writer."""
+    if reader is None or reader == writer:
+        return _decode_block
+    dec = compile_resolved_decoder(writer, reader)
+    return lambda payload, _schema, count: _decode_with(dec, payload, count)
+
+
+def _block_headers(data: bytes):
+    """``(block_start, count, payload_start, payload_size)`` per block,
+    from the block HEADERS alone: payloads are skipped, never decoded."""
+    _, _, _, pos = read_header(data)
+    n = len(data)
+    while pos < n:
+        count, p = _read_long(data, pos)
+        size, p = _read_long(data, p)
+        if count < 0 or size < 0 or p + size + SYNC_SIZE > n:
+            raise CorruptBlock("bad block structure")
+        yield pos, count, p, size
+        pos = p + size + SYNC_SIZE
 
 
 def block_spans(data: bytes) -> list[tuple[int, int, int, int]]:
     """Structural walk for the corruption-injection tests:
     [(block_start, payload_start, payload_size, end_after_sync), ...]."""
-    _, _, sync, pos = read_header(data)
-    spans = []
-    while pos < len(data):
-        start = pos
-        count, p = _read_long(data, pos)
-        size, p = _read_long(data, p)
-        if count < 0 or size < 0 or p + size + SYNC_SIZE > len(data):
-            raise CorruptBlock("bad block structure")
-        spans.append((start, p, size, p + size + SYNC_SIZE))
-        pos = p + size + SYNC_SIZE
-    return spans
+    return [(s, p, size, p + size + SYNC_SIZE) for s, _, p, size in _block_headers(data)]
 
 
 def block_stats(data: bytes) -> tuple[int, int, int]:
@@ -942,17 +966,11 @@ def block_stats(data: bytes) -> tuple[int, int, int]:
     walk is O(#blocks), not O(#records). At 100 TB this is the cheap
     first pass of any fleet audit: record counts and compression ratios
     for every object without decoding a single value."""
-    _, _, _, pos = read_header(data)
     blocks = records = payload = 0
-    while pos < len(data):
-        count, p = _read_long(data, pos)
-        size, p = _read_long(data, p)
-        if count < 0 or size < 0 or p + size + SYNC_SIZE > len(data):
-            raise CorruptBlock("bad block structure")
+    for _, count, _, size in _block_headers(data):
         blocks += 1
         records += count
         payload += size
-        pos = p + size + SYNC_SIZE
     return blocks, records, payload
 
 
@@ -1069,17 +1087,26 @@ class ByteWindow:
 
 def salvage_blocks(
     data, schema, codec: str, sync: bytes, pos: int,
-    end: int | None = None, keep_records: bool = True,
+    end: int | None = None, decode=_decode_block, strict: bool = False,
 ):
     """The salvage walk from the block at ``pos``: one
-    ``(outcome, n_records, records, error)`` per block, never raises.
+    ``(outcome, n_records, records, error)`` per block; it raises only
+    when ``strict``.
     ``outcome`` is ``"ok"``, ``"resynced"`` (payload decoded
     byte-exactly, trailing sync marker damaged — recovered, like
     avro-tools repair) or ``"bad"`` (no records; the walk scans forward
     to the next sync marker). Records live one block at a time, so a
     caller that only counts them holds one block's worth, not the
-    file's; ``keep_records=False`` checks payloads with the count-only
-    decoder and yields no records at all.
+    file's. ``decode(payload, schema, count)`` checks a payload and
+    returns its records: :func:`_decode_block`, the count-only
+    :func:`_count_block` (no records at all) or a
+    :func:`block_decoder` over a reader schema.
+
+    ``strict=True`` is the strict read: the first block that is not
+    ``ok`` raises instead of being reported: a damaged marker or a
+    broken block as :class:`CorruptBlock` naming the block's offset,
+    any other decode failure (schema resolution, invalid UTF-8) as the
+    error its decoder raised.
 
     ``data`` is the whole container or a :class:`ByteWindow` over it.
     With ``end``, the walk owns the blocks whose header offset lies in
@@ -1092,7 +1119,6 @@ def salvage_blocks(
     win = data if isinstance(data, ByteWindow) else ByteWindow.of(data)
     n = win.size
     end = n if end is None else end
-    decode = _decode_block if keep_records else _count_block
     damaged = False  # reached over a damaged sync marker
     while pos < n and (pos < end or damaged):
         block_start = pos
@@ -1113,6 +1139,10 @@ def salvage_blocks(
             payload = _decompress(buf[p - base : p - base + size], codec)
             recs = decode(payload, schema, count)
         except (CorruptBlock, CorruptHeader, ValueError, OverflowError) as exc:
+            if strict:
+                if isinstance(exc, CorruptBlock):
+                    raise CorruptBlock(f"block@{block_start}: {exc}") from exc
+                raise
             yield "bad", 0, [], f"block@{block_start}: {exc}"
             nxt = win.find(sync, block_start + 1)
             if nxt == -1:
@@ -1122,9 +1152,9 @@ def salvage_blocks(
             continue
         tail = p - base + size
         damaged = buf[tail : tail + SYNC_SIZE] != sync
-        if not keep_records:
-            recs = []
         if damaged:
+            if strict:
+                raise CorruptBlock(f"block@{block_start}: sync marker damaged")
             yield "resynced", count, recs, f"block@{block_start}: sync marker damaged"
         else:
             yield "ok", count, recs, ""
@@ -1158,7 +1188,10 @@ def salvage_ocf(data: bytes, keep_records: bool = True) -> SalvageResult:
         return SalvageResult(header_ok=False, errors=[str(exc)])
     return _tally(
         SalvageResult(header_ok=True, schema=schema),
-        salvage_blocks(data, schema, codec, sync, pos, keep_records=keep_records),
+        salvage_blocks(
+            data, schema, codec, sync, pos,
+            decode=_decode_block if keep_records else _count_block,
+        ),
     )
 
 
@@ -1179,7 +1212,7 @@ def salvage_range(f, size: int, start: int, end: int, chunk: int = _CHUNK) -> Sa
     pos = win.first_block(start, end, hdr_end, sync)
     if pos is None:
         return res
-    return _tally(res, salvage_blocks(win, schema, codec, sync, pos, end, keep_records=False))
+    return _tally(res, salvage_blocks(win, schema, codec, sync, pos, end, _count_block))
 
 
 def salvaged_records(data: bytes):
@@ -1426,24 +1459,14 @@ def read_ocf_resolved(data: bytes, reader_schema, logical: bool = False) -> list
     default, or re-reads a raw-bytes writer column under a decimal
     annotation)."""
     writer, codec, sync, pos = read_header(data)
-    resolved = compile_resolved_decoder(writer, reader_schema)
-    records = []
-    n = len(data)
-    while pos < n:
-        count, p = _read_long(data, pos)
-        size, p = _read_long(data, p)
-        if count < 0 or size < 0 or p + size + SYNC_SIZE > n:
-            raise CorruptBlock("bad block structure")
-        if data[p + size : p + size + SYNC_SIZE] != sync:
-            raise CorruptBlock("sync marker mismatch")
-        payload = _decompress(data[p : p + size], codec)
-        bpos = 0
-        for _ in range(count):
-            rec, bpos = resolved(payload, bpos)
-            records.append(rec)
-        if bpos != len(payload):
-            raise CorruptBlock("trailing bytes in block")
-        pos = p + size + SYNC_SIZE
+    decode = block_decoder(writer, reader_schema)
+    records = [
+        rec
+        for _, _, recs, _ in salvage_blocks(
+            data, writer, codec, sync, pos, decode=decode, strict=True
+        )
+        for rec in recs
+    ]
     if logical:
         return [materialize_logical(reader_schema, r) for r in records]
     return records

@@ -18,7 +18,8 @@ job) and cuts it into units. The unit size is Spark's own split size,
 at or below it is one unit, a larger one is cut into equal byte
 ranges, so the job's wall follows bytes / cores rather than the
 largest file. The units are packed into byte-balanced bins, and a
-JVM-only ``range`` source feeds one bin to each task. A task reads a
+JVM-only ``range`` source feeds one bin to each task — the planner
+every batch Avro op runs on (``sources/avro_jobs.py``). A task reads a
 whole-file unit through ``fsio``, salvages it and commits its repair.
 For a range unit it counts only the blocks whose header lies in the
 range (``avro_codec.salvage_range``: resync on the sync marker,
@@ -41,11 +42,17 @@ unrepairable (header destroyed) — the run itself never aborts.
 from __future__ import annotations
 
 import argparse
-import heapq
 import math
 import os
 import sys
 import tempfile
+
+from .sources.avro_jobs import (  # noqa: F401 (_pack_bins: re-export)
+    _list_container_files_sized,
+    _n_bins,
+    _pack_bins,
+    run_units,
+)
 
 # Display bound for the non-healthy detail table: a CLI prints a page,
 # not a fleet. The per-status counters always cover the full listing.
@@ -65,29 +72,6 @@ _STATUSES = ("healthy", "repaired", "unrepairable")
 # A unit row also carries its file's full path (the merge key: base
 # names repeat across directories) and size (to plan a rewrite).
 _UNIT_FIELDS = (("path", "string"), ("size", "long")) + _REPORT_FIELDS
-
-
-def _pack_bins(sizes: list[int], n_bins: int) -> list[list[int]]:
-    """Longest-processing-time packing: unit indices, largest first,
-    each into the bin with the fewest bytes (ties: fewest units, then
-    lowest bin), so no bin stays empty while ``n_bins <= len(sizes)``
-    and a unit larger than the mean load sits alone."""
-    bins: list[list[int]] = [[] for _ in range(n_bins)]
-    heap = [(0, 0, b) for b in range(n_bins)]
-    for i in sorted(range(len(sizes)), key=lambda i: (-sizes[i], i)):
-        load, count, b = heapq.heappop(heap)
-        bins[b].append(i)
-        heapq.heappush(heap, (load + sizes[i], count + 1, b))
-    return bins
-
-
-def _n_bins(spark, n_units: float, total_bytes: int) -> int:
-    """One bin per core, or one per ``spark.sql.files.maxPartitionBytes``
-    of input when that is more (Spark's own settings); never more bins
-    than units."""
-    split = spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
-    want = max(spark.sparkContext.defaultParallelism, math.ceil(total_bytes / split))
-    return min(n_units, want)
 
 
 def _units(spark, sizes: list[int]) -> list[tuple[int, int, int]]:
@@ -116,11 +100,11 @@ def _units(spark, sizes: list[int]) -> list[tuple[int, int, int]]:
 
 def _run_unit(
     path: str, start: int, end: int, size: int, root: str, replace: bool, out_dir: str | None
-) -> dict:
-    """Validate one unit inside a task. A whole file also commits its
-    repair when asked — the reference's per-object loop body. A range
-    of a split file only counts the blocks it owns, through bounded
-    reads; the driver sums the ranges."""
+) -> tuple:
+    """Validate one unit inside a task; its row of ``_UNIT_FIELDS``. A
+    whole file also commits its repair when asked — the reference's
+    per-object loop body. A range of a split file only counts the
+    blocks it owns, through bounded reads; the driver sums the ranges."""
     import posixpath
 
     from . import fsio
@@ -158,17 +142,10 @@ def _run_unit(
                 if parent:
                     out_fs.create_dir(parent, recursive=True)
                 written = fsio.atomic_write_bytes(out_path, repaired, filesystem=out_fs)
-    return {
-        "path": path,
-        "size": size,
-        "file": posixpath.basename(local),
-        "status": status,
-        "blocks_ok": res.n_blocks_ok,
-        "blocks_resynced": res.n_blocks_resynced,
-        "blocks_lost": res.n_blocks_bad,
-        "records_salvaged": res.n_records,
-        "written_to": written,
-    }
+    return (
+        path, size, posixpath.basename(local), status, res.n_blocks_ok,
+        res.n_blocks_resynced, res.n_blocks_bad, res.n_records, written,
+    )
 
 
 def _tree(path: str) -> tuple[str, str]:
@@ -184,26 +161,12 @@ def _tree(path: str) -> tuple[str, str]:
 def _unit_report(spark, units: list[tuple[str, int, int, int]], root: str,
                  replace: bool, out_dir: str | None):
     """The lazy per-unit report over ``units`` ``(path, start, end,
-    size)``, packed into byte-balanced bins, one bin per task."""
-    lengths = [end - start for _, start, end, _ in units]
-    n_bins = _n_bins(spark, len(units), sum(lengths))
-    bins = spark.sparkContext.broadcast(
-        [[units[i] for i in b] for b in _pack_bins(lengths, n_bins)]
-    )
-
-    def process(batches):
-        import pyarrow as pa
-
-        schema = pa.schema(
-            [(n, pa.string() if t == "string" else pa.int64()) for n, t in _UNIT_FIELDS]
-        )
-        for batch in batches:
-            for b in batch.column(0).to_pylist():
-                rows = [_run_unit(*u, root, replace, out_dir) for u in bins.value[b]]
-                yield pa.RecordBatch.from_pylist(rows, schema=schema)
-
-    return spark.range(n_bins, numPartitions=n_bins).mapInArrow(
-        process, ", ".join(f"{n} {t}" for n, t in _UNIT_FIELDS)
+    size)``, one Spark job (``avro_jobs.run_units``)."""
+    return run_units(
+        spark,
+        units,
+        lambda *unit: [_run_unit(*unit, root, replace, out_dir)],
+        ", ".join(f"{n} {t}" for n, t in _UNIT_FIELDS),
     )
 
 
@@ -213,8 +176,6 @@ def _build_report(spark, path: str, replace: bool, out_dir: str | None):
     the unit size is one row with its own status; a larger file is one
     row per byte range. Running the report commits the whole-file
     repairs, so run it once."""
-    from .sources.avro_datasource import _list_container_files_sized
-
     path, root = _tree(path)
     files = _list_container_files_sized(path)
     if not files:

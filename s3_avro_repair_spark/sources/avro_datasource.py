@@ -1,13 +1,15 @@
 """Spark 4 Python DataSource packaging of the OCF codec.
 
-`spark.read.format("avro_ocf")` — the idiomatic DataSource-V2 surface
-for the repo's from-spec Avro container reader (`avro_codec.read_ocf`),
-complementing the binaryFile + mapInPandas pipeline ops
-(`avro_pipeline.read_avro_dir`): same codec, same strict semantics,
-but planned by Spark's DataSource machinery — the scan appears as a
-first-class source in the plan, schema inference is self-describing
-(read from the first container's embedded header, the reference's
-schema-agnostic posture — repair-avro.ts never declares a schema), and
+`spark.read.format("avro_ocf")` — the user-facing DataSource-V2 format
+for the repo's from-spec Avro container reader. The batch Avro ops run
+on the repair CLI's planner instead (``avro_jobs``; a Python
+DataSource query carries a larger fixed cost than a ``range`` +
+``mapInArrow`` job), but both read blocks through the one strict read
+defined here (:func:`read_container`, over ``avro_codec``'s salvage
+walk). Here the scan appears as a first-class source in the plan,
+schema inference is self-describing (read from the first container's
+embedded header, the reference's schema-agnostic posture —
+repair-avro.ts never declares a schema), and
 partition planning is explicit: BYTE-RANGE splits over each container
 (metadata-only planning from the file listing's sizes), with each
 task resyncing to the first 16-byte sync marker at/after its range
@@ -34,6 +36,8 @@ from pyspark.sql.datasource import (
     InputPartition,
     WriterCommitMessage,
 )
+
+from .avro_jobs import _BATCH_ROWS, _list_container_files_sized, _pa_type, arrow_batches
 
 _PRIMITIVE_DDL = {
     "boolean": "boolean",
@@ -74,83 +78,13 @@ def _list_container_files(path: str) -> list[str]:
     return [p for p, _sz in _list_container_files_sized(path)]
 
 
-def _list_container_files_sized(path: str) -> list[tuple[str, int]]:
-    """(path, size) pairs — sizes come free with the listing, and are
-    all the split planner needs (no data bytes read at plan time).
-
-    Lists the set Spark's own file index lists for ``binaryFile`` with
-    ``recursiveFileLookup``: a file or directory below ``path`` whose
-    name Spark treats as hidden (:func:`_spark_hidden`) is skipped. The
-    root itself is never filtered, so a tree under a hidden directory
-    (the ``.avro_cache/`` fixtures) still lists. Paths carry ``path``'s
-    scheme and authority, so ``fsio.resolve`` in a task reaches the same
-    filesystem (``s3://bucket/key``, not a bare ``bucket/key`` that
-    would resolve as local)."""
-    from .. import fsio
-
-    fs, p = fsio.resolve(path)
-    import pyarrow.fs as pafs
-
-    info = fs.get_file_info(p)
-    if info.type == pafs.FileType.File:
-        return [(path, info.size)]
-    base = p.rstrip("/")
-    at = path.find(base) if base else -1
-    prefix = path[:at] if at > 0 else ""  # "s3://", "file://", "hdfs://nn:8020"
-    sel = pafs.FileSelector(p, recursive=True)
-    return sorted(
-        (prefix + f.path, f.size)
-        for f in fs.get_file_info(sel)
-        if f.type == pafs.FileType.File
-        and f.path.endswith(".avro")
-        and not any(map(_spark_hidden, f.path[len(base) + 1 :].split("/")))
-    )
-
-
-def _spark_hidden(name: str) -> bool:
-    """Spark's ``HadoopFSUtils.shouldFilterOutPathName``: names starting
-    with ``_`` (unless they hold ``=``, a partition directory) or ``.``,
-    and in-flight ``._COPYING_`` uploads; ``_metadata`` and
-    ``_common_metadata`` are kept."""
-    exclude = (
-        (name.startswith("_") and "=" not in name)
-        or name.startswith(".")
-        or name.endswith("._COPYING_")
-    )
-    keep = name.startswith("_common_metadata") or name.startswith("_metadata")
-    return exclude and not keep
-
-
-def _pa_type(spark_type):
-    """Spark DataType -> exact pyarrow type. The Arrow batch MUST carry
-    the type Spark's vectorized accessor expects — pandas-default int64
-    against a declared int column breaks ArrowColumnVector.getInt (the
-    schema-drift arm's narrowed generation found exactly that)."""
-    import pyarrow as pa
-
-    m = {
-        "boolean": pa.bool_(),
-        "integer": pa.int32(),
-        "long": pa.int64(),
-        "float": pa.float32(),
-        "double": pa.float64(),
-        "binary": pa.binary(),
-        "string": pa.string(),
-    }
-    t = spark_type.typeName()
-    if t not in m:
-        raise ValueError(f"avro_ocf: unsupported read column type {t!r}")
-    return m[t]
-
-
 # Split planning default: the same 128 MB granularity as
 # spark.sql.files.maxPartitionBytes' default; override per-read with
 # .option("split_size_bytes", n) (tests use small values to exercise
-# multi-split containers at fixture scale). Batch size bounds per-task
-# memory: ~rows held between yields, plus at most one decompressed
+# multi-split containers at fixture scale). Per-task memory is about
+# _BATCH_ROWS rows held between yields, plus at most one decompressed
 # block (MAX_BLOCK_BYTES-capped by the codec).
 _SPLIT_BYTES_DEFAULT = 128 * 1024 * 1024
-_BATCH_ROWS = 8192
 _CHUNK = 4 * 1024 * 1024  # read size of a split's ByteWindow
 
 
@@ -186,79 +120,43 @@ class AvroOCFReader(DataSourceReader):
         return parts
 
     def read(self, partition):
-        import pyarrow as pa
-
-        from .. import fsio
-        from ..avro_codec import (
-            SYNC_SIZE,
-            ByteWindow,
-            CorruptBlock,
-            _decode_block,
-            _decompress,
-            _read_long,
-        )
-
         if partition is None:
             # partitions() returned [] (no container files — e.g. a
             # sink round-trip over an empty input): Spark still issues
             # one read(None) call; an empty scan is the answer.
             return
-        path, start, end, fsize = partition.value
-        fs, p = fsio.resolve(path)
-        names = None
-        pending: list = []
+        yield from arrow_batches(read_container(*partition.value), self._out, _BATCH_ROWS)
 
-        def make_batch():
-            # typed columns from python values: None -> null, ints
-            # exact at the declared width, no pandas dtype inference
-            arrays = [
-                pa.array([r[names[i]] for r in pending], type=t)
-                for i, (_n, t) in enumerate(self._out)
-            ]
-            return pa.RecordBatch.from_arrays(
-                arrays, names=[n for n, _t in self._out]
-            )
 
-        with fs.open_input_file(p) as f:
-            # The header comes from a growing bounded prefix, and the
-            # range through chunked reads: memory stays O(chunk + one
-            # block). A file no larger than one chunk is read whole by
-            # the first chunk and never trimmed.
-            win = ByteWindow(f, fsize, _CHUNK)
-            schema, codec, sync, hdr_end = win.read_header()
-            names = [fl["name"] for fl in schema["fields"]]
-            pos = win.first_block(start, end, hdr_end, sync)
-            if pos is None:
-                return  # no block header lies in this split
+def read_container(path: str, start: int, end: int, size: int, reader=None):
+    """Strict read of the blocks the byte range ``[start, end)`` of the
+    container at ``path`` (``size`` bytes) owns: one tuple per record,
+    positional over ``reader``'s fields (read by Avro schema
+    resolution), or over the container's own fields without a reader.
+    The first damage raises (``avro_codec.salvage_blocks(strict=True)``).
 
-            while pos < end:
-                win.ensure(pos, pos + 20)  # two varints are <= 10 bytes each
-                buf, base = win.buf, win.base
-                try:
-                    count, q = _read_long(buf, pos - base)
-                    size, q = _read_long(buf, q)
-                except (CorruptBlock, IndexError) as exc:
-                    raise CorruptBlock(f"block@{pos}: {exc}") from exc
-                payload_at = base + q
-                if count < 0 or size < 0 or payload_at + size + SYNC_SIZE > fsize:
-                    raise CorruptBlock(f"block@{pos}: bad block structure")
-                win.ensure(pos, payload_at + size + SYNC_SIZE)
-                buf, base = win.buf, win.base
-                payload = _decompress(
-                    buf[payload_at - base : payload_at - base + size], codec
-                )
-                pending.extend(_decode_block(payload, schema, count))
-                tail = buf[
-                    payload_at - base + size : payload_at - base + size + SYNC_SIZE
-                ]
-                if tail != sync:
-                    raise CorruptBlock(f"block@{pos}: sync marker damaged")
-                pos = payload_at + size + SYNC_SIZE
-                if len(pending) >= _BATCH_ROWS:
-                    yield make_batch()
-                    pending = []
-        if pending:
-            yield make_batch()
+    The header comes from a growing bounded prefix and the range through
+    ``_CHUNK``-byte reads, so memory stays O(chunk + one block); a file
+    no larger than one chunk is read whole by the first read."""
+    from operator import itemgetter
+
+    from .. import fsio
+    from ..avro_codec import ByteWindow, block_decoder, salvage_blocks
+
+    fs, p = fsio.resolve(path)
+    with fs.open_input_file(p) as f:
+        win = ByteWindow(f, size, _CHUNK)
+        writer, codec, sync, hdr_end = win.read_header()
+        pos = win.first_block(start, end, hdr_end, sync)
+        if pos is None:
+            return  # no block header lies in this range
+        names = [fl["name"] for fl in (reader or writer)["fields"]]
+        row = itemgetter(*names) if len(names) > 1 else lambda r: (r[names[0]],)
+        decode = block_decoder(writer, reader)
+        for _, _, recs, _ in salvage_blocks(
+            win, writer, codec, sync, pos, end, decode, strict=True
+        ):
+            yield from map(row, recs)
 
 
 class AvroOCFDataSource(DataSource):
@@ -547,12 +445,12 @@ def _register_ops():
     @register("avro_scan_datasource", group="E", oracle=_scan_oracle)
     def avro_scan_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
         """The avro_scan semantics through the Python DataSource API
-        (format("avro_ocf")) instead of binaryFile + mapInPandas: the
-        scan is a first-class DataSource-V2 source with explicit
-        one-partition-per-file planning and Arrow-batch reads, driven
-        by the SAME codec (avro_codec.read_ocf — strict, corruption
-        fails the task). Must hash-match the parquet ground truth
-        exactly like avro_scan: two read paths, one set of semantics.
+        (format("avro_ocf")) instead of the planner job: the scan is a
+        first-class DataSource-V2 source with byte-range split planning
+        and Arrow-batch reads, driven by the SAME strict read
+        (:func:`read_container` — corruption fails the task). Must
+        hash-match the parquet ground truth exactly like avro_scan:
+        two plans, one read, one set of semantics.
         Reference A7 (repair-avro.ts:106-116), re-expressed the way a
         Spark user would actually mount a custom format."""
         from .avro_pipeline import ORDERS_SPARK_SCHEMA, ensure_avro_fixtures

@@ -2,8 +2,8 @@
 entire reason to exist, re-expressed as DataFrame operations).
 
 Reference anchors (``/root/reference/src/services/repair-avro.ts``):
-- object listing :37-40            -> ``binaryFile`` scan (one row per file)
-- download :106-116                -> executors stream file bytes; no staging
+- object listing :37-40            -> driver-side listing (metadata only)
+- download :106-116                -> each task reads its own files; no staging
 - sampled validate :126-142        -> :func:`avro_validate` (strict full decode
   by default — the 100 TB-honest choice; sampling was the reference's cost
   dodge, ``resources/application.yml:6-7``)
@@ -15,10 +15,13 @@ Reference anchors (``/root/reference/src/services/repair-avro.ts``):
   repaired / unrepairable), failures isolated per file — never
   abort-the-run (contrast the reference's single try/catch :72-74)
 
-Scale design: every op is ``binaryFile`` -> ``mapInPandas`` with ONE TASK
-PER FILE (Arrow batches, no driver buffering, no whole-directory
-reads). At 1000 executors each task validates/repairs its own file;
-a corrupt file yields a report row instead of killing the job.
+Scale design: every op is ONE Spark job on the repair CLI's planner
+(``avro_jobs``): the driver lists the files, packs them into
+byte-balanced bins, and each task reads, validates or repairs the files
+of its bin and ships Arrow batches — no file byte is shuffled, no
+driver buffering, no whole-directory reads. Each op's per-file body is
+a plain function of one file; a corrupt file yields a report row
+instead of killing the job.
 
 The spark-avro jar is absent from this classpath, so scan/write use the
 repo's own pure-Python OCF codec (``avro_codec.py``) — same public
@@ -28,6 +31,7 @@ container format, in-process.
 from __future__ import annotations
 
 import os
+import re
 import shutil
 import tempfile
 
@@ -36,14 +40,19 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..avro_codec import (
+    SalvageResult,
     block_spans,
-    read_ocf,
+    block_stats,
+    read_header,
     salvage_ocf,
+    salvage_range,
+    sampled_validate,
     write_ocf,
 )
 from ..exprs import dsum
 from ..plans.registry import register
 from ..tables import table
+from .avro_jobs import run_files
 
 ORDERS_SCHEMA = {
     "type": "record",
@@ -363,72 +372,24 @@ def ensure_avro_fixtures(sf_dir: str) -> str:
 # ---------------------------------------------------------------------------
 
 
-def _binary_files(
-    spark: SparkSession, path: str, n_tasks: int | None = None
-) -> DataFrame:
-    """binaryFile scan, optionally spread over ``n_tasks`` partitions.
-
-    The file source packs small files into 128MB partitions
-    (``spark.sql.files.maxPartitionBytes``), which serializes the
-    Python decode of a small fixture set into one task. An explicit
-    ``repartition(n)`` (exempt from AQE coalescing) restores
-    one-task-per-file parallelism. At 100 TB you do NOT shuffle file
-    bytes — you raise ``spark.sql.files.openCostInBytes`` so the
-    packing itself yields ~one file per task.
-    """
-    df = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.avro")
-        .option("recursiveFileLookup", "true")
-        .load(path)
-    )
-    if n_tasks:
-        df = df.repartition(n_tasks, "path")
-    return df
-
-
 def read_avro_dir(
-    spark: SparkSession, path: str, schema: dict, spark_schema: str,
-    n_tasks: int | None = None, transform=None, logical: bool = False,
+    spark: SparkSession, path: str, schema: dict, spark_schema: str
 ) -> DataFrame:
-    """Strict distributed Avro scan: binaryFile -> mapInPandas decode,
-    one file per row, corruption fails the task (scan semantics; use
-    avro_validate/avro_repair for tolerant reads). ``transform``, if
-    given, maps each decoded per-file frame (original column names) to
-    the output frame — the hook logical-type projections plug into,
-    still inside the same Arrow batch. ``logical=True`` materializes
-    logicalType annotations at the CODEC level (read_ocf_logical), so
-    the frame carries Decimal / date / datetime values."""
-    names = [f["name"] for f in schema["fields"]]
-    # Output column names come from the Spark schema (positional), so a
-    # logical-type column can surface under a clearer name (…_us).
-    out_names = [c.strip().split()[0] for c in spark_schema.split(",")]
+    """Strict distributed Avro scan, one Spark job over the container
+    files under ``path`` (``avro_jobs.run_files``): every record read as
+    ``schema`` (Avro schema resolution; the writer's own decoder when
+    they are equal), columns named positionally by ``spark_schema`` (a
+    logical-type column can surface under a clearer name, …_us).
+    Corruption fails the task (scan semantics; use avro_validate /
+    avro_repair for tolerant reads). Each task reads its files through
+    the DataSource's bounded window (``avro_datasource.read_container``),
+    never a whole file."""
+    from .avro_datasource import read_container
 
-    def decode(batches):
-        from ..avro_codec import read_ocf_logical
+    def scan(p, size):
+        return read_container(p, 0, size, size, schema)
 
-        reader = read_ocf_logical if logical else read_ocf
-        for pdf in batches:
-            for content in pdf["content"]:
-                _, recs = reader(bytes(content))
-                if recs:
-                    # dict-of-columns, not pd.DataFrame(list_of_dicts):
-                    # the row-oriented constructor re-infers per cell
-                    # and measured ~12% of the whole scan op (r10);
-                    # the column build is one list comprehension per
-                    # field over the decoder's dicts.
-                    out = pd.DataFrame(
-                        {n: [r[n] for r in recs] for n in names}
-                    )
-                    if transform is not None:
-                        out = transform(out)
-                    out.columns = out_names
-                    yield out
-        yield pd.DataFrame({n: [] for n in out_names})
-
-    return _binary_files(spark, path, n_tasks).select("content").mapInPandas(
-        decode, schema=spark_schema
-    )
+    return run_files(spark, path, scan, spark_schema)
 
 
 def write_avro_dir(
@@ -486,24 +447,49 @@ def write_avro_dir(
     return report.count()  # materialize -> files committed
 
 
+def _file_bytes(path: str) -> bytes:
+    from .. import fsio
+
+    fs_, p = fsio.resolve(path)
+    with fs_.open_input_file(p) as f:
+        return f.read()
+
+
+def _salvage(path: str, size: int) -> SalvageResult:
+    """Count-only block salvage of one whole file, read through a
+    bounded window."""
+    from .. import fsio
+
+    fs_, p = fsio.resolve(path)
+    with fs_.open_input_file(p) as f:
+        return salvage_range(f, size, 0, size)
+
+
+def _outcome(res: SalvageResult) -> tuple[str, int]:
+    """(status, lost blocks) of a salvage: -1 lost for an unrepairable
+    (header-less) file."""
+    if res.healthy:
+        return "healthy", 0
+    if res.repairable:
+        return "repaired", res.n_blocks_bad
+    return "unrepairable", -1
+
+
+def _repair_row(path: str, size: int) -> list[tuple]:
+    """avro_repair's report row of one file: failures isolated per file."""
+    return [(os.path.basename(path), *_outcome(_salvage(path, size)))]
+
+
 def _salvage_report(batches):
-    """mapInPandas kernel shared by validate/repair/report: one report
-    row per file, failures isolated per file."""
+    """mapInPandas kernel of the binaryFile stream in stream_avro_salvage:
+    ``_repair_row`` over each streamed file's bytes."""
+    cols = ["file", "status", "lost_blocks"]
     for pdf in batches:
-        files, statuses, lost = [], [], []
-        for path, content in zip(pdf["path"], pdf["content"]):
-            res = salvage_ocf(bytes(content))
-            files.append(os.path.basename(path))
-            if res.healthy:
-                statuses.append("healthy")
-                lost.append(0)
-            elif res.repairable:
-                statuses.append("repaired")
-                lost.append(res.n_blocks_bad)
-            else:
-                statuses.append("unrepairable")
-                lost.append(-1)
-        yield pd.DataFrame({"file": files, "status": statuses, "lost_blocks": lost})
+        rows = [
+            (os.path.basename(path), *_outcome(salvage_ocf(bytes(content), keep_records=False)))
+            for path, content in zip(pdf["path"], pdf["content"])
+        ]
+        yield pd.DataFrame(rows, columns=cols)
 
 
 # ---------------------------------------------------------------------------
@@ -527,8 +513,7 @@ def avro_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     value-exact including the timestamp-micros logical type."""
     root = ensure_avro_fixtures(sf_dir)
     return read_avro_dir(
-        spark, os.path.join(root, "clean"), ORDERS_SCHEMA, ORDERS_SPARK_SCHEMA,
-        n_tasks=N_FILES,
+        spark, os.path.join(root, "clean"), ORDERS_SCHEMA, ORDERS_SPARK_SCHEMA
     )
 
 
@@ -551,8 +536,7 @@ def avro_scan_snappy(spark: SparkSession, sf_dir: str) -> DataFrame:
     nowhere else. Hash-checked against the parquet ground truth."""
     root = ensure_avro_fixtures(sf_dir)
     return read_avro_dir(
-        spark, os.path.join(root, "snappy"), ORDERS_SCHEMA, ORDERS_SPARK_SCHEMA,
-        n_tasks=N_FILES,
+        spark, os.path.join(root, "snappy"), ORDERS_SCHEMA, ORDERS_SPARK_SCHEMA
     )
 
 
@@ -596,21 +580,9 @@ def avro_scan_mixed(spark: SparkSession, sf_dir: str) -> DataFrame:
     a years-old S3 prefix — scanned in ONE distributed pass, no
     per-generation manifest needed."""
     root = ensure_avro_fixtures(sf_dir)
-    names = [f["name"] for f in MIXED_READER_SCHEMA["fields"]]
-
-    def decode(batches):
-        from ..avro_codec import read_ocf_resolved
-
-        for pdf in batches:
-            for content in pdf["content"]:
-                recs = read_ocf_resolved(bytes(content), MIXED_READER_SCHEMA)
-                if recs:
-                    yield pd.DataFrame(recs, columns=names)
-        yield pd.DataFrame({n: [] for n in names})
-
-    bf = _binary_files(spark, os.path.join(root, "mixed"), n_tasks=N_FILES)
-    return bf.select("content").mapInPandas(
-        decode, schema="o_orderkey long, o_totalprice double, o_orderstatus string"
+    return read_avro_dir(
+        spark, os.path.join(root, "mixed"), MIXED_READER_SCHEMA,
+        "o_orderkey long, o_totalprice double, o_orderstatus string",
     )
 
 
@@ -634,42 +606,39 @@ def avro_scan_logical(spark: SparkSession, sf_dir: str) -> DataFrame:
     both natively; a scan that surfaced raw bytes/ints would be
     dropping declared semantics on the floor.
 
-    The projection runs inside the same Arrow decode batch
-    (read_avro_dir's transform hook) — no second Python pass, no
-    shuffle; the op stays one-task-per-file like every E-group scan.
-    Output is canonical strings on BOTH engines (the repo's
-    no-raw-DATE/DECIMAL output discipline): Python
-    ``Decimal(unscaled).scaleb(-2)`` prints exactly like DuckDB's
-    ``DECIMAL(18,2) -> VARCHAR``, and ISO dates are unambiguous. The
+    The rendering runs in the same per-file read that decodes the
+    values — no second Python pass, no shuffle. Output is canonical
+    strings on BOTH engines (the repo's no-raw-DATE/DECIMAL output
+    discipline): Python ``Decimal(unscaled).scaleb(-2)`` prints exactly
+    like DuckDB's ``DECIMAL(18,2) -> VARCHAR``, and ISO dates are
+    unambiguous. The
     fixture rendition is deflate-compressed, so this op also exercises
     codec x logical-type together.
 
     The materialization itself happens at the CODEC level
-    (avro_codec.read_ocf_logical via ``logical=True``): the frame this
-    transform receives already carries ``Decimal`` / ``datetime.date``
-    values, and the projection just renders them — the same typed
-    values the codec's logical WRITE path (encode_value over Decimal /
-    date / datetime) accepts for a full round-trip
+    (``avro_codec.materialize_logical`` over each raw value): the
+    rendering receives ``Decimal`` / ``datetime.date`` values — the same
+    typed values the codec's logical WRITE path (encode_value over
+    Decimal / date / datetime) accepts for a full round-trip
     (tests/test_avro_codec.py)."""
+    from ..avro_codec import materialize_logical
+
     root = ensure_avro_fixtures(sf_dir)
+    _, price_t, date_t = (f["type"] for f in TYPED_ORDERS_SCHEMA["fields"])
 
-    def project(pdf: pd.DataFrame) -> pd.DataFrame:
-        return pd.DataFrame(
-            {
-                "o_orderkey": pdf["o_orderkey"],
-                "totalprice_dec": [str(d) for d in pdf["o_totalprice"]],
-                "orderdate_day": [d.isoformat() for d in pdf["o_orderdate"]],
-            }
-        )
+    def scan(path, size):
+        from .avro_datasource import read_container
 
-    return read_avro_dir(
-        spark,
-        os.path.join(root, "typed"),
-        TYPED_ORDERS_SCHEMA,
+        for key, price, day in read_container(path, 0, size, size, TYPED_ORDERS_SCHEMA):
+            yield (
+                key,
+                str(materialize_logical(price_t, price)),
+                materialize_logical(date_t, day).isoformat(),
+            )
+
+    return run_files(
+        spark, os.path.join(root, "typed"), scan,
         "o_orderkey long, totalprice_dec string, orderdate_day string",
-        n_tasks=N_FILES,
-        transform=project,
-        logical=True,
     )
 
 
@@ -688,16 +657,15 @@ def avro_scan_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     carried by the PATH, not the file bytes — pruning a year touches
     zero bytes of the other years' objects."""
     root = ensure_avro_fixtures(sf_dir)
-    bf = _binary_files(spark, os.path.join(root, "partitioned"), n_tasks=8)
-    year = F.regexp_extract(F.col("path"), r"year=(\d+)", 1).alias("year")
 
-    def count_records(batches):
-        for pdf in batches:
-            ns = [len(read_ocf(bytes(c))[1]) for c in pdf["content"]]
-            yield pd.DataFrame({"year": pdf["year"], "n_file": ns})
+    def count_records(path, size):
+        from .avro_datasource import read_container
 
-    per_file = bf.select(year, "content").mapInPandas(
-        count_records, schema="year string, n_file long"
+        year = re.search(r"year=(\d+)", path).group(1)
+        return [(year, sum(1 for _ in read_container(path, 0, size, size)))]
+
+    per_file = run_files(
+        spark, os.path.join(root, "partitioned"), count_records, "year string, n_file long"
     )
     return per_file.groupBy("year").agg(F.sum("n_file").alias("n"))
 
@@ -713,22 +681,16 @@ def avro_validate(spark: SparkSession, sf_dir: str) -> DataFrame:
     reference's ``analyze()`` (repair-avro.ts:126-142) with strict FULL
     decode instead of its 1% sample (a sampled pass can miss corruption
     in unsampled blocks; at scale honesty beats the shortcut, and the
-    work is one parallel task per file). The oracle pins the exact
-    deterministic outcome of the injected corruption."""
+    work spreads over byte-balanced per-core bins). The oracle pins the
+    exact deterministic outcome of the injected corruption."""
     root = ensure_avro_fixtures(sf_dir)
-    bf = _binary_files(spark, os.path.join(root, "corrupt"), n_tasks=N_FILES)
 
-    def validate(batches):
-        for pdf in batches:
-            files, statuses = [], []
-            for path, content in zip(pdf["path"], pdf["content"]):
-                res = salvage_ocf(bytes(content))
-                files.append(os.path.basename(path))
-                statuses.append("healthy" if res.healthy else "corrupt")
-            yield pd.DataFrame({"file": files, "status": statuses})
+    def validate(path, size):
+        healthy = _salvage(path, size).healthy
+        return [(os.path.basename(path), "healthy" if healthy else "corrupt")]
 
-    return bf.select("path", "content").mapInPandas(
-        validate, schema="file string, status string"
+    return run_files(
+        spark, os.path.join(root, "corrupt"), validate, "file string, status string"
     )
 
 
@@ -743,22 +705,14 @@ def avro_validate_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
     sampled) and the oracle is the same VALUES table as the strict op.
     The honest caveat the reference accepts: payload-only damage in an
     unsampled block passes. ~100x less Python decode work per file."""
-    from ..avro_codec import sampled_validate
-
     root = ensure_avro_fixtures(sf_dir)
-    bf = _binary_files(spark, os.path.join(root, "corrupt"), n_tasks=N_FILES)
 
-    def validate(batches):
-        for pdf in batches:
-            files, statuses = [], []
-            for path, content in zip(pdf["path"], pdf["content"]):
-                healthy, _, _ = sampled_validate(bytes(content))
-                files.append(os.path.basename(path))
-                statuses.append("healthy" if healthy else "corrupt")
-            yield pd.DataFrame({"file": files, "status": statuses})
+    def validate(path, _size):
+        healthy, _, _ = sampled_validate(_file_bytes(path))
+        return [(os.path.basename(path), "healthy" if healthy else "corrupt")]
 
-    return bf.select("path", "content").mapInPandas(
-        validate, schema="file string, status string"
+    return run_files(
+        spark, os.path.join(root, "corrupt"), validate, "file string, status string"
     )
 
 
@@ -775,9 +729,9 @@ def avro_repair(spark: SparkSession, sf_dir: str) -> DataFrame:
     header is unrepairable (-1). Failures never abort the run —
     contrast the reference's whole-run try/catch (:72-74)."""
     root = ensure_avro_fixtures(sf_dir)
-    bf = _binary_files(spark, os.path.join(root, "corrupt"), n_tasks=N_FILES)
-    return bf.select("path", "content").mapInPandas(
-        _salvage_report, schema="file string, status string, lost_blocks int"
+    return run_files(
+        spark, os.path.join(root, "corrupt"), _repair_row,
+        "file string, status string, lost_blocks int",
     )
 
 
@@ -808,7 +762,7 @@ def avro_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.unix_micros(F.col("o_orderdate").cast("timestamp")).alias("o_orderdate"),
     )
     write_avro_dir(o, out, ORDERS_SCHEMA, codec="deflate")
-    back = read_avro_dir(spark, out, ORDERS_SCHEMA, ORDERS_SPARK_SCHEMA, n_tasks=16)
+    back = read_avro_dir(spark, out, ORDERS_SCHEMA, ORDERS_SPARK_SCHEMA)
     return back.agg(
         F.count(F.lit(1)).alias("n"),
         dsum("o_totalprice", "sum_price"),
@@ -830,9 +784,9 @@ def pipeline_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     (repair-avro.ts:58,64 + progress bar): outcome -> file count, as a
     queryable DataFrame. Composes avro_repair's per-file report."""
     root = ensure_avro_fixtures(sf_dir)
-    bf = _binary_files(spark, os.path.join(root, "corrupt"), n_tasks=N_FILES)
-    per_file = bf.select("path", "content").mapInPandas(
-        _salvage_report, schema="file string, status string, lost_blocks int"
+    per_file = run_files(
+        spark, os.path.join(root, "corrupt"), _repair_row,
+        "file string, status string, lost_blocks int",
     )
     return per_file.groupBy("status").agg(F.count(F.lit(1)).alias("n_files"))
 
@@ -868,22 +822,10 @@ def avro_scan_evolved(spark: SparkSession, sf_dir: str) -> DataFrame:
     that lets one 100 TB pass apply a current schema to years of
     heterogeneously-written objects — a capability the reference
     inherits from avro-tools and we implement in-codec."""
-    from ..avro_codec import read_ocf_resolved
-
     root = ensure_avro_fixtures(sf_dir)
-    names = [f["name"] for f in EVOLVED_READER_SCHEMA["fields"]]
-
-    def decode(batches):
-        for pdf in batches:
-            for content in pdf["content"]:
-                recs = read_ocf_resolved(bytes(content), EVOLVED_READER_SCHEMA)
-                if recs:
-                    yield pd.DataFrame(recs, columns=names)
-        yield pd.DataFrame({n: [] for n in names})
-
-    bf = _binary_files(spark, os.path.join(root, "clean"), n_tasks=N_FILES)
-    return bf.select("content").mapInPandas(
-        decode, schema="o_orderkey long, o_totalprice double, region string"
+    return read_avro_dir(
+        spark, os.path.join(root, "clean"), EVOLVED_READER_SCHEMA,
+        "o_orderkey long, o_totalprice double, region string",
     )
 
 
@@ -908,8 +850,6 @@ def avro_scan_projected(spark: SparkSession, sf_dir: str) -> DataFrame:
     the bytes are read either way) proportionally. The reference's
     avro-tools delegate has no projected read at all: its ``cat``
     always decodes full records."""
-    from ..avro_codec import read_ocf_resolved
-
     root = ensure_avro_fixtures(sf_dir)
     projected = {
         "type": "record",
@@ -920,19 +860,8 @@ def avro_scan_projected(spark: SparkSession, sf_dir: str) -> DataFrame:
             if f["name"] in ("o_orderkey", "o_totalprice")
         ],
     }
-    names = [f["name"] for f in projected["fields"]]
-
-    def decode(batches):
-        for pdf in batches:
-            for content in pdf["content"]:
-                recs = read_ocf_resolved(bytes(content), projected)
-                if recs:
-                    yield pd.DataFrame(recs, columns=names)
-        yield pd.DataFrame({n: [] for n in names})
-
-    bf = _binary_files(spark, os.path.join(root, "clean"), n_tasks=N_FILES)
-    return bf.select("content").mapInPandas(
-        decode, schema="o_orderkey long, o_totalprice double"
+    return read_avro_dir(
+        spark, os.path.join(root, "clean"), projected, "o_orderkey long, o_totalprice double"
     )
 
 
@@ -956,27 +885,15 @@ def avro_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     validate/repair treatment. The oracle knows the exact layout
     because fixture generation is deterministic: bucket = o_orderkey %
     8, writer flushes every 100 records."""
-    import re as _re
-
-    from ..avro_codec import block_stats
-
     root = ensure_avro_fixtures(sf_dir)
 
-    def stats(batches):
-        cols = ["file_idx", "n_records", "n_blocks"]
-        for pdf in batches:
-            rows = []
-            for path, content in zip(pdf["path"], pdf["content"]):
-                nb, nr, _ = block_stats(bytes(content))
-                idx = int(_re.search(r"orders_(\d+)\.avro", path).group(1))
-                rows.append((idx, nr, nb))
-            if rows:
-                yield pd.DataFrame(rows, columns=cols)
-        yield pd.DataFrame({c: pd.Series(dtype="int64") for c in cols})
+    def stats(path, _size):
+        nb, nr, _ = block_stats(_file_bytes(path))
+        return [(int(re.search(r"orders_(\d+)\.avro", path).group(1)), nr, nb)]
 
-    bf = _binary_files(spark, os.path.join(root, "clean"), n_tasks=N_FILES)
-    return bf.select("path", "content").mapInPandas(
-        stats, schema="file_idx long, n_records long, n_blocks long"
+    return run_files(
+        spark, os.path.join(root, "clean"), stats,
+        "file_idx long, n_records long, n_blocks long",
     )
 
 
@@ -1002,8 +919,7 @@ def avro_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     ~128 MB targets; the codec path is identical."""
     root = ensure_avro_fixtures(sf_dir)
     src = read_avro_dir(
-        spark, os.path.join(root, "clean"), ORDERS_SCHEMA, ORDERS_SPARK_SCHEMA,
-        n_tasks=N_FILES,
+        spark, os.path.join(root, "clean"), ORDERS_SCHEMA, ORDERS_SPARK_SCHEMA
     )
     out = scratch_dir("avro_compact")
     compact_schema = {
@@ -1020,7 +936,6 @@ def avro_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     back = read_avro_dir(
         spark, out, compact_schema,
         "o_orderkey long, o_orderstatus string, o_totalprice double",
-        n_tasks=2,
     )
     return back.groupBy(F.col("o_orderstatus").alias("status")).agg(
         F.count(F.lit(1)).alias("n"), dsum("o_totalprice", "sum_price")
@@ -1061,29 +976,18 @@ def avro_schema_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     inventory is one distributed pass whose oracle is exact because the
     fixture assigns generations deterministically (o_orderkey % 8)."""
     root = ensure_avro_fixtures(sf_dir)
-    bf = _binary_files(spark, os.path.join(root, "mixed"), n_tasks=N_FILES)
 
-    def report(batches):
-        from ..avro_codec import block_stats, read_header
+    def report(path, _size):
+        data = _file_bytes(path)
+        schema, codec, _, _ = read_header(data)
+        _, n_records, _ = block_stats(data)
+        fields = [f["name"] for f in schema["fields"]]
+        gen = "gen2" if "o_orderstatus" in fields else "gen1"
+        return [(gen, codec, len(fields), n_records)]
 
-        for pdf in batches:
-            rows = []
-            for content in pdf["content"]:
-                data = bytes(content)
-                schema, codec, _, _ = read_header(data)
-                _, n_records, _ = block_stats(data)
-                fields = [f["name"] for f in schema["fields"]]
-                gen = "gen2" if "o_orderstatus" in fields else "gen1"
-                rows.append((gen, codec, len(fields), n_records))
-            yield pd.DataFrame(
-                rows, columns=["generation", "codec", "n_fields", "n_rec"]
-            )
-        yield pd.DataFrame(
-            {"generation": [], "codec": [], "n_fields": [], "n_rec": []}
-        )
-
-    per_file = bf.select("content").mapInPandas(
-        report, schema="generation string, codec string, n_fields int, n_rec long"
+    per_file = run_files(
+        spark, os.path.join(root, "mixed"), report,
+        "generation string, codec string, n_fields int, n_rec long",
     )
     return per_file.groupBy("generation", "codec", "n_fields").agg(
         F.count(F.lit(1)).alias("n_files"),

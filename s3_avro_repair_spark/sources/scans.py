@@ -128,7 +128,8 @@ def sink_avro(spark: SparkSession, sf_dir: str) -> DataFrame:
     The spark-avro jar is not on this classpath, so the container files
     are written by our own pure-Python OCF codec (avro_codec.py) — one
     file per partition via mapInPandas, then scanned back with the same
-    codec. See sources/avro_pipeline.py for the full pipeline surface.
+    codec in one job on the CLI's planner (``read_avro_dir``). See
+    sources/avro_pipeline.py for the full pipeline surface.
     """
     from .avro_pipeline import read_avro_dir, write_avro_dir
 

@@ -552,12 +552,12 @@ def stream_avro_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     is the batch equivalent over the clean fixture tree (hash-checked
     against the orders ground truth); tests/test_streaming.py re-runs
     it as a REAL binaryFile stream (one file per microbatch, 8
-    microbatches) through the identical decode lambda and asserts the
-    streamed aggregate equals this batch result.
+    microbatches) through the same codec and asserts the streamed
+    aggregate equals this batch result. The batch plan is one job on
+    the CLI's planner (``read_avro_dir``): no file byte is shuffled.
 
     Scale posture: the stream source checkpoints seen-file state, each
-    microbatch decodes only new files (one task per file, same as the
-    batch path), and the running (status) aggregate keeps constant
+    microbatch decodes only new files, and the running (status) aggregate keeps constant
     state. A corrupt file would yield report rows, not a dead query —
     per-file isolation carries over from the batch pipeline."""
     from ..sources.avro_pipeline import (
@@ -569,8 +569,7 @@ def stream_avro_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     root = ensure_avro_fixtures(sf_dir)
     df = read_avro_dir(
-        spark, os.path.join(root, "clean"), ORDERS_SCHEMA, ORDERS_SPARK_SCHEMA,
-        n_tasks=8,
+        spark, os.path.join(root, "clean"), ORDERS_SCHEMA, ORDERS_SPARK_SCHEMA
     )
     return df.groupBy("o_orderstatus").agg(
         F.count(F.lit(1)).alias("n"),
@@ -612,11 +611,7 @@ def stream_avro_salvage(spark: SparkSession, sf_dir: str) -> DataFrame:
     the checkpoint, one decode task per new file, constant-size
     (3-status) aggregate state — the shape of a repair daemon watching
     an S3 landing prefix."""
-    from ..sources.avro_pipeline import (
-        N_FILES,
-        _salvage_report,
-        ensure_avro_fixtures,
-    )
+    from ..sources.avro_pipeline import _salvage_report, ensure_avro_fixtures
 
     root = ensure_avro_fixtures(sf_dir)
     name = f"salv_{uuid.uuid4().hex[:8]}"

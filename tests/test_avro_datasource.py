@@ -253,11 +253,15 @@ def test_corruption_fails_split_scans_too(spark, tmp_path):
             rd.load(str(d)).count()
 
 
-def test_single_split_above_chunk_reads_chunked(tmp_path, monkeypatch):
+@pytest.mark.parametrize("via", ["datasource", "read_avro_dir"])
+def test_single_split_above_chunk_reads_chunked(tmp_path, monkeypatch, request, via):
     """The whole-file read is bounded by ``_CHUNK``: a
     one-split container no larger than a chunk is read at once, a larger
     one goes through the chunked window — which never holds the file —
-    and returns the same rows."""
+    and returns the same rows. ``read_avro_dir`` runs the same file
+    through a Spark job: its task reads with the workers' own
+    ``_CHUNK``, so that arm checks the rows only — the bounded read is
+    ``read_container``, the function both arms call."""
     import pyarrow as pa
 
     from s3_avro_repair_spark import avro_codec
@@ -271,10 +275,6 @@ def test_single_split_above_chunk_reads_chunked(tmp_path, monkeypatch):
     ]
     raw = write_ocf_bytes(SCHEMA, recs, block_records=100)
     (d / "one.avro").write_bytes(raw)
-    reader = ds.AvroOCFReader(
-        {"path": str(d)}, [("k", pa.int64()), ("s", pa.string()), ("x", pa.float64())]
-    )
-    (part,) = reader.partitions()
     held = []
     ensure = avro_codec.ByteWindow.ensure
 
@@ -284,18 +284,34 @@ def test_single_split_above_chunk_reads_chunked(tmp_path, monkeypatch):
 
     monkeypatch.setattr(avro_codec.ByteWindow, "ensure", spy)
 
-    def rows():
-        held.clear()
-        return [
-            tuple(r.values())
-            for b in reader.read(part)
-            for r in b.to_pylist()
-        ]
+    if via == "datasource":
+        reader = ds.AvroOCFReader(
+            {"path": str(d)}, [("k", pa.int64()), ("s", pa.string()), ("x", pa.float64())]
+        )
+        (part,) = reader.partitions()
+
+        def rows():
+            held.clear()
+            return [
+                tuple(r.values())
+                for b in reader.read(part)
+                for r in b.to_pylist()
+            ]
+    else:
+        from s3_avro_repair_spark.sources.avro_pipeline import read_avro_dir
+
+        spark = request.getfixturevalue("spark")
+
+        def rows():
+            df = read_avro_dir(spark, str(d), SCHEMA, "k long, s string, x double")
+            return [tuple(r) for r in df.collect()]
 
     want = [(r["k"], r["s"], r["x"]) for r in recs]
     assert rows() == want
-    assert max(held) == len(raw)  # one chunk covers it: read at once
+    if via == "datasource":
+        assert max(held) == len(raw)  # one chunk covers it: read at once
     monkeypatch.setattr(ds, "_CHUNK", 4096)
     assert len(raw) > 4 * 64 * 1024  # well past the header prefix too
     assert rows() == want
-    assert max(held) < len(raw) // 4
+    if via == "datasource":
+        assert max(held) < len(raw) // 4
