@@ -3,7 +3,8 @@
 This is the repo's only hand-written data-level code — everything else
 is declarative DataFrame programs. It replaces the avro-tools jar the
 reference shells out to (``/root/reference/src/services/repair-avro.ts:131``
-``cat`` == :func:`read_ocf`, ``:149`` ``repair`` == :func:`salvage_ocf`)
+``cat`` == :func:`read_ocf`, ``:149`` ``repair`` == :func:`salvage_range`
++ :func:`write_salvaged`)
 with an in-process implementation of the PUBLIC Avro 1.x spec
 (https://avro.apache.org/docs/1.11.1/specification/):
 
@@ -35,13 +36,15 @@ parallelized per-task. A large container splits further:
 the whole-file salvage. Every decoding walk — salvage, the strict
 reads, reader-schema reads — is :func:`salvage_blocks` with a block
 decoder passed in; only :func:`sampled_validate` walks on its own,
-because it skips payloads on purpose.
+because it skips payloads on purpose. A repair decodes nothing twice:
+:func:`write_salvaged` copies the blocks the count-only walk kept.
 """
 
 from __future__ import annotations
 
 import bz2
 import datetime as _dt
+import functools
 import hashlib
 import io
 import itertools
@@ -688,7 +691,7 @@ def read_header(data: bytes) -> tuple[dict, str, bytes, int]:
     return schema, codec, sync, pos
 
 
-_DECODER_CACHE: dict[tuple[str, bool], object] = {}
+_DECODER_CACHE: dict[tuple[str, str], object] = {}
 
 
 def compile_decoder(schema, build: bool = True):
@@ -708,15 +711,29 @@ def compile_decoder(schema, build: bool = True):
     fixed) fall back to decode_value itself; nested records compile
     recursively. Cached per schema JSON — one codegen per schema per
     worker process, microseconds against millions of avoided calls.
+    The cache key costs a ``json.dumps`` of the schema, so a walk
+    resolves its decoder once (:func:`block_decoder`), not per block.
 
     ``build=False`` generates the count-only twin for a salvage pass
-    that only counts records: the same checks in the same order,
-    raising the same messages, but no dict, string, or number is built
-    (a string is only checked for UTF-8) and the function returns the
-    end position alone. A run of int/long fields is skipped by one regex
-    match, and a one-byte length or union index is read inline; the
-    exact loops run only when those fail, to raise their error."""
-    key = (json.dumps(schema, sort_keys=True), build)
+    that only counts records. It is a BLOCK function ``(payload, count)``
+    with the record loop and the trailing-bytes check generated inside
+    it: the checks of :func:`block_decoder`'s strict block decode in the
+    same order, raising the same messages, but no dict, string, or
+    number is built (a string is only checked for UTF-8) and it returns
+    no records (an empty tuple). A run of int/long fields is skipped by
+    one regex match, and a one-byte length or union index is read
+    inline; the exact loops run only when those fail, to raise their
+    error. A nested record stays a call of its per-record skipper."""
+    return _codegen(schema, "build" if build else "count")
+
+
+def _codegen(schema, mode: str):
+    """:func:`compile_decoder`'s generator. ``mode`` is ``"build"``
+    (``(buf, pos) -> (value, pos)``), ``"skip"`` (``(buf, pos) -> pos``,
+    a nested record of a count-only decoder) or ``"count"`` (the
+    count-only block function)."""
+    build = mode == "build"
+    key = (json.dumps(schema, sort_keys=True), mode)
     fn = _DECODER_CACHE.get(key)
     if fn is not None:
         return fn
@@ -727,6 +744,9 @@ def compile_decoder(schema, build: bool = True):
         "decode_value": decode_value,
     }
     lines: list[str] = ["def _decoder(buf, pos):", "    blen = len(buf)"]
+    if mode == "count":  # a block's record loop is generated too
+        lines = ["def _decoder(buf, count):", "    blen = len(buf)", "    pos = 0",
+                 "    for i_ in range(count):"]
     n_fallbacks = [0]
 
     def varint(ind: str, out: str | None) -> None:
@@ -855,7 +875,7 @@ def compile_decoder(schema, build: bool = True):
         elif t == "record":
             sub = f"_rec{n_fallbacks[0]}"
             n_fallbacks[0] += 1
-            ns[sub] = compile_decoder(s, build)
+            ns[sub] = _codegen(s, "build" if build else "skip")
             lines.append(
                 f"{ind}{out}, pos = {sub}(buf, pos)" if build else f"{ind}pos = {sub}(buf, pos)"
             )
@@ -866,16 +886,29 @@ def compile_decoder(schema, build: bool = True):
             lines.append(f"{ind}{out}, pos = decode_value({sub}, buf, pos)")
 
     if not build:  # every value lands in the throwaway name ``_``
+        ind = "        " if mode == "count" else "    "
         is_record = _schema_type(schema) == "record"
         types = [f["type"] for f in schema["fields"]] if is_record else [schema]
+        if not types:  # a record with no fields: an empty loop body
+            lines.append(f"{ind}pass")
         for is_int, run in itertools.groupby(types, lambda s: _schema_type(s) in ("int", "long")):
             run = list(run)
             if is_int:
-                skip_varints("    ", len(run))
+                skip_varints(ind, len(run))
             else:
                 for s in run:
-                    emit(s, "    ", "_")
-        lines.append("    return pos")
+                    emit(s, ind, "_")
+        if mode == "count":
+            lines.extend(
+                [
+                    "    if pos != blen:",
+                    "        raise CorruptBlock("
+                    "'%d trailing bytes in block' % (blen - pos))",
+                    "    return ()",
+                ]
+            )
+        else:
+            lines.append("    return pos")
     elif _schema_type(schema) == "record":
         pairs = []
         for i, f in enumerate(schema["fields"]):
@@ -912,60 +945,49 @@ def _decode_with(dec, payload: bytes, count: int) -> list:
     return recs
 
 
-def _decode_block(payload: bytes, schema, count: int) -> list:
-    """The block decoder of :func:`salvage_blocks`: ``schema``'s own
-    generated decoder."""
-    return _decode_with(compile_decoder(schema), payload, count)
-
-
-def _count_block(payload: bytes, schema, count: int) -> list:
-    """:func:`_decode_block`'s checks with the count-only decoder: builds
-    no record, or raises exactly where it would."""
-    pos = 0
-    skip = compile_decoder(schema, build=False)
-    for _ in range(count):
-        pos = skip(payload, pos)
-    if pos != len(payload):
-        raise CorruptBlock(f"{len(payload) - pos} trailing bytes in block")
-    return []
-
-
 def block_decoder(writer, reader=None):
-    """The block decoder that reads ``writer``'s records as ``reader``
-    (Avro schema resolution); the writer's own generated decoder when
-    there is no reader or it is the writer."""
+    """The strict block decoder ``(payload, count) -> records`` of a walk
+    over ``writer``'s blocks, reading them as ``reader`` (Avro schema
+    resolution); the writer's own generated decoder when there is no
+    reader or it is the writer. Resolve it once per walk: the count-only
+    twin is ``compile_decoder(writer, build=False)``."""
     if reader is None or reader == writer:
-        return _decode_block
-    dec = compile_resolved_decoder(writer, reader)
-    return lambda payload, _schema, count: _decode_with(dec, payload, count)
+        return functools.partial(_decode_with, compile_decoder(writer))
+    return functools.partial(_decode_with, compile_resolved_decoder(writer, reader))
 
 
-def _block_headers(data: bytes):
+def _block_headers(data):
     """``(block_start, count, payload_start, payload_size)`` per block,
-    from the block HEADERS alone: payloads are skipped, never decoded."""
-    _, _, _, pos = read_header(data)
-    n = len(data)
+    from the block HEADERS alone: payloads are skipped, never decoded.
+    ``data`` is the container's bytes or a fresh :class:`ByteWindow`
+    over it (memory O(chunk + block) for any file size)."""
+    win = data if isinstance(data, ByteWindow) else ByteWindow.of(data)
+    _, _, _, pos = win.read_header()
+    n = win.size
     while pos < n:
-        count, p = _read_long(data, pos)
-        size, p = _read_long(data, p)
+        win.ensure(pos, pos + 22)
+        count, p = _read_long(win.buf, pos - win.base)
+        size, p = _read_long(win.buf, p)
+        p += win.base
         if count < 0 or size < 0 or p + size + SYNC_SIZE > n:
             raise CorruptBlock("bad block structure")
         yield pos, count, p, size
         pos = p + size + SYNC_SIZE
 
 
-def block_spans(data: bytes) -> list[tuple[int, int, int, int]]:
+def block_spans(data) -> list[tuple[int, int, int, int]]:
     """Structural walk for the corruption-injection tests:
     [(block_start, payload_start, payload_size, end_after_sync), ...]."""
     return [(s, p, size, p + size + SYNC_SIZE) for s, _, p, size in _block_headers(data)]
 
 
-def block_stats(data: bytes) -> tuple[int, int, int]:
+def block_stats(data) -> tuple[int, int, int]:
     """Metadata-only container stats: (n_blocks, n_records, payload_bytes)
     read from the block HEADERS alone — the payloads are skipped, so the
     walk is O(#blocks), not O(#records). At 100 TB this is the cheap
     first pass of any fleet audit: record counts and compression ratios
-    for every object without decoding a single value."""
+    for every object without decoding a single value. ``data`` is bytes
+    or a fresh :class:`ByteWindow`."""
     blocks = records = payload = 0
     for _, count, _, size in _block_headers(data):
         blocks += 1
@@ -984,6 +1006,13 @@ class SalvageResult:
     n_blocks_resynced: int = 0  # payload fine, trailing sync damaged
     n_blocks_bad: int = 0
     errors: list[str] = field(default_factory=list)
+    sync: bytes = b""
+    # The kept bytes, as ``(start, end)`` runs each followed by ``sync``
+    # in a repaired copy: the header without its marker (in a
+    # :func:`salvage_range` walk from offset 0), then every kept block
+    # without its trailing marker. Blocks joined by intact markers share
+    # one run, so there are O(damaged blocks) runs (:func:`write_salvaged`).
+    runs: list[tuple[int, int]] = field(default_factory=list)
 
     @property
     def healthy(self) -> bool:
@@ -1002,14 +1031,15 @@ class ByteWindow:
     """A bounded, forward-moving view of one container file: ``buf``
     holds the file's bytes ``[base, base + len(buf))``.
 
-    :meth:`ensure` extends it by reads of at least ``chunk`` bytes and
-    first drops the prefix a walk has moved past, so walking any byte
-    range holds about one chunk plus one block, never the file. A file
-    no larger than one chunk is read by the first extension and never
-    trimmed. Over in-memory bytes (:meth:`of`) nothing is ever read."""
+    :meth:`ensure` extends it by reads of at least ``chunk`` bytes
+    (default ``_CHUNK``) and first drops the prefix a walk has moved
+    past, so walking any byte range holds about one chunk plus one
+    block, never the file. A file no larger than one chunk is read by
+    the first extension and never trimmed. Over in-memory bytes
+    (:meth:`of`) nothing is ever read."""
 
-    def __init__(self, f, size: int, chunk: int = _CHUNK):
-        self.f, self.size, self.chunk = f, size, chunk
+    def __init__(self, f, size: int, chunk: int | None = None):
+        self.f, self.size, self.chunk = f, size, chunk or _CHUNK
         self.buf, self.base = b"", 0  # the file is read from offset 0
 
     @classmethod
@@ -1021,8 +1051,12 @@ class ByteWindow:
     def ensure(self, pos: int, to: int) -> None:
         """Cover ``[pos, to)``, or up to EOF. The walk never looks back
         before ``pos``, so the bytes before it go once they exceed a
-        chunk."""
-        if pos - self.base > self.chunk:
+        chunk; a ``pos`` past the bytes read (a header-only walk skips
+        payloads) is a seek, not a read of the gap."""
+        if pos > self.base + len(self.buf):
+            self.f.seek(pos)
+            self.buf, self.base = b"", pos
+        elif pos - self.base > self.chunk:
             self.buf = self.buf[pos - self.base :]
             self.base = pos
         have = self.base + len(self.buf)
@@ -1087,19 +1121,22 @@ class ByteWindow:
 
 def salvage_blocks(
     data, schema, codec: str, sync: bytes, pos: int,
-    end: int | None = None, decode=_decode_block, strict: bool = False,
+    end: int | None = None, decode=None, strict: bool = False,
 ):
     """The salvage walk from the block at ``pos``: one
-    ``(outcome, n_records, records, error)`` per block; it raises only
-    when ``strict``.
+    ``(outcome, n_records, records, error, block_start, payload_end)``
+    per block; it raises only when ``strict``.
     ``outcome`` is ``"ok"``, ``"resynced"`` (payload decoded
     byte-exactly, trailing sync marker damaged — recovered, like
     avro-tools repair) or ``"bad"`` (no records; the walk scans forward
-    to the next sync marker). Records live one block at a time, so a
-    caller that only counts them holds one block's worth, not the
-    file's. ``decode(payload, schema, count)`` checks a payload and
-    returns its records: :func:`_decode_block`, the count-only
-    :func:`_count_block` (no records at all) or a
+    to the next sync marker). A kept block's bytes are
+    ``[block_start, payload_end)``, its trailing marker excluded.
+    Records live one block at a time, so a caller that only counts them
+    holds one block's worth, not the file's. ``decode(payload, count)``
+    checks a payload and returns its records; the walk takes it
+    resolved once, not per block: the strict :func:`block_decoder` of
+    ``schema`` by default, its count-only twin
+    ``compile_decoder(schema, build=False)`` (no records at all) or a
     :func:`block_decoder` over a reader schema.
 
     ``strict=True`` is the strict read: the first block that is not
@@ -1117,6 +1154,7 @@ def salvage_blocks(
     can find it. Summed over ranges tiling the file, the outcomes are
     the whole-file walk's."""
     win = data if isinstance(data, ByteWindow) else ByteWindow.of(data)
+    decode = decode or block_decoder(schema)
     n = win.size
     end = n if end is None else end
     damaged = False  # reached over a damaged sync marker
@@ -1137,13 +1175,13 @@ def salvage_blocks(
             win.ensure(pos, p + size + SYNC_SIZE)
             buf, base = win.buf, win.base
             payload = _decompress(buf[p - base : p - base + size], codec)
-            recs = decode(payload, schema, count)
+            recs = decode(payload, count)
         except (CorruptBlock, CorruptHeader, ValueError, OverflowError) as exc:
             if strict:
                 if isinstance(exc, CorruptBlock):
                     raise CorruptBlock(f"block@{block_start}: {exc}") from exc
                 raise
-            yield "bad", 0, [], f"block@{block_start}: {exc}"
+            yield "bad", 0, [], f"block@{block_start}: {exc}", block_start, block_start
             nxt = win.find(sync, block_start + 1)
             if nxt == -1:
                 return
@@ -1155,20 +1193,33 @@ def salvage_blocks(
         if damaged:
             if strict:
                 raise CorruptBlock(f"block@{block_start}: sync marker damaged")
-            yield "resynced", count, recs, f"block@{block_start}: sync marker damaged"
+            yield (
+                "resynced", count, recs, f"block@{block_start}: sync marker damaged",
+                block_start, p + size,
+            )
         else:
-            yield "ok", count, recs, ""
+            yield "ok", count, recs, "", block_start, p + size
         pos = p + size + SYNC_SIZE
 
 
 def _tally(res: SalvageResult, walk) -> SalvageResult:
-    for outcome, n_records, recs, error in walk:
+    # a run joins the next kept block over an intact marker: the
+    # header's own, or an ``ok`` block's
+    joinable = bool(res.runs)
+    for outcome, n_records, recs, error, start, end in walk:
         if outcome == "bad":
             res.n_blocks_bad += 1
-        elif outcome == "resynced":
-            res.n_blocks_resynced += 1
+            joinable = False
         else:
-            res.n_blocks_ok += 1
+            if outcome == "resynced":
+                res.n_blocks_resynced += 1
+            else:
+                res.n_blocks_ok += 1
+            if joinable and res.runs[-1][1] + SYNC_SIZE == start:
+                res.runs[-1] = (res.runs[-1][0], end)
+            else:
+                res.runs.append((start, end))
+            joinable = outcome == "ok"
         if error:
             res.errors.append(error)
         res.n_records += n_records
@@ -1190,38 +1241,61 @@ def salvage_ocf(data: bytes, keep_records: bool = True) -> SalvageResult:
         SalvageResult(header_ok=True, schema=schema),
         salvage_blocks(
             data, schema, codec, sync, pos,
-            decode=_decode_block if keep_records else _count_block,
+            decode=None if keep_records else compile_decoder(schema, build=False),
         ),
     )
 
 
-def salvage_range(f, size: int, start: int, end: int, chunk: int = _CHUNK) -> SalvageResult:
+def salvage_range(f, size: int, start: int, end: int, chunk: int | None = None) -> SalvageResult:
     """Count-only salvage of the blocks one byte range ``[start, end)``
     of a container owns (see :func:`salvage_blocks`), read from the
     seekable file ``f`` of ``size`` bytes through a :class:`ByteWindow`:
     the header prefix, the range, and the tail of its last block.
     Every range reports the header verdict; the block and record
     counters of ranges tiling ``[0, size)`` sum to
-    ``salvage_ocf(file, keep_records=False)``'s."""
+    ``salvage_ocf(file, keep_records=False)``'s. The range at offset 0
+    also keeps the header's run, so the whole-file range ``[0, size)``
+    is what :func:`write_salvaged` repairs from."""
     win = ByteWindow(f, size, chunk)
     try:
         schema, codec, sync, hdr_end = win.read_header()
     except CorruptHeader as exc:
         return SalvageResult(header_ok=False, errors=[str(exc)])
-    res = SalvageResult(header_ok=True, schema=schema)
+    runs = [(0, hdr_end - SYNC_SIZE)] if start == 0 else []
+    res = SalvageResult(header_ok=True, schema=schema, sync=sync, runs=runs)
     pos = win.first_block(start, end, hdr_end, sync)
     if pos is None:
         return res
-    return _tally(res, salvage_blocks(win, schema, codec, sync, pos, end, _count_block))
+    counter = compile_decoder(schema, build=False)
+    return _tally(res, salvage_blocks(win, schema, codec, sync, pos, end, counter))
 
 
-def salvaged_records(data: bytes):
-    """Every record :func:`salvage_ocf` would keep, streamed block by
-    block (a repair rewrite feeds this to :func:`write_ocf`). The
-    header must be intact."""
-    schema, codec, sync, pos = read_header(data)
-    for _outcome, _n, recs, _error in salvage_blocks(data, schema, codec, sync, pos):
-        yield from recs
+def write_salvaged(f, out, res: SalvageResult) -> int:
+    """Block passthrough: write the repaired container of a whole-file
+    salvage ``res`` of the seekable file ``f`` to the stream ``out``;
+    returns the bytes written.
+
+    The input's header is copied verbatim (schema, codec, metadata, sync
+    marker), then every block the walk kept, byte for byte — count and
+    size varints and the still-compressed payload — each followed by the
+    file's own sync marker, so a ``resynced`` block gets a clean one and
+    a ``bad`` block is gone. Nothing is decoded or re-encoded: the
+    walk's count-only decode already checked each kept payload. The
+    runs are copied by ``_CHUNK``-byte reads, so memory is O(chunk)
+    for any file size; a healthy file comes out byte-identical."""
+    if not (res.header_ok and res.runs and res.runs[0][0] == 0):
+        raise ValueError("write_salvaged needs a whole-file salvage with an intact header")
+    for start, end in res.runs:
+        f.seek(start)
+        at = start
+        while at < end:
+            got = f.read(min(_CHUNK, end - at))
+            if not got:
+                raise CorruptBlock(f"file ends at {at}, before its salvaged blocks")
+            out.write(got)
+            at += len(got)
+        out.write(res.sync)
+    return sum(end - start + SYNC_SIZE for start, end in res.runs)
 
 
 def read_ocf(data: bytes) -> tuple[dict, list]:
@@ -1462,7 +1536,7 @@ def read_ocf_resolved(data: bytes, reader_schema, logical: bool = False) -> list
     decode = block_decoder(writer, reader_schema)
     records = [
         rec
-        for _, _, recs, _ in salvage_blocks(
+        for _, _, recs, *_ in salvage_blocks(
             data, writer, codec, sync, pos, decode=decode, strict=True
         )
         for rec in recs
@@ -1473,7 +1547,7 @@ def read_ocf_resolved(data: bytes, reader_schema, logical: bool = False) -> list
 
 
 def sampled_validate(
-    data: bytes, decode_every: int = 100, limit: int = 1_000_000
+    data, decode_every: int = 100, limit: int = 1_000_000
 ) -> tuple[bool, int, str]:
     """Sampled health check — the reference's actual validation mode
     (``cat --limit 1000000 --samplerate .01``, repair-avro.ts:131 +
@@ -1485,25 +1559,35 @@ def sampled_validate(
     markers are always caught; only per-record payload decoding is
     sampled, so payload-only corruption inside an unsampled block is
     missed, exactly the blind spot the reference accepts for its 100x
-    cost saving. Returns (healthy, n_records_checked, error)."""
+    cost saving. ``data`` is the container's bytes or a fresh
+    :class:`ByteWindow` over it (memory O(chunk + block)). Returns
+    (healthy, n_records_checked, error)."""
+    win = data if isinstance(data, ByteWindow) else ByteWindow.of(data)
     try:
-        schema, codec, sync, pos = read_header(data)
+        schema, codec, sync, pos = win.read_header()
     except CorruptHeader as exc:
         return False, 0, str(exc)
-    n = len(data)
+    decode = block_decoder(schema)
+    n = win.size
     block_no = checked = 0
     while pos < n and checked < limit:
         try:
-            count, p = _read_long(data, pos)
+            win.ensure(pos, pos + 22)
+            buf, base = win.buf, win.base
+            count, p = _read_long(buf, pos - base)
             if not 0 <= count <= MAX_BLOCK_RECORDS:
                 raise CorruptBlock(f"record count {count} out of bounds")
-            size, p = _read_long(data, p)
+            size, p = _read_long(buf, p)
+            p += base
             if not 0 <= size <= MAX_BLOCK_BYTES or p + size + SYNC_SIZE > n:
                 raise CorruptBlock(f"block size {size} exceeds file")
-            if data[p + size : p + size + SYNC_SIZE] != sync:
+            win.ensure(pos, p + size + SYNC_SIZE)
+            buf, base = win.buf, win.base
+            q = p - base
+            if buf[q + size : q + size + SYNC_SIZE] != sync:
                 raise CorruptBlock("sync marker mismatch")
             if block_no % decode_every == 0:  # the sampled payload decode
-                _decode_block(_decompress(data[p : p + size], codec), schema, count)
+                decode(_decompress(buf[q : q + size], codec), count)
                 checked += count
         except (CorruptBlock, CorruptHeader, ValueError, OverflowError) as exc:
             return False, checked, f"block@{pos}: {exc}"

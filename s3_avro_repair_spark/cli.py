@@ -19,18 +19,23 @@ at or below it is one unit, a larger one is cut into equal byte
 ranges, so the job's wall follows bytes / cores rather than the
 largest file. The units are packed into byte-balanced bins, and a
 JVM-only ``range`` source feeds one bin to each task — the planner
-every batch Avro op runs on (``sources/avro_jobs.py``). A task reads a
-whole-file unit through ``fsio``, salvages it and commits its repair.
-For a range unit it counts only the blocks whose header lies in the
-range (``avro_codec.salvage_range``: resync on the sync marker,
-bounded chunked reads, nothing decoded into records). No file byte
-crosses a shuffle or the Arrow boundary — only bin ids go in and one
-report row per unit comes out, written to parquet in that one job and
-read back on the driver, which sums a split file's ranges into one
-row. A split file that comes back damaged under ``--out``/``--replace``
-is repaired whole by a second job over those files alone; the fleets
-this CLI meets mostly need none. Every repair side effect runs exactly
-once, and ``--report PATH`` keeps the per-file report as parquet.
+every batch Avro op runs on (``sources/avro_jobs.py``). A task walks
+each unit of its bin once through ``fsio``, count-only and by bounded
+chunked reads (``avro_codec.salvage_range``: resync on the sync marker,
+nothing decoded into records); a range unit counts only the blocks
+whose header lies in the range. A whole damaged file is repaired from
+that same walk by copying blocks (``avro_codec.write_salvaged``): the
+input's header verbatim, then every block the walk kept, byte for
+byte, each followed by the file's sync marker. A repaired copy keeps
+the input's codec and reads back with exactly the salvaged records.
+No file byte crosses a shuffle or the Arrow boundary — only bin ids go
+in and one report row per unit comes out, returned to the driver as
+Arrow by that one action (``toArrow``); the driver sums a split file's
+ranges into one row. A split file that comes back damaged under
+``--out``/``--replace`` is repaired whole by a second job over those
+files alone; the fleets this CLI meets mostly need none. Every repair
+side effect runs exactly once, and ``--report PATH`` keeps the per-file
+report as parquet, written by the driver.
 
     python -m s3_avro_repair_spark.cli --path /data/avro-tree \\
         [--replace] [--out /data/repaired] [--report /data/report.parquet] [--cpus 8]
@@ -45,7 +50,6 @@ import argparse
 import math
 import os
 import sys
-import tempfile
 
 from .sources.avro_jobs import (  # noqa: F401 (_pack_bins: re-export)
     _list_container_files_sized,
@@ -104,44 +108,41 @@ def _run_unit(
     """Validate one unit inside a task; its row of ``_UNIT_FIELDS``. A
     whole file also commits its repair when asked — the reference's
     per-object loop body. A range of a split file only counts the
-    blocks it owns, through bounded reads; the driver sums the ranges."""
+    blocks it owns; the driver sums the ranges. Either way the file is
+    walked once, count-only, through bounded reads, and a repair copies
+    the blocks that walk kept (``avro_codec.write_salvaged``)."""
     import posixpath
 
     from . import fsio
-    from .avro_codec import salvage_ocf, salvage_range, salvaged_records, write_ocf_bytes
+    from .avro_codec import salvage_range, write_salvaged
 
     fs_, local = fsio.resolve(path)
-    whole = start == 0 and end == size
-    with fs_.open_input_file(local) as f:
-        if whole:
-            data = f.read()
-            # Counting pass: a healthy container's records are never built.
-            res = salvage_ocf(data, keep_records=False)
-        else:
-            res = salvage_range(f, size, start, end)
     written = ""
-    if res.healthy:
-        status = "healthy"
-    elif not res.header_ok:
-        status = "unrepairable"
-    else:
-        status = "repaired"
-        if whole and (replace or out_dir):
-            repaired = write_ocf_bytes(res.schema, salvaged_records(data))
-            if replace:
-                # Write back over the original via ITS OWN filesystem
-                # (the reference's re-upload).
-                written = fsio.atomic_write_bytes(local, repaired, filesystem=fs_)
-            else:
-                # Preserve the path relative to --path (a flat basename
-                # layout silently collapses same-named files from
-                # different subdirectories).
-                rel = posixpath.relpath(local, root)
-                out_fs, out_path = fsio.resolve(fsio.join(out_dir, rel))
-                parent = posixpath.dirname(out_path)
-                if parent:
-                    out_fs.create_dir(parent, recursive=True)
-                written = fsio.atomic_write_bytes(out_path, repaired, filesystem=out_fs)
+    with fs_.open_input_file(local) as f:
+        res = salvage_range(f, size, start, end)
+        if res.healthy:
+            status = "healthy"
+        elif not res.header_ok:
+            status = "unrepairable"
+        else:
+            status = "repaired"
+            if start == 0 and end == size and (replace or out_dir):
+                if replace:
+                    # Write back over the original via ITS OWN
+                    # filesystem (the reference's re-upload).
+                    out_fs, out_path = fs_, local
+                else:
+                    # Preserve the path relative to --path (a flat
+                    # basename layout silently collapses same-named
+                    # files from different subdirectories).
+                    rel = posixpath.relpath(local, root)
+                    out_fs, out_path = fsio.resolve(fsio.join(out_dir, rel))
+                    parent = posixpath.dirname(out_path)
+                    if parent:
+                        out_fs.create_dir(parent, recursive=True)
+                written, _ = fsio.atomic_stream_records(
+                    out_path, lambda out: write_salvaged(f, out, res), filesystem=out_fs
+                )
     return (
         path, size, posixpath.basename(local), status, res.n_blocks_ok,
         res.n_blocks_resynced, res.n_blocks_bad, res.n_records, written,
@@ -323,21 +324,14 @@ def main(argv: list[str] | None = None) -> int:
         fs_, p = fsio.resolve(args.report)
         if fs_.get_file_info(p).type != pafs.FileType.NotFound:
             raise FileExistsError(f"--report {args.report} already exists")
-    import pyarrow.parquet as pq
-
-    # The CLI always runs local[N], so a driver temp dir is visible to
-    # its tasks.
-    with tempfile.TemporaryDirectory(prefix="avro-repair-report-") as tmp:
-        # The one action over the tree: whole-file repairs commit and
-        # unit rows land together.
-        units_path = os.path.join(tmp, "units.parquet")
-        report.write.parquet(units_path)
-        files = _merge_units(pq.read_table(units_path))
-        if args.replace or args.out:
-            files = _rewrite_split(spark, files, _tree(args.path)[1], args.replace, args.out)
-        if args.report:
-            _write_report(files, args.report)
-        return _print_report(files, n_files)
+    # The one action over the tree: whole-file repairs commit and the
+    # unit rows come back to the driver together.
+    files = _merge_units(report.toArrow())
+    if args.replace or args.out:
+        files = _rewrite_split(spark, files, _tree(args.path)[1], args.replace, args.out)
+    if args.report:
+        _write_report(files, args.report)
+    return _print_report(files, n_files)
 
 
 if __name__ == "__main__":

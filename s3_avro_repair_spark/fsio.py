@@ -54,38 +54,15 @@ def ensure_dir(path: str, filesystem: pafs.FileSystem | None = None) -> str:
     return p
 
 
-def atomic_write_bytes(
-    path: str, data: bytes, filesystem: pafs.FileSystem | None = None
-) -> str:
-    """Commit ``data`` to ``path`` via tmp + move; returns the fs-native
-    target path. On failure nothing is committed and the temp is
-    removed."""
-    fs_, p = resolve(path, filesystem)
-    tmp = p + ".tmp"
-    try:
-        with fs_.open_output_stream(tmp) as out:
-            out.write(data)
-        fs_.move(tmp, p)
-    except BaseException:
-        try:
-            fs_.delete_file(tmp)
-        except FileNotFoundError:
-            pass
-        except OSError:
-            pass
-        raise
-    return p
-
-
 def atomic_stream_records(
     path: str,
     write_fn,
     filesystem: pafs.FileSystem | None = None,
     tmp_suffix: str = ".tmp",
 ) -> tuple[str, int]:
-    """Stream-write via ``write_fn(stream) -> n_records`` and commit
-    ``path`` only if n_records > 0 (empty partitions leave nothing
-    behind). Returns ``(fs_native_path, n_records)``.
+    """Stream-write via ``write_fn(stream) -> n`` (records or bytes
+    written) and commit ``path`` only if n > 0 (empty partitions leave
+    nothing behind). Returns ``(fs_native_path, n)``.
 
     ``tmp_suffix`` lets concurrent attempts of the SAME task (Spark
     speculative execution, a zombie task overlapping its retry) write

@@ -153,7 +153,7 @@ def read_container(path: str, start: int, end: int, size: int, reader=None):
         names = [fl["name"] for fl in (reader or writer)["fields"]]
         row = itemgetter(*names) if len(names) > 1 else lambda r: (r[names[0]],)
         decode = block_decoder(writer, reader)
-        for _, _, recs, _ in salvage_blocks(
+        for _, _, recs, *_ in salvage_blocks(
             win, writer, codec, sync, pos, end, decode, strict=True
         ):
             yield from map(row, recs)

@@ -30,6 +30,7 @@ container format, in-process.
 
 from __future__ import annotations
 
+import contextlib
 import os
 import re
 import shutil
@@ -40,10 +41,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..avro_codec import (
+    ByteWindow,
     SalvageResult,
     block_spans,
     block_stats,
-    read_header,
+    compile_decoder,
+    salvage_blocks,
     salvage_ocf,
     salvage_range,
     sampled_validate,
@@ -447,12 +450,53 @@ def write_avro_dir(
     return report.count()  # materialize -> files committed
 
 
-def _file_bytes(path: str) -> bytes:
+@contextlib.contextmanager
+def _window(path: str, size: int):
+    """A fresh :class:`ByteWindow` over the container at ``path``
+    (``size`` bytes): ``_CHUNK``-byte reads, never the whole file."""
     from .. import fsio
 
     fs_, p = fsio.resolve(path)
     with fs_.open_input_file(p) as f:
-        return f.read()
+        yield ByteWindow(f, size)
+
+
+def _strict_count(path: str, size: int) -> int:
+    """The records of one container, counted by the strict walk with the
+    count-only block decoder: damage raises exactly where a strict read
+    (``avro_datasource.read_container``) would, but no record is built."""
+    with _window(path, size) as win:
+        schema, codec, sync, pos = win.read_header()
+        walk = salvage_blocks(
+            win, schema, codec, sync, pos,
+            decode=compile_decoder(schema, build=False), strict=True,
+        )
+        return sum(n_records for _, n_records, *_ in walk)
+
+
+def _sampled_status(path: str, size: int) -> list[tuple]:
+    """avro_validate_sampled's row for one file."""
+    with _window(path, size) as win:
+        healthy, _, _ = sampled_validate(win)
+    return [(os.path.basename(path), "healthy" if healthy else "corrupt")]
+
+
+def _stats_row(path: str, size: int) -> list[tuple]:
+    """avro_stats's row for one file: block headers only."""
+    with _window(path, size) as win:
+        nb, nr, _ = block_stats(win)
+    return [(int(re.search(r"orders_(\d+)\.avro", path).group(1)), nr, nb)]
+
+
+def _schema_row(path: str, size: int) -> list[tuple]:
+    """avro_schema_report's row for one file: the header, then block
+    headers only."""
+    with _window(path, size) as win:
+        schema, codec, _, _ = win.read_header()
+        _, n_records, _ = block_stats(win)
+    fields = [f["name"] for f in schema["fields"]]
+    gen = "gen2" if "o_orderstatus" in fields else "gen1"
+    return [(gen, codec, len(fields), n_records)]
 
 
 def _salvage(path: str, size: int) -> SalvageResult:
@@ -659,10 +703,7 @@ def avro_scan_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     root = ensure_avro_fixtures(sf_dir)
 
     def count_records(path, size):
-        from .avro_datasource import read_container
-
-        year = re.search(r"year=(\d+)", path).group(1)
-        return [(year, sum(1 for _ in read_container(path, 0, size, size)))]
+        return [(re.search(r"year=(\d+)", path).group(1), _strict_count(path, size))]
 
     per_file = run_files(
         spark, os.path.join(root, "partitioned"), count_records, "year string, n_file long"
@@ -706,13 +747,8 @@ def avro_validate_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
     The honest caveat the reference accepts: payload-only damage in an
     unsampled block passes. ~100x less Python decode work per file."""
     root = ensure_avro_fixtures(sf_dir)
-
-    def validate(path, _size):
-        healthy, _, _ = sampled_validate(_file_bytes(path))
-        return [(os.path.basename(path), "healthy" if healthy else "corrupt")]
-
     return run_files(
-        spark, os.path.join(root, "corrupt"), validate, "file string, status string"
+        spark, os.path.join(root, "corrupt"), _sampled_status, "file string, status string"
     )
 
 
@@ -886,13 +922,8 @@ def avro_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     because fixture generation is deterministic: bucket = o_orderkey %
     8, writer flushes every 100 records."""
     root = ensure_avro_fixtures(sf_dir)
-
-    def stats(path, _size):
-        nb, nr, _ = block_stats(_file_bytes(path))
-        return [(int(re.search(r"orders_(\d+)\.avro", path).group(1)), nr, nb)]
-
     return run_files(
-        spark, os.path.join(root, "clean"), stats,
+        spark, os.path.join(root, "clean"), _stats_row,
         "file_idx long, n_records long, n_blocks long",
     )
 
@@ -976,17 +1007,8 @@ def avro_schema_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     inventory is one distributed pass whose oracle is exact because the
     fixture assigns generations deterministically (o_orderkey % 8)."""
     root = ensure_avro_fixtures(sf_dir)
-
-    def report(path, _size):
-        data = _file_bytes(path)
-        schema, codec, _, _ = read_header(data)
-        _, n_records, _ = block_stats(data)
-        fields = [f["name"] for f in schema["fields"]]
-        gen = "gen2" if "o_orderstatus" in fields else "gen1"
-        return [(gen, codec, len(fields), n_records)]
-
     per_file = run_files(
-        spark, os.path.join(root, "mixed"), report,
+        spark, os.path.join(root, "mixed"), _schema_row,
         "generation string, codec string, n_fields int, n_rec long",
     )
     return per_file.groupBy("generation", "codec", "n_fields").agg(

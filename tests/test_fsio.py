@@ -42,8 +42,8 @@ def test_atomic_write_through_subtree_fs(tmp_path):
     call inside would miss the sandbox or fail outright."""
     sub = pafs.SubTreeFileSystem(str(tmp_path), pafs.LocalFileSystem())
 
-    got = fsio.atomic_write_bytes("a.bin", b"payload", filesystem=sub)
-    assert got == "a.bin"
+    got, n = fsio.atomic_stream_records("a.bin", lambda out: out.write(b"payload"), filesystem=sub)
+    assert (got, n) == ("a.bin", 7)
     assert (tmp_path / "a.bin").read_bytes() == b"payload"
     assert not (tmp_path / "a.bin.tmp").exists()
 
