@@ -1227,6 +1227,20 @@ def _tally(res: SalvageResult, walk) -> SalvageResult:
     return res
 
 
+def _header_decoder(schema, build: bool):
+    """A salvage walk's decoder for the schema its header holds: the
+    strict :func:`block_decoder` (``build``) or the count-only twin. A
+    header whose schema does not compile (``"fields"`` missing, not a
+    record schema) is a bad header, reported like one the walk cannot
+    parse: the salvage never raises."""
+    try:
+        return block_decoder(schema) if build else compile_decoder(schema, build=False)
+    except (KeyError, TypeError) as exc:
+        raise CorruptHeader(
+            f"schema does not compile: {type(exc).__name__}: {exc}"
+        ) from exc
+
+
 def salvage_ocf(data: bytes, keep_records: bool = True) -> SalvageResult:
     """Block-salvage read: never raises. Decodes every block it can,
     resyncs on the 16-byte marker after damage, reports the rest.
@@ -1235,14 +1249,12 @@ def salvage_ocf(data: bytes, keep_records: bool = True) -> SalvageResult:
     one block's records, not the file's, and builds no record at all."""
     try:
         schema, codec, sync, pos = read_header(data)
+        decode = _header_decoder(schema, keep_records)
     except CorruptHeader as exc:
         return SalvageResult(header_ok=False, errors=[str(exc)])
     return _tally(
         SalvageResult(header_ok=True, schema=schema),
-        salvage_blocks(
-            data, schema, codec, sync, pos,
-            decode=None if keep_records else compile_decoder(schema, build=False),
-        ),
+        salvage_blocks(data, schema, codec, sync, pos, decode=decode),
     )
 
 
@@ -1259,6 +1271,7 @@ def salvage_range(f, size: int, start: int, end: int, chunk: int | None = None) 
     win = ByteWindow(f, size, chunk)
     try:
         schema, codec, sync, hdr_end = win.read_header()
+        counter = _header_decoder(schema, False)
     except CorruptHeader as exc:
         return SalvageResult(header_ok=False, errors=[str(exc)])
     runs = [(0, hdr_end - SYNC_SIZE)] if start == 0 else []
@@ -1266,7 +1279,6 @@ def salvage_range(f, size: int, start: int, end: int, chunk: int | None = None) 
     pos = win.first_block(start, end, hdr_end, sync)
     if pos is None:
         return res
-    counter = compile_decoder(schema, build=False)
     return _tally(res, salvage_blocks(win, schema, codec, sync, pos, end, counter))
 
 

@@ -47,14 +47,14 @@ _QSTRIDE_SQL = (
     " FROM embeddings)"
 )
 
-# stride per fixture IDENTITY (path + mtime token, tables.fixture_token),
+# stride per fixture IDENTITY (tables.fixture_token: path, mtime, size),
 # computed once per process: every retrieval op and recall companion
 # calls query_panel (sim_ann_lsh twice), and the probe job —
 # metadata-cheap but a real Spark job — used to re-run per call
 # (ADVICE r6). Keying on the mtime token (not the bare path) means a
 # fixture regenerated in-place with a different id span rotates the
 # cache instead of serving a stale stride (ADVICE r7).
-_PANEL_STRIDE: dict[tuple[str, int], int] = {}
+_PANEL_STRIDE: dict[tuple[str, int, int], int] = {}
 
 
 def query_panel(df: DataFrame, spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -78,10 +78,10 @@ _BENCH_STRIDE_DUCK = (
     " FROM documents))"
 )
 
-# Keyed on the fixture's (path, mtime) token — not the bare sf_dir —
+# Keyed on the fixture's (path, mtime, size) token — not the bare sf_dir —
 # so a fixture regenerated in-place with a different id span rotates
 # the cache instead of serving a stale stride (ADVICE r7).
-_BENCH_STRIDE: dict[tuple[str, int], int] = {}
+_BENCH_STRIDE: dict[tuple[str, int, int], int] = {}
 
 
 def _bench_stride(d, sf_dir: str) -> int:

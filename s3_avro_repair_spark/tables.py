@@ -6,14 +6,29 @@ downloads each object to a local staging dir. Spark replaces both with
 a direct scan: the file listing is the scan driver, executors stream
 bytes, and Hive-style ``key=value`` prefixes become partition columns
 for free (partition discovery).
+
+A schema-less ``spark.read.parquet`` infers the schema from the
+footers, and that inference is one Spark job per load. ``table()``
+remembers the ``StructType`` Spark inferred, keyed by the fixture's
+file token (``fixture_token``: path, newest mtime, byte size) and the
+session confs that change Parquet schema inference
+(``_INFER_CONFS``); a later load of the same files under the same
+confs passes it to ``spark.read.schema(...)`` and launches no job.
+The remembered schema is Spark's own, so it is exact by construction,
+partition columns of a directory table included. Nothing is
+remembered for a path without a local token (missing, or remote such
+as ``s3a://``): those loads infer every time. The first load of each
+table in a process still infers.
 """
 
 from __future__ import annotations
 
 import os
+import stat
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 TABLE_NAMES = [
     "region",
@@ -33,8 +48,31 @@ TABLE_NAMES = [
 BROADCAST_DIMS = {"region", "nation", "supplier"}
 
 
+# Session confs whose values change the schema Spark infers from
+# Parquet footers; each remembered schema is keyed by their values too.
+_INFER_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.mergeSchema",
+    "spark.sql.sources.partitionColumnTypeInference.enabled",
+)
+
+# Inferred schema per (fixture token, inference confs), for the life
+# of the process (the ``llm.query_panel`` stride memo idiom).
+_SCHEMAS: dict[tuple, StructType] = {}
+
+
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one fixture table from ``{sf_dir}/{name}.parquet``.
+
+    The first load of a table in a process infers its schema (one
+    Spark job) and remembers it under ``schema_key``; a later load of
+    the same files under the same inference confs reads with that
+    schema and launches no job. A rewritten table gets a new token, so
+    it is inferred afresh; a path with no local token (missing or
+    remote) is never remembered.
 
     ``events.ts`` has been generated two ways across driver rounds:
     parquet TIMESTAMP(NANOS) (which Spark's vectorized reader rejects,
@@ -46,42 +84,67 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     The ns->us integer division is lossless for the fixtures
     (TESTDATA.md seeds are ms-resolution).
     """
+    path = f"{sf_dir}/{name}.parquet"
+    key = schema_key(spark, sf_dir, name)
+    schema = _SCHEMAS.get(key) if key else None
+    if schema is not None:
+        df = spark.read.schema(schema).parquet(path)
+    else:
+        df = spark.read.parquet(path)
+        if key:
+            _SCHEMAS[key] = df.schema
     if name == "events":
-        df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
         ts_type = df.schema["ts"].dataType.simpleString()
         if ts_type == "bigint":  # raw nanos via nanosAsLong
             return df.withColumn(
                 "ts", F.expr("timestamp_micros(CAST(ts DIV 1000 AS BIGINT))")
             )
         return df.withColumn("ts", F.col("ts").cast("timestamp"))
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    return df
 
 
-def fixture_token(sf_dir: str, name: str) -> tuple[str, int]:
-    """(path, mtime_ns) identity of one fixture table — the cache key
-    for anything memoized per fixture (panel/bench strides). A stride
-    keyed on the PATH alone goes stale if a fixture at the same path is
-    regenerated with a different id span mid-process: Spark would keep
-    the old stride while the DuckDB oracle recomputes from data
-    (ADVICE r7). ``{name}.parquet`` may be a file or a directory of
-    parts; for a directory the newest mtime across the WHOLE tree is
-    the token (os.walk, not a top-level scandir: a partitioned layout
-    rewritten in place only touches files inside existing part_col=X/
-    subdirectories, which does not move top-level entry mtimes —
-    ADVICE r8), so any rewrite rotates the key. Missing path ->
-    token 0 (the consumer will fail on read anyway)."""
+def schema_key(spark: SparkSession, sf_dir: str, name: str) -> tuple | None:
+    """The key ``table()`` remembers a table's inferred schema under:
+    its ``fixture_token`` and the values of ``_INFER_CONFS`` in this
+    session. None when the token has no mtime (nothing is remembered)."""
+    token = fixture_token(sf_dir, name)
+    if not token[1]:
+        return None
+    return token + tuple(spark.conf.get(k) for k in _INFER_CONFS)
+
+
+def fixture_token(sf_dir: str, name: str) -> tuple[str, int, int]:
+    """(path, mtime_ns, size) identity of one fixture table — the cache
+    key for anything memoized per fixture (remembered schemas,
+    panel/bench strides). A stride keyed on the PATH alone goes stale if
+    a fixture at the same path is regenerated with a different id span
+    mid-process: Spark would keep the old stride while the DuckDB
+    oracle recomputes from data (ADVICE r7). ``{name}.parquet`` may be a
+    file or a directory of parts; for a directory the newest mtime
+    across the WHOLE tree is the token (os.walk, not a top-level
+    scandir: a partitioned layout rewritten in place only touches files
+    inside existing part_col=X/ subdirectories, which does not move
+    top-level entry mtimes — ADVICE r8), so any rewrite rotates the
+    key. The byte size (summed over a directory's files) is part of the
+    key too: on a filesystem with coarse mtimes, a rewrite inside one
+    clock tick keeps the mtime, and a re-typed rewrite almost never
+    keeps the size. Missing path -> mtime and size 0 (the consumer will
+    fail on read anyway)."""
     p = os.path.join(sf_dir, f"{name}.parquet")
     try:
-        if os.path.isdir(p):
-            mt = os.stat(p).st_mtime_ns
+        st = os.stat(p)
+        mt, size = st.st_mtime_ns, 0
+        if stat.S_ISDIR(st.st_mode):
             for root, _dirs, files in os.walk(p):
                 for f in files:
                     try:
-                        mt = max(mt, os.stat(os.path.join(root, f)).st_mtime_ns)
+                        st = os.stat(os.path.join(root, f))
                     except OSError:
                         continue
+                    mt = max(mt, st.st_mtime_ns)
+                    size += st.st_size
         else:
-            mt = os.stat(p).st_mtime_ns
+            size = st.st_size
     except OSError:
-        mt = 0
-    return (p, mt)
+        mt = size = 0
+    return (p, mt, size)

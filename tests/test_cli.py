@@ -149,6 +149,28 @@ def test_report_reads_back(spark, sf_dir, tmp_path, capsys):
     assert (rows["written_to"] == "").all()
 
 
+def test_uncompilable_schema_is_unrepairable(spark, sf_dir, tmp_path, capsys):
+    """A container whose header parses but whose schema does not compile
+    (its ``"fields"`` key renamed) is reported unrepairable: the run
+    goes on, and the good container beside it is healthy."""
+    good = os.path.join(ensure_avro_fixtures(sf_dir), "clean", "orders_0.avro")
+    with open(good, "rb") as f:
+        data = f.read()
+    assert data.count(b'"fields"') == 1
+    indir = tmp_path / "in"
+    indir.mkdir()
+    shutil.copy(good, indir / "good.avro")
+    (indir / "renamed.avro").write_bytes(data.replace(b'"fields"', b'"fieldz"'))
+    report = tmp_path / "report.parquet"
+    rc = main(["--path", str(indir), "--report", str(report)])
+    capsys.readouterr()
+    rows = pq.read_table(str(report)).to_pandas()
+    assert rc == 2
+    assert dict(zip(rows["file"], rows["status"])) == {
+        "good.avro": "healthy", "renamed.avro": "unrepairable",
+    }
+
+
 @pytest.mark.parametrize("form", ["file:{}", "file://{}"])
 def test_build_report_accepts_file_uris(spark, sf_dir, tmp_path, form):
     """A URI root reaches the same files: the listing keeps the scheme,
