@@ -38,6 +38,15 @@ reads, reader-schema reads — is :func:`salvage_blocks` with a block
 decoder passed in; only :func:`sampled_validate` walks on its own,
 because it skips payloads on purpose. A repair decodes nothing twice:
 :func:`write_salvaged` copies the blocks the count-only walk kept.
+
+Values are decoded by code generated per schema, never interpreted:
+:func:`compile_decoder` compiles a writer schema whole, every Avro type
+inline, as a building decoder and a count-only twin, and
+:func:`compile_resolved_decoder` plans a reader-schema read over those
+generated decoders. A schema that does not compile (a missing key, a
+named-type reference) is found when the header is read, so its file is
+unrepairable and never rewritten, instead of a file whose every block
+fails to decode.
 """
 
 from __future__ import annotations
@@ -347,89 +356,6 @@ def encode_value(schema, val, out: bytearray) -> None:
         raise ValueError(f"unsupported schema type {t!r}")
 
 
-def decode_value(schema, buf: bytes, pos: int):
-    t = _schema_type(schema)
-    if t == "null":
-        return None, pos
-    if t == "boolean":
-        if pos >= len(buf):
-            raise CorruptBlock("boolean past end")
-        b = buf[pos]
-        if b not in (0, 1):
-            raise CorruptBlock(f"invalid boolean byte {b}")
-        return b == 1, pos + 1
-    if t in ("int", "long"):
-        return _read_long(buf, pos)
-    if t == "float":
-        if pos + 4 > len(buf):
-            raise CorruptBlock("float past end")
-        return struct.unpack_from("<f", buf, pos)[0], pos + 4
-    if t == "double":
-        if pos + 8 > len(buf):
-            raise CorruptBlock("double past end")
-        return struct.unpack_from("<d", buf, pos)[0], pos + 8
-    if t == "bytes":
-        return _read_sized(buf, pos)
-    if t == "string":
-        raw, pos = _read_sized(buf, pos)
-        try:
-            return raw.decode("utf-8"), pos
-        except UnicodeDecodeError as exc:
-            raise CorruptBlock(f"invalid utf-8 string: {exc}") from exc
-    if t == "record":
-        rec = {}
-        for f in schema["fields"]:
-            rec[f["name"]], pos = decode_value(f["type"], buf, pos)
-        return rec, pos
-    if t == "array":
-        items = []
-        while True:
-            count, pos = _read_long(buf, pos)
-            if count == 0:
-                return items, pos
-            if count < 0:  # negative count: abs(count) items + byte size
-                count = -count
-                _, pos = _read_long(buf, pos)
-            if count > MAX_BLOCK_RECORDS:
-                raise CorruptBlock("array count out of bounds")
-            for _ in range(count):
-                item, pos = decode_value(schema["items"], buf, pos)
-                items.append(item)
-    if t == "map":
-        entries = {}
-        while True:
-            count, pos = _read_long(buf, pos)
-            if count == 0:
-                return entries, pos
-            if count < 0:
-                count = -count
-                _, pos = _read_long(buf, pos)
-            if count > MAX_BLOCK_RECORDS:
-                raise CorruptBlock("map count out of bounds")
-            for _ in range(count):
-                kraw, pos = _read_sized(buf, pos)
-                entries[kraw.decode("utf-8")], pos = decode_value(
-                    schema["values"], buf, pos
-                )
-    if t == "union":
-        idx, pos = _read_long(buf, pos)
-        if not 0 <= idx < len(schema):
-            raise CorruptBlock(f"union index {idx} out of range")
-        return decode_value(schema[idx], buf, pos)
-    if t == "enum":
-        idx, pos = _read_long(buf, pos)
-        symbols = schema["symbols"]
-        if not 0 <= idx < len(symbols):
-            raise CorruptBlock(f"enum index {idx} out of range")
-        return symbols[idx], pos
-    if t == "fixed":
-        size = schema["size"]
-        if pos + size > len(buf):
-            raise CorruptBlock("fixed past end")
-        return buf[pos : pos + size], pos + size
-    raise ValueError(f"unsupported schema type {t!r}")
-
-
 # ---------------------------------------------------------------------------
 # container file: write
 # ---------------------------------------------------------------------------
@@ -697,41 +623,47 @@ _DECODER_CACHE: dict[tuple[str, str], object] = {}
 def compile_decoder(schema, build: bool = True):
     """Source-codegen a decoder specialized to ``schema`` (the fastavro
     approach): one generated function decodes a whole top-level value
-    with varints, strings, and scalars INLINED — no per-value schema
-    dispatch, no per-field Python call. The r8 profile put 94% of
-    snappy-scan time in :func:`decode_value`'s recursive dispatch
-    (the decompress+CRC path the round set out to optimize measured
-    ~1%), and every block of every file re-pays it; the generated
-    decoder is the same state machine flattened.
+    with varints, strings, scalars, enums and fixed INLINED — no
+    per-value schema dispatch, no per-field Python call. A nested
+    record, array or map is a call of its own generated function, and
+    an array's or map's block loop is inline in that function. There is
+    no interpreter beside it: every Avro type is generated.
 
-    Semantics are IDENTICAL to decode_value by construction: the
-    generated code raises the same :class:`CorruptBlock` messages from
-    the same conditions (the corruption-injection suite pins them),
-    and subtypes the generator does not inline (arrays, maps, enums,
-    fixed) fall back to decode_value itself; nested records compile
-    recursively. Cached per schema JSON — one codegen per schema per
-    worker process, microseconds against millions of avoided calls.
-    The cache key costs a ``json.dumps`` of the schema, so a walk
-    resolves its decoder once (:func:`block_decoder`), not per block.
+    The generated code raises :class:`CorruptBlock` from every check of
+    the byte stream (the corruption-injection suite pins the messages):
+    varint bounds, sized values past the buffer, invalid UTF-8 (a map
+    key too), union and enum indexes out of range, array and map counts
+    out of bounds, ``fixed past end``. The schema is compiled whole and
+    at once, so a schema the generator cannot compile raises here,
+    before any byte is decoded: a missing key (``"fields"``,
+    ``"items"``, ``"values"``, ``"symbols"``, ``"size"``) as
+    ``KeyError``, a malformed one as ``TypeError`` or ``ValueError``,
+    and an unknown or named-reference type (named-type resolution is
+    not supported) as ``ValueError``. Cached per schema JSON — one
+    codegen per schema per worker process, microseconds against
+    millions of avoided calls. The cache key costs a ``json.dumps`` of
+    the schema, so a walk resolves its decoder once
+    (:func:`block_decoder`), not per block.
 
     ``build=False`` generates the count-only twin for a salvage pass
     that only counts records. It is a BLOCK function ``(payload, count)``
     with the record loop and the trailing-bytes check generated inside
     it: the checks of :func:`block_decoder`'s strict block decode in the
-    same order, raising the same messages, but no dict, string, or
+    same order, raising the same messages, but no dict, list, string, or
     number is built (a string is only checked for UTF-8) and it returns
     no records (an empty tuple). A run of int/long fields is skipped by
-    one regex match, and a one-byte length or union index is read
+    one regex match, and a one-byte length, count or index is read
     inline; the exact loops run only when those fail, to raise their
-    error. A nested record stays a call of its per-record skipper."""
+    error. A nested record, array or map stays a call of its skipper."""
     return _codegen(schema, "build" if build else "count")
 
 
 def _codegen(schema, mode: str):
     """:func:`compile_decoder`'s generator. ``mode`` is ``"build"``
-    (``(buf, pos) -> (value, pos)``), ``"skip"`` (``(buf, pos) -> pos``,
-    a nested record of a count-only decoder) or ``"count"`` (the
-    count-only block function)."""
+    (``(buf, pos) -> (value, pos)``), ``"skip"`` (``(buf, pos) -> pos``:
+    a nested record, array or map of a count-only decoder, or fields a
+    reader schema drops) or ``"count"`` (the count-only block
+    function)."""
     build = mode == "build"
     key = (json.dumps(schema, sort_keys=True), mode)
     fn = _DECODER_CACHE.get(key)
@@ -741,13 +673,12 @@ def _codegen(schema, mode: str):
     ns: dict[str, object] = {
         "unpack_from": struct.unpack_from,
         "CorruptBlock": CorruptBlock,
-        "decode_value": decode_value,
     }
     lines: list[str] = ["def _decoder(buf, pos):", "    blen = len(buf)"]
     if mode == "count":  # a block's record loop is generated too
         lines = ["def _decoder(buf, count):", "    blen = len(buf)", "    pos = 0",
                  "    for i_ in range(count):"]
-    n_fallbacks = [0]
+    n_subs = itertools.count()  # numbers the sub-decoders and symbol tables in ``ns``
 
     def varint(ind: str, out: str | None) -> None:
         """``out=None`` checks the varint's length and keeps no value."""
@@ -800,7 +731,50 @@ def _codegen(schema, mode: str):
         )
         varint(ind + "    ", out)
 
-    def emit(s, ind: str, out: str) -> None:
+    def in_range(ind: str, n: int, what: str) -> None:
+        """A union branch or enum symbol index ``idx_`` below ``n``."""
+        value_varint(ind, "idx_")
+        lines.extend(
+            [
+                f"{ind}if not 0 <= idx_ < {n}:",
+                f"{ind}    raise CorruptBlock("
+                f"'{what} index %d out of range' % idx_)",
+            ]
+        )
+
+    def blocks(s, ind: str, out: str) -> None:
+        """An array or map, inline: blocks of items up to a zero count
+        (a negative count is followed by the block's byte size); a map
+        item is a string key, then its value. A function holds at most
+        one such loop: a nested array or map is a call."""
+        t = _schema_type(s)
+        item = s["items"] if t == "array" else s["values"]
+        if build:
+            lines.append(f"{ind}{out} = {'[]' if t == 'array' else '{}'}")
+        lines.append(f"{ind}while True:")
+        value_varint(ind + "    ", "n_")
+        lines.extend(
+            [f"{ind}    if n_ == 0:", f"{ind}        break",
+             f"{ind}    if n_ < 0:", f"{ind}        n_ = -n_"]
+        )
+        varint(ind + "        ", None)
+        lines.extend(
+            [
+                f"{ind}    if n_ > {MAX_BLOCK_RECORDS}:",
+                f"{ind}        raise CorruptBlock('{t} count out of bounds')",
+                f"{ind}    for _ in range(n_):",
+            ]
+        )
+        ind += "        "
+        if t == "map":
+            emit("string", ind, "k_")
+        emit(item, ind, "x_")
+        if build:
+            lines.append(f"{ind}{out}.append(x_)" if t == "array" else f"{ind}{out}[k_] = x_")
+
+    def emit(s, ind: str, out: str, inline: bool = False) -> None:
+        """``inline`` emits an array or map as :func:`blocks`, not as
+        a call: the top-level value of its own function."""
         t = _schema_type(s)
         if t == "null":
             lines.append(f"{ind}{out} = None" if build else f"{ind}pass")
@@ -861,33 +835,42 @@ def _codegen(schema, mode: str):
                     ]
                 )
         elif t == "union":
-            value_varint(ind, "idx_")
-            lines.extend(
-                [
-                    f"{ind}if not 0 <= idx_ < {len(s)}:",
-                    f"{ind}    raise CorruptBlock("
-                    "'union index %d out of range' % idx_)",
-                ]
-            )
+            in_range(ind, len(s), "union")
             for i, branch in enumerate(s):
                 lines.append(f"{ind}{'if' if i == 0 else 'elif'} idx_ == {i}:")
                 emit(branch, ind + "    ", out)
-        elif t == "record":
-            sub = f"_rec{n_fallbacks[0]}"
-            n_fallbacks[0] += 1
+        elif t == "enum":
+            symbols = s["symbols"]
+            if not isinstance(symbols, list):
+                raise ValueError(f"enum symbols must be a list, not {symbols!r}")
+            in_range(ind, len(symbols), "enum")
+            if build:
+                sub = f"_sym{next(n_subs)}"
+                ns[sub] = tuple(symbols)
+                lines.append(f"{ind}{out} = {sub}[idx_]")
+        elif t == "fixed":
+            size = s["size"]
+            if type(size) is not int or size < 0:
+                raise ValueError(f"fixed size must be a non-negative int, not {size!r}")
+            lines.extend(
+                [f"{ind}if pos + {size} > blen:", f"{ind}    raise CorruptBlock('fixed past end')"]
+                + ([f"{ind}{out} = buf[pos:pos + {size}]"] if build else [])
+                + [f"{ind}pos += {size}"]
+            )
+        elif t in ("array", "map") and inline:
+            blocks(s, ind, out)
+        elif t in ("record", "array", "map"):
+            sub = f"_{t[:3]}{next(n_subs)}"
             ns[sub] = _codegen(s, "build" if build else "skip")
             lines.append(
                 f"{ind}{out}, pos = {sub}(buf, pos)" if build else f"{ind}pos = {sub}(buf, pos)"
             )
-        else:  # array / map / enum / fixed: rare in row data — delegate
-            sub = f"_sch{n_fallbacks[0]}"
-            n_fallbacks[0] += 1
-            ns[sub] = s
-            lines.append(f"{ind}{out}, pos = decode_value({sub}, buf, pos)")
+        else:
+            raise ValueError(f"unsupported schema type {t!r}")
 
+    is_record = _schema_type(schema) == "record"
     if not build:  # every value lands in the throwaway name ``_``
         ind = "        " if mode == "count" else "    "
-        is_record = _schema_type(schema) == "record"
         types = [f["type"] for f in schema["fields"]] if is_record else [schema]
         if not types:  # a record with no fields: an empty loop body
             lines.append(f"{ind}pass")
@@ -897,7 +880,7 @@ def _codegen(schema, mode: str):
                 skip_varints(ind, len(run))
             else:
                 for s in run:
-                    emit(s, ind, "_")
+                    emit(s, ind, "_", inline=not is_record)
         if mode == "count":
             lines.extend(
                 [
@@ -909,14 +892,14 @@ def _codegen(schema, mode: str):
             )
         else:
             lines.append("    return pos")
-    elif _schema_type(schema) == "record":
+    elif is_record:
         pairs = []
         for i, f in enumerate(schema["fields"]):
             emit(f["type"], "    ", f"v{i}")
             pairs.append(f"{f['name']!r}: v{i}")
         lines.append(f"    return {{{', '.join(pairs)}}}, pos")
     else:
-        emit(schema, "    ", "v0")
+        emit(schema, "    ", "v0", inline=True)
         lines.append("    return v0, pos")
 
     exec("\n".join(lines), ns)  # noqa: S102 — self-generated source only
@@ -1230,12 +1213,14 @@ def _tally(res: SalvageResult, walk) -> SalvageResult:
 def _header_decoder(schema, build: bool):
     """A salvage walk's decoder for the schema its header holds: the
     strict :func:`block_decoder` (``build``) or the count-only twin. A
-    header whose schema does not compile (``"fields"`` missing, not a
-    record schema) is a bad header, reported like one the walk cannot
-    parse: the salvage never raises."""
+    header whose schema does not compile (a missing key, an unknown or
+    named-reference type: see :func:`compile_decoder`) is a bad header,
+    reported like one the walk cannot parse, before any block is
+    decoded: the salvage never raises, and the file is never
+    rewritten."""
     try:
         return block_decoder(schema) if build else compile_decoder(schema, build=False)
-    except (KeyError, TypeError) as exc:
+    except (KeyError, TypeError, ValueError) as exc:
         raise CorruptHeader(
             f"schema does not compile: {type(exc).__name__}: {exc}"
         ) from exc
@@ -1334,14 +1319,15 @@ def read_ocf_logical(data: bytes) -> tuple[dict, list]:
 # schema resolution (Avro spec §Schema Resolution): reader-schema reads
 # ---------------------------------------------------------------------------
 
-# writer type -> allowed reader promotions (spec table)
+# writer type -> {reader type it may be read as: value conversion, or
+# None when the writer's decoded value is already the reader's}
 _PROMOTIONS = {
-    "int": {"int", "long", "float", "double"},
-    "long": {"long", "float", "double"},
-    "float": {"float", "double"},
-    "double": {"double"},
-    "string": {"string", "bytes"},
-    "bytes": {"bytes", "string"},
+    "int": {"int": None, "long": None, "float": float, "double": float},
+    "long": {"long": None, "float": float, "double": float},
+    "float": {"float": None, "double": None},
+    "double": {"double": None},
+    "string": {"string": None, "bytes": str.encode},
+    "bytes": {"bytes": None, "string": bytes.decode},
 }
 
 
@@ -1349,192 +1335,185 @@ class SchemaResolutionError(ValueError):
     """Writer and reader schemas cannot be matched per the spec."""
 
 
-def decode_resolved(writer, reader, buf: bytes, pos: int):
-    """Decode bytes written with ``writer`` as the ``reader`` schema —
-    the Avro schema-evolution read (spec §Schema Resolution):
+def compile_resolved_decoder(writer, reader):
+    """A decoder ``(buf, pos) -> (value, pos)`` of bytes written with
+    ``writer``, read as the ``reader`` schema — the Avro
+    schema-evolution read (spec §Schema Resolution). The plan is built
+    once per (writer, reader) pair, as a tree of closures over
+    :func:`compile_decoder`'s generated code:
 
-    - record fields matched BY NAME: writer-only fields are skipped
-      (their bytes decoded and discarded), reader-only fields take
-      their declared ``default``;
+    - record fields matched BY NAME: a run of writer-only fields is
+      skipped by one generated skipper (nothing is built), reader-only
+      fields take their declared ``default``;
     - primitive promotions int->long/float/double, long->float/double,
-      float->double, string<->bytes;
-    - writer unions resolve their tagged branch against the reader
-      type; reader unions accept the writer type via first matching
-      branch.
+      float->double, string<->bytes, applied to the writer decoder's
+      value;
+    - a writer union resolves its tagged branch against the reader;
+      a reader union takes the first branch that resolves, trying the
+      next one when a branch raises :class:`SchemaResolutionError`;
+    - arrays and maps resolve their items; enums resolve by symbol
+      NAME, a symbol the reader lacks taking the reader's ``default``;
+      fixed sizes must match.
+
+    Resolution errors stay LAZY: a mismatch raises
+    :class:`SchemaResolutionError` when a value that needs it is
+    decoded, per record, so a zero-record file still reads clean. A
+    schema that does not compile raises here, as
+    :func:`compile_decoder` does.
 
     This is what lets a 100 TB scan apply TODAY'S schema to years of
-    heterogeneously-written files in one pass.
-    """
+    heterogeneously-written files in one pass."""
+    try:
+        return _resolve(writer, reader)
+    except SchemaResolutionError as exc:
+        msg = str(exc)
+
+        def d_unresolved(buf, pos):
+            raise SchemaResolutionError(msg)
+
+        return d_unresolved
+
+
+def _read_count(buf, pos: int, what: str) -> tuple[int, int]:
+    """The item count of an array or map block, its byte size (present
+    when the count is negative) skipped."""
+    count, pos = _read_long(buf, pos)
+    if count < 0:
+        count = -count
+        _, pos = _read_long(buf, pos)
+    if count > MAX_BLOCK_RECORDS:
+        raise CorruptBlock(f"{what} count out of bounds")
+    return count, pos
+
+
+def _resolve(writer, reader):
+    """:func:`compile_resolved_decoder`'s planner: raises
+    :class:`SchemaResolutionError` at once when the pair cannot match
+    whatever the bytes hold; every nested value is planned lazily."""
     wt, rt = _schema_type(writer), _schema_type(reader)
     if wt == "union":
-        idx, pos = _read_long(buf, pos)
-        if not 0 <= idx < len(writer):
-            raise CorruptBlock(f"union index {idx} out of range")
-        return decode_resolved(writer[idx], reader, buf, pos)
+        branches = [compile_resolved_decoder(w, reader) for w in writer]
+
+        def d_writer_union(buf, pos):
+            idx, pos = _read_long(buf, pos)
+            if not 0 <= idx < len(branches):
+                raise CorruptBlock(f"union index {idx} out of range")
+            return branches[idx](buf, pos)
+
+        return d_writer_union
     if rt == "union":
-        for branch in reader:
+        branches = []
+        for r in reader:
             try:
-                return decode_resolved(writer, branch, buf, pos)
+                branches.append(_resolve(writer, r))
             except SchemaResolutionError:
                 continue
-        raise SchemaResolutionError(f"writer {wt} matches no reader union branch")
-    if wt == "record" and rt == "record":
-        wfields = {f["name"]: f for f in writer["fields"]}
-        rnames = {f["name"] for f in reader["fields"]}
-        rec = {}
-        # writer order governs the byte stream
-        for wf in writer["fields"]:
-            if wf["name"] in rnames:
-                rf = next(f for f in reader["fields"] if f["name"] == wf["name"])
-                rec[wf["name"]], pos = decode_resolved(
-                    wf["type"], rf["type"], buf, pos
-                )
-            else:  # skipped: decode with the writer schema, discard
-                _, pos = decode_value(wf["type"], buf, pos)
-        for rf in reader["fields"]:
-            if rf["name"] not in wfields:
-                if "default" not in rf:
-                    raise SchemaResolutionError(
-                        f"reader field {rf['name']} missing and has no default"
-                    )
-                rec[rf["name"]] = rf["default"]
-        return rec, pos
-    if wt == "array" and rt == "array":
-        items = []
-        while True:
-            count, pos = _read_long(buf, pos)
-            if count == 0:
-                return items, pos
-            if count < 0:
-                count = -count
-                _, pos = _read_long(buf, pos)
-            for _ in range(count):
-                item, pos = decode_resolved(writer["items"], reader["items"], buf, pos)
-                items.append(item)
-    if wt == "map" and rt == "map":
-        entries = {}
-        while True:
-            count, pos = _read_long(buf, pos)
-            if count == 0:
-                return entries, pos
-            if count < 0:
-                count = -count
-                _, pos = _read_long(buf, pos)
-            if count > MAX_BLOCK_RECORDS:
-                raise CorruptBlock("map count out of bounds")
-            for _ in range(count):
-                kraw, pos = _read_sized(buf, pos)
-                entries[kraw.decode("utf-8")], pos = decode_resolved(
-                    writer["values"], reader["values"], buf, pos
-                )
-    if wt == "enum" and rt == "enum":
-        # spec: match by symbol NAME against the reader's symbol list;
-        # a writer symbol the reader lacks resolves to the reader's
-        # declared enum default (Avro 1.9+) or errors loudly.
-        idx, pos = _read_long(buf, pos)
-        wsyms = writer["symbols"]
-        if not 0 <= idx < len(wsyms):
-            raise CorruptBlock(f"enum index {idx} out of range")
-        sym = wsyms[idx]
-        if sym in reader["symbols"]:
-            return sym, pos
-        if "default" in reader:
-            return reader["default"], pos
-        raise SchemaResolutionError(
-            f"writer enum symbol {sym!r} absent from reader (no default)"
-        )
-    if wt == "fixed" and rt == "fixed":
-        if writer["size"] != reader["size"]:
-            raise SchemaResolutionError("fixed size mismatch between schemas")
-        return decode_value(writer, buf, pos)
-    if wt == rt or rt in _PROMOTIONS.get(wt, ()):  # identity or promotion
-        val, pos = decode_value(writer, buf, pos)
-        if rt in ("float", "double") and wt in ("int", "long"):
-            val = float(val)
-        elif rt == "long" and wt == "int":
-            val = int(val)
-        elif rt == "string" and wt == "bytes":
-            val = val.decode("utf-8")
-        elif rt == "bytes" and wt == "string":
-            val = val.encode("utf-8")
-        return val, pos
-    raise SchemaResolutionError(f"cannot read writer {wt} as reader {rt}")
+        msg = f"writer {wt} matches no reader union branch"
+        if not branches:
+            raise SchemaResolutionError(msg)
 
+        def d_reader_union(buf, pos):
+            for dec in branches:
+                try:
+                    return dec(buf, pos)
+                except SchemaResolutionError:
+                    continue
+            raise SchemaResolutionError(msg)
 
-def compile_resolved_decoder(writer, reader):
-    """Precompile the schema-resolution plan :func:`decode_resolved`
-    re-derives PER RECORD (field-name dict builds, linear reader-field
-    scans, per-value type dispatch) into a closure tree built once per
-    (writer, reader) pair. Record plans pair each writer field with
-    either a compiled resolved decoder (kept field), a compiled
-    writer-schema decoder whose value is discarded (skipped field — the
-    projected-scan fast path), or a lazily-raising default slot;
-    identity/promotion leaves reuse :func:`compile_decoder`'s generated
-    code. Shapes the compiler does not plan (unions, arrays, maps,
-    enums, fixed) fall back to decode_resolved itself — identical
-    semantics, just not precompiled. Resolution errors stay LAZY (the
-    missing-default raise fires per record, exactly like the
-    interpreter) so a zero-record file still reads clean."""
-    wt, rt = _schema_type(writer), _schema_type(reader)
-    if wt == "record" and rt == "record":
+        return d_reader_union
+    if wt == rt == "record":
         rfields = {f["name"]: f for f in reader["fields"]}
         wnames = {f["name"] for f in writer["fields"]}
-        steps = []
-        for wf in writer["fields"]:
-            rf = rfields.get(wf["name"])
-            if rf is None:  # skipped: decode with the writer schema, discard
-                steps.append((None, compile_decoder(wf["type"])))
+        steps = []  # (name, decoder), or (None, skipper) for a dropped run
+        for kept, run in itertools.groupby(writer["fields"], lambda f: f["name"] in rfields):
+            if kept:
+                steps += [
+                    (f["name"], compile_resolved_decoder(f["type"], rfields[f["name"]]["type"]))
+                    for f in run
+                ]
             else:
-                steps.append(
-                    (wf["name"], compile_resolved_decoder(wf["type"], rf["type"]))
-                )
-        defaults = []
-        for rf in reader["fields"]:
-            if rf["name"] not in wnames:
-                defaults.append(
-                    (rf["name"], rf.get("default"), "default" in rf)
-                )
+                skipped = {"type": "record", "name": "skipped", "fields": list(run)}
+                steps.append((None, _codegen(skipped, "skip")))
+        defaults = [
+            (f["name"], f.get("default"), "default" in f)
+            for f in reader["fields"]
+            if f["name"] not in wnames
+        ]
 
-        def d_rec(buf, pos):
+        def d_record(buf, pos):
             rec = {}
-            for name, fd in steps:
-                v, pos = fd(buf, pos)
-                if name is not None:
-                    rec[name] = v
-            for name, dv, has in defaults:
+            for name, dec in steps:
+                if name is None:
+                    pos = dec(buf, pos)
+                else:
+                    rec[name], pos = dec(buf, pos)
+            for name, value, has in defaults:
                 if not has:
                     raise SchemaResolutionError(
                         f"reader field {name} missing and has no default"
                     )
-                rec[name] = dv
+                rec[name] = value
             return rec, pos
 
-        return d_rec
-    if wt not in ("union", "array", "map", "enum", "fixed", "record") and (
-        wt == rt or rt in _PROMOTIONS.get(wt, ())
-    ):
-        base = compile_decoder(writer)
-        if rt in ("float", "double") and wt in ("int", "long"):
-            conv = float
-        elif rt == "long" and wt == "int":
-            conv = int
-        elif rt == "string" and wt == "bytes":
-            conv = lambda b: b.decode("utf-8")  # noqa: E731
-        elif rt == "bytes" and wt == "string":
-            conv = lambda s: s.encode("utf-8")  # noqa: E731
-        else:
-            return base  # identity leaf: the codegen decoder as-is
+        return d_record
+    if wt == rt == "array":
+        item = compile_resolved_decoder(writer["items"], reader["items"])
 
-        def d_conv(buf, pos):
-            v, pos = base(buf, pos)
-            return conv(v), pos
+        def d_array(buf, pos):
+            items = []
+            while True:
+                count, pos = _read_count(buf, pos, "array")
+                if not count:
+                    return items, pos
+                for _ in range(count):
+                    v, pos = item(buf, pos)
+                    items.append(v)
 
-        return d_conv
+        return d_array
+    if wt == rt == "map":
+        key = _codegen("string", "build")
+        value = compile_resolved_decoder(writer["values"], reader["values"])
 
-    def d_fallback(buf, pos):
-        return decode_resolved(writer, reader, buf, pos)
+        def d_map(buf, pos):
+            entries = {}
+            while True:
+                count, pos = _read_count(buf, pos, "map")
+                if not count:
+                    return entries, pos
+                for _ in range(count):
+                    k, pos = key(buf, pos)
+                    entries[k], pos = value(buf, pos)
 
-    return d_fallback
+        return d_map
+    # a leaf: the writer's generated decoder, its value converted
+    conv = None
+    if wt == rt == "enum":
+        symbols, has_default = set(reader["symbols"]), "default" in reader
+
+        def conv(sym):
+            if sym in symbols:
+                return sym
+            if has_default:
+                return reader["default"]
+            raise SchemaResolutionError(
+                f"writer enum symbol {sym!r} absent from reader (no default)"
+            )
+    elif wt == rt == "fixed":
+        if writer["size"] != reader["size"]:
+            raise SchemaResolutionError("fixed size mismatch between schemas")
+    elif wt == rt or rt in _PROMOTIONS.get(wt, {}):
+        conv = _PROMOTIONS.get(wt, {}).get(rt)
+    else:
+        raise SchemaResolutionError(f"cannot read writer {wt} as reader {rt}")
+    base = _codegen(writer, "build")
+    if conv is None:
+        return base
+
+    def d_converted(buf, pos):
+        v, pos = base(buf, pos)
+        return conv(v), pos
+
+    return d_converted
 
 
 def read_ocf_resolved(data: bytes, reader_schema, logical: bool = False) -> list:
@@ -1577,9 +1556,9 @@ def sampled_validate(
     win = data if isinstance(data, ByteWindow) else ByteWindow.of(data)
     try:
         schema, codec, sync, pos = win.read_header()
+        decode = _header_decoder(schema, False)
     except CorruptHeader as exc:
         return False, 0, str(exc)
-    decode = block_decoder(schema)
     n = win.size
     block_no = checked = 0
     while pos < n and checked < limit:

@@ -9,7 +9,8 @@ POSIX filesystem: every byte written by an executor goes through
 ``pyarrow.fs.FileSystem`` (tests use ``SubTreeFileSystem`` to prove no
 ``os.*`` call sneaks in).
 
-Commit discipline: write to ``<target>.tmp`` then ``FileSystem.move`` —
+Commit discipline: write to a temp file beside the target (one per task
+attempt: :func:`atomic_stream_records`) then ``FileSystem.move`` —
 a true atomic rename on POSIX/HDFS, and a last-step server-side
 copy+delete on object stores (the closest S3 offers; it is also exactly
 what the reference's delete-then-upload swap does, minus our crash
@@ -58,19 +59,22 @@ def atomic_stream_records(
     path: str,
     write_fn,
     filesystem: pafs.FileSystem | None = None,
-    tmp_suffix: str = ".tmp",
 ) -> tuple[str, int]:
     """Stream-write via ``write_fn(stream) -> n`` (records or bytes
     written) and commit ``path`` only if n > 0 (empty partitions leave
     nothing behind). Returns ``(fs_native_path, n)``.
 
-    ``tmp_suffix`` lets concurrent attempts of the SAME task (Spark
-    speculative execution, a zombie task overlapping its retry) write
-    disjoint temp files — pass an attempt-unique suffix so a failing
-    attempt's cleanup can never delete the healthy attempt's bytes and
-    the final move is always of a completely-written file."""
+    Inside a Spark task the temp file is ``<path>.tmp-<taskAttemptId>``,
+    so concurrent attempts of the SAME task (speculative execution, a
+    zombie task overlapping its retry) write disjoint temp files: a
+    failing attempt's cleanup can never delete the healthy attempt's
+    bytes, and the final move is always of a completely-written file.
+    Outside a task it is ``<path>.tmp``."""
+    from pyspark import TaskContext
+
     fs_, p = resolve(path, filesystem)
-    tmp = p + tmp_suffix
+    ctx = TaskContext.get()
+    tmp = p + (".tmp" if ctx is None else f".tmp-{ctx.taskAttemptId()}")
     try:
         with fs_.open_output_stream(tmp) as out:
             n = write_fn(out)

@@ -72,12 +72,6 @@ def _field_ddl(ftype) -> str:
     raise ValueError(f"pass an explicit schema for type {ftype!r}")
 
 
-def _list_container_files(path: str) -> list[str]:
-    """Driver-side listing (metadata only — the same class of listing
-    compact_small_files plans from)."""
-    return [p for p, _sz in _list_container_files_sized(path)]
-
-
 # Split planning default: the same 128 MB granularity as
 # spark.sql.files.maxPartitionBytes' default; override per-read with
 # .option("split_size_bytes", n) (tests use small values to exercise
@@ -85,7 +79,6 @@ def _list_container_files(path: str) -> list[str]:
 # _BATCH_ROWS rows held between yields, plus at most one decompressed
 # block (MAX_BLOCK_BYTES-capped by the codec).
 _SPLIT_BYTES_DEFAULT = 128 * 1024 * 1024
-_CHUNK = 4 * 1024 * 1024  # read size of a split's ByteWindow
 
 
 class AvroOCFReader(DataSourceReader):
@@ -136,8 +129,9 @@ def read_container(path: str, start: int, end: int, size: int, reader=None):
     The first damage raises (``avro_codec.salvage_blocks(strict=True)``).
 
     The header comes from a growing bounded prefix and the range through
-    ``_CHUNK``-byte reads, so memory stays O(chunk + one block); a file
-    no larger than one chunk is read whole by the first read."""
+    ``avro_codec._CHUNK``-byte reads, so memory stays O(chunk + one
+    block); a file no larger than one chunk is read whole by the first
+    read."""
     from operator import itemgetter
 
     from .. import fsio
@@ -145,7 +139,7 @@ def read_container(path: str, start: int, end: int, size: int, reader=None):
 
     fs, p = fsio.resolve(path)
     with fs.open_input_file(p) as f:
-        win = ByteWindow(f, size, _CHUNK)
+        win = ByteWindow(f, size)
         writer, codec, sync, hdr_end = win.read_header()
         pos = win.first_block(start, end, hdr_end, sync)
         if pos is None:
@@ -175,10 +169,10 @@ class AvroOCFDataSource(DataSource):
         from .. import fsio
         from ..avro_codec import read_header
 
-        files = _list_container_files(self.options.get("path", ""))
+        files = _list_container_files_sized(self.options.get("path", ""))
         if not files:
             raise ValueError("avro_ocf: no container files under path")
-        fs, p = fsio.resolve(files[0])
+        fs, p = fsio.resolve(files[0][0])
         with fs.open_input_file(p) as f:
             head = f.read(64 * 1024)  # header is tiny; 64k covers any schema
         schema, _codec, _sync, _pos = read_header(head)
@@ -279,8 +273,7 @@ class AvroOCFArrowWriter(DataSourceArrowWriter):
         from .. import fsio
         from ..avro_codec import write_ocf
 
-        ctx = TaskContext.get()
-        pid = ctx.partitionId()
+        pid = TaskContext.get().partitionId()
         fs, dpath = fsio.resolve(self._path)
         fs.create_dir(dpath, recursive=True)
         target = fsio.join(dpath, f"part-{pid:05d}.avro")
@@ -289,17 +282,15 @@ class AvroOCFArrowWriter(DataSourceArrowWriter):
             for batch in iterator:
                 yield from batch.to_pylist()
 
-        # Attempt-unique temp name: two live attempts of one task
-        # (speculation / zombie overlap) must never share a temp file
-        # — each writes its own and the commit move is last-writer-
-        # wins of a COMPLETE file (ADVICE r9).
+        # fsio names the temp file by task attempt: two live attempts
+        # of one task (speculation / zombie overlap) never share one,
+        # and the commit move is last-writer-wins of a COMPLETE file.
         path, n = fsio.atomic_stream_records(
             target,
             lambda out: write_ocf(
                 out, self._schema, recs(), block_records=1000
             ),
             filesystem=fs,
-            tmp_suffix=f".tmp-{ctx.taskAttemptId()}",
         )
         return _Commit(path, n)
 

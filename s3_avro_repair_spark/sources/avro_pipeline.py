@@ -47,7 +47,6 @@ from ..avro_codec import (
     block_stats,
     compile_decoder,
     salvage_blocks,
-    salvage_ocf,
     salvage_range,
     sampled_validate,
     write_ocf,
@@ -524,18 +523,6 @@ def _repair_row(path: str, size: int) -> list[tuple]:
     return [(os.path.basename(path), *_outcome(_salvage(path, size)))]
 
 
-def _salvage_report(batches):
-    """mapInPandas kernel of the binaryFile stream in stream_avro_salvage:
-    ``_repair_row`` over each streamed file's bytes."""
-    cols = ["file", "status", "lost_blocks"]
-    for pdf in batches:
-        rows = [
-            (os.path.basename(path), *_outcome(salvage_ocf(bytes(content), keep_records=False)))
-            for path, content in zip(pdf["path"], pdf["content"])
-        ]
-        yield pd.DataFrame(rows, columns=cols)
-
-
 # ---------------------------------------------------------------------------
 # registered ops
 # ---------------------------------------------------------------------------
@@ -852,8 +839,9 @@ EVOLVED_READER_SCHEMA = {
 def avro_scan_evolved(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Schema-evolution scan: the files were written with the full
     5-field writer schema; this scan reads them under TODAY'S reader
-    schema (avro_codec.decode_resolved, Avro spec §Schema Resolution):
-    writer-only fields are skipped byte-exactly, the reader-only
+    schema (avro_codec.compile_resolved_decoder, Avro spec §Schema
+    Resolution): writer-only fields are skipped byte-exactly by a
+    generated skipper that builds nothing for them, and the reader-only
     ``region`` field takes its declared default. This is the read path
     that lets one 100 TB pass apply a current schema to years of
     heterogeneously-written objects — a capability the reference
@@ -876,9 +864,10 @@ def avro_scan_evolved(spark: SparkSession, sf_dir: str) -> DataFrame:
 def avro_scan_projected(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Column-pruned container scan: decode ONLY the projected fields
     by reading under a reader schema that is a 2-field subset of the
-    5-field writer schema — the Schema Resolution skip machinery
-    (avro_codec.decode_resolved) walks the unselected fields
-    byte-exactly without materializing a single Python value for them.
+    5-field writer schema — the Schema Resolution plan
+    (avro_codec.compile_resolved_decoder) skips each run of unselected
+    fields with one call of a generated skipper, byte-exactly and
+    without materializing a single Python value for them.
     This is predicate-free column pruning pushed INTO the Avro decode:
     parquet gets it from the format's columnar layout, row-oriented
     Avro only gets it by skipping, and at 100 TB a 2-of-5-field read

@@ -598,11 +598,15 @@ def stream_avro_salvage(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Continuous salvage triage — the reference's one-shot
     validate/repair sweep as a STANDING stream: corrupt container
     files landing in a prefix are discovered by the binaryFile stream
-    source one per microbatch, block-salvaged by the same
-    ``salvage_ocf`` mapInPandas kernel as the batch path (per-file
-    fault isolation carries over: a dead file is a report row, never
-    a dead query), and the fleet-health rollup (files + lost blocks
-    per status) is maintained incrementally in complete mode.
+    source one per microbatch, block-salvaged by the batch op's own
+    per-file body (``avro_pipeline._repair_row``: per-file fault
+    isolation carries over, a dead file is a report row, never a dead
+    query), and the fleet-health rollup (files + lost blocks per
+    status) is maintained incrementally in complete mode. The stream
+    selects only each file's path and length, so Spark never reads
+    the file into a ``content`` value (which ``binaryFile`` caps at
+    ``spark.sql.sources.binaryFile.maxLength``, 2 GiB by default): the
+    salvage reads the file itself through bounded windows.
 
     This RUNS a real availableNow stream (8 microbatches over the
     deterministic corruption layout) into a memory sink; the oracle is
@@ -611,7 +615,14 @@ def stream_avro_salvage(spark: SparkSession, sf_dir: str) -> DataFrame:
     the checkpoint, one decode task per new file, constant-size
     (3-status) aggregate state — the shape of a repair daemon watching
     an S3 landing prefix."""
-    from ..sources.avro_pipeline import _salvage_report, ensure_avro_fixtures
+    from ..sources.avro_pipeline import _repair_row, ensure_avro_fixtures
+
+    cols = ["file", "status", "lost_blocks"]
+
+    def repair(batches):
+        for pdf in batches:
+            rows = [r for p, n in zip(pdf["path"], pdf["length"]) for r in _repair_row(p, int(n))]
+            yield pd.DataFrame(rows, columns=cols)
 
     root = ensure_avro_fixtures(sf_dir)
     name = f"salv_{uuid.uuid4().hex[:8]}"
@@ -623,10 +634,8 @@ def stream_avro_salvage(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .option("maxFilesPerTrigger", 1)
         .load(os.path.join(root, "corrupt"))
-        .select("path", "content")
-        .mapInPandas(
-            _salvage_report, schema="file string, status string, lost_blocks int"
-        )
+        .select("path", "length")
+        .mapInPandas(repair, schema="file string, status string, lost_blocks int")
         .groupBy("status")
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n_files"),

@@ -5,6 +5,7 @@ multisets equal the clean file minus the injured blocks."""
 
 from __future__ import annotations
 
+import functools
 import io
 from collections import Counter
 
@@ -421,7 +422,6 @@ def test_schema_resolution_skip_default_promote():
     promotion lattice (spec §Schema Resolution)."""
     from s3_avro_repair_spark.avro_codec import (
         SchemaResolutionError,
-        decode_resolved,
         read_ocf_resolved,
         write_ocf_bytes,
     )
@@ -562,6 +562,28 @@ def test_resolution_map_values_and_enum_symbols():
         read_ocf_resolved(d2, er_strict)
 
 
+def test_resolution_errors_are_lazy():
+    """A mismatch raises only when a value that needs it is decoded: a
+    zero-record file reads clean, and a writer union resolves per value
+    (its string branch matches the reader, its null branch does not)."""
+    from s3_avro_repair_spark.avro_codec import (
+        SchemaResolutionError,
+        read_ocf_resolved,
+        write_ocf_bytes,
+    )
+
+    writer = {"type": "record", "name": "r", "fields": [{"name": "v", "type": ["null", "string"]}]}
+    reader = {"type": "record", "name": "r", "fields": [{"name": "v", "type": "string"}]}
+    nodefault = {"type": "record", "name": "r", "fields": [{"name": "w", "type": "long"}]}
+    empty = write_ocf_bytes(writer, [])
+    assert read_ocf_resolved(empty, reader) == read_ocf_resolved(empty, nodefault) == []
+    assert read_ocf_resolved(write_ocf_bytes(writer, [{"v": "a"}]), reader) == [{"v": "a"}]
+    with pytest.raises(SchemaResolutionError, match="cannot read writer null as reader string"):
+        read_ocf_resolved(write_ocf_bytes(writer, [{"v": "a"}, {"v": None}]), reader)
+    with pytest.raises(SchemaResolutionError, match="w missing and has no default"):
+        read_ocf_resolved(write_ocf_bytes(writer, [{"v": "a"}]), nodefault)
+
+
 def test_block_stats_matches_full_decode(data):
     from s3_avro_repair_spark.avro_codec import block_stats
 
@@ -586,7 +608,7 @@ def test_block_stats_rejects_structural_damage(data):
 # ---------------------------------------------------------------------------
 
 # writer type -> legal reader promotions (spec §Schema Resolution),
-# with a value transform mirroring what decode_resolved must apply.
+# with a value transform mirroring what a resolved read must apply.
 _LATTICE = {
     "int": ["int", "long", "float", "double"],
     "long": ["long", "float", "double"],
@@ -625,84 +647,111 @@ def _value_strategy(t):
     }[t]
 
 
+_SYMBOLS = ["A", "B", "C", "D"]
+
+
+def _shaped(shape, t):
+    """``t`` as one field's shape: itself, array<t>, map<t> or ["null", t]."""
+    if shape == "array":
+        return {"type": "array", "items": t}
+    if shape == "map":
+        return {"type": "map", "values": t}
+    return ["null", t] if shape == "nullable" else t
+
+
+def _shaped_values(shape, t):
+    v = _value_strategy(t)
+    if shape == "array":
+        return st.lists(v, max_size=3)
+    if shape == "map":
+        return st.dictionaries(st.sampled_from(["a", "b", "é"]), v, max_size=3)
+    return st.none() | v if shape == "nullable" else v
+
+
+def _expected_shaped(val, shape, wt, rt):
+    """``val``, written as ``shape`` around ``wt``, read as the same
+    shape around ``rt``; UnicodeDecodeError for a bytes value that is
+    not UTF-8 read as string."""
+    if shape == "array":
+        return [_expected(v, wt, rt) for v in val]
+    if shape == "map":
+        return {k: _expected(v, wt, rt) for k, v in val.items()}
+    return None if val is None else _expected(val, wt, rt)
+
+
+def _expected_symbol(val, symbols, default):
+    return val if val in symbols else default
+
+
 @st.composite
 def _evolution_case(draw):
     """A (writer schema, reader schema, rows, expected rows) quadruple:
     per field the reader either promotes the type, keeps it, or drops
     the field; the reader also gains a defaulted field and shuffles
-    field order (matching is by name, not position)."""
+    field order (matching is by name, not position). A field is a
+    lattice type, or array<T>, map<T> or ["null", T] around one (the
+    reader promotes T inside the same shape), or an enum the reader
+    reads through a reordered subset of its symbols plus a default. A
+    row expects None when the read must raise: a bytes value that is
+    not UTF-8, read as string."""
     n = draw(st.integers(min_value=1, max_value=5))
-    wtypes = [draw(st.sampled_from(sorted(_LATTICE))) for _ in range(n)]
-    wfields = [{"name": f"f{i}", "type": t} for i, t in enumerate(wtypes)]
-    rfields, kept = [], []
-    for i, t in enumerate(wtypes):
+    wfields, rfields, values, kept = [], [], [], []
+    for i in range(n):
+        shape = draw(st.sampled_from(["plain", "array", "map", "nullable", "enum"]))
         fate = draw(st.sampled_from(["keep", "promote", "drop"]))
-        if fate == "drop":
-            continue
-        rt = wtypes[i] if fate == "keep" else draw(
-            st.sampled_from(_LATTICE[t])
-        )
-        rfields.append({"name": f"f{i}", "type": rt})
-        kept.append((i, t, rt))
-    if draw(st.booleans()):
+        if shape == "enum":
+            wt = rt = {"type": "enum", "name": f"E{i}", "symbols": _SYMBOLS}
+            values.append(st.sampled_from(_SYMBOLS))
+            expect = functools.partial(_expected_symbol, symbols=_SYMBOLS, default=None)
+            if fate == "promote":
+                symbols = draw(st.permutations(_SYMBOLS))[: draw(st.integers(1, 4))]
+                default = draw(st.sampled_from(symbols))
+                rt = dict(wt, symbols=symbols, default=default)
+                expect = functools.partial(_expected_symbol, symbols=symbols, default=default)
+        else:
+            t = draw(st.sampled_from(sorted(_LATTICE)))
+            r = t if fate == "keep" else draw(st.sampled_from(_LATTICE[t]))
+            wt, rt = _shaped(shape, t), _shaped(shape, r)
+            values.append(_shaped_values(shape, t))
+            expect = functools.partial(_expected_shaped, shape=shape, wt=t, rt=r)
+        wfields.append({"name": f"f{i}", "type": wt})
+        if fate != "drop":
+            rfields.append({"name": f"f{i}", "type": rt})
+            kept.append((f"f{i}", expect))
+    added = draw(st.booleans())
+    if added:
         rfields.append({"name": "added", "type": "long", "default": 7})
-        added = True
-    else:
-        added = False
     perm = draw(st.permutations(rfields))
     writer = {"type": "record", "name": "R", "fields": wfields}
     reader = {"type": "record", "name": "R", "fields": list(perm)}
     nrows = draw(st.integers(min_value=1, max_value=5))
     rows, want = [], []
     for _ in range(nrows):
-        row = {
-            f"f{i}": draw(_value_strategy(t)) for i, t in enumerate(wtypes)
-        }
+        row = {f"f{i}": draw(v) for i, v in enumerate(values)}
         rows.append(row)
-        # bytes values must be utf-8 decodable for a bytes->string read
-        exp_ok = all(
-            not (wt == "bytes" and rt == "string")
-            or _utf8able(row[f"f{i}"])
-            for i, wt, rt in kept
-        )
-        if not exp_ok:
-            want.append((None, False))
+        try:
+            exp = {name: expect(row[name]) for name, expect in kept}
+        except UnicodeDecodeError:
+            want.append(None)
             continue
-        exp = {
-            f"f{i}": _expected(row[f"f{i}"], wt, rt) for i, wt, rt in kept
-        }
         if added:
             exp["added"] = 7
-        want.append((exp, exp_ok))
+        want.append(exp)
     return writer, reader, rows, want
 
 
-def _utf8able(b: bytes) -> bool:
-    try:
-        b.decode("utf-8")
-        return True
-    except UnicodeDecodeError:
-        return False
-
-
-@settings(max_examples=60, deadline=None)
+@settings(max_examples=100, deadline=None)
 @given(case=_evolution_case())
 def test_property_schema_resolution_lattice(case):
-    from s3_avro_repair_spark.avro_codec import (
-        SchemaResolutionError,
-        read_ocf_resolved,
-        write_ocf_bytes,
-    )
+    from s3_avro_repair_spark.avro_codec import read_ocf_resolved, write_ocf_bytes
 
     writer, reader, rows, want = case
     data = write_ocf_bytes(writer, rows)
-    decodable = all(ok for _, ok in want)
-    if not decodable:
-        with pytest.raises((SchemaResolutionError, UnicodeDecodeError)):
+    if None in want:
+        with pytest.raises(UnicodeDecodeError):
             read_ocf_resolved(data, reader)
         return
-    got = read_ocf_resolved(data, reader)
-    assert got == [exp for exp, _ in want]
+    assert read_ocf_resolved(data, reader) == want
 
 
 def test_decimal_bytes_negative_roundtrip():

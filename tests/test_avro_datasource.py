@@ -12,7 +12,6 @@ import pytest
 from s3_avro_repair_spark.avro_codec import write_ocf_bytes
 from s3_avro_repair_spark.sources.avro_datasource import (
     _field_ddl,
-    _list_container_files,
     _list_container_files_sized,
     mount,
 )
@@ -92,8 +91,8 @@ def test_inference_refuses_complex_types():
 def test_listing_single_file(tmp_path):
     d = _write_tree(tmp_path, n_files=1)
     f = os.path.join(d, "part-0.avro")
-    assert _list_container_files(f) == [f]
-    assert len(_list_container_files(d)) == 1
+    assert _list_container_files_sized(f) == [(f, os.path.getsize(f))]
+    assert len(_list_container_files_sized(d)) == 1
 
 
 def test_listing_matches_spark_file_index(spark, tmp_path):
@@ -120,7 +119,7 @@ def test_listing_matches_spark_file_index(spark, tmp_path):
         .select("path")
         .collect()
     }
-    listed = _list_container_files(str(root))
+    listed = [p for p, _ in _list_container_files_sized(str(root))]
     assert set(listed) == spark_paths
     assert spark_paths == {
         str(root / rel)
@@ -255,7 +254,7 @@ def test_corruption_fails_split_scans_too(spark, tmp_path):
 
 @pytest.mark.parametrize("via", ["datasource", "read_avro_dir"])
 def test_single_split_above_chunk_reads_chunked(tmp_path, monkeypatch, request, via):
-    """The whole-file read is bounded by ``_CHUNK``: a
+    """The whole-file read is bounded by ``avro_codec._CHUNK``: a
     one-split container no larger than a chunk is read at once, a larger
     one goes through the chunked window — which never holds the file —
     and returns the same rows. ``read_avro_dir`` runs the same file
@@ -310,7 +309,7 @@ def test_single_split_above_chunk_reads_chunked(tmp_path, monkeypatch, request, 
     assert rows() == want
     if via == "datasource":
         assert max(held) == len(raw)  # one chunk covers it: read at once
-    monkeypatch.setattr(ds, "_CHUNK", 4096)
+    monkeypatch.setattr(avro_codec, "_CHUNK", 4096)
     assert len(raw) > 4 * 64 * 1024  # well past the header prefix too
     assert rows() == want
     if via == "datasource":

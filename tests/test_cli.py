@@ -149,26 +149,90 @@ def test_report_reads_back(spark, sf_dir, tmp_path, capsys):
     assert (rows["written_to"] == "").all()
 
 
-def test_uncompilable_schema_is_unrepairable(spark, sf_dir, tmp_path, capsys):
-    """A container whose header parses but whose schema does not compile
-    (its ``"fields"`` key renamed) is reported unrepairable: the run
-    goes on, and the good container beside it is healthy."""
+def _record(field_type) -> dict:
+    return {
+        "type": "record",
+        "name": "r",
+        "fields": [{"name": "k", "type": "long"}, {"name": "v", "type": field_type}],
+    }
+
+
+_INNER = {"type": "record", "name": "inner", "fields": [{"name": "x", "type": "long"}]}
+# A schema key renamed in the written header: (schema, a value of "v", key)
+_RENAMED_KEY = {
+    "record_without_fields": (_record("long"), 7, "fields"),
+    "array_without_items": (_record({"type": "array", "items": "long"}), [1, 2], "items"),
+    "map_without_values": (_record({"type": "map", "values": "long"}), {"a": 1}, "values"),
+    "enum_without_symbols": (
+        _record({"type": "enum", "name": "e", "symbols": ["A", "B"]}), "B", "symbols",
+    ),
+    "fixed_without_size": (_record({"type": "fixed", "name": "f", "size": 2}), b"ab", "size"),
+}
+
+
+def _uncompilable(case: str) -> bytes:
+    """A 3-block container whose blocks are intact and whose header
+    schema does not compile: one key of the written schema renamed, or
+    (``named_reference``) the header rebuilt around a spec-legal schema
+    whose field ``w`` names the record ``inner`` its field ``v``
+    defines, the records having been written with ``inner`` inline."""
+    from s3_avro_repair_spark.avro_codec import read_header, write_ocf_bytes
+
+    if case == "named_reference":
+        inline = _record(_INNER)
+        inline["fields"].append({"name": "w", "type": _INNER})
+        recs = [{"k": i, "v": {"x": i}, "w": {"x": -i}} for i in range(30)]
+        data = write_ocf_bytes(inline, recs, block_records=10)
+        _, _, sync, hdr_end = read_header(data)
+        named = _record(_INNER)
+        named["fields"].append({"name": "w", "type": "inner"})
+        return write_ocf_bytes(named, [], sync=sync) + data[hdr_end:]
+    schema, value, key = _RENAMED_KEY[case]
+    data = write_ocf_bytes(schema, [{"k": i, "v": value} for i in range(30)], block_records=10)
+    assert data.count(b'"%s"' % key.encode()) == 1
+    return data.replace(b'"%s"' % key.encode(), b'"%sz"' % key[:-1].encode())
+
+
+def _good_and_uncompilable(sf_dir, indir, case: str) -> bytes:
     good = os.path.join(ensure_avro_fixtures(sf_dir), "clean", "orders_0.avro")
-    with open(good, "rb") as f:
-        data = f.read()
-    assert data.count(b'"fields"') == 1
-    indir = tmp_path / "in"
     indir.mkdir()
     shutil.copy(good, indir / "good.avro")
-    (indir / "renamed.avro").write_bytes(data.replace(b'"fields"', b'"fieldz"'))
+    data = _uncompilable(case)
+    (indir / "broken.avro").write_bytes(data)
+    return data
+
+
+@pytest.mark.parametrize("case", [*_RENAMED_KEY, "named_reference"])
+def test_uncompilable_schema_is_unrepairable(spark, sf_dir, tmp_path, capsys, case):
+    """A container whose header parses but whose schema does not compile
+    (a key the codec needs is missing, or a field names an earlier
+    record, which the codec does not resolve) is reported unrepairable
+    when its header is read: the run goes on, and the good container
+    beside it is healthy."""
+    from s3_avro_repair_spark.avro_codec import salvage_ocf
+
+    data = _good_and_uncompilable(sf_dir, tmp_path / "in", case)
+    res = salvage_ocf(data, keep_records=False)
+    assert not res.header_ok and "schema does not compile" in res.errors[0]
     report = tmp_path / "report.parquet"
-    rc = main(["--path", str(indir), "--report", str(report)])
+    rc = main(["--path", str(tmp_path / "in"), "--report", str(report)])
     capsys.readouterr()
     rows = pq.read_table(str(report)).to_pandas()
     assert rc == 2
     assert dict(zip(rows["file"], rows["status"])) == {
-        "good.avro": "healthy", "renamed.avro": "unrepairable",
+        "good.avro": "healthy", "broken.avro": "unrepairable",
     }
+
+
+def test_uncompilable_schema_survives_replace(spark, sf_dir, tmp_path, capsys):
+    """--replace never rewrites a file whose schema does not compile:
+    its blocks cannot be checked, so a copy holding only the header
+    must not take its place."""
+    data = _good_and_uncompilable(sf_dir, tmp_path / "in", "named_reference")
+    rc = main(["--path", str(tmp_path / "in"), "--replace"])
+    capsys.readouterr()
+    assert rc == 2
+    assert (tmp_path / "in" / "broken.avro").read_bytes() == data
 
 
 @pytest.mark.parametrize("form", ["file:{}", "file://{}"])

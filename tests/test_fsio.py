@@ -8,6 +8,7 @@ from __future__ import annotations
 import os
 import shutil
 
+import pytest
 from pyarrow import fs as pafs
 
 from s3_avro_repair_spark import fsio
@@ -67,6 +68,43 @@ def test_atomic_write_through_subtree_fs(tmp_path):
     )
     assert n == 0
     assert sorted(p.name for p in (tmp_path / "d").iterdir()) == ["part.avro"]
+
+
+def test_task_attempts_write_disjoint_temp_files(tmp_path, monkeypatch):
+    """Inside a task the temp file is named by the task attempt: two
+    overlapping attempts of one task on one target write two temp
+    files, so the failing attempt's cleanup and late close leave its
+    retry's committed bytes alone. Sharing one ``.tmp`` would let the
+    dying attempt's buffered bytes land in the committed file."""
+    from pyspark import TaskContext
+
+    class Attempt:
+        def __init__(self, n):
+            self.n = n
+
+        def taskAttemptId(self):
+            return self.n
+
+    attempt = [Attempt(7)]
+    monkeypatch.setattr(TaskContext, "get", lambda: attempt[0])
+    target = str(tmp_path / "part-00000.avro")
+    temps = []
+
+    def retry(out):
+        temps.append(sorted(p.name for p in tmp_path.iterdir()))
+        return out.write(b"retry")
+
+    def dying(out):
+        out.write(b"partial")
+        attempt[0] = Attempt(8)  # the retry overlaps it and commits first
+        fsio.atomic_stream_records(target, retry)
+        raise RuntimeError("attempt 7 dies after its retry committed")
+
+    with pytest.raises(RuntimeError):
+        fsio.atomic_stream_records(target, dying)
+    assert temps == [["part-00000.avro.tmp-7", "part-00000.avro.tmp-8"]]
+    assert sorted(p.name for p in tmp_path.iterdir()) == ["part-00000.avro"]
+    assert (tmp_path / "part-00000.avro").read_bytes() == b"retry"
 
 
 def test_write_avro_dir_accepts_file_uri(spark, tmp_path):

@@ -292,3 +292,26 @@ def test_checkpoint_restart_exactly_once(spark, stream_root, tmp_path):
 
     third = run_once()
     assert _sorted_records(third) == _sorted_records(second)
+
+
+def test_stream_avro_salvage_reads_no_file_content(spark, sf_dir, duck):
+    """stream_avro_salvage selects only each file's path and length, so
+    Spark never reads a file into a ``content`` value: with
+    ``spark.sql.sources.binaryFile.maxLength`` below every fixture's
+    size (a container over the 2 GiB default meets the same limit) the
+    op still returns its oracle rows."""
+    import glob
+
+    from s3_avro_repair_spark.sources.avro_pipeline import ensure_avro_fixtures
+    from tools.verify_local import compare
+
+    corrupt = glob.glob(os.path.join(ensure_avro_fixtures(sf_dir), "corrupt", "*.avro"))
+    limit = min(map(os.path.getsize, corrupt)) - 1
+    op = _OPS["stream_avro_salvage"]
+    spark.conf.set("spark.sql.sources.binaryFile.maxLength", str(limit))
+    try:
+        got = op.fn(spark, sf_dir).toPandas()
+    finally:
+        spark.conf.unset("spark.sql.sources.binaryFile.maxLength")
+    problems = compare("stream_avro_salvage", got, duck.execute(op.oracle).fetchdf())
+    assert not problems, problems
