@@ -43,7 +43,10 @@ Values are decoded by code generated per schema, never interpreted:
 :func:`compile_decoder` compiles a writer schema whole, every Avro type
 inline, as a building decoder and a count-only twin, and
 :func:`compile_resolved_decoder` plans a reader-schema read over those
-generated decoders. A schema that does not compile (a missing key, a
+generated decoders. The count-only twin of a schema of scalars, short
+strings, enums and unions first matches each block with a per-schema
+byte regex and runs its generated loop only on a block the regex
+rejects. A schema that does not compile (a missing key, a
 named-type reference) is found when the header is read, so its file is
 unrepairable and never rewritten, instead of a file whose every block
 fails to decode.
@@ -618,6 +621,9 @@ def read_header(data: bytes) -> tuple[dict, str, bytes, int]:
 
 
 _DECODER_CACHE: dict[tuple[str, str], object] = {}
+# One varint of at most 10 bytes, exactly what the generated varint loop
+# accepts: the int/long regex of the count loop and of the block matcher.
+_VARINT = rb"[\x80-\xff]{0,9}[\x00-\x7f]"
 
 
 def compile_decoder(schema, build: bool = True):
@@ -654,8 +660,29 @@ def compile_decoder(schema, build: bool = True):
     no records (an empty tuple). A run of int/long fields is skipped by
     one regex match, and a one-byte length, count or index is read
     inline; the exact loops run only when those fail, to raise their
-    error. A nested record, array or map stays a call of its skipper."""
-    return _codegen(schema, "build" if build else "count")
+    error. A nested record, array or map stays a call of its skipper.
+
+    In front of that generated count loop stands a block matcher
+    (:class:`_BlockMatcher`) when :func:`_value_regex` covers the
+    schema: ints and longs, floats, doubles, fixed, booleans, nulls,
+    strings of at most 63 ASCII bytes, bytes of at most 63 bytes, enums
+    and unions of at most 64 branches, and records of those, up to a
+    16 KiB one-record regex (about a dozen string fields). It matches
+    a whole block's records with a few C-level regex calls, about 5x the
+    loop's rate. Every block it accepts is one the loop accepts, and
+    every block it rejects (damage, an array or map, a longer or
+    non-ASCII string) goes through the loop, so results and messages
+    are the loop's. A schema it does not cover gets the loop alone."""
+    if build:
+        return _codegen(schema, "build")
+    key = (json.dumps(schema, sort_keys=True), "match")
+    fn = _DECODER_CACHE.get(key)
+    if fn is None:
+        loop = _codegen(schema, "count")  # raises first for a bad schema
+        record = _value_regex(schema)
+        covered = record is not None and len(record) <= _MATCH_MAX_REGEX
+        fn = _cached(key, _BlockMatcher(record, loop) if covered else loop)
+    return fn
 
 
 def _codegen(schema, mode: str):
@@ -710,7 +737,7 @@ def _codegen(schema, mode: str):
         # k varints of at most 10 bytes each — exactly the ones the
         # loop accepts — matched in one C-level scan
         sub = f"_run{k}"
-        ns[sub] = re.compile(rb"(?:[\x80-\xff]{0,9}[\x00-\x7f]){%d}" % k).match
+        ns[sub] = re.compile(b"(?:%s){%d}" % (_VARINT, k)).match
         lines.extend([f"{ind}m_ = {sub}(buf, pos)", f"{ind}if m_ is None:"])
         for _ in range(k):
             varint(ind + "    ", None)
@@ -903,7 +930,10 @@ def _codegen(schema, mode: str):
         lines.append("    return v0, pos")
 
     exec("\n".join(lines), ns)  # noqa: S102 — self-generated source only
-    fn = ns["_decoder"]
+    return _cached(key, ns["_decoder"])
+
+
+def _cached(key, fn):
     # Bounded FIFO: evict the OLDEST entry (dict preserves insertion
     # order), never clear() — a fleet cycling through >64 schemas would
     # otherwise recompile every decoder per rotation, and a clear()
@@ -913,6 +943,106 @@ def _codegen(schema, mode: str):
         _DECODER_CACHE.pop(next(iter(_DECODER_CACHE)))
     _DECODER_CACHE[key] = fn
     return fn
+
+
+# The largest string/bytes length and union/enum index the block
+# matcher reads: one varint byte, zigzag 2n for n in 0..63.
+_MATCH_MAX = 63
+
+
+def _value_regex(schema) -> bytes | None:
+    """A byte regex matching one value of ``schema`` exactly where the
+    count loop accepts it, or None for a schema it does not cover
+    (arrays, maps, enums and unions past 64 branches). It is
+    deterministic: the varint classes are disjoint, and every
+    alternative starts with its own literal length or index byte, so a
+    failing match backtracks a bounded amount per value. A longer,
+    non-canonical or non-ASCII string, a longer bytes value or a
+    multi-byte index is not matched: its block falls back to the loop."""
+    t = _schema_type(schema)
+    if t == "null":
+        return b""
+    if t == "boolean":
+        return rb"[\x00\x01]"
+    if t in ("int", "long"):
+        return _VARINT
+    if t in ("float", "double", "fixed"):
+        width = {"float": 4, "double": 8}.get(t) or schema["size"]
+        return b".{%d}" % width
+    if t in ("string", "bytes"):
+        byte = rb"[\x00-\x7f]" if t == "string" else b"."
+        return b"(?:%s)" % b"|".join(
+            rb"\x%02x%s{%d}" % (2 * n, byte, n) for n in range(_MATCH_MAX + 1)
+        )
+    if t == "enum":
+        n = len(schema["symbols"])
+        if n > _MATCH_MAX + 1:
+            return None
+        return b"[%s]" % b"".join(rb"\x%02x" % (2 * i) for i in range(n))
+    if t == "union":
+        branches = [_value_regex(b) for b in schema]
+        if len(branches) > _MATCH_MAX + 1 or None in branches:
+            return None
+        return b"(?:%s)" % b"|".join(
+            rb"\x%02x%s" % (2 * i, r) for i, r in enumerate(branches)
+        )
+    if t == "record":
+        fields = [_value_regex(f["type"]) for f in schema["fields"]]
+        return None if None in fields else b"".join(fields)
+    return None
+
+
+# A repeat matches at most 2**_MATCH_MAX_POW records per call: the regex
+# engine's backtracking stack grows with the records one match covers
+# (about 62 MB for 2**17 orders records, under 0.5 MB for 2**10, which
+# match as fast).
+_MATCH_MAX_POW = 10
+# A longer one-record regex keeps the loop alone: compiling a repeat
+# costs about 1 ms per KiB of pattern (a short string alone is 1.3 KiB),
+# once per repeat per worker process.
+_MATCH_MAX_REGEX = 16 * 1024
+
+
+class _BlockMatcher:
+    """The count-only block function of a schema :func:`_value_regex`
+    covers: it matches a block's ``count`` records with compiled repeats
+    ``(?:R){2**k}`` of the one-record regex ``R``, a few C-level
+    ``match`` calls per block, and runs the generated count ``loop``
+    only on a block the matcher rejects, so every message is the
+    loop's. A repeat is compiled when a block first needs it and kept
+    with the decoder (writers vary the count from block to block, so
+    one pattern per count would recompile forever). ``fallbacks``
+    counts the blocks handed to the loop."""
+
+    def __init__(self, record: bytes, loop):
+        self.record, self.loop = record, loop
+        self.repeats: dict[int, object] = {}
+        self.fallbacks = 0
+
+    def _repeat(self, k: int):
+        m = self.repeats.get(k)
+        if m is None:
+            m = self.repeats[k] = re.compile(
+                b"(?:%s){%d}" % (self.record, 1 << k), re.DOTALL
+            ).match
+        return m
+
+    def __call__(self, payload, count):
+        pos = 0
+        steps = itertools.chain(
+            itertools.repeat(_MATCH_MAX_POW, count >> _MATCH_MAX_POW),
+            (k for k in range(_MATCH_MAX_POW) if count >> k & 1),
+        )
+        for k in steps:
+            m = self._repeat(k)(payload, pos)
+            if m is None:
+                break
+            pos = m.end()
+        else:
+            if pos == len(payload):
+                return ()
+        self.fallbacks += 1
+        return self.loop(payload, count)
 
 
 def _decode_with(dec, payload: bytes, count: int) -> list:

@@ -756,13 +756,6 @@ _COSINE_SQL_CTE = """
 """
 
 
-def _cosine(a: str, b: str):
-    dot = F.expr(_DOT.format(a=a, b=b))
-    na = F.expr(_DOT.format(a=a, b=a))
-    nb = F.expr(_DOT.format(a=b, b=b))
-    return dot / (F.sqrt(na) * F.sqrt(nb))
-
-
 def _norm(vec_col: str):
     """Per-row vector norm, computed ONCE before pair generation.
 

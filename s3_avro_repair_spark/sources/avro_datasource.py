@@ -167,15 +167,15 @@ class AvroOCFDataSource(DataSource):
 
     def schema(self):
         from .. import fsio
-        from ..avro_codec import read_header
+        from ..avro_codec import ByteWindow
 
         files = _list_container_files_sized(self.options.get("path", ""))
         if not files:
             raise ValueError("avro_ocf: no container files under path")
-        fs, p = fsio.resolve(files[0][0])
+        path, size = files[0]
+        fs, p = fsio.resolve(path)
         with fs.open_input_file(p) as f:
-            head = f.read(64 * 1024)  # header is tiny; 64k covers any schema
-        schema, _codec, _sync, _pos = read_header(head)
+            schema, _codec, _sync, _pos = ByteWindow(f, size).read_header()
         cols = ", ".join(
             f"{fl['name']} {_field_ddl(fl['type'])}" for fl in schema["fields"]
         )

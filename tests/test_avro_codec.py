@@ -1157,3 +1157,255 @@ def test_zstandard_streaming_frame_fallback(monkeypatch):
     # Damage still classifies as CorruptBlock through the fallback.
     res = salvage_ocf(inject_flip(blob))
     assert res.header_ok and res.repairable and res.n_blocks_bad == 1
+
+
+# --- the count-only decoder's block matcher ---------------------------------
+#
+# ``compile_decoder(schema, build=False)`` fronts the generated count loop
+# (``_codegen(schema, "count")``) with a per-schema regex over whole
+# blocks; the loop runs only on a block the matcher rejects. These tests
+# pin that the two agree on every block, damaged or not, that the fast
+# path stays on for the production schemas, and that a block failing at
+# its end cannot make the regex backtrack badly.
+
+
+def _leaf_types():
+    fixed = st.integers(0, 12).map(lambda n: {"type": "fixed", "name": f"f{n}", "size": n})
+    enum = st.sampled_from([1, 2, 3, 63, 64]).map(
+        lambda n: {"type": "enum", "name": f"e{n}", "symbols": [f"S{i}" for i in range(n)]}
+    )
+    return st.one_of(
+        st.sampled_from(
+            ["null", "boolean", "int", "long", "float", "double", "string", "bytes",
+             {"type": "long", "logicalType": "timestamp-micros"}]
+        ),
+        fixed,
+        enum,
+    )
+
+
+# Union branches of distinct value classes, so the writer's branch choice
+# by value type is unambiguous.
+_BRANCHES = ["null", "boolean", "long", "double", "string", "bytes"]
+
+
+@st.composite
+def _matcher_schema(draw, depth: int = 0):
+    def field_type():
+        kinds = ["leaf", "union"] + (["record"] if depth < 2 else [])
+        kind = draw(st.sampled_from(kinds))
+        if kind == "leaf":
+            return draw(_leaf_types())
+        if kind == "record":
+            return draw(_matcher_schema(depth + 1))
+        return draw(st.lists(st.sampled_from(_BRANCHES), min_size=1, max_size=4, unique=True))
+
+    n = draw(st.integers(0 if depth else 1, 6))
+    fields = [{"name": f"c{i}", "type": field_type()} for i in range(n)]
+    if depth == 0 and draw(st.integers(0, 5)) == 0:  # uncovered: the bare loop
+        fields.append({"name": "arr", "type": {"type": "array", "items": "long"}})
+    return {"type": "record", "name": f"r{depth}_{n}", "fields": fields}
+
+
+def _matcher_value(draw, s):
+    t = s if isinstance(s, str) else ("union" if isinstance(s, list) else s["type"])
+    if t == "null":
+        return None
+    if t == "boolean":
+        return draw(st.booleans())
+    if t == "int":
+        return draw(st.integers(-(2**31), 2**31 - 1))
+    if t == "long":
+        return draw(st.integers(-(2**63), 2**63 - 1))
+    if t == "float":
+        return draw(st.floats(width=32, allow_nan=False))
+    if t == "double":
+        return draw(st.floats(allow_nan=False))
+    if t == "string":  # past 63 bytes and non-ASCII: blocks the loop must read
+        return draw(st.text(max_size=draw(st.sampled_from([3, 70]))))
+    if t == "bytes":
+        return draw(st.binary(max_size=draw(st.sampled_from([3, 70]))))
+    if t == "fixed":
+        return draw(st.binary(min_size=s["size"], max_size=s["size"]))
+    if t == "enum":
+        return draw(st.sampled_from(s["symbols"]))
+    if t == "array":
+        return draw(st.lists(st.integers(-5, 5), max_size=3))
+    if t == "union":
+        return _matcher_value(draw, draw(st.sampled_from(s)))
+    return {f["name"]: _matcher_value(draw, f["type"]) for f in s["fields"]}
+
+
+def _mutants(draw, payload: bytes, count: int, sweep: bool):
+    """The block, then damaged copies: with ``sweep``, every byte one
+    and two up and down (a boolean 2, an odd length or index, a length
+    one off, an index one past the end) and every byte below 0x80
+    padded into a 10- and an 11-byte varint; random byte flips,
+    truncations, insertions, an odd (negative) length or index byte,
+    and a one-byte varint padded to 10 and to 11 bytes; and a wrong
+    count."""
+    yield payload, count
+    yield payload, count + 1
+    if count:
+        yield payload, count - 1
+    n = len(payload)
+    for i in range(n if sweep else 0):
+        for d in (-2, -1, 1, 2):
+            yield payload[:i] + bytes([(payload[i] + d) & 0xFF]) + payload[i + 1:], count
+        if payload[i] < 0x80:  # a varint's last byte: pad it to 10 and 11 bytes
+            for pad in (9, 10):
+                yield payload[:i] + b"\x80" * pad + payload[i:], count
+    for _ in range(draw(st.integers(1, 6))):
+        i = draw(st.integers(0, max(n - 1, 0)))
+        b = bytearray(payload)
+        kind = draw(st.sampled_from(["flip", "truncate", "insert", "odd", "pad"]))
+        if kind == "truncate":
+            yield payload[:i], count
+            continue
+        if kind == "insert":
+            yield payload[:i] + draw(st.binary(min_size=1, max_size=3)) + payload[i:], count
+            continue
+        if not n:
+            continue
+        if kind == "flip":
+            b[i] ^= draw(st.integers(1, 255))
+        elif kind == "odd":
+            b[i] = 2 * draw(st.integers(0, 63)) + 1
+        elif b[i] < 0x80:  # pad: 0x80 bytes in front of a varint's last byte
+            b[i:i + 1] = b"\x80" * draw(st.sampled_from([9, 10])) + bytes([b[i]])
+        yield bytes(b), count
+
+
+def _outcome(dec, payload: bytes, count: int):
+    try:
+        return dec(payload, count)
+    except Exception as exc:  # noqa: BLE001 — the type and message are compared
+        return type(exc), str(exc)
+
+
+@settings(max_examples=100, deadline=None)
+@given(st.data())
+def test_block_matcher_agrees_with_count_loop(data):
+    """Differential: over random schemas of the matcher's types (and
+    some with an array field, which the matcher does not cover), random
+    records in blocks of random sizes, and damaged copies of every
+    block, the matcher-fronted count decoder and the bare generated
+    count loop give the same outcome on every block: both ``()``, or the
+    same exception type with the same message. Every byte of the first
+    block is also moved one and two up and down: records share one
+    schema, so that reaches every field's edge. The building decoder,
+    which reads every varint byte by byte (the count loop and the
+    matcher share one varint regex), fails on the same blocks with the
+    same messages."""
+    from s3_avro_repair_spark.avro_codec import (
+        _codegen,
+        _read_long,
+        block_decoder,
+        compile_decoder,
+    )
+
+    schema = data.draw(_matcher_schema())
+    recs = [_matcher_value(data.draw, schema) for _ in range(data.draw(st.integers(0, 40)))]
+    raw = write_ocf_bytes(schema, recs, block_records=data.draw(st.integers(1, 12)))
+    fronted, loop = compile_decoder(schema, build=False), _codegen(schema, "count")
+    build = block_decoder(schema)
+    for b, (start, p, size, _) in enumerate(block_spans(raw)):
+        count = _read_long(raw, start)[0]  # from the block's header
+        for payload, n in _mutants(data.draw, raw[p:p + size], count, sweep=b == 0):
+            got = _outcome(fronted, payload, n)
+            assert got == _outcome(loop, payload, n)
+            built = _outcome(build, payload, n)
+            assert got == (() if isinstance(built, list) else built)
+
+
+def _orders(n: int, seed: int = 7) -> list[dict]:
+    import random
+
+    rng = random.Random(seed)
+    return [
+        {
+            "o_orderkey": rng.randrange(1 << 40),
+            "o_custkey": rng.randrange(1 << 20),
+            "o_orderstatus": rng.choice("FOP"),
+            "o_totalprice": round(rng.uniform(1000, 500000), 2),
+            "o_orderdate": rng.randrange(-(1 << 50), 1 << 50),
+        }
+        for _ in range(n)
+    ]
+
+
+@pytest.mark.parametrize("generation", ["ORDERS_SCHEMA", "OLD_ORDERS_SCHEMA"])
+def test_block_matcher_accepts_orders_blocks(generation):
+    """The production writer schemas stay on the fast path: every block
+    of a clean orders container, of 1 to 3000 records (past one
+    2**10-record repeat), is accepted by the matcher, with no block
+    handed to the count loop."""
+    from s3_avro_repair_spark.avro_codec import compile_decoder
+    from s3_avro_repair_spark.sources import avro_pipeline
+
+    schema = getattr(avro_pipeline, generation)
+    names = [f["name"] for f in schema["fields"]]
+    recs = [{k: r[k] for k in names} for r in _orders(9000)]
+    dec = compile_decoder(schema, build=False)
+    before = dec.fallbacks
+    for block_records in (1, 7, 100, 1024, 3000):
+        data = write_ocf_bytes(schema, recs[: 3 * block_records], block_records=block_records)
+        res = salvage_ocf(data, keep_records=False)
+        assert (res.n_records, res.n_blocks_bad) == (3 * block_records, 0)
+    assert dec.fallbacks == before
+
+
+def _with(field) -> dict:
+    return {"type": "record", "name": "u",
+            "fields": [{"name": "a", "type": "long"}, {"name": "b", "type": field}]}
+
+
+@pytest.mark.parametrize(
+    "schema",
+    [
+        _with({"type": "array", "items": "long"}),
+        _with({"type": "map", "values": "long"}),
+        _with({"type": "enum", "name": "e65", "symbols": [f"S{i}" for i in range(65)]}),
+        _with(["null"] * 65),
+        {"type": "record", "name": "w",
+         "fields": [{"name": f"s{i}", "type": "string"} for i in range(50)]},
+    ],
+    ids=["array", "map", "enum65", "union65", "50_strings"],
+)
+def test_block_matcher_uncovered_schemas_keep_the_loop(schema):
+    """A schema the matcher does not cover, or whose one-record regex
+    is too long to compile cheaply, gets the generated count loop
+    itself."""
+    from s3_avro_repair_spark.avro_codec import _codegen, compile_decoder
+
+    assert compile_decoder(schema, build=False) is _codegen(schema, "count")
+
+
+def test_block_matcher_failing_block_is_linear():
+    """A 200k-record block that fails on its last byte costs the matcher
+    a failed match plus the count loop's own run: within 3x of the bare
+    loop, so the pattern cannot backtrack badly (every alternative
+    starts with its own literal byte, the varint classes are disjoint,
+    and a repeat spans at most 2**10 records)."""
+    import time
+
+    from s3_avro_repair_spark.avro_codec import _codegen, compile_decoder
+    from s3_avro_repair_spark.sources.avro_pipeline import ORDERS_SCHEMA
+
+    data = write_ocf_bytes(ORDERS_SCHEMA, _orders(1000), block_records=1000)
+    (_, p, size, _), = block_spans(data)
+    payload = data[p:p + size] * 200
+    bad = payload[:-1] + b"\xff"  # the last varint runs past the end
+    fronted, loop = compile_decoder(ORDERS_SCHEMA, build=False), _codegen(ORDERS_SCHEMA, "count")
+    assert fronted(payload, 200_000) == ()
+
+    def best(dec) -> float:
+        times = []
+        for _ in range(3):
+            t = time.perf_counter()
+            with pytest.raises(CorruptBlock, match="varint runs past end of buffer"):
+                dec(bad, 200_000)
+            times.append(time.perf_counter() - t)
+        return min(times)
+
+    assert best(fronted) < 3 * best(loop)

@@ -5,6 +5,7 @@ corruption, and the one-partition-per-file planning contract."""
 from __future__ import annotations
 
 import glob
+import json
 import os
 
 import pytest
@@ -48,6 +49,25 @@ def test_inferred_schema_and_values(spark, tmp_path):
     assert len(rows) == 30
     assert rows[205] == ("v5", 2.5)
     assert rows[204] == (None, 2.0)
+
+
+def test_inferred_schema_from_large_header(spark, tmp_path):
+    """A header past any fixed head size still infers: a record of 2000
+    ``long`` fields carries a schema JSON of about 117 KiB, and the
+    schema is read through a growing prefix of the file."""
+    names = [f"wide_record_column_number_{i:04d}" for i in range(2000)]
+    wide = {"type": "record", "name": "wide",
+            "fields": [{"name": n, "type": "long"} for n in names]}
+    assert len(json.dumps(wide)) > 110_000
+    d = tmp_path / "wide"
+    d.mkdir()
+    recs = [{n: r * 10_000 + i for i, n in enumerate(names)} for r in range(3)]
+    (d / "part-0.avro").write_bytes(write_ocf_bytes(wide, recs))
+    df = spark.read.format(mount(spark)).load(str(d))
+    assert df.columns == names
+    assert {t for _, t in df.dtypes} == {"bigint"}
+    rows = sorted(tuple(r) for r in df.select(names[0], names[-1]).collect())
+    assert rows == [(0, 1999), (10_000, 11_999), (20_000, 21_999)]
 
 
 def test_one_partition_per_file(spark, tmp_path):
