@@ -1436,15 +1436,6 @@ def read_ocf(data: bytes) -> tuple[dict, list]:
     return res.schema, res.records
 
 
-def read_ocf_logical(data: bytes) -> tuple[dict, list]:
-    """Strict read with logicalType materialization: decimal -> Decimal,
-    date -> datetime.date, timestamp-* -> tz-aware datetime. The typed
-    counterpart of read_ocf for consumers that want declared semantics
-    instead of raw renditions (avro-tools ``tojson`` behavior)."""
-    schema, recs = read_ocf(data)
-    return schema, [materialize_logical(schema, r) for r in recs]
-
-
 # ---------------------------------------------------------------------------
 # schema resolution (Avro spec §Schema Resolution): reader-schema reads
 # ---------------------------------------------------------------------------
@@ -1644,27 +1635,6 @@ def _resolve(writer, reader):
         return conv(v), pos
 
     return d_converted
-
-
-def read_ocf_resolved(data: bytes, reader_schema, logical: bool = False) -> list:
-    """Strict full read applying a reader schema (schema evolution).
-    ``logical=True`` additionally materializes the READER schema's
-    logicalType annotations on the resolved values — evolution and
-    logical types compose (e.g. a reader that adds a decimal column
-    default, or re-reads a raw-bytes writer column under a decimal
-    annotation)."""
-    writer, codec, sync, pos = read_header(data)
-    decode = block_decoder(writer, reader_schema)
-    records = [
-        rec
-        for _, _, recs, *_ in salvage_blocks(
-            data, writer, codec, sync, pos, decode=decode, strict=True
-        )
-        for rec in recs
-    ]
-    if logical:
-        return [materialize_logical(reader_schema, r) for r in records]
-    return records
 
 
 def sampled_validate(

@@ -17,9 +17,12 @@ from s3_avro_repair_spark.avro_codec import (
     SYNC_SIZE,
     CorruptBlock,
     CorruptHeader,
+    block_decoder,
     block_spans,
+    materialize_logical,
     read_header,
     read_ocf,
+    salvage_blocks,
     salvage_ocf,
     salvage_range,
     write_ocf,
@@ -32,6 +35,33 @@ from s3_avro_repair_spark.sources.avro_pipeline import (
     inject_flip,
     inject_truncate,
 )
+
+
+def read_ocf_logical(data: bytes) -> tuple[dict, list]:
+    """Strict read with logicalType materialization: ``read_ocf``, then
+    ``materialize_logical`` per record (decimal -> Decimal, date ->
+    datetime.date, timestamp-* -> tz-aware datetime)."""
+    schema, recs = read_ocf(data)
+    return schema, [materialize_logical(schema, r) for r in recs]
+
+
+def read_ocf_resolved(data: bytes, reader_schema, logical: bool = False) -> list:
+    """Strict full read applying a reader schema (schema evolution).
+    ``logical=True`` also materializes the READER schema's logicalType
+    annotations on the resolved values."""
+    writer, codec, sync, pos = read_header(data)
+    decode = block_decoder(writer, reader_schema)
+    records = [
+        rec
+        for _, _, recs, *_ in salvage_blocks(
+            data, writer, codec, sync, pos, decode=decode, strict=True
+        )
+        for rec in recs
+    ]
+    if logical:
+        return [materialize_logical(reader_schema, r) for r in records]
+    return records
+
 
 SCHEMA = {
     "type": "record",
@@ -422,7 +452,6 @@ def test_schema_resolution_skip_default_promote():
     promotion lattice (spec §Schema Resolution)."""
     from s3_avro_repair_spark.avro_codec import (
         SchemaResolutionError,
-        read_ocf_resolved,
         write_ocf_bytes,
     )
 
@@ -528,7 +557,6 @@ def test_resolution_map_values_and_enum_symbols():
     by NAME (with reader default for removed symbols)."""
     from s3_avro_repair_spark.avro_codec import (
         SchemaResolutionError,
-        read_ocf_resolved,
         write_ocf_bytes,
     )
 
@@ -568,7 +596,6 @@ def test_resolution_errors_are_lazy():
     (its string branch matches the reader, its null branch does not)."""
     from s3_avro_repair_spark.avro_codec import (
         SchemaResolutionError,
-        read_ocf_resolved,
         write_ocf_bytes,
     )
 
@@ -743,7 +770,7 @@ def _evolution_case(draw):
 @settings(max_examples=100, deadline=None)
 @given(case=_evolution_case())
 def test_property_schema_resolution_lattice(case):
-    from s3_avro_repair_spark.avro_codec import read_ocf_resolved, write_ocf_bytes
+    from s3_avro_repair_spark.avro_codec import write_ocf_bytes
 
     writer, reader, rows, want = case
     data = write_ocf_bytes(writer, rows)
@@ -869,7 +896,6 @@ def test_logical_write_read_roundtrip():
     """Decimal/date/timestamp-micros Python values encode per the spec
     and materialize back EQUAL — value fidelity, scale preserved (10.50
     stays '10.50', not '10.5'), pre-epoch values exact."""
-    from s3_avro_repair_spark.avro_codec import read_ocf_logical
 
     rows = _logical_rows()
     data = write_ocf_bytes(LOGICAL_SCHEMA, rows, codec="deflate")
@@ -885,7 +911,6 @@ def test_logical_rewrite_is_byte_identical():
     preserves bytes exactly, AND materialized read -> re-encode of the
     logical values produces the identical file — the logicalType
     annotation and every value rendition survive a rewrite pass."""
-    from s3_avro_repair_spark.avro_codec import read_ocf_logical
 
     rows = _logical_rows()
     data = write_ocf_bytes(LOGICAL_SCHEMA, rows, codec="null")
@@ -936,7 +961,6 @@ def test_logical_corruption_still_detected():
     """Corruption injection over a logical-typed file: the strict
     logical read rejects a truncated decimal payload exactly like the
     raw read does (materialization never masks an injury)."""
-    from s3_avro_repair_spark.avro_codec import read_ocf_logical
 
     rows = [
         dict(r, k=100 + i)
@@ -955,7 +979,6 @@ def test_logical_composes_with_schema_resolution():
     """A reader schema that skips a writer column and adds a defaulted
     field still materializes the surviving logical columns: evolution
     first (spec §Schema Resolution), then logicalType, in one read."""
-    from s3_avro_repair_spark.avro_codec import read_ocf_resolved
 
     rows = _logical_rows()
     data = write_ocf_bytes(LOGICAL_SCHEMA, rows, codec="deflate")
@@ -1010,8 +1033,6 @@ def test_property_logical_roundtrip(rows):
     codec, and the re-encode of the materialized values is
     byte-identical to the original file."""
     import datetime as dt
-
-    from s3_avro_repair_spark.avro_codec import read_ocf_logical
 
     schema = {
         "type": "record",
