@@ -3,14 +3,15 @@
 `spark.read.format("avro_ocf")` — the user-facing DataSource-V2 format
 for the repo's from-spec Avro container reader. The batch Avro ops run
 on the repair CLI's planner instead (``avro_jobs``; a Python
-DataSource query carries a larger fixed cost than a ``range`` +
-``mapInArrow`` job), but both read blocks through the one strict read
-defined here (:func:`read_container`, over ``avro_codec``'s salvage
-walk). Here the scan appears as a first-class source in the plan,
-schema inference is self-describing (read from the first container's
-embedded header, the reference's schema-agnostic posture —
-repair-avro.ts never declares a schema), and
-partition planning is explicit: BYTE-RANGE splits over each container
+DataSource query adds its planner calls to a ``range`` + ``mapInArrow``
+job's fixed cost: 0.11 s against 0.09 s over one small container with
+an explicit schema on 4 local cores), but both read blocks through the
+one strict read defined here (:func:`read_container`, over
+``avro_codec``'s salvage walk). Here the scan appears as a first-class
+source in the plan, schema inference is self-describing (read from the
+first container's embedded header, the reference's schema-agnostic
+posture — repair-avro.ts never declares a schema), and partition
+planning is explicit: BYTE-RANGE splits over each container
 (metadata-only planning from the file listing's sizes), with each
 task resyncing to the first 16-byte sync marker at/after its range
 start and decoding blocks whose header starts inside the range — the
@@ -25,9 +26,29 @@ on a real cluster the package ships as a wheel/zip via
 
 Reads yield pyarrow RecordBatches (the Arrow fast path of the Python
 DataSource API), never per-row pickled tuples.
+
+Spark runs the planner calls (``create_data_source``,
+``plan_data_source_read``, ``write_into_data_source``, ...) in workers
+of its stock ``pyspark.daemon``, which it reuses across calls. Each
+call starts with ``importlib.invalidate_caches()``, which re-reads the
+zip directories of ``pyspark.zip``, the py4j zip and the spark-core jar
+(0.12–0.16 s). Importing this module in such a worker installs
+``_pydaemon``'s hook, so the calls after it keep those directories: the
+query above took 0.40–0.57 s before.
 """
 
 from __future__ import annotations
+
+import sys
+
+_main_spec = getattr(sys.modules.get("__main__"), "__spec__", None)
+if getattr(_main_spec, "name", None) == "pyspark.daemon":
+    # A worker forked by Spark's stock daemon, as every DataSource
+    # planner worker is: keep Spark's zip directories for the later
+    # planner calls this reused worker serves (see ``_pydaemon``).
+    from .._pydaemon import keep_startup_archives
+
+    keep_startup_archives()
 
 from pyspark.sql.datasource import (
     DataSource,
@@ -213,8 +234,6 @@ class AvroOCFDataSource(DataSource):
         return AvroOCFArrowWriter(self.options, _avro_schema_for(schema))
 
 
-
-
 # ---------------------------------------------------------------------------
 # write path
 
@@ -308,7 +327,6 @@ class AvroOCFArrowWriter(DataSourceArrowWriter):
                     fs.delete_file(p)
                 except Exception:
                     pass
-
 
 
 def mount(spark) -> str:

@@ -13,6 +13,15 @@ worker spends in ``importlib.invalidate_caches()``, which Spark's worker
 calls at the start of every task (``pyspark/worker_util.py``,
 ``setup_spark_files``), timed inside ``cores`` concurrent tasks.
 
+Then two lines for the DataSource planner, whose workers Spark starts
+under its stock ``pyspark.daemon`` and reuses across calls:
+
+- the median wall of ``spark.read.format(mount(spark)).load(path)`` over
+  one small container, which is one ``create_data_source`` call;
+- the median seconds ``importlib.invalidate_caches()`` takes inside such
+  a call, timed in ``schema()`` of a subclass of ``AvroOCFDataSource``
+  (the subclass makes the planner worker import ``avro_datasource``).
+
 Usage: python tools/python_task_overhead.py [--cores N] [--repeats 20]
 """
 
@@ -22,6 +31,7 @@ import argparse
 import os
 import statistics
 import sys
+import tempfile
 import time
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -42,6 +52,24 @@ def _time_invalidate(batches):
     t = time.perf_counter()
     importlib.invalidate_caches()
     yield pa.RecordBatch.from_pydict({"s": [time.perf_counter() - t]})
+
+
+def _planner_invalidate_source():
+    from s3_avro_repair_spark.sources.avro_datasource import AvroOCFDataSource
+
+    class TimeInvalidate(AvroOCFDataSource):
+        @classmethod
+        def name(cls):
+            return "graft_time_invalidate"
+
+        def schema(self):
+            import importlib
+
+            t = time.perf_counter()
+            importlib.invalidate_caches()
+            return f"`{time.perf_counter() - t!r}` double"
+
+    return TimeInvalidate
 
 
 def median_wall(job, repeats: int) -> float:
@@ -72,12 +100,31 @@ def main(argv=None) -> int:
     jvm_s = median_wall(ids.collect, args.repeats)
     timing = ids.mapInArrow(_time_invalidate, "s double")
     invalidate = [row.s for _ in range(args.repeats) for row in timing.collect()]
+
+    from s3_avro_repair_spark.avro_codec import write_ocf
+    from s3_avro_repair_spark.sources.avro_datasource import mount
+
+    schema = {"type": "record", "name": "r", "fields": [{"name": "id", "type": "long"}]}
+    with tempfile.TemporaryDirectory() as tmp:
+        container = os.path.join(tmp, "one.avro")
+        with open(container, "wb") as f:
+            write_ocf(f, schema, [{"id": 1}])
+        fmt = mount(spark)
+        load_s = median_wall(lambda: spark.read.format(fmt).load(container), args.repeats)
+    spark.dataSource.register(_planner_invalidate_source())
+    planner_invalidate = [
+        float(spark.read.format("graft_time_invalidate").load().columns[0])
+        for _ in range(args.repeats + 1)
+    ][1:]
+
     daemon = spark.sparkContext.getConf().get("spark.python.daemon.module", "pyspark.daemon")
     print(f"cores {args.cores}, repeats {args.repeats}, daemon {daemon}")
     print(f"python job median     {python_s:.3f} s")
     print(f"jvm job median        {jvm_s:.3f} s")
     print(f"python task overhead  {python_s - jvm_s:.3f} s")
-    print(f"invalidate_caches     {statistics.median(invalidate):.4f} s per task")
+    print(f"invalidate_caches     {statistics.median(invalidate):.5f} s per task")
+    print(f"avro_ocf load median  {load_s:.3f} s per create_data_source call")
+    print(f"planner invalidate    {statistics.median(planner_invalidate):.5f} s per planner call")
     spark.stop()
     return 0
 
