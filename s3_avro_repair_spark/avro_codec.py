@@ -1069,6 +1069,26 @@ def block_decoder(writer, reader=None):
     return functools.partial(_decode_with, compile_resolved_decoder(writer, reader))
 
 
+def _block_head(win: "ByteWindow", pos: int) -> tuple[int, int, int]:
+    """``(count, payload_start, payload_size)`` of the block at ``pos``,
+    read from its two header varints: the one block-header parse of
+    every walk. A count past ``MAX_BLOCK_RECORDS``, a size past
+    ``MAX_BLOCK_BYTES`` or a block running past the end of the file
+    raises :class:`CorruptBlock`. The window is extended over the
+    header only; a caller that reads the payload extends it further."""
+    # two varints; 11 bytes each tells an overlong varint from one cut
+    # by the window, as on the whole file
+    win.ensure(pos, pos + 22)
+    count, p = _read_long(win.buf, pos - win.base)
+    if not 0 <= count <= MAX_BLOCK_RECORDS:
+        raise CorruptBlock(f"record count {count} out of bounds")
+    size, p = _read_long(win.buf, p)
+    p += win.base
+    if not 0 <= size <= MAX_BLOCK_BYTES or p + size + SYNC_SIZE > win.size:
+        raise CorruptBlock(f"block size {size} exceeds file")
+    return count, p, size
+
+
 def _block_headers(data):
     """``(block_start, count, payload_start, payload_size)`` per block,
     from the block HEADERS alone: payloads are skipped, never decoded.
@@ -1076,14 +1096,8 @@ def _block_headers(data):
     over it (memory O(chunk + block) for any file size)."""
     win = data if isinstance(data, ByteWindow) else ByteWindow.of(data)
     _, _, _, pos = win.read_header()
-    n = win.size
-    while pos < n:
-        win.ensure(pos, pos + 22)
-        count, p = _read_long(win.buf, pos - win.base)
-        size, p = _read_long(win.buf, p)
-        p += win.base
-        if count < 0 or size < 0 or p + size + SYNC_SIZE > n:
-            raise CorruptBlock("bad block structure")
+    while pos < win.size:
+        count, p, size = _block_head(win, pos)
         yield pos, count, p, size
         pos = p + size + SYNC_SIZE
 
@@ -1274,17 +1288,7 @@ def salvage_blocks(
     while pos < n and (pos < end or damaged):
         block_start = pos
         try:
-            # two varints; 11 bytes each tells an overlong varint from
-            # one cut by the window, as on the whole file
-            win.ensure(pos, pos + 22)
-            buf, base = win.buf, win.base
-            count, p = _read_long(buf, pos - base)
-            if not 0 <= count <= MAX_BLOCK_RECORDS:
-                raise CorruptBlock(f"record count {count} out of bounds")
-            size, p = _read_long(buf, p)
-            p += base
-            if not 0 <= size <= MAX_BLOCK_BYTES or p + size + SYNC_SIZE > n:
-                raise CorruptBlock(f"block size {size} exceeds file")
+            count, p, size = _block_head(win, pos)
             win.ensure(pos, p + size + SYNC_SIZE)
             buf, base = win.buf, win.base
             payload = _decompress(buf[p - base : p - base + size], codec)
@@ -1663,15 +1667,7 @@ def sampled_validate(
     block_no = checked = 0
     while pos < n and checked < limit:
         try:
-            win.ensure(pos, pos + 22)
-            buf, base = win.buf, win.base
-            count, p = _read_long(buf, pos - base)
-            if not 0 <= count <= MAX_BLOCK_RECORDS:
-                raise CorruptBlock(f"record count {count} out of bounds")
-            size, p = _read_long(buf, p)
-            p += base
-            if not 0 <= size <= MAX_BLOCK_BYTES or p + size + SYNC_SIZE > n:
-                raise CorruptBlock(f"block size {size} exceeds file")
+            count, p, size = _block_head(win, pos)
             win.ensure(pos, p + size + SYNC_SIZE)
             buf, base = win.buf, win.base
             q = p - base

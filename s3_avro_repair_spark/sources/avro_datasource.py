@@ -25,7 +25,8 @@ on a real cluster the package ships as a wheel/zip via
 ``spark.submit.pyFiles`` — the standard Python DataSource deployment.
 
 Reads yield pyarrow RecordBatches (the Arrow fast path of the Python
-DataSource API), never per-row pickled tuples.
+DataSource API), never per-row pickled tuples. Writes take them in
+:func:`write_part`, the container writer of every Avro sink.
 
 Spark runs the planner calls (``create_data_source``,
 ``plan_data_source_read``, ``write_into_data_source``, ...) in workers
@@ -174,6 +175,38 @@ def read_container(path: str, start: int, end: int, size: int, reader=None):
             yield from map(row, recs)
 
 
+def write_part(batches, out_dir: str, schema: dict, codec: str = "null"):
+    """Write one task's Arrow ``batches`` as the container
+    ``out_dir/part-<partition id>.avro`` (any path or URI ``fsio``
+    resolves) and return ``(path, n_records)``; no rows, no file. The
+    writer of ``format("avro_ocf")`` and ``write_avro_dir``.
+
+    ``to_pylist`` records keep a null ``None`` and a long an exact int.
+    The file goes to a temp name of this task attempt and moves into
+    place only when complete: the reference's delete+rename swap
+    (repair-avro.ts:152-153)."""
+    from pyspark import TaskContext
+
+    from .. import fsio
+    from ..avro_codec import write_ocf
+
+    pid = TaskContext.get().partitionId()
+    # each task resolves the URI itself (no FileSystem is shipped);
+    # create_dir is idempotent, for filesystems that are not shared
+    fs, dpath = fsio.resolve(out_dir)
+    fs.create_dir(dpath, recursive=True)
+
+    def recs():
+        for batch in batches:
+            yield from batch.to_pylist()
+
+    return fsio.atomic_stream_records(
+        fsio.join(dpath, f"part-{pid:05d}.avro"),
+        lambda out: write_ocf(out, schema, recs(), codec=codec, block_records=1000),
+        filesystem=fs,
+    )
+
+
 class AvroOCFDataSource(DataSource):
     """format("avro_ocf"): strict OCF scan over a file or directory.
 
@@ -276,9 +309,8 @@ class _Commit(WriterCommitMessage):
 
 
 class AvroOCFArrowWriter(DataSourceArrowWriter):
-    """One container file per partition, committed atomically (tmp +
-    move — the reference's delete+rename swap, repair-avro.ts:152-153),
-    streamed straight out of Arrow batches."""
+    """One container file per partition, written by :func:`write_part`
+    straight out of Spark's Arrow batches."""
 
     def __init__(self, options, avro_schema):
         self._path = options.get("path")
@@ -287,31 +319,7 @@ class AvroOCFArrowWriter(DataSourceArrowWriter):
         self._schema = avro_schema
 
     def write(self, iterator):
-        from pyspark import TaskContext
-
-        from .. import fsio
-        from ..avro_codec import write_ocf
-
-        pid = TaskContext.get().partitionId()
-        fs, dpath = fsio.resolve(self._path)
-        fs.create_dir(dpath, recursive=True)
-        target = fsio.join(dpath, f"part-{pid:05d}.avro")
-
-        def recs():
-            for batch in iterator:
-                yield from batch.to_pylist()
-
-        # fsio names the temp file by task attempt: two live attempts
-        # of one task (speculation / zombie overlap) never share one,
-        # and the commit move is last-writer-wins of a COMPLETE file.
-        path, n = fsio.atomic_stream_records(
-            target,
-            lambda out: write_ocf(
-                out, self._schema, recs(), block_records=1000
-            ),
-            filesystem=fs,
-        )
-        return _Commit(path, n)
+        return _Commit(*write_part(iterator, self._path, self._schema))
 
     def commit(self, messages):
         # per-file atomic commit already happened; nothing global to do

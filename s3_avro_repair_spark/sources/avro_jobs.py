@@ -25,7 +25,6 @@ import math
 _BATCH_ROWS = 8192
 
 
-
 def _pack_bins(sizes: list[int], n_bins: int) -> list[list[int]]:
     """Longest-processing-time packing: unit indices, largest first,
     each into the bin with the fewest bytes (ties: fewest units, then

@@ -355,9 +355,8 @@ def ensure_avro_fixtures(sf_dir: str) -> str:
             ydir = os.path.join(part_dir, f"year={year}")
             os.makedirs(ydir)
             part = df[years == year]
-            recs = (dict(zip(ORDERS_COLS, t)) for t in part.itertuples(index=False))
             with open(os.path.join(ydir, "orders.avro"), "wb") as fo:
-                write_ocf(fo, ORDERS_SCHEMA, recs, codec="null", block_records=100)
+                fo.write(ocf_bytes(part, ORDERS_SCHEMA, ORDERS_COLS, "null"))
 
         try:
             os.rename(tmp, root)
@@ -397,13 +396,17 @@ def read_avro_dir(
 def write_avro_dir(
     df: DataFrame, out_dir: str, schema: dict, codec: str = "null"
 ) -> int:
-    """Distributed Avro sink: each partition streams its rows into ONE
-    container file, committed atomically (tmp + move) — the per-file
-    analog of the reference's delete+rename swap (repair-avro.ts:152-153).
-    All I/O goes through ``fsio`` (pyarrow.fs), so ``out_dir`` may be a
-    local path, ``file://``, ``s3://`` or any URI pyarrow resolves — no
-    executor-local path assumption. Returns number of files written."""
+    """Distributed Avro sink: each partition's rows (the columns named
+    by ``schema``'s fields) go through ``mapInArrow`` into ONE container
+    file, committed atomically by ``avro_datasource.write_part``, the
+    same writer as ``format("avro_ocf")``. ``out_dir`` may be a local
+    path, ``file://``, ``s3://`` or any URI ``fsio`` (pyarrow.fs)
+    resolves: no executor-local path assumption. Returns the number of
+    partitions written (an empty one leaves no file)."""
+    import pyarrow as pa
+
     from .. import fsio
+    from .avro_datasource import write_part
 
     names = [f["name"] for f in schema["fields"]]
     # Dead-letter gate: a row with NULL in a NON-nullable field cannot
@@ -424,28 +427,13 @@ def write_avro_dir(
     fsio.ensure_dir(out_dir)
 
     def write(batches):
-        from pyspark import TaskContext
+        # the schema's columns, picked in the task: a DataFrame select
+        # would cost the driver an analysis per call
+        batches = (b.select(names) for b in batches)
+        path, n = write_part(batches, out_dir, schema, codec)
+        yield pa.record_batch({"path": [path], "n_records": [n]})
 
-        pid = TaskContext.get().partitionId()
-        # Executors re-resolve the URI themselves (the FileSystem object
-        # is not shipped); idempotent create_dir guards non-shared FS.
-        fs_, dpath = fsio.resolve(out_dir)
-        fs_.create_dir(dpath, recursive=True)
-        path = fsio.join(dpath, f"part-{pid:05d}.avro")
-
-        def recs():
-            for pdf in batches:
-                for t in pdf[names].itertuples(index=False):
-                    yield dict(zip(names, t))
-
-        path, n = fsio.atomic_stream_records(
-            path,
-            lambda out: write_ocf(out, schema, recs(), codec=codec, block_records=1000),
-            filesystem=fs_,
-        )
-        yield pd.DataFrame({"path": [path], "n_records": [n]})
-
-    report = df.mapInPandas(write, schema="path string, n_records long")
+    report = df.mapInArrow(write, "path string, n_records long")
     return report.count()  # materialize -> files committed
 
 

@@ -630,6 +630,30 @@ def test_block_stats_rejects_structural_damage(data):
         block_stats(inject_bad_header(data))
 
 
+def test_block_stats_applies_the_walks_count_bound(data):
+    """A block whose count varint reads 2**40 (past MAX_BLOCK_RECORDS)
+    is damage to every block-header walk: block_stats refuses it, as the
+    salvage walk and the sampled check do, instead of adding 2**40
+    records to the file's count."""
+    from s3_avro_repair_spark.avro_codec import (
+        _encode_long,
+        _read_long,
+        block_stats,
+        sampled_validate,
+    )
+
+    start = block_spans(data)[0][0]
+    _, after_count = _read_long(data, start)
+    huge = bytearray()
+    _encode_long(1 << 40, huge)
+    hurt = data[:start] + bytes(huge) + data[after_count:]
+    with pytest.raises(CorruptBlock, match="out of bounds"):
+        block_stats(hurt)
+    assert "out of bounds" in salvage_ocf(hurt).errors[0]
+    ok, _, err = sampled_validate(hurt)
+    assert not ok and "out of bounds" in err
+
+
 # ---------------------------------------------------------------------------
 # property test: random walks through the schema-evolution lattice
 # ---------------------------------------------------------------------------
