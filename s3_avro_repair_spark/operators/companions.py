@@ -607,6 +607,19 @@ def _ann_recall(
         ["query_id", "neighbor_id"],
         "left_semi",
     )
+    return _recall_row(spark, sf_dir, truth, hits, floor)
+
+
+def _recall_row(
+    spark: SparkSession,
+    sf_dir: str,
+    truth: DataFrame,
+    hits: DataFrame,
+    floor: float,
+) -> DataFrame:
+    """The recall companions' one output row: n_queries (the query
+    panel's non-null vectors, which DuckDB recomputes) and recall_ok =
+    |hits| >= floor * |truth| (vacuously TRUE on an empty truth)."""
     nq = (
         query_panel(table(spark, sf_dir, "embeddings"), spark, sf_dir)
         .filter(F.col("embedding").isNotNull())
@@ -666,21 +679,7 @@ def sim_ann_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     tie_hit = truth.join(qgood, "query_id", "left_semi")
     hits = pair_hit.unionByName(tie_hit).select("query_id", "neighbor_id").distinct()
-    nq = (
-        query_panel(table(spark, sf_dir, "embeddings"), spark, sf_dir)
-        .filter(F.col("embedding").isNotNull())
-        .agg(F.count(F.lit(1)).alias("n_queries"))
-    )
-    return _one_row(
-        nq,
-        truth.agg(F.count(F.lit(1)).alias("n_truth")),
-        hits.agg(F.count(F.lit(1)).alias("n_hit")),
-    ).select(
-        "n_queries",
-        F.coalesce(
-            F.col("n_hit") >= 0.6 * F.col("n_truth"), F.lit(True)
-        ).alias("recall_ok"),
-    )
+    return _recall_row(spark, sf_dir, truth, hits, 0.6)
 
 
 @register("sim_ann_ivf_recall", group="X", oracle=_N_QUERIES_SQL)

@@ -25,6 +25,8 @@ from pyspark.sql import functions as F
 
 from ..plans.registry import register
 from ..tables import table
+from .extensions import _BAND_NBR, _banded_hamming_pairs
+from .graph import _int8_codes, _lloyd_two_rounds
 
 # ---------------------------------------------------------------------------
 # text_perplexity_bigram
@@ -223,7 +225,6 @@ _DCT = [
 _DCT_SQL = "[" + ", ".join(str(c) for c in _DCT) + "]"
 _DCT_SPARK = "array(" + ", ".join(str(c) for c in _DCT) + ")"
 _PHASH_HAM = 8  # max Hamming distance (of 63 AC bits) to call a near-dup
-_PHASH_NBR = 16  # rank-neighborhood cap inside one band bucket
 
 
 @register(
@@ -286,7 +287,7 @@ _PHASH_NBR = 16  # rank-neighborhood cap inside one band bucket
                 AS BIGINT) AS hamming
     FROM ranked a JOIN ranked b
       ON a.band_no = b.band_no AND a.bv = b.bv
-     AND b.rn - a.rn >= 1 AND b.rn - a.rn <= {_PHASH_NBR}
+     AND b.rn - a.rn >= 1 AND b.rn - a.rn <= {_BAND_NBR}
     WHERE bit_count(xor(a.b0, b.b0)) + bit_count(xor(a.b1, b.b1))
         + bit_count(xor(a.b2, b.b2)) + bit_count(xor(a.b3, b.b3))
         <= {_PHASH_HAM}
@@ -442,52 +443,7 @@ def dedup_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr("element_at(bs, 4)").alias("b3"),
         "band_no", "bv",
     )
-    ranked = stacked.withColumn(
-        "rn",
-        F.row_number().over(
-            Window.partitionBy("band_no", "bv").orderBy("doc_id")
-        ),
-        # ranked feeds BOTH sides of the pair join; A/B'd this round:
-        # 1.34s with the barrier vs 1.68s re-running the window twice.
-    ).localCheckpoint(eager=False)
-    nbr = _PHASH_NBR
-    a = ranked.select(
-        F.col("doc_id").alias("id_a"),
-        F.col("b0").alias("a0"), F.col("b1").alias("a1"),
-        F.col("b2").alias("a2"), F.col("b3").alias("a3"),
-        "band_no", "bv", F.col("rn").alias("rn_a"),
-    ).withColumn(
-        "bkt",
-        F.explode(
-            F.array(F.expr(f"rn_a DIV {nbr}"), F.expr(f"rn_a DIV {nbr} + 1"))
-        ),
-    )
-    b = ranked.select(
-        F.col("doc_id").alias("id_b"),
-        F.col("b0").alias("c0"), F.col("b1").alias("c1"),
-        F.col("b2").alias("c2"), F.col("b3").alias("c3"),
-        F.col("band_no").alias("band_b"), F.col("bv").alias("bv_b"),
-        F.col("rn").alias("rn_b"),
-    ).withColumn("bkt", F.expr(f"rn_b DIV {nbr}"))
-    ham = (
-        F.bit_count(F.col("a0").bitwiseXOR(F.col("c0")))
-        + F.bit_count(F.col("a1").bitwiseXOR(F.col("c1")))
-        + F.bit_count(F.col("a2").bitwiseXOR(F.col("c2")))
-        + F.bit_count(F.col("a3").bitwiseXOR(F.col("c3")))
-    )
-    return (
-        a.join(
-            b,
-            (F.col("band_no") == F.col("band_b"))
-            & (F.col("bv") == F.col("bv_b"))
-            & (a["bkt"] == b["bkt"])
-            & (F.col("rn_b") - F.col("rn_a") >= 1)
-            & (F.col("rn_b") - F.col("rn_a") <= nbr),
-        )
-        .select("id_a", "id_b", ham.cast("long").alias("hamming"))
-        .filter(F.col("hamming") <= _PHASH_HAM)
-        .distinct()
-    )
+    return _banded_hamming_pairs(stacked, _PHASH_HAM)
 
 
 # ---------------------------------------------------------------------------
@@ -594,55 +550,16 @@ def dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus size. The Lloyd relation is checkpointed: the window and
     both join sides would otherwise re-run the whole iteration
     pipeline per branch."""
-    e = table(spark, sf_dir, "embeddings")
-    t = e.select(
-        "vec_id",
-        F.expr("transform(embedding, x -> cast(x as double))").alias("dv"),
+    # Materialization barrier (r10): q feeds the init centroids,
+    # every Lloyd round's assignment stream AND each round's
+    # centroid-update subtree — without it the scan + double-cast
+    # + quantize transform re-runs ~4x inside the ranked
+    # checkpoint's one materialization (3.0-3.4s -> 2.7s at
+    # sf0.1). One int8-code row per vector — tiny at any scale.
+    q = _int8_codes(table(spark, sf_dir, "embeddings")).localCheckpoint(
+        eager=False
     )
-    s = t.select(
-        "vec_id", "dv",
-        F.expr("array_max(transform(dv, x -> abs(x)))").alias("scale"),
-    )
-    q = s.filter(F.col("scale") > 0).select(
-        "vec_id",
-        F.expr(
-            "transform(dv, x -> cast(floor(127 * x / scale + 0.5) as int))"
-        ).alias("v"),
-        # Materialization barrier (r10): q feeds the init centroids,
-        # every Lloyd round's assignment stream AND each round's
-        # centroid-update subtree — without it the scan + double-cast
-        # + quantize transform re-runs ~4x inside the ranked
-        # checkpoint's one materialization (3.0-3.4s -> 2.7s at
-        # sf0.1). One int8-code row per vector — tiny at any scale.
-    ).localCheckpoint(eager=False)
-    cents = q.filter(F.col("vec_id") < _SEM_K).select(
-        F.col("vec_id").alias("cid"), F.col("v").alias("c")
-    )
-    assign = None
-    for _ in range(2):
-        d2 = F.expr(
-            "aggregate(zip_with(v, c, (x, y) -> CAST(x - y AS BIGINT) * (x - y)),"
-            " 0L, (a, x) -> a + x)"
-        )
-        pairs = q.crossJoin(F.broadcast(cents)).withColumn("d2", d2)
-        w = Window.partitionBy("vec_id").orderBy("d2", "cid")
-        assign = (
-            pairs.withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") == 1)
-            .select("vec_id", "v", "cid", "d2")
-        )
-        dims = (
-            assign.select("cid", F.posexplode("v").alias("i", "val"))
-            .groupBy("cid", "i")
-            .agg(
-                F.floor(F.sum("val") / F.count(F.lit(1))).cast("int").alias("cv")
-            )
-        )
-        cents = dims.groupBy("cid").agg(
-            F.expr(
-                "transform(array_sort(collect_list(struct(i, cv))), p -> p.cv)"
-            ).alias("c")
-        )
+    assign, _ = _lloyd_two_rounds(q, _SEM_K)
     ranked = (
         assign.withColumn(
             "rn",

@@ -827,6 +827,63 @@ _SUBSTR_K = 8  # shingle width (tokens); a run of m flagged starts spans m+K-1
 _SUBSTR_MIN = 16  # emit only verbatim cross-doc runs of >= this many tokens
 
 
+def _substring_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(doc_id, t): each non-null document split into its tokens."""
+    return (
+        table(spark, sf_dir, "documents")
+        .filter(F.col("text").isNotNull())
+        .select("doc_id", F.split("text", " ").alias("t"))
+    )
+
+
+def _substring_spans(d: DataFrame) -> DataFrame:
+    """(doc_id, isl, s, e): every maximal run of >= _SUBSTR_MIN tokens
+    of ``d``'s token arrays that also occurs verbatim in another
+    document, as 1-based inclusive token positions s..e. The span
+    pipeline of dedup_substring and dedup_substring_apply (steps 1-3
+    of dedup_substring's docstring)."""
+    k = _SUBSTR_K
+    # 8-gram shingles, index-free: zip_with over k shifted equal-length
+    # slices (each slice is a zip_with ARGUMENT, evaluated once per
+    # row — lambdas touch only lambda vars).
+    shingle = f"slice(t, 1, greatest(size(t) - {k - 1}, 0))"
+    for j in range(2, k + 1):
+        shingle = (
+            f"zip_with({shingle},"
+            f" slice(t, {j}, greatest(size(t) - {k - 1}, 0)),"
+            " (x, y) -> concat_ws(' ', x, y))"
+        )
+    pos = (
+        d.select("doc_id", F.posexplode(F.expr(shingle)).alias("p0", "s"))
+        .select(
+            "doc_id",
+            (F.col("p0") + 1).cast("long").alias("i"),  # 1-based, as oracle
+            F.xxhash64("s").alias("h"),
+        )
+        # pos feeds the multi-doc digest aggregate AND the flag join —
+        # without a barrier the 8-chained shingle build + digest runs
+        # twice (2.9s -> 2.2s at sf0.1; the digest relation is 3 small
+        # columns, far cheaper to materialize than to recompute).
+        .localCheckpoint(eager=False)
+    )
+    multi = (
+        pos.groupBy("h")
+        .agg(F.min("doc_id").alias("lo"), F.max("doc_id").alias("hi"))
+        .filter(F.col("lo") != F.col("hi"))
+        .select("h")
+    )
+    flagged = pos.join(multi, "h").select("doc_id", "i")
+    isl = F.col("i") - F.row_number().over(
+        Window.partitionBy("doc_id").orderBy("i")
+    )
+    return (
+        flagged.withColumn("isl", isl)
+        .groupBy("doc_id", "isl")
+        .agg(F.min("i").alias("s"), (F.max("i") + (k - 1)).alias("e"))
+        .filter(F.col("e") - F.col("s") + 1 >= _SUBSTR_MIN)
+    )
+
+
 @register(
     "dedup_substring",
     group="X",
@@ -899,54 +956,7 @@ def dedup_substring(spark: SparkSession, sf_dir: str) -> DataFrame:
     A run shared only WITHIN one document (internal repetition) is
     deliberately not flagged — text_repetition owns intra-doc
     redundancy; this op's contract is cross-document leakage."""
-    k = _SUBSTR_K
-    d = (
-        table(spark, sf_dir, "documents")
-        .filter(F.col("text").isNotNull())
-        .select("doc_id", F.split("text", " ").alias("t"))
-    )
-    # 8-gram shingles, index-free: zip_with over k shifted equal-length
-    # slices (each slice is a zip_with ARGUMENT, evaluated once per
-    # row — lambdas touch only lambda vars).
-    shingle = f"slice(t, 1, greatest(size(t) - {k - 1}, 0))"
-    for j in range(2, k + 1):
-        shingle = (
-            f"zip_with({shingle},"
-            f" slice(t, {j}, greatest(size(t) - {k - 1}, 0)),"
-            " (x, y) -> concat_ws(' ', x, y))"
-        )
-    pos = (
-        d.select(
-            "doc_id",
-            F.posexplode(F.expr(shingle)).alias("p0", "s"),
-        )
-        .select(
-            "doc_id",
-            (F.col("p0") + 1).cast("long").alias("i"),  # 1-based, as oracle
-            F.xxhash64("s").alias("h"),
-        )
-        # pos feeds the multi-doc digest aggregate AND the flag join —
-        # without a barrier the 8-chained shingle build + digest runs
-        # twice (2.9s -> 2.2s at sf0.1; the digest relation is 3 small
-        # columns, far cheaper to materialize than to recompute).
-        .localCheckpoint(eager=False)
-    )
-    multi = (
-        pos.groupBy("h")
-        .agg(F.min("doc_id").alias("lo"), F.max("doc_id").alias("hi"))
-        .filter(F.col("lo") != F.col("hi"))
-        .select("h")
-    )
-    flagged = pos.join(multi, "h").select("doc_id", "i")
-    isl = F.col("i") - F.row_number().over(
-        Window.partitionBy("doc_id").orderBy("i")
-    )
-    spans = (
-        flagged.withColumn("isl", isl)
-        .groupBy("doc_id", "isl")
-        .agg(F.min("i").alias("s"), (F.max("i") + (k - 1)).alias("e"))
-        .filter(F.col("e") - F.col("s") + 1 >= _SUBSTR_MIN)
-    )
+    spans = _substring_spans(_substring_docs(spark, sf_dir))
     return spans.select(
         "doc_id",
         F.col("s").cast("long").alias("span_start"),
@@ -956,7 +966,69 @@ def dedup_substring(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _AHASH_HAM = 5  # max Hamming distance (of 64 bits) to call a pair near-dup
-_AHASH_NBR = 16  # rank-neighborhood cap inside one band bucket
+_BAND_NBR = 16  # rank-neighborhood cap inside one band bucket
+
+
+def _banded_hamming_pairs(stacked: DataFrame, ham: int) -> DataFrame:
+    """(id_a, id_b, hamming): the banded-rank Hamming pairing of
+    dedup_phash and dedup_ahash. ``stacked`` holds one row per
+    (doc_id, band_no) with the doc's 4 band values b0..b3 and that
+    band's value bv. Within each (band_no, bv) bucket, docs are ranked
+    by doc_id and every pair <= _BAND_NBR ranks apart is compared on
+    all four bands (rank-bucket ``rn DIV _BAND_NBR`` two-sided explode,
+    O(2 x _BAND_NBR) joined rows per doc and band); pairs within
+    ``ham`` bits are kept, once each."""
+    ranked = stacked.withColumn(
+        "rn",
+        F.row_number().over(
+            Window.partitionBy("band_no", "bv").orderBy("doc_id")
+        ),
+        # Materialization barrier: ranked feeds BOTH sides of the pair
+        # join; without it the whole signature pipeline executes twice
+        # (4 scans of documents in dedup_ahash's r10 before-plan;
+        # dedup_phash A/B'd 1.34s with the barrier vs 1.68s). 4 small
+        # ints per (doc, band) — tiny at any scale.
+    ).localCheckpoint(eager=False)
+    nbr = _BAND_NBR
+    a = ranked.select(
+        F.col("doc_id").alias("id_a"),
+        F.col("b0").alias("a0"), F.col("b1").alias("a1"),
+        F.col("b2").alias("a2"), F.col("b3").alias("a3"),
+        "band_no", "bv", F.col("rn").alias("rn_a"),
+    ).withColumn(
+        "bkt",
+        F.explode(
+            F.array(F.expr(f"rn_a DIV {nbr}"), F.expr(f"rn_a DIV {nbr} + 1"))
+        ),
+    )
+    b = ranked.select(
+        F.col("doc_id").alias("id_b"),
+        F.col("b0").alias("c0"), F.col("b1").alias("c1"),
+        F.col("b2").alias("c2"), F.col("b3").alias("c3"),
+        F.col("band_no").alias("band_b"), F.col("bv").alias("bv_b"),
+        F.col("rn").alias("rn_b"),
+    ).withColumn("bkt", F.expr(f"rn_b DIV {nbr}"))
+    dist = (
+        F.bit_count(F.col("a0").bitwiseXOR(F.col("c0")))
+        + F.bit_count(F.col("a1").bitwiseXOR(F.col("c1")))
+        + F.bit_count(F.col("a2").bitwiseXOR(F.col("c2")))
+        + F.bit_count(F.col("a3").bitwiseXOR(F.col("c3")))
+    )
+    return (
+        a.join(
+            b,
+            (F.col("band_no") == F.col("band_b"))
+            & (F.col("bv") == F.col("bv_b"))
+            & (a["bkt"] == b["bkt"])
+            & (F.col("rn_b") - F.col("rn_a") >= 1)
+            & (F.col("rn_b") - F.col("rn_a") <= nbr),
+        )
+        .select("id_a", "id_b", dist.cast("long").alias("hamming"))
+        .filter(F.col("hamming") <= ham)
+        .distinct()
+    )
+
+
 
 
 @register(
@@ -1002,7 +1074,7 @@ _AHASH_NBR = 16  # rank-neighborhood cap inside one band bucket
                 AS BIGINT) AS hamming
     FROM ranked a JOIN ranked b
       ON a.band_no = b.band_no AND a.bv = b.bv
-     AND b.rn - a.rn >= 1 AND b.rn - a.rn <= {_AHASH_NBR}
+     AND b.rn - a.rn >= 1 AND b.rn - a.rn <= {_BAND_NBR}
     WHERE bit_count(xor(a.b0, b.b0)) + bit_count(xor(a.b1, b.b1))
         + bit_count(xor(a.b2, b.b2)) + bit_count(xor(a.b3, b.b3))
         <= {_AHASH_HAM}
@@ -1102,56 +1174,7 @@ def dedup_ahash(spark: SparkSession, sf_dir: str) -> DataFrame:
             " WHEN 2 THEN b2 ELSE b3 END"
         ),
     )
-    ranked = stacked.withColumn(
-        "rn",
-        F.row_number().over(
-            Window.partitionBy("band_no", "bv").orderBy("doc_id")
-        ),
-        # Materialization barrier: ranked feeds BOTH sides of the
-        # pairing self-join; without it the whole signature pipeline
-        # executes twice (4 scans of documents in the r10 before-plan).
-        # 4 small ints per (doc, band) — tiny at any scale.
-    ).localCheckpoint(eager=False)
-    nbr = _AHASH_NBR
-    a = ranked.select(
-        F.col("doc_id").alias("id_a"),
-        F.col("b0").alias("a0"), F.col("b1").alias("a1"),
-        F.col("b2").alias("a2"), F.col("b3").alias("a3"),
-        "band_no", "bv", F.col("rn").alias("rn_a"),
-    ).withColumn(
-        "bkt",
-        F.explode(
-            F.array(F.expr(f"rn_a DIV {nbr}"), F.expr(f"rn_a DIV {nbr} + 1"))
-        ),
-    )
-    b = ranked.select(
-        F.col("doc_id").alias("id_b"),
-        F.col("b0").alias("c0"), F.col("b1").alias("c1"),
-        F.col("b2").alias("c2"), F.col("b3").alias("c3"),
-        F.col("band_no").alias("band_b"), F.col("bv").alias("bv_b"),
-        F.col("rn").alias("rn_b"),
-    ).withColumn("bkt", F.expr(f"rn_b DIV {nbr}"))
-    ham = (
-        F.bit_count(F.col("a0").bitwiseXOR(F.col("c0")))
-        + F.bit_count(F.col("a1").bitwiseXOR(F.col("c1")))
-        + F.bit_count(F.col("a2").bitwiseXOR(F.col("c2")))
-        + F.bit_count(F.col("a3").bitwiseXOR(F.col("c3")))
-    )
-    return (
-        a.join(
-            b,
-            (F.col("band_no") == F.col("band_b"))
-            & (F.col("bv") == F.col("bv_b"))
-            & (a["bkt"] == b["bkt"])
-            & (F.col("rn_b") - F.col("rn_a") >= 1)
-            & (F.col("rn_b") - F.col("rn_a") <= nbr),
-        )
-        .select(
-            "id_a", "id_b", ham.cast("long").alias("hamming")
-        )
-        .filter(F.col("hamming") <= _AHASH_HAM)
-        .distinct()
-    )
+    return _banded_hamming_pairs(stacked, _AHASH_HAM)
 
 
 @register(
@@ -1210,8 +1233,9 @@ def dedup_substring_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     string with n_kept = 0 — the downstream length gate
     (corpus_filter_report's rules) then drops it.
 
-    Construction: the span pipeline is dedup_substring's verbatim (one
-    digest shuffle, islands per doc); the removal is position-level —
+    Construction: the span pipeline is dedup_substring's own
+    (``_substring_spans``: one digest shuffle, islands per doc); the
+    removal is position-level —
     explode spans to covered positions (islands are disjoint, so this
     is <= one row per token), posexplode tokens (a generator, NOT an
     indexed lambda — an index-free guarantee no alias substitution can
@@ -1219,45 +1243,8 @@ def dedup_substring_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     reconstruction via a struct-sorted per-document token list.
     Everything shuffles by doc_id — linear, skew-bounded by document
     length."""
-    k = _SUBSTR_K
-    d = (
-        table(spark, sf_dir, "documents")
-        .filter(F.col("text").isNotNull())
-        .select("doc_id", F.split("text", " ").alias("t"))
-    )
-    shingle = f"slice(t, 1, greatest(size(t) - {k - 1}, 0))"
-    for j in range(2, k + 1):
-        shingle = (
-            f"zip_with({shingle},"
-            f" slice(t, {j}, greatest(size(t) - {k - 1}, 0)),"
-            " (x, y) -> concat_ws(' ', x, y))"
-        )
-    pos = (
-        d.select("doc_id", F.posexplode(F.expr(shingle)).alias("p0", "s"))
-        .select(
-            "doc_id",
-            (F.col("p0") + 1).cast("long").alias("i"),
-            F.xxhash64("s").alias("h"),
-        )
-        # same barrier as dedup_substring: pos feeds multi + flag join
-        .localCheckpoint(eager=False)
-    )
-    multi = (
-        pos.groupBy("h")
-        .agg(F.min("doc_id").alias("lo"), F.max("doc_id").alias("hi"))
-        .filter(F.col("lo") != F.col("hi"))
-        .select("h")
-    )
-    flagged = pos.join(multi, "h").select("doc_id", "i")
-    isl = F.col("i") - F.row_number().over(
-        Window.partitionBy("doc_id").orderBy("i")
-    )
-    spans = (
-        flagged.withColumn("isl", isl)
-        .groupBy("doc_id", "isl")
-        .agg(F.min("i").alias("s"), (F.max("i") + (k - 1)).alias("e"))
-        .filter(F.col("e") - F.col("s") + 1 >= _SUBSTR_MIN)
-    )
+    d = _substring_docs(spark, sf_dir)
+    spans = _substring_spans(d)
     # Removal is DOC-level, not token-level (r10): spans collapse to a
     # small per-doc array, one join attaches them to the token arrays,
     # and covered tokens are cut with in-array HOFs. The r9 shape

@@ -231,6 +231,63 @@ _KMEANS_ORACLE = """
 """
 
 
+def _int8_codes(e: DataFrame) -> DataFrame:
+    """(vec_id, v): each embedding of ``e`` with a nonzero max |x|
+    quantized to int8 codes, floor(127 * x / max|x| + 0.5) — the
+    embedding_quantize kernel both engines compute bit-equal."""
+    t = e.select(
+        "vec_id", F.expr("transform(embedding, x -> cast(x as double))").alias("dv")
+    )
+    s = t.select(
+        "vec_id", "dv", F.expr("array_max(transform(dv, x -> abs(x)))").alias("scale")
+    )
+    return s.filter(F.col("scale") > 0).select(
+        "vec_id",
+        F.expr("transform(dv, x -> cast(floor(127 * x / scale + 0.5) as int))").alias(
+            "v"
+        ),
+    )
+
+
+def _lloyd_two_rounds(q: DataFrame, k: int) -> tuple[DataFrame, DataFrame]:
+    """Two rounds of integer-exact Lloyd over ``_int8_codes`` rows,
+    started from the codes of the ``k`` smallest vec_ids: returns the
+    second round's assignment (vec_id, v, cid, d2 = integer squared
+    distance to its centroid; ties to the smaller cid) and the
+    centroids (cid, c) it moves them to (per-dimension floor(sum /
+    count)). Each round broadcasts the k centroid rows against ``q``
+    and shuffles only (k x dim) partial sums."""
+    cents = q.filter(F.col("vec_id") < k).select(
+        F.col("vec_id").alias("cid"), F.col("v").alias("c")
+    )
+    assign = None
+    for _ in range(2):
+        d2 = F.expr(
+            "aggregate(zip_with(v, c, (x, y) -> CAST(x - y AS BIGINT) * (x - y)),"
+            " 0L, (a, x) -> a + x)"
+        )
+        pairs = q.crossJoin(F.broadcast(cents)).withColumn("d2", d2)
+        w = Window.partitionBy("vec_id").orderBy("d2", "cid")
+        assign = (
+            pairs.withColumn("rn", F.row_number().over(w))
+            .filter(F.col("rn") == 1)
+            .select("vec_id", "v", "cid", "d2")
+        )
+        dims = (
+            assign.select("cid", F.posexplode("v").alias("i", "val"))
+            .groupBy("cid", "i")
+            .agg(
+                F.floor(F.sum("val") / F.count(F.lit(1))).cast("int").alias("cv")
+            )
+        )
+        cents = dims.groupBy("cid").agg(
+            F.expr(
+                "transform(array_sort(collect_list(struct(i, cv))), p -> p.cv)"
+            ).alias("c")
+        )
+    return assign, cents
+
+
 @register("kmeans_quantized", group="C", oracle=_KMEANS_ORACLE)
 def kmeans_quantized(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fixed-iteration Lloyd k-means (k=4, 2 rounds) over int8-quantized
@@ -249,47 +306,8 @@ def kmeans_quantized(spark: SparkSession, sf_dir: str) -> DataFrame:
     — both invariant in the corpus size except the scan itself. The
     driver holds no data; iteration count is fixed, so the whole job
     is one lazy plan."""
-    e = table(spark, sf_dir, "embeddings")
-    t = e.select(
-        "vec_id", F.expr("transform(embedding, x -> cast(x as double))").alias("dv")
-    )
-    s = t.select(
-        "vec_id", "dv", F.expr("array_max(transform(dv, x -> abs(x)))").alias("scale")
-    )
-    q = s.filter(F.col("scale") > 0).select(
-        "vec_id",
-        F.expr("transform(dv, x -> cast(floor(127 * x / scale + 0.5) as int))").alias(
-            "v"
-        ),
-    )
-    cents = q.filter(F.col("vec_id") < 4).select(
-        F.col("vec_id").alias("cid"), F.col("v").alias("c")
-    )
-    assign = None
-    for _ in range(2):
-        d2 = F.expr(
-            "aggregate(zip_with(v, c, (x, y) -> CAST(x - y AS BIGINT) * (x - y)),"
-            " 0L, (a, x) -> a + x)"
-        )
-        pairs = q.crossJoin(F.broadcast(cents)).withColumn("d2", d2)
-        w = Window.partitionBy("vec_id").orderBy("d2", "cid")
-        assign = (
-            pairs.withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") == 1)
-            .select("vec_id", "v", "cid")
-        )
-        dims = (
-            assign.select("cid", F.posexplode("v").alias("i", "val"))
-            .groupBy("cid", "i")
-            .agg(
-                F.floor(F.sum("val") / F.count(F.lit(1))).cast("int").alias("cv")
-            )
-        )
-        cents = dims.groupBy("cid").agg(
-            F.expr(
-                "transform(array_sort(collect_list(struct(i, cv))), p -> p.cv)"
-            ).alias("c")
-        )
+    q = _int8_codes(table(spark, sf_dir, "embeddings"))
+    assign, cents = _lloyd_two_rounds(q, 4)
     return (
         assign.groupBy("cid")
         .agg(F.count(F.lit(1)).alias("n_members"))

@@ -247,6 +247,32 @@ def join_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _events_and_orders(
+    spark: SparkSession, sf_dir: str, event_kind: int
+) -> DataFrame:
+    """The as-of joins' one relation: events and orders unioned as
+    (user_id, ts, event_id, odate, kind), an order's ts and odate being
+    its o_orderdate. Events carry ``kind = event_kind`` and orders the
+    other of 0/1, so ordering by (ts, kind) puts the kind-0 side first
+    at equal ts: orders for a backward match (``event_kind=1``),
+    events for a forward one (``event_kind=0``)."""
+    ev = table(spark, sf_dir, "events").select(
+        "user_id",
+        "ts",
+        "event_id",
+        F.lit(None).cast("timestamp").alias("odate"),
+        F.lit(event_kind).alias("kind"),
+    )
+    od = table(spark, sf_dir, "orders").select(
+        F.col("o_custkey").alias("user_id"),
+        F.col("o_orderdate").alias("ts"),
+        F.lit(None).cast("long").alias("event_id"),
+        F.col("o_orderdate").alias("odate"),
+        F.lit(1 - event_kind).alias("kind"),
+    )
+    return ev.unionByName(od)
+
+
 @register(
     "join_asof",
     group="J",
@@ -272,28 +298,12 @@ def join_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
     return the as-of DATE rather than an order id so ties stay
     deterministic — DuckDB's ASOF picks an arbitrary row among ties.)
     """
-    e = table(spark, sf_dir, "events")
-    o = table(spark, sf_dir, "orders")
-    ev = e.select(
-        "user_id",
-        "ts",
-        "event_id",
-        F.lit(None).cast("timestamp").alias("odate"),
-        F.lit(1).alias("kind"),
-    )
-    od = o.select(
-        F.col("o_custkey").alias("user_id"),
-        F.col("o_orderdate").alias("ts"),
-        F.lit(None).cast("long").alias("event_id"),
-        F.col("o_orderdate").alias("odate"),
-        F.lit(0).alias("kind"),
-    )
     w = (
         Window.partitionBy("user_id")
         .orderBy("ts", "kind")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
-    merged = ev.unionByName(od).withColumn(
+    merged = _events_and_orders(spark, sf_dir, event_kind=1).withColumn(
         "asof", F.last("odate", ignorenulls=True).over(w)
     )
     return (
@@ -361,26 +371,16 @@ def _ensure_dpp_fact(spark: SparkSession, sf_dir: str) -> str:
     sf_dir into the versioned fixture cache (same discipline as
     ensure_avro_fixtures) — the layout is a FIXTURE, not per-call work."""
     import os
-    import shutil
-    import tempfile
 
-    from ..sources.avro_pipeline import _CACHE_ROOT
+    from ..sources.avro_pipeline import _cached_tree
 
-    root = os.path.join(
-        _CACHE_ROOT, os.path.basename(os.path.normpath(sf_dir)) + "_dppfact_v1"
-    )
-    if os.path.isdir(root):
-        return os.path.join(root, "orders_by_status")
-    os.makedirs(_CACHE_ROOT, exist_ok=True)
-    tmp = tempfile.mkdtemp(prefix=".dpp_fact_", dir=_CACHE_ROOT)
-    try:
+    def build(tmp: str) -> None:
         out = os.path.join(tmp, "orders_by_status")
         table(spark, sf_dir, "orders").write.mode("overwrite").partitionBy(
             "o_orderstatus"
         ).parquet(out)
-        os.rename(tmp, root)
-    except OSError:
-        shutil.rmtree(tmp, ignore_errors=True)  # lost a concurrent race
+
+    root = _cached_tree(sf_dir, "dppfact_v1", ("orders",), build)
     return os.path.join(root, "orders_by_status")
 
 
@@ -500,28 +500,12 @@ def join_asof_forward(spark: SparkSession, sf_dir: str) -> DataFrame:
     match; tied orders share the o_orderdate, so returning the DATE
     keeps ties deterministic. One shuffle on user_id, linear in
     |events| + |orders| — never the quadratic ts-residual join."""
-    e = table(spark, sf_dir, "events")
-    o = table(spark, sf_dir, "orders")
-    ev = e.select(
-        "user_id",
-        "ts",
-        "event_id",
-        F.lit(None).cast("timestamp").alias("odate"),
-        F.lit(0).alias("kind"),
-    )
-    od = o.select(
-        F.col("o_custkey").alias("user_id"),
-        F.col("o_orderdate").alias("ts"),
-        F.lit(None).cast("long").alias("event_id"),
-        F.col("o_orderdate").alias("odate"),
-        F.lit(1).alias("kind"),
-    )
     w = (
         Window.partitionBy("user_id")
         .orderBy("ts", "kind")
         .rowsBetween(Window.currentRow, Window.unboundedFollowing)
     )
-    merged = ev.unionByName(od).withColumn(
+    merged = _events_and_orders(spark, sf_dir, event_kind=0).withColumn(
         "nxt", F.first("odate", ignorenulls=True).over(w)
     )
     return (
@@ -606,33 +590,17 @@ def join_asof_tolerance(spark: SparkSession, sf_dir: str) -> DataFrame:
     engines filter the same matched pairs: DuckDB's ASOF JOIN + the
     same epoch_us cut is value-identical, ties handled as in
     join_asof (kind orders-first, date payload)."""
-    e = table(spark, sf_dir, "events")
-    o = table(spark, sf_dir, "orders")
     # The tolerance is a DIAL; 8500 days is calibrated to the fixture's
     # inter-table clock skew (events ~8200-9800 days after their latest
     # prior order, q50 ~8372d) so BOTH the keep and the drop path carry
     # rows at every SF — a 30-day production value is a one-line change.
     tol_us = 8500 * 86400 * 1_000_000
-    ev = e.select(
-        "user_id",
-        "ts",
-        "event_id",
-        F.lit(None).cast("timestamp").alias("odate"),
-        F.lit(1).alias("kind"),
-    )
-    od = o.select(
-        F.col("o_custkey").alias("user_id"),
-        F.col("o_orderdate").alias("ts"),
-        F.lit(None).cast("long").alias("event_id"),
-        F.col("o_orderdate").alias("odate"),
-        F.lit(0).alias("kind"),
-    )
     w = (
         Window.partitionBy("user_id")
         .orderBy("ts", "kind")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
-    merged = ev.unionByName(od).withColumn(
+    merged = _events_and_orders(spark, sf_dir, event_kind=1).withColumn(
         "asof", F.last("odate", ignorenulls=True).over(w)
     )
     return (
@@ -711,26 +679,10 @@ def join_asof_nearest(spark: SparkSession, sf_dir: str) -> DataFrame:
     on event_id: a re-join fans out 2x2 on duplicate event_ids (the
     production shard plants 3 full-row dup ids), while both these
     row-keyed plans emit exactly one row per event ROW."""
-    e = table(spark, sf_dir, "events")
-    o = table(spark, sf_dir, "orders")
-    ev = e.select(
-        "user_id",
-        "ts",
-        "event_id",
-        F.lit(None).cast("timestamp").alias("odate"),
-        F.lit(1).alias("kind"),
-    )
-    od = o.select(
-        F.col("o_custkey").alias("user_id"),
-        F.col("o_orderdate").alias("ts"),
-        F.lit(None).cast("long").alias("event_id"),
-        F.col("o_orderdate").alias("odate"),
-        F.lit(0).alias("kind"),
-    )
     order = Window.partitionBy("user_id").orderBy("ts", "kind")
     w_back = order.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     w_fwd = order.rowsBetween(Window.currentRow, Window.unboundedFollowing)
-    merged = ev.unionByName(od).select(
+    merged = _events_and_orders(spark, sf_dir, event_kind=1).select(
         "event_id",
         "ts",
         "kind",

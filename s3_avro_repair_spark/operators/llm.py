@@ -882,20 +882,12 @@ _KNN_SQL = f"""
 """
 
 
-@register("sim_knn_topk", group="L", oracle=_KNN_SQL)
-def sim_knn_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Brute-force exact top-k nearest neighbors for a BOUNDED query
-    panel (query_panel: <=64 queries at any corpus size, the historical
-    1% at fixture scale) against the full corpus: broadcast the query side,
-    so the 'cross' join is a broadcast nested loop that scans the
-    corpus ONCE with no shuffle of the big side; per-query top-5 via
-    WindowGroupLimit (rank <= 5 is pushed into the sort). This is the
-    correct brute-force posture at scale — the unbounded variant
-    (corpus x corpus) is never acceptable; for that, see sim_ann_lsh.
-    Ranking uses full-precision cosine; only ranks are output, so the
-    hash is float-free."""
-    from pyspark.sql import Window
-
+def _panel_cosines(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(query_id, neighbor_id, cos): full-precision cosine of every
+    query-panel vector against every other corpus vector — the
+    broadcast query side joined to one spread scan of the corpus, no
+    shuffle of the big side. Shared by sim_knn_topk and
+    sim_range_search."""
     en = table(spark, sf_dir, "embeddings").withColumn("nrm", _norm("embedding"))
     q = query_panel(en, spark, sf_dir).select(
         F.col("vec_id").alias("query_id"),
@@ -909,7 +901,22 @@ def sim_knn_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).transform(spread_partitions)  # no-op once the scan has >= cores partitions
     pairs = F.broadcast(q).join(c, F.col("neighbor_id") != F.col("query_id"))
     cos = F.expr(_DOT.format(a="ea", b="eb")) / (F.col("na") * F.col("nb"))
-    scored = pairs.select("query_id", "neighbor_id", cos.alias("cos"))
+    return pairs.select("query_id", "neighbor_id", cos.alias("cos"))
+
+
+@register("sim_knn_topk", group="L", oracle=_KNN_SQL)
+def sim_knn_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Brute-force exact top-k nearest neighbors for a BOUNDED query
+    panel (query_panel: <=64 queries at any corpus size, the historical
+    1% at fixture scale) against the full corpus: broadcast the query side,
+    so the 'cross' join is a broadcast nested loop that scans the
+    corpus ONCE with no shuffle of the big side; per-query top-5 via
+    WindowGroupLimit (rank <= 5 is pushed into the sort). This is the
+    correct brute-force posture at scale — the unbounded variant
+    (corpus x corpus) is never acceptable; for that, see sim_ann_lsh.
+    Ranking uses full-precision cosine; only ranks are output, so the
+    hash is float-free."""
+    scored = _panel_cosines(spark, sf_dir)
     w = Window.partitionBy("query_id").orderBy(
         F.col("cos").desc(), F.col("neighbor_id")
     )
@@ -1183,17 +1190,8 @@ def sim_range_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash is float-free; tau=0.35 sits >3e-3 from every pair's cosine
     at the checked scale, ~12 orders of magnitude beyond cross-engine
     summation-order ulp noise, so threshold membership is stable."""
-    en = table(spark, sf_dir, "embeddings").withColumn("nrm", _norm("embedding"))
-    q = query_panel(en, spark, sf_dir).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("ea"),
-        F.col("nrm").alias("na"),
+    return (
+        _panel_cosines(spark, sf_dir)
+        .filter(F.col("cos") >= 0.35)
+        .select("query_id", "neighbor_id")
     )
-    c = en.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("embedding").alias("eb"),
-        F.col("nrm").alias("nb"),
-    ).transform(spread_partitions)  # no-op once the scan has >= cores partitions
-    pairs = F.broadcast(q).join(c, F.col("neighbor_id") != F.col("query_id"))
-    cos = F.expr(_DOT.format(a="ea", b="eb")) / (F.col("na") * F.col("nb"))
-    return pairs.filter(cos >= 0.35).select("query_id", "neighbor_id")

@@ -31,10 +31,12 @@ container format, in-process.
 from __future__ import annotations
 
 import contextlib
+import hashlib
 import os
 import re
 import shutil
 import tempfile
+from collections.abc import Callable
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -53,7 +55,7 @@ from ..avro_codec import (
 )
 from ..exprs import dsum
 from ..plans.registry import register
-from ..tables import table
+from ..tables import fixture_token, table
 from .avro_jobs import run_files
 
 ORDERS_SCHEMA = {
@@ -137,6 +139,38 @@ def clean_orders(df: DataFrame) -> DataFrame:
 
 _REPO_ROOT = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 _CACHE_ROOT = os.path.join(_REPO_ROOT, ".avro_cache")
+
+
+def _cached_tree(
+    sf_dir: str, tag: str, inputs: tuple[str, ...], build: Callable[[str], None]
+) -> str:
+    """The fixture tree ``.avro_cache/<basename(sf_dir)>_<tag>_<digest>``
+    derived from the tables named in ``inputs``, built on first use.
+    ``digest`` hashes each input's ``tables.fixture_token`` (path,
+    mtime, size), so two scale dirs that share a name, or one input
+    rewritten in place, get trees of their own instead of a stale one.
+    ``build(tmp)`` fills a fresh ``mkdtemp`` under the cache root, which
+    is then published with one same-filesystem rename; a process that
+    loses a concurrent race discards its copy. Bump ``tag``'s version
+    when the rendition code changes."""
+    key = repr([fixture_token(sf_dir, name) for name in inputs])
+    digest = hashlib.md5(key.encode()).hexdigest()[:12]
+    base = os.path.basename(os.path.normpath(sf_dir))
+    root = os.path.join(_CACHE_ROOT, f"{base}_{tag}_{digest}")
+    if os.path.isdir(root):
+        return root
+    os.makedirs(_CACHE_ROOT, exist_ok=True)
+    tmp = tempfile.mkdtemp(prefix=f".{tag}_", dir=_CACHE_ROOT)
+    try:
+        build(tmp)
+        try:
+            os.rename(tmp, root)
+        except OSError:
+            pass  # another process won the race; its tree is equivalent
+        return root
+    finally:
+        if os.path.isdir(tmp):
+            shutil.rmtree(tmp, ignore_errors=True)
 
 
 def scratch_dir(name: str) -> str:
@@ -273,13 +307,7 @@ def ensure_avro_fixtures(sf_dir: str) -> str:
     # cached trees from earlier rounds can never leak into results.
     # (v3: added snappy/ and mixed/; v4: added typed/; v5: mixed gen-2
     # files diversified over snappy/bzip2/xz.)
-    root = os.path.join(_CACHE_ROOT, os.path.basename(os.path.normpath(sf_dir)) + "_v5")
-    if os.path.isdir(root):
-        return root
-    os.makedirs(_CACHE_ROOT, exist_ok=True)
-    # tmp lives INSIDE the cache root so the final os.rename is same-fs atomic
-    tmp = tempfile.mkdtemp(prefix=".avro_fixtures_", dir=_CACHE_ROOT)
-    try:
+    def build(tmp: str) -> None:
         df = _orders_records(sf_dir)
         clean_dir = os.path.join(tmp, "clean")
         part_dir = os.path.join(tmp, "partitioned")
@@ -358,14 +386,7 @@ def ensure_avro_fixtures(sf_dir: str) -> str:
             with open(os.path.join(ydir, "orders.avro"), "wb") as fo:
                 fo.write(ocf_bytes(part, ORDERS_SCHEMA, ORDERS_COLS, "null"))
 
-        try:
-            os.rename(tmp, root)
-        except OSError:
-            pass  # another process won the race; its tree is equivalent
-        return root
-    finally:
-        if os.path.isdir(tmp):
-            shutil.rmtree(tmp, ignore_errors=True)
+    return _cached_tree(sf_dir, "v5", ("orders",), build)
 
 
 # ---------------------------------------------------------------------------

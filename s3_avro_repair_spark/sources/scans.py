@@ -10,15 +10,13 @@ no staging copies, no driver-side buffering.
 
 from __future__ import annotations
 
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..exprs import dsum
 from ..plans.registry import register
 from ..tables import table
-from .avro_pipeline import scratch_dir
+from .avro_pipeline import _cached_tree, scratch_dir
 
 
 @register(
@@ -127,8 +125,9 @@ def sink_avro(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The spark-avro jar is not on this classpath, so the container files
     are written by our own pure-Python OCF codec (avro_codec.py) — one
-    file per partition via mapInPandas, then scanned back with the same
-    codec in one job on the CLI's planner (``read_avro_dir``). See
+    file per partition, a mapInArrow over ``avro_datasource.write_part``
+    (``write_avro_dir``), then scanned back with the same codec in one
+    job on the CLI's planner (``read_avro_dir``). See
     sources/avro_pipeline.py for the full pipeline surface.
     """
     from .avro_pipeline import read_avro_dir, write_avro_dir
@@ -205,20 +204,10 @@ def ensure_text_fixtures(sf_dir: str) -> str:
     versioning rule — see avro_pipeline.ensure_avro_fixtures)."""
     import json
     import os
-    import shutil
 
     import pyarrow.parquet as pq
 
-    from .avro_pipeline import _CACHE_ROOT
-
-    root = os.path.join(
-        _CACHE_ROOT, os.path.basename(os.path.normpath(sf_dir)) + "_text_v2"
-    )
-    if os.path.isdir(root):
-        return root
-    os.makedirs(_CACHE_ROOT, exist_ok=True)
-    tmp = tempfile.mkdtemp(prefix=".text_fixtures_", dir=_CACHE_ROOT)
-    try:
+    def build(tmp: str) -> None:
         docs = (
             pq.read_table(f"{sf_dir}/documents.parquet")
             .to_pandas()
@@ -240,14 +229,8 @@ def ensure_text_fixtures(sf_dir: str) -> str:
             ["c_custkey", "c_name", "c_nationkey", "c_acctbal", "c_mktsegment"]
         ]
         cust.to_csv(os.path.join(tmp, "customer.csv"), index=False)
-        try:
-            os.rename(tmp, root)
-        except OSError:
-            pass  # concurrent generator won; equivalent tree
-        return root
-    finally:
-        if os.path.isdir(tmp):
-            shutil.rmtree(tmp, ignore_errors=True)
+
+    return _cached_tree(sf_dir, "text_v2", ("documents", "customer"), build)
 
 
 @register(
@@ -435,29 +418,18 @@ def scan_jsonl_permissive(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
     import shutil
 
-    from .avro_pipeline import _CACHE_ROOT
-
     text_root = ensure_text_fixtures(sf_dir)
-    root = os.path.join(
-        _CACHE_ROOT, os.path.basename(os.path.normpath(sf_dir)) + "_textbad_v1"
-    )
-    if not os.path.isdir(root):
-        tmp = tempfile.mkdtemp(prefix=".textbad_", dir=_CACHE_ROOT)
-        try:
-            shutil.copy(
-                os.path.join(text_root, "documents.jsonl"),
-                os.path.join(tmp, "documents.jsonl"),
-            )
-            with open(os.path.join(tmp, "documents.jsonl"), "a") as fo:
-                fo.write('{"doc_id": 999999, "text": "torn line\n')
-                fo.write("not json at all }{\n")
-            try:
-                os.rename(tmp, root)
-            except OSError:
-                pass
-        finally:
-            if os.path.isdir(tmp):
-                shutil.rmtree(tmp, ignore_errors=True)
+
+    def build(tmp: str) -> None:
+        shutil.copy(
+            os.path.join(text_root, "documents.jsonl"),
+            os.path.join(tmp, "documents.jsonl"),
+        )
+        with open(os.path.join(tmp, "documents.jsonl"), "a") as fo:
+            fo.write('{"doc_id": 999999, "text": "torn line\n')
+            fo.write("not json at all }{\n")
+
+    root = _cached_tree(sf_dir, "textbad_v1", ("documents",), build)
     df = (
         spark.read.schema(
             "doc_id long, text string, lang string, source string, "
@@ -515,34 +487,18 @@ def _ensure_orc_fixture(sf_dir: str) -> str:
     """ORC rendition of (o_orderkey, o_orderstatus, o_totalprice) —
     same versioned-cache discipline as ensure_text_fixtures (_orc_v1)."""
     import os
-    import shutil
 
     import pyarrow.parquet as pq
     from pyarrow import orc as pa_orc
 
-    from .avro_pipeline import _CACHE_ROOT
-
-    root = os.path.join(
-        _CACHE_ROOT, os.path.basename(os.path.normpath(sf_dir)) + "_orc_v1"
-    )
-    if os.path.isdir(root):
-        return root
-    os.makedirs(_CACHE_ROOT, exist_ok=True)
-    tmp = tempfile.mkdtemp(prefix=".orc_fixture_", dir=_CACHE_ROOT)
-    try:
+    def build(tmp: str) -> None:
         t = pq.read_table(
             f"{sf_dir}/orders.parquet",
             columns=["o_orderkey", "o_orderstatus", "o_totalprice"],
         )
         pa_orc.write_table(t, os.path.join(tmp, "orders.orc"))
-        try:
-            os.rename(tmp, root)
-        except OSError:
-            pass  # concurrent generator won; equivalent tree
-        return root
-    finally:
-        if os.path.isdir(tmp):
-            shutil.rmtree(tmp, ignore_errors=True)
+
+    return _cached_tree(sf_dir, "orc_v1", ("orders",), build)
 
 
 @register(
@@ -656,20 +612,15 @@ def scan_parquet_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     partitions' bytes, and the same pruning is what join_dpp extends
     to runtime join keys. The partition column comes back via
     partition discovery; data columns stay pruned to the projection."""
-    import os
-
-    from .avro_pipeline import _CACHE_ROOT
-
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    root = os.path.join(_CACHE_ROOT, f"{tag}_pqpart_v1")
     laid_out = table(spark, sf_dir, "orders").withColumn(
         "year", F.year("o_orderdate")
     )
-    if not os.path.isdir(root):
-        laid_out.write.partitionBy("year").mode("overwrite").parquet(
-            root + ".tmp"
-        )
-        os.rename(root + ".tmp", root)
+    root = _cached_tree(
+        sf_dir,
+        "pqpart_v1",
+        ("orders",),
+        lambda tmp: laid_out.write.partitionBy("year").mode("overwrite").parquet(tmp),
+    )
     # Explicit schema: an all-empty layout (zero input rows) has no
     # data files to infer from, and partition discovery still prunes
     # on `year` exactly as with inference.

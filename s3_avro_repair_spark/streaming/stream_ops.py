@@ -38,9 +38,6 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from ..plans.registry import register
 from ..tables import table
 
-_REPO_ROOT = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-_CACHE_ROOT = os.path.join(_REPO_ROOT, ".avro_cache")
-
 EVENTS_STREAM_SCHEMA = (
     "event_id long, ts timestamp, user_id long, event_type string, "
     "value double, props string"
@@ -70,15 +67,11 @@ def ensure_stream_dirs(sf_dir: str) -> str:
     """
     import duckdb
 
-    root = os.path.join(
-        _CACHE_ROOT, os.path.basename(os.path.normpath(sf_dir)) + "_stream_v2"
-    )
-    if os.path.isdir(root):
-        return root
-    os.makedirs(_CACHE_ROOT, exist_ok=True)
-    tmp = root + f".tmp-{os.getpid()}"
-    os.makedirs(tmp)
-    try:
+    # the E module registers ops: import it here, not at module load,
+    # so the registry keeps its module order
+    from ..sources.avro_pipeline import _cached_tree
+
+    def build(tmp: str) -> None:
         con = duckdb.connect()
         # A table is one file at fixture scale and a DIRECTORY of parts
         # at production scale — glob when the path is a dir so the
@@ -133,14 +126,8 @@ def ensure_stream_dirs(sf_dir: str) -> str:
                 p = os.path.join(d, f"{dst}.parquet")
                 shutil.copy(os.path.join(tmp, src), p)
                 os.utime(p, (base_mtime + i * 60, base_mtime + i * 60))
-        try:
-            os.rename(tmp, root)
-        except OSError:
-            pass
-        return root
-    finally:
-        if os.path.isdir(tmp):
-            shutil.rmtree(tmp, ignore_errors=True)
+
+    return _cached_tree(sf_dir, "stream_v2", ("events",), build)
 
 
 def _run_stream(sdf_writer_builder, name: str) -> None:

@@ -31,10 +31,10 @@ BOUNDED_COLLECT_SITES = {
     "operators/aggregations.py": (3, "5 distinct priorities (agg_collect); rank<=k rows and 3 k-sized sketches (agg_distinct_kmv)"),
     "operators/llm.py": (1, "per-document segment list (dedup_segments)"),
     "operators/text_quality.py": (1, "rank<=1024 bucket members (dedup_simhash)"),
-    "operators/graph.py": (1, "k=4 centroids (kmeans_quantized)"),
+    "operators/graph.py": (1, "64 dims per centroid of k=4 (kmeans_quantized) or k=8 (dedup_semantic): the one Lloyd update, _lloyd_two_rounds"),
     "operators/composite.py": (1, "per-document segment list (q_corpus_pipeline)"),
     "operators/extensions.py": (2, "per-document span list (<= len/16 structs) and per-document kept-token arrays, one per delivery copy (dedup_substring_apply r10 doc-level rework — same document-length bound as the single site it replaced)"),
-    "operators/curation.py": (4, "one 127-char hex prefix per delivery copy (dedup_phash r11 in-row signature — the 63-coefficient median collect it replaced is now in-row); 64 centroid dims per cid (dedup_semantic Lloyd); 24-row trend frame + one-per-day seasonal list (ts_seasonal_decompose)"),
+    "operators/curation.py": (3, "one 127-char hex prefix per delivery copy (dedup_phash r11 in-row signature — the 63-coefficient median collect it replaced is now in-row); 24-row trend frame + one-per-day seasonal list (ts_seasonal_decompose)"),
 }
 
 EXACT_PERCENTILE = re.compile(

@@ -171,3 +171,42 @@ def test_warm_build_loads_tables_without_a_job(spark, sf_dir, name):
     op.fn(spark, sf_dir)
     _, jobs = _jobs(spark, lambda: op.fn(spark, sf_dir))
     assert jobs == _WARM_BUILD_JOBS[name]
+
+
+# The ops built on the shared dataflow helpers (the substring span
+# pipeline, the banded Hamming pairing, int8 Lloyd, the query-panel
+# cosines, the as-of union and the recall row) or on the fixture-tree
+# cache, with the Spark jobs a warm build launches. A localCheckpoint
+# over a shuffle runs that shuffle's map stage at build under AQE, so a
+# barrier moved into, out of or across a helper changes its op's count.
+_HELPER_BUILD_JOBS = {
+    "dedup_substring": 0,
+    "dedup_substring_apply": 0,
+    "dedup_phash": 2,
+    "dedup_ahash": 2,
+    "dedup_semantic": 7,
+    "kmeans_quantized": 0,
+    "sim_knn_topk": 0,
+    "sim_range_search": 0,
+    "join_asof": 0,
+    "join_asof_forward": 0,
+    "join_asof_tolerance": 0,
+    "join_asof_nearest": 0,
+    "sim_ann_lsh_recall": 0,
+    "sim_ann_ivf_recall": 24,
+    "scan_jsonl": 0,
+    "scan_csv": 0,
+    "scan_jsonl_permissive": 0,
+    "scan_orc": 0,
+    "scan_parquet_partitioned": 0,
+    "join_dpp": 0,
+    "sink_avro": 2,
+}
+
+
+@pytest.mark.parametrize("name", sorted(_HELPER_BUILD_JOBS))
+def test_warm_build_jobs_of_helper_ops(spark, sf_dir, name):
+    op = load_all()[name]
+    op.fn(spark, sf_dir)
+    _, jobs = _jobs(spark, lambda: op.fn(spark, sf_dir))
+    assert jobs == _HELPER_BUILD_JOBS[name]

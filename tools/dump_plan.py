@@ -5,6 +5,14 @@ Usage: python tools/dump_plan.py <out_dir> <suffix> <op_name> [op_name ...]
 Writes {out_dir}/{op}_{suffix}.txt for each op — the plan-evidence
 files the optimization rounds commit under plans/rN/.
 
+Plans are written normalized: expression ids are renumbered in order
+of first appearance (``#0``, ``#1``, ...; a long's ``L`` suffix
+stays), ``plan_id=`` values and ``RDD[n]`` ids become ``plan_id=_`` and
+``RDD[_]``, and the checkout's own path becomes ``<repo>``. So dumps
+of the same ops from two checkouts compare with ``diff -r``: a
+difference is a difference of plan shape, not of the order in which
+the process minted ids.
+
 SPARK_GRAFT_DUMP_NOCKPT=1 makes localCheckpoint a no-op for the dump
 ONLY, so the FULL pipeline (normally truncated to `Scan ExistingRDD`
 at every materialization barrier) is visible in the plan evidence.
@@ -14,9 +22,22 @@ Dump-time introspection only — bench/driver paths never set it.
 from __future__ import annotations
 
 import os
+import re
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+_REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, _REPO)
+
+
+def normalize(plan: str) -> str:
+    """``plan`` with process-order ids replaced (see the module doc)."""
+    ids: dict[str, int] = {}
+    plan = re.sub(
+        r"#(\d+)", lambda m: f"#{ids.setdefault(m.group(1), len(ids))}", plan
+    )
+    plan = re.sub(r"plan_id=\d+", "plan_id=_", plan)
+    plan = re.sub(r"RDD\[\d+\]", "RDD[_]", plan)
+    return plan.replace(_REPO, "<repo>")
 
 
 def main() -> int:
@@ -43,8 +64,10 @@ def main() -> int:
             print(f"unknown op: {name}", file=sys.stderr)
             continue
         df = op.fn(spark, sf_dir)
-        plan = df._sc._jvm.PythonSQLUtils.explainString(
-            df._jdf.queryExecution(), "formatted"
+        plan = normalize(
+            df._sc._jvm.PythonSQLUtils.explainString(
+                df._jdf.queryExecution(), "formatted"
+            )
         )
         path = os.path.join(out_dir, f"{name}_{suffix}.txt")
         with open(path, "w") as f:
