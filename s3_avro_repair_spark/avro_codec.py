@@ -1150,8 +1150,12 @@ class SalvageResult:
         )
 
     @property
-    def repairable(self) -> bool:
-        return self.header_ok
+    def status(self) -> str:
+        """``healthy``; ``repaired`` when the header survived but some
+        block did not; ``unrepairable`` when the header is destroyed."""
+        if self.healthy:
+            return "healthy"
+        return "repaired" if self.header_ok else "unrepairable"
 
 
 class ByteWindow:

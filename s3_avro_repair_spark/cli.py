@@ -13,10 +13,10 @@ rename, the engine-side analog of the reference's delete+swap at
 :152-153).
 
 The job's shape: the driver lists the tree (metadata only, no Spark
-job) and cuts it into units. The unit size is Spark's own split size,
-``min(maxPartitionBytes, max(openCostInBytes, bytes / bins))``; a file
-at or below it is one unit, a larger one is cut into equal byte
-ranges, so the job's wall follows bytes / cores rather than the
+job) and cuts it into units by the unit rule every byte-range Avro
+read shares (``avro_jobs.spark_units``, Spark's own split size): a file
+at or below the unit size is one unit, a larger one is cut into equal
+byte ranges, so the job's wall follows bytes / cores rather than the
 largest file. The units are packed into byte-balanced bins, and a
 JVM-only ``range`` source feeds one bin to each task — the planner
 every batch Avro op runs on (``sources/avro_jobs.py``). A task walks
@@ -51,12 +51,7 @@ import math
 import os
 import sys
 
-from .sources.avro_jobs import (  # noqa: F401 (_pack_bins: re-export)
-    _list_container_files_sized,
-    _n_bins,
-    _pack_bins,
-    run_units,
-)
+from .sources.avro_jobs import _list_container_files_sized, run_units, spark_units, split_units
 
 # Display bound for the non-healthy detail table: a CLI prints a page,
 # not a fleet. The per-status counters always cover the full listing.
@@ -78,30 +73,6 @@ _STATUSES = ("healthy", "repaired", "unrepairable")
 _UNIT_FIELDS = (("path", "string"), ("size", "long")) + _REPORT_FIELDS
 
 
-def _units(spark, sizes: list[int]) -> list[tuple[int, int, int]]:
-    """``(file index, start, end)`` byte ranges covering every file. The
-    unit size is Spark's own file-split rule (``FilePartition.maxSplitBytes``):
-    ``min(maxPartitionBytes, max(openCostInBytes, ceil(bytes / bins)))``
-    with as many bins as the input's bytes want, whatever the file count.
-    A file at or below it stays whole; a larger one is cut into
-    ``ceil(size / unit)`` equal ranges."""
-    conf = spark._jsparkSession.sessionState().conf()
-    total = sum(sizes)
-    bins = _n_bins(spark, math.inf, total)
-    unit = max(
-        1,
-        min(
-            conf.filesMaxPartitionBytes(),
-            max(conf.filesOpenCostInBytes(), math.ceil(total / bins)),
-        ),
-    )
-    units = []
-    for i, size in enumerate(sizes):
-        k = max(1, math.ceil(size / unit))
-        units.extend((i, size * j // k, size * (j + 1) // k) for j in range(k))
-    return units
-
-
 def _run_unit(
     path: str, start: int, end: int, size: int, root: str, replace: bool, out_dir: str | None
 ) -> tuple:
@@ -120,31 +91,25 @@ def _run_unit(
     written = ""
     with fs_.open_input_file(local) as f:
         res = salvage_range(f, size, start, end)
-        if res.healthy:
-            status = "healthy"
-        elif not res.header_ok:
-            status = "unrepairable"
-        else:
-            status = "repaired"
-            if start == 0 and end == size and (replace or out_dir):
-                if replace:
-                    # Write back over the original via ITS OWN
-                    # filesystem (the reference's re-upload).
-                    out_fs, out_path = fs_, local
-                else:
-                    # Preserve the path relative to --path (a flat
-                    # basename layout silently collapses same-named
-                    # files from different subdirectories).
-                    rel = posixpath.relpath(local, root)
-                    out_fs, out_path = fsio.resolve(fsio.join(out_dir, rel))
-                    parent = posixpath.dirname(out_path)
-                    if parent:
-                        out_fs.create_dir(parent, recursive=True)
-                written, _ = fsio.atomic_stream_records(
-                    out_path, lambda out: write_salvaged(f, out, res), filesystem=out_fs
-                )
+        if res.status == "repaired" and start == 0 and end == size and (replace or out_dir):
+            if replace:
+                # Write back over the original via ITS OWN filesystem
+                # (the reference's re-upload).
+                out_fs, out_path = fs_, local
+            else:
+                # Preserve the path relative to --path (a flat basename
+                # layout silently collapses same-named files from
+                # different subdirectories).
+                rel = posixpath.relpath(local, root)
+                out_fs, out_path = fsio.resolve(fsio.join(out_dir, rel))
+                parent = posixpath.dirname(out_path)
+                if parent:
+                    out_fs.create_dir(parent, recursive=True)
+            written, _ = fsio.atomic_stream_records(
+                out_path, lambda out: write_salvaged(f, out, res), filesystem=out_fs
+            )
     return (
-        path, size, posixpath.basename(local), status, res.n_blocks_ok,
+        path, size, posixpath.basename(local), res.status, res.n_blocks_ok,
         res.n_blocks_resynced, res.n_blocks_bad, res.n_records, written,
     )
 
@@ -181,11 +146,7 @@ def _build_report(spark, path: str, replace: bool, out_dir: str | None):
     files = _list_container_files_sized(path)
     if not files:
         return None, 0
-    units = [
-        (files[i][0], start, end, files[i][1])
-        for i, start, end in _units(spark, [size for _, size in files])
-    ]
-    return _unit_report(spark, units, root, replace, out_dir), len(files)
+    return _unit_report(spark, spark_units(spark, files), root, replace, out_dir), len(files)
 
 
 def _merge_units(rows):
@@ -229,7 +190,7 @@ def _rewrite_split(spark, files, root: str, replace: bool, out_dir: str):
     redo = files.filter((pc.field("units") > 1) & (pc.field("status") == "repaired"))
     if not redo.num_rows:
         return files
-    units = [(p, 0, s, s) for p, s in zip(redo["path"].to_pylist(), redo["size"].to_pylist())]
+    units = split_units(zip(redo["path"].to_pylist(), redo["size"].to_pylist()), math.inf)
     done = dict(
         _unit_report(spark, units, root, replace, out_dir).select("path", "written_to").collect()
     )

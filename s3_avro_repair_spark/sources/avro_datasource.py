@@ -2,11 +2,9 @@
 
 `spark.read.format("avro_ocf")` — the user-facing DataSource-V2 format
 for the repo's from-spec Avro container reader. The batch Avro ops run
-on the repair CLI's planner instead (``avro_jobs``; a Python
-DataSource query adds its planner calls to a ``range`` + ``mapInArrow``
-job's fixed cost: 0.11 s against 0.09 s over one small container with
-an explicit schema on 4 local cores), but both read blocks through the
-one strict read defined here (:func:`read_container`, over
+on the repair CLI's planner instead (``avro_jobs``), but both cut files
+with the one cutter (``avro_jobs.split_units``) and read blocks through
+the one strict read defined here (:func:`read_container`, over
 ``avro_codec``'s salvage walk). Here the scan appears as a first-class
 source in the plan, schema inference is self-describing (read from the
 first container's embedded header, the reference's schema-agnostic
@@ -16,9 +14,13 @@ planning is explicit: BYTE-RANGE splits over each container
 task resyncing to the first 16-byte sync marker at/after its range
 start and decoding blocks whose header starts inside the range — the
 Hadoop/Avro splittable-input idiom, so one 10 GB container is
-size/split tasks, not one. Reads stream: bounded chunked reads,
-one RecordBatch yielded per ~`_BATCH_ROWS` records, never a
-whole-file buffer (the r9 verdict's one flagged scale-killer).
+size/split tasks, not one. The unit is the ``split_size_bytes``
+option, not Spark's split size as on the planner: Spark's planner
+worker (``pyspark/sql/worker/create_data_source.py``) receives only the
+read's options, not the session conf or the core count. Reads stream:
+bounded chunked reads, one RecordBatch yielded per ~`_BATCH_ROWS`
+records, never a whole-file buffer, so a task's memory does not grow
+with the container.
 
 Executors import this module by name (pyspark pickles the class), so
 on a real cluster the package ships as a wheel/zip via
@@ -34,8 +36,7 @@ of its stock ``pyspark.daemon``, which it reuses across calls. Each
 call starts with ``importlib.invalidate_caches()``, which re-reads the
 zip directories of ``pyspark.zip``, the py4j zip and the spark-core jar
 (0.12–0.16 s). Importing this module in such a worker installs
-``_pydaemon``'s hook, so the calls after it keep those directories: the
-query above took 0.40–0.57 s before.
+``_pydaemon``'s hook, so the calls after it keep those directories.
 """
 
 from __future__ import annotations
@@ -59,7 +60,13 @@ from pyspark.sql.datasource import (
     WriterCommitMessage,
 )
 
-from .avro_jobs import _BATCH_ROWS, _list_container_files_sized, _pa_type, arrow_batches
+from .avro_jobs import (
+    _BATCH_ROWS,
+    _list_container_files_sized,
+    _pa_type,
+    arrow_batches,
+    split_units,
+)
 
 _PRIMITIVE_DDL = {
     "boolean": "boolean",
@@ -118,21 +125,14 @@ class AvroOCFReader(DataSourceReader):
             raise ValueError("avro_ocf: split_size_bytes must be positive")
 
     def partitions(self):
-        """Byte-range splits from the listing's sizes alone — no data
+        """One partition per unit of ``avro_jobs.split_units`` at
+        ``split_size_bytes``, from the listing's sizes alone — no data
         read at plan time. Block boundaries are found at READ time by
         each task resyncing on the container's sync marker (the
         splittable-format idiom), so a skewed fleet of containers plans
         into even ~split-sized tasks instead of one task per file."""
-        parts = []
-        for f, size in _list_container_files_sized(self._path):
-            start = 0
-            while True:
-                end = min(start + self._split, size)
-                parts.append(InputPartition((f, start, end, size)))
-                start = end
-                if start >= size:
-                    break
-        return parts
+        files = _list_container_files_sized(self._path)
+        return [InputPartition(u) for u in split_units(files, self._split)]
 
     def read(self, partition):
         if partition is None:

@@ -1,17 +1,20 @@
 """One job shape for every batch pass over Avro container files: the
 E-group ops, the sinks' read-back, the batch ingest and the repair CLI.
 
-The driver lists the files (metadata only, no Spark job) and the caller
-turns them into units ``(path, start, end, size)``: whole files, or
-byte ranges of a large one. The units are packed into byte-balanced
-bins, and a JVM-only ``range`` source feeds one bin id to each task
-(``mapInArrow``). A task runs the caller's per-unit function on each
-unit of its bin, reading the file itself through ``fsio``, and ships
-the rows it returns as Arrow batches. No file byte crosses a shuffle or
-the Arrow boundary: bin ids go in, result rows come out.
+The driver lists the files (metadata only, no Spark job) and cuts them
+into units ``(path, start, end, size)`` (:func:`split_units`): whole
+files for a per-file answer, or byte ranges of the unit size, which a
+strict read or a count-only walk serves alike by resyncing on the sync
+marker. The units are packed into byte-balanced bins, and a JVM-only
+``range`` source feeds one bin id to each task (``mapInArrow``). A task
+runs the caller's per-unit function on each unit of its bin, reading
+the file itself through ``fsio``, and ships the rows it returns as
+Arrow batches. No file byte crosses a shuffle or the Arrow boundary:
+bin ids go in, result rows come out.
 
-The driver-side listing and the typed Arrow batching live here too, so
-the ``avro_ocf`` DataSource lists and ships rows the same way.
+The driver-side listing, the cutter and the typed Arrow batching live
+here too, so the ``avro_ocf`` DataSource lists, cuts and ships rows the
+same way.
 """
 
 from __future__ import annotations
@@ -48,6 +51,32 @@ def _n_bins(spark, n_units: float, total_bytes: int) -> int:
     return min(n_units, want)
 
 
+def split_units(files, unit: float) -> list[tuple[str, int, int, int]]:
+    """The units ``(path, start, end, size)`` of ``files`` ``(path,
+    size)``: a file at or below ``unit`` bytes stays whole, a larger one
+    is cut into ``ceil(size / unit)`` equal byte ranges that tile it."""
+    units = []
+    for path, size in files:
+        k = max(1, math.ceil(size / unit))
+        units.extend((path, size * j // k, size * (j + 1) // k, size) for j in range(k))
+    return units
+
+
+def spark_units(spark, files) -> list[tuple[str, int, int, int]]:
+    """:func:`split_units` at Spark's own file-split size
+    (``FilePartition.maxSplitBytes``): ``min(maxPartitionBytes,
+    max(openCostInBytes, ceil(bytes / bins)))`` with as many bins as the
+    input's bytes want, whatever the file count."""
+    conf = spark._jsparkSession.sessionState().conf()
+    total = sum(size for _, size in files)
+    bins = _n_bins(spark, math.inf, total)
+    unit = min(
+        conf.filesMaxPartitionBytes(),
+        max(conf.filesOpenCostInBytes(), math.ceil(total / bins)),
+    )
+    return split_units(files, max(1, unit))
+
+
 def run_units(spark, units: list[tuple[str, int, int, int]], fn, ddl: str):
     """The lazy DataFrame of ``ddl`` whose rows are ``fn(path, start,
     end, size)``'s, over every unit: an iterable of tuples positional
@@ -73,7 +102,7 @@ def run_units(spark, units: list[tuple[str, int, int, int]], fn, ddl: str):
 def run_files(spark, path: str, fn, ddl: str):
     """:func:`run_units` over the container files under ``path``, each
     whole: ``fn(path, size)`` gives a file's rows."""
-    units = [(p, 0, size, size) for p, size in _list_container_files_sized(path)]
+    units = split_units(_list_container_files_sized(path), math.inf)
     return run_units(spark, units, lambda p, _start, _end, size: fn(p, size), ddl)
 
 

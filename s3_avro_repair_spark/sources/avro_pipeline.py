@@ -16,11 +16,13 @@ Reference anchors (``/root/reference/src/services/repair-avro.ts``):
   abort-the-run (contrast the reference's single try/catch :72-74)
 
 Scale design: every op is ONE Spark job on the repair CLI's planner
-(``avro_jobs``): the driver lists the files, packs them into
-byte-balanced bins, and each task reads, validates or repairs the files
-of its bin and ships Arrow batches — no file byte is shuffled, no
-driver buffering, no whole-directory reads. Each op's per-file body is
-a plain function of one file; a corrupt file yields a report row
+(``avro_jobs``): the driver lists the files, cuts them into units,
+packs those into byte-balanced bins, and each task reads, validates or
+repairs the units of its bin and ships Arrow batches — no file byte is
+shuffled, no driver buffering, no whole-directory reads. A record scan
+(``read_avro_dir``) cuts a large file into byte ranges by the CLI's
+unit rule; a per-file answer (validate, repair, stats) is a plain
+function of one whole file, and a corrupt file yields a report row
 instead of killing the job.
 
 The spark-avro jar is absent from this classpath, so scan/write use the
@@ -37,6 +39,7 @@ import re
 import shutil
 import tempfile
 from collections.abc import Callable
+from functools import partial
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -56,7 +59,7 @@ from ..avro_codec import (
 from ..exprs import dsum
 from ..plans.registry import register
 from ..tables import fixture_token, table
-from .avro_jobs import run_files
+from .avro_jobs import _list_container_files_sized, run_files, run_units, spark_units
 
 ORDERS_SCHEMA = {
     "type": "record",
@@ -398,20 +401,19 @@ def read_avro_dir(
     spark: SparkSession, path: str, schema: dict, spark_schema: str
 ) -> DataFrame:
     """Strict distributed Avro scan, one Spark job over the container
-    files under ``path`` (``avro_jobs.run_files``): every record read as
-    ``schema`` (Avro schema resolution; the writer's own decoder when
+    files under ``path``, cut into byte ranges by Spark's split size
+    (``avro_jobs.spark_units``, the CLI's unit rule): every record read
+    as ``schema`` (Avro schema resolution; the writer's own decoder when
     they are equal), columns named positionally by ``spark_schema`` (a
     logical-type column can surface under a clearer name, …_us).
     Corruption fails the task (scan semantics; use avro_validate /
-    avro_repair for tolerant reads). Each task reads its files through
-    the DataSource's bounded window (``avro_datasource.read_container``),
-    never a whole file."""
+    avro_repair for tolerant reads). Each task reads the blocks its
+    ranges own through the DataSource's bounded window
+    (``avro_datasource.read_container``), never a whole file."""
     from .avro_datasource import read_container
 
-    def scan(p, size):
-        return read_container(p, 0, size, size, schema)
-
-    return run_files(spark, path, scan, spark_schema)
+    units = spark_units(spark, _list_container_files_sized(path))
+    return run_units(spark, units, partial(read_container, reader=schema), spark_schema)
 
 
 def write_avro_dir(
@@ -520,11 +522,7 @@ def _salvage(path: str, size: int) -> SalvageResult:
 def _outcome(res: SalvageResult) -> tuple[str, int]:
     """(status, lost blocks) of a salvage: -1 lost for an unrepairable
     (header-less) file."""
-    if res.healthy:
-        return "healthy", 0
-    if res.repairable:
-        return "repaired", res.n_blocks_bad
-    return "unrepairable", -1
+    return res.status, -1 if res.status == "unrepairable" else res.n_blocks_bad
 
 
 def _repair_row(path: str, size: int) -> list[tuple]:
@@ -646,8 +644,9 @@ def avro_scan_logical(spark: SparkSession, sf_dir: str) -> DataFrame:
     both natively; a scan that surfaced raw bytes/ints would be
     dropping declared semantics on the floor.
 
-    The rendering runs in the same per-file read that decodes the
-    values — no second Python pass, no shuffle. Output is canonical
+    The rendering runs in the same read that decodes the values — each
+    task's byte ranges, cut like ``read_avro_dir``'s — with no second
+    Python pass and no shuffle. Output is canonical
     strings on BOTH engines (the repo's no-raw-DATE/DECIMAL output
     discipline): Python ``Decimal(unscaled).scaleb(-2)`` prints exactly
     like DuckDB's ``DECIMAL(18,2) -> VARCHAR``, and ISO dates are
@@ -666,19 +665,19 @@ def avro_scan_logical(spark: SparkSession, sf_dir: str) -> DataFrame:
     root = ensure_avro_fixtures(sf_dir)
     _, price_t, date_t = (f["type"] for f in TYPED_ORDERS_SCHEMA["fields"])
 
-    def scan(path, size):
+    def scan(*unit):
         from .avro_datasource import read_container
 
-        for key, price, day in read_container(path, 0, size, size, TYPED_ORDERS_SCHEMA):
+        for key, price, day in read_container(*unit, TYPED_ORDERS_SCHEMA):
             yield (
                 key,
                 str(materialize_logical(price_t, price)),
                 materialize_logical(date_t, day).isoformat(),
             )
 
-    return run_files(
-        spark, os.path.join(root, "typed"), scan,
-        "o_orderkey long, totalprice_dec string, orderdate_day string",
+    units = spark_units(spark, _list_container_files_sized(os.path.join(root, "typed")))
+    return run_units(
+        spark, units, scan, "o_orderkey long, totalprice_dec string, orderdate_day string"
     )
 
 

@@ -114,7 +114,7 @@ def test_roundtrip_exact(data):
 
 def test_truncate_salvages_all_blocks_before_cut(data):
     res = salvage_ocf(inject_truncate(data))
-    assert res.header_ok and not res.healthy and res.repairable
+    assert res.header_ok and not res.healthy and res.status == "repaired"
     # cut lands mid-block-5: blocks 0-4 fully salvaged, nothing invented
     assert res.n_blocks_ok == 5 and res.n_blocks_bad == 1
     assert keyset(res.records) == keyset(RECS[: 5 * BLOCK])
@@ -122,7 +122,7 @@ def test_truncate_salvages_all_blocks_before_cut(data):
 
 def test_flip_loses_exactly_one_block(data):
     res = salvage_ocf(inject_flip(data))
-    assert res.header_ok and not res.healthy and res.repairable
+    assert res.header_ok and not res.healthy and res.status == "repaired"
     assert res.n_blocks_bad == 1
     # injured block is block 0; every other block survives intact
     assert keyset(res.records) == keyset(RECS[BLOCK:])
@@ -130,7 +130,7 @@ def test_flip_loses_exactly_one_block(data):
 
 def test_bad_sync_recovers_all_records(data):
     res = salvage_ocf(inject_bad_sync(data))
-    assert res.header_ok and not res.healthy and res.repairable
+    assert res.header_ok and not res.healthy and res.status == "repaired"
     # payload decoded byte-exactly -> records kept, marker resynced
     assert res.n_blocks_bad == 0 and res.n_blocks_resynced == 1
     assert keyset(res.records) == keyset(RECS)
@@ -355,7 +355,7 @@ def test_passthrough_repair_memory_is_bounded(tmp_path, monkeypatch):
 
 def test_bad_header_is_unrepairable(data):
     res = salvage_ocf(inject_bad_header(data))
-    assert not res.header_ok and not res.repairable
+    assert not res.header_ok and res.status == "unrepairable"
     assert res.records == []
     with pytest.raises(CorruptHeader):
         read_ocf(inject_bad_header(data))
@@ -1148,7 +1148,7 @@ def test_zstandard_roundtrip_with_stub_binding(monkeypatch):
     schema, back = read_ocf(blob)
     assert back == RECS and schema == SCHEMA
     res = salvage_ocf(inject_flip(blob))
-    assert res.header_ok and res.repairable and res.n_blocks_bad == 1
+    assert res.header_ok and res.status == "repaired" and res.n_blocks_bad == 1
     assert keyset(res.records) == keyset(RECS[BLOCK:])
 
 
@@ -1201,7 +1201,7 @@ def test_zstandard_streaming_frame_fallback(monkeypatch):
     assert back == RECS and schema == SCHEMA
     # Damage still classifies as CorruptBlock through the fallback.
     res = salvage_ocf(inject_flip(blob))
-    assert res.header_ok and res.repairable and res.n_blocks_bad == 1
+    assert res.header_ok and res.status == "repaired" and res.n_blocks_bad == 1
 
 
 # --- the count-only decoder's block matcher ---------------------------------

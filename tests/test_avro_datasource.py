@@ -239,36 +239,75 @@ def test_write_refuses_complex_columns(spark, tmp_path):
         df.write.format(fmt).mode("overwrite").save(str(tmp_path / "o"))
 
 
-def test_block_range_splits_byte_identical(spark, tmp_path):
+def _codecs() -> list[str]:
+    """Every codec ``write_ocf`` writes here: zstandard only with a
+    zstd binding importable."""
+    from s3_avro_repair_spark.avro_codec import CorruptHeader, _zstd_module
+
+    codecs = ["null", "deflate", "snappy", "bzip2", "xz"]
+    try:
+        _zstd_module()
+    except CorruptHeader:
+        return codecs
+    return codecs + ["zstandard"]
+
+
+_SPLIT_CONFS = ("spark.sql.files.maxPartitionBytes", "spark.sql.files.openCostInBytes")
+
+
+def _split_scan(spark, d, via: str, split: int | None = None):
+    """The strict scan of the containers under ``d`` through ``via``,
+    cut into units of ``split`` bytes (``None``: the default unit). The
+    DataSource takes the unit as its ``split_size_bytes`` option;
+    ``read_avro_dir`` cuts by Spark's split size, which is exactly
+    ``split`` with maxPartitionBytes = openCostInBytes = ``split``."""
+    ddl = "k long, s string, x double"
+    if via == "datasource":
+        rd = spark.read.format(mount(spark)).schema(ddl)
+        if split:
+            rd = rd.option("split_size_bytes", split)
+        return rd.load(str(d))
+    from s3_avro_repair_spark.sources.avro_pipeline import read_avro_dir
+
+    if split:
+        for key in _SPLIT_CONFS:
+            spark.conf.set(key, str(split))
+    try:
+        return read_avro_dir(spark, str(d), SCHEMA, ddl)
+    finally:
+        for key in _SPLIT_CONFS:
+            spark.conf.unset(key)
+
+
+@pytest.mark.parametrize("via", ["datasource", "read_avro_dir"])
+def test_block_range_splits_byte_identical(spark, tmp_path, via):
     """A single large container plans as N>1 byte-range partitions
     (sync-marker resync at read time) and returns exactly the rows of
-    the whole-file read — the r10 splittable-reader contract. Small
-    block_records forces many blocks so ranges land mid-file, mid-block
-    and mid-sync; three split sizes sweep the boundary alignments."""
-    d = tmp_path / "big"
-    d.mkdir()
+    the whole-file read — the splittable-reader contract — for
+    every codec. Small block_records forces many blocks so ranges land
+    mid-file, mid-block and mid-sync; three split sizes sweep the
+    boundary alignments. ``read_avro_dir`` cuts the file by Spark's
+    split size, pinned to each split, so each range is a task of its
+    own."""
     recs = [
         {"k": i, "s": f"v{i}" if i % 3 else None, "x": i / 8.0}
         for i in range(5000)
     ]
-    raw = write_ocf_bytes(SCHEMA, recs, block_records=50)  # ~100 blocks
-    (d / "one.avro").write_bytes(raw)
-    fmt = mount(spark)
-    base = (
-        spark.read.format(fmt).schema("k long, s string, x double")
-        .load(str(d))
-    )
-    want = sorted(map(tuple, base.collect()))
-    assert base.rdd.getNumPartitions() == 1  # default split >= file size
-    for split in (4096, 1111, 333):
-        df = (
-            spark.read.format(fmt)
-            .schema("k long, s string, x double")
-            .option("split_size_bytes", split)
-            .load(str(d))
-        )
-        assert df.rdd.getNumPartitions() == -(-len(raw) // split)
-        assert sorted(map(tuple, df.collect())) == want
+    for codec in _codecs():
+        d = tmp_path / codec
+        d.mkdir()
+        raw = write_ocf_bytes(SCHEMA, recs, block_records=50, codec=codec)  # ~100 blocks
+        (d / "one.avro").write_bytes(raw)
+        base = _split_scan(spark, d, via)
+        want = sorted(map(tuple, base.collect()))
+        assert base.rdd.getNumPartitions() == 1  # default split >= file size
+        for split in (4096, 1111, 333):
+            df = _split_scan(spark, d, via, split)
+            if via == "datasource":
+                assert df.rdd.getNumPartitions() == -(-len(raw) // split)
+            else:
+                assert df.rdd.getNumPartitions() > 1
+            assert sorted(map(tuple, df.collect())) == want
 
 
 def test_block_range_split_streams_bounded_batches(spark, tmp_path):
@@ -301,7 +340,8 @@ def test_block_range_split_streams_bounded_batches(spark, tmp_path):
     assert sum(b.num_rows for b in batches) == 1000
 
 
-def test_corruption_fails_split_scans_too(spark, tmp_path):
+@pytest.mark.parametrize("via", ["datasource", "read_avro_dir"])
+def test_corruption_fails_split_scans_too(spark, tmp_path, via):
     """Strictness survives splitting: a torn payload byte fails the
     scan at every split size, exactly like the whole-file read."""
     from s3_avro_repair_spark.avro_codec import block_spans
@@ -315,16 +355,13 @@ def test_corruption_fails_split_scans_too(spark, tmp_path):
     raw[pstart + psize] ^= 0xFF  # tear a mid-file sync marker
     (d / "one.avro").write_bytes(bytes(raw))
     for split in (None, 1024):
-        rd = spark.read.format(mount(spark)).schema("k long, s string, x double")
-        if split:
-            rd = rd.option("split_size_bytes", split)
         # match= pins that the TORN SYNC is what failed the scan — a
         # bare raises(Exception) would also pass on any incidental
         # reader bug (TypeError, IndexError) and prove nothing
         # (ADVICE r10). CorruptBlock surfaces via PythonException, so
         # the message text is the practical pin.
         with pytest.raises(Exception, match="sync marker damaged|block@"):
-            rd.load(str(d)).count()
+            _split_scan(spark, d, via, split).count()
 
 
 @pytest.mark.parametrize("via", ["datasource", "read_avro_dir"])

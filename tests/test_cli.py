@@ -12,7 +12,8 @@ import pyarrow.parquet as pq
 import pytest
 
 from s3_avro_repair_spark.avro_codec import salvage_ocf
-from s3_avro_repair_spark.cli import _build_report, _n_bins, _pack_bins, _units, main
+from s3_avro_repair_spark.cli import _build_report, main
+from s3_avro_repair_spark.sources.avro_jobs import _n_bins, _pack_bins, spark_units
 from s3_avro_repair_spark.sources.avro_pipeline import ensure_avro_fixtures
 
 
@@ -285,12 +286,12 @@ def test_units_follow_spark_split_size(spark):
         # Spark's split size: 4500 bytes over max(cores, ceil(4500 /
         # maxPartitionBytes)) bins, at least openCostInBytes
         unit = min(1000, max(100, -(-4500 // max(cores, 5))))
-        units = _units(spark, sizes)
+        units = spark_units(spark, list(enumerate(sizes)))
     finally:
         spark.conf.unset("spark.sql.files.maxPartitionBytes")
         spark.conf.unset("spark.sql.files.openCostInBytes")
     for i, size in enumerate(sizes):
-        mine = [(s, e) for f, s, e in units if f == i]
+        mine = [(s, e) for f, s, e, _ in units if f == i]
         assert len(mine) == max(1, -(-size // unit))
         assert mine[0][0] == 0 and mine[-1][1] == size
         assert all(a[1] == b[0] for a, b in zip(mine, mine[1:]))
@@ -356,7 +357,8 @@ def test_split_units_match_unsplit_run(spark, sf_dir, tmp_path, mode):
     spark.conf.set("spark.sql.files.openCostInBytes", "1024")
     try:
         sizes = [p.stat().st_size for p in indir.iterdir()]
-        split = {f for f, s, e in _units(spark, sizes) if (s, e) != (0, sizes[f])}
+        units = spark_units(spark, list(enumerate(sizes)))
+        split = {f for f, s, e, _ in units if (s, e) != (0, sizes[f])}
         assert split == set(range(len(sizes)))
         text, rc, jobs = _main_jobs(spark, args_for(root))
         _, rc_count, jobs_count = _main_jobs(spark, ["--path", str(count_only)])
