@@ -30,6 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..exprs import l2_distance, normalized_text, word_trigrams
 from ..plans.registry import register, registered_oracle
 from ..sources.scans import scan_sample
 from ..tables import table
@@ -414,13 +415,7 @@ def dedup_near_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "doc_id", "lang", "source",
             F.size("tokens").alias("n_tok"),
-            F.expr(
-                "zip_with(zip_with(slice(tokens, 1, greatest(size(tokens)-2, 1)),"
-                " slice(tokens, 2, greatest(size(tokens)-2, 1)),"
-                " (x, y) -> concat_ws(' ', x, y)),"
-                " slice(tokens, 3, greatest(size(tokens)-2, 1)),"
-                " (x, y) -> concat_ws(' ', x, y))"
-            ).alias("shingles"),
+            word_trigrams("tokens", 1).alias("shingles"),
         )
         .localCheckpoint(eager=False)
     )
@@ -571,17 +566,9 @@ def _euclid_truth(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = e.select(
         F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("eb")
     )
-    dist = F.sqrt(
-        F.expr(
-            "aggregate(zip_with(ea, eb,"
-            " (x, y) -> (cast(x AS double) - cast(y AS double))"
-            "          * (cast(x AS double) - cast(y AS double))),"
-            " cast(0 AS double), (a, x) -> a + x)"
-        )
-    )
     scored = F.broadcast(q).join(
         c, F.col("neighbor_id") != F.col("query_id")
-    ).select("query_id", "neighbor_id", dist.alias("d"))
+    ).select("query_id", "neighbor_id", l2_distance("ea", "eb").alias("d"))
     from pyspark.sql import Window
 
     w = Window.partitionBy("query_id").orderBy("d", "neighbor_id")
@@ -726,14 +713,7 @@ def dedup_exact_normalized_counts(spark: SparkSession, sf_dir: str) -> DataFrame
     planted-duplicate case (tests/test_extensions.py) is the only
     place pairs exist."""
     d = table(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
-    norm = F.trim(
-        F.regexp_replace(
-            F.regexp_replace(F.lower(F.col("text")), "[^a-z0-9 ]+", " "),
-            " +",
-            " ",
-        )
-    )
-    return d.select(F.md5(norm).alias("h")).agg(
+    return d.select(F.md5(normalized_text("text")).alias("h")).agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.countDistinct("h").alias("n_groups"),
         (F.count(F.lit(1)) - F.countDistinct("h")).alias("n_collapsed"),

@@ -20,7 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..exprs import dec2, dsum
+from ..exprs import dec2, dsum, word_trigrams
 from ..plans.registry import register
 from ..tables import table
 
@@ -1325,14 +1325,7 @@ def q_corpus_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.monotonically_increasing_id().alias("rid"),
         F.split("text", " ").alias("t"),
     )
-    with_tri = toks.withColumn(
-        "tri",
-        F.expr(
-            "zip_with(zip_with(slice(t, 1, greatest(size(t)-2, 0)),"
-            " slice(t, 2, greatest(size(t)-2, 0)), (x, y) -> concat_ws(' ', x, y)),"
-            " slice(t, 3, greatest(size(t)-2, 0)), (x, y) -> concat_ws(' ', x, y))"
-        ),
-    )
+    with_tri = toks.withColumn("tri", word_trigrams("t", 0))
     gated = with_tri.filter(
         (F.col("n_chars").between(100, 500))
         & (F.size("t") >= 3)

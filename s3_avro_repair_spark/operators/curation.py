@@ -23,6 +23,7 @@ import math
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..exprs import band_join
 from ..plans.registry import register
 from ..tables import table
 from .extensions import _BAND_NBR, _banded_hamming_pairs
@@ -581,17 +582,12 @@ def dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     a = ranked.select(
         F.col("vec_id").alias("id_a"), F.col("v").alias("va"),
         "cid", F.col("rn").alias("rn_a"), F.col("n2").alias("na2"),
-    ).withColumn(
-        "bkt",
-        F.explode(
-            F.array(F.expr(f"rn_a DIV {nbr}"), F.expr(f"rn_a DIV {nbr} + 1"))
-        ),
     )
     b = ranked.select(
         F.col("vec_id").alias("id_b"), F.col("v").alias("vb"),
         F.col("cid").alias("cid_b"), F.col("rn").alias("rn_b"),
         F.col("n2").alias("nb2"),
-    ).withColumn("bkt", F.expr(f"rn_b DIV {nbr}"))
+    )
     dot = F.expr(
         "aggregate(zip_with(va, vb, (x, y) -> CAST(x AS BIGINT) * y),"
         " 0L, (a, x) -> a + x)"
@@ -600,13 +596,7 @@ def dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
         "dot / (SQRT(CAST(na2 AS DOUBLE)) * SQRT(CAST(nb2 AS DOUBLE)))"
     )
     return (
-        a.join(
-            b,
-            (F.col("cid") == F.col("cid_b"))
-            & (a["bkt"] == b["bkt"])
-            & (F.col("rn_b") - F.col("rn_a") >= 1)
-            & (F.col("rn_b") - F.col("rn_a") <= nbr),
-        )
+        band_join(a, b, F.col("cid") == F.col("cid_b"), nbr)
         .withColumn("dot", dot)
         # Zero-norm guard: finite inputs always quantize to norm
         # >= 127^2, but a nonfinite embedding can quantize to all

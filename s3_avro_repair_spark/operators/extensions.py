@@ -18,7 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..exprs import dsum
+from ..exprs import band_join, dsum, normalized_text
 from ..plans.registry import register
 from ..tables import table
 from .quantiles import exact_quantiles
@@ -486,14 +486,7 @@ def dedup_exact_normalized(spark: SparkSession, sf_dir: str) -> DataFrame:
     Window-min, not groupBy+collect: no per-group buffering however
     degenerate the pile (every doc normalizing to '' is ONE group)."""
     d = table(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
-    norm = F.trim(
-        F.regexp_replace(
-            F.regexp_replace(F.lower(F.col("text")), "[^a-z0-9 ]+", " "),
-            " +",
-            " ",
-        )
-    )
-    n = d.select("doc_id", F.md5(norm).alias("h"))
+    n = d.select("doc_id", F.md5(normalized_text("text")).alias("h"))
     k = n.select(
         "doc_id",
         F.min("doc_id").over(Window.partitionBy("h")).alias("keep_id"),
@@ -995,11 +988,6 @@ def _banded_hamming_pairs(stacked: DataFrame, ham: int) -> DataFrame:
         F.col("b0").alias("a0"), F.col("b1").alias("a1"),
         F.col("b2").alias("a2"), F.col("b3").alias("a3"),
         "band_no", "bv", F.col("rn").alias("rn_a"),
-    ).withColumn(
-        "bkt",
-        F.explode(
-            F.array(F.expr(f"rn_a DIV {nbr}"), F.expr(f"rn_a DIV {nbr} + 1"))
-        ),
     )
     b = ranked.select(
         F.col("doc_id").alias("id_b"),
@@ -1007,7 +995,7 @@ def _banded_hamming_pairs(stacked: DataFrame, ham: int) -> DataFrame:
         F.col("b2").alias("c2"), F.col("b3").alias("c3"),
         F.col("band_no").alias("band_b"), F.col("bv").alias("bv_b"),
         F.col("rn").alias("rn_b"),
-    ).withColumn("bkt", F.expr(f"rn_b DIV {nbr}"))
+    )
     dist = (
         F.bit_count(F.col("a0").bitwiseXOR(F.col("c0")))
         + F.bit_count(F.col("a1").bitwiseXOR(F.col("c1")))
@@ -1015,13 +1003,11 @@ def _banded_hamming_pairs(stacked: DataFrame, ham: int) -> DataFrame:
         + F.bit_count(F.col("a3").bitwiseXOR(F.col("c3")))
     )
     return (
-        a.join(
+        band_join(
+            a,
             b,
-            (F.col("band_no") == F.col("band_b"))
-            & (F.col("bv") == F.col("bv_b"))
-            & (a["bkt"] == b["bkt"])
-            & (F.col("rn_b") - F.col("rn_a") >= 1)
-            & (F.col("rn_b") - F.col("rn_a") <= nbr),
+            (F.col("band_no") == F.col("band_b")) & (F.col("bv") == F.col("bv_b")),
+            nbr,
         )
         .select("id_a", "id_b", dist.cast("long").alias("hamming"))
         .filter(F.col("hamming") <= ham)

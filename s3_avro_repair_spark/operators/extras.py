@@ -11,15 +11,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..exprs import cosine, norm
 from ..plans.registry import register
 from ..session import spread_partitions
 from ..tables import table
 from .quantiles import exact_quantiles
-
-_DOT = (
-    "aggregate(zip_with({a}, {b}, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)),"
-    " CAST(0 AS DOUBLE), (acc, v) -> acc + v)"
-)
 
 
 @register(
@@ -59,10 +55,9 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     rounded value only reported."""
     from .llm import banded_candidates
 
-    cos = F.expr(_DOT.format(a="ea", b="eb")) / (F.col("na") * F.col("nb"))
     return (
         banded_candidates(spark, sf_dir, band=50)
-        .withColumn("cos", cos)
+        .withColumn("cos", cosine())
         .filter(F.col("cos") >= 0.35)
         .select("id_a", "id_b", F.round("cos", 4).alias("cosine"))
     )
@@ -261,12 +256,12 @@ def sim_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
             ],
             "cell int, cvec array<double>",
         )
-    from .llm import _norm, query_panel
+    from .llm import query_panel
 
     q = query_panel(cells, spark, sf_dir).select(
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("ea"),
-        _norm("embedding").alias("na"),
+        norm("embedding").alias("na"),
     )
     if nprobe == 1:
         qcells = q.withColumn("cell", F.lit(0))
@@ -291,14 +286,13 @@ def sim_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("neighbor_id"),
         F.col("embedding").alias("eb"),
         "cell",
-        _norm("embedding").alias("nb"),
+        norm("embedding").alias("nb"),
     ).transform(spread_partitions)  # no-op once the scan has >= cores partitions
-    cos = F.expr(_DOT.format(a="ea", b="eb")) / (F.col("na") * F.col("nb"))
     scored = (
         F.broadcast(qcells)
         .join(cand, "cell")
         .filter(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("cos", cos)
+        .withColumn("cos", cosine())
     )
     w = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), "neighbor_id")
     return (

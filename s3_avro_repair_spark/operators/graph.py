@@ -16,6 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..exprs import both_ways, cosine
 from ..plans.registry import register
 from ..tables import table
 
@@ -56,30 +57,31 @@ def _pairs_cte(thr: float) -> str:
 _PAIRS_CTE = _pairs_cte(0.35)
 
 
-def _sim_pairs(spark: SparkSession, sf_dir: str, thr: float = 0.35) -> DataFrame:
-    """Undirected similarity edges (id_a < id_b), the Spark twin of
-    ``_pairs_cte``: label-blocked + id-banded candidate generation,
-    cosine >= thr — bounded pairs, never all-pairs. Shared by
-    graph_pagerank and graph_triangles.
-
-    The final ``distinct()`` makes the edge set a SIMPLE graph, the
-    twin of the oracle's UNION-distinct edges CTE: re-delivered
-    embedding rows (at-least-once ingest) would otherwise produce
-    multi-edges that inflate degrees, PageRank mass, and triangle
-    counts (production-shard find — n_tri 222 vs 1 on one node)."""
+def sim_edges(spark: SparkSession, sf_dir: str, thr: float) -> DataFrame:
+    """Undirected similarity pairs (id_a < id_b), the Spark twin of
+    ``_pairs_cte``'s pairs: label-blocked, id-banded (band 50)
+    candidates with cosine >= thr — bounded pairs, never all-pairs.
+    The one edge relation of the similarity-graph ops: graph_pagerank
+    and graph_triangles (through ``_sim_pairs``) and lifecycle's
+    dedup_clusters, dedup_canonical and dedup_clusters_bigstar. It
+    lives here because graph is the first of those modules the
+    registry loads; ``llm`` is imported lazily for the same reason."""
     from .llm import banded_candidates
 
-    dot = (
-        "aggregate(zip_with(ea, eb, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)),"
-        " CAST(0 AS DOUBLE), (acc, v) -> acc + v)"
-    )
-    cos = F.expr(dot) / (F.col("na") * F.col("nb"))
     return (
         banded_candidates(spark, sf_dir, band=50)
-        .filter(cos >= thr)
+        .filter(cosine() >= thr)
         .select("id_a", "id_b")
-        .distinct()
     )
+
+
+def _sim_pairs(spark: SparkSession, sf_dir: str, thr: float = 0.35) -> DataFrame:
+    """``sim_edges`` made a SIMPLE graph by ``distinct()``, the twin of
+    the oracle's UNION-distinct edges CTE: re-delivered embedding rows
+    (at-least-once ingest) would otherwise produce multi-edges that
+    inflate degrees, PageRank mass, and triangle counts
+    (production-shard find — n_tri 222 vs 1 on one node)."""
+    return sim_edges(spark, sf_dir, thr).distinct()
 
 
 def _pagerank_oracle() -> str:
@@ -124,12 +126,7 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-round join keys both sides on src, so a pre-partitioned edge
     table amortizes its shuffle across all rounds — the classic Pregel
     layout."""
-    pairs = _sim_pairs(spark, sf_dir)
-    bare = (
-        pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
-        .union(pairs.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst")))
-        .distinct()
-    )
+    bare = both_ways(_sim_pairs(spark, sf_dir))
     # Fold the out-degree INTO the checkpointed edge relation (r7):
     # the old layout checkpointed bare edges and joined a lazily
     # re-aggregated deg relation every round — 10 redundant

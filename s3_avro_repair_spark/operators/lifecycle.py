@@ -18,16 +18,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..exprs import dec2
+from ..exprs import both_ways, dec2
 from ..plans.registry import register
 from ..tables import table
-
-# Deterministic blocked cosine pair generation shared with
-# operators/extras.dedup_embedding_cosine (same candidate bound).
-_DOT = (
-    "aggregate(zip_with({a}, {b}, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)),"
-    " CAST(0 AS DOUBLE), (acc, v) -> acc + v)"
-)
+from .graph import sim_edges
 
 
 @register(
@@ -210,19 +204,8 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _cluster_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Shared kernel of dedup_clusters / dedup_canonical: (vec_id,
     cluster_id) for every node of the cosine-similarity graph."""
-    from .llm import banded_candidates
-
-    cos = F.expr(_DOT.format(a="ea", b="eb")) / (F.col("na") * F.col("nb"))
-    pairs = (
-        banded_candidates(spark, sf_dir, band=50)
-        .filter(cos >= 0.35)
-        .select("id_a", "id_b")
-    )
-    edges = (
-        pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
-        .union(pairs.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst")))
-        .distinct()
-        .localCheckpoint(eager=True)  # pair gen runs once, not per round
+    edges = both_ways(sim_edges(spark, sf_dir, 0.35)).localCheckpoint(
+        eager=True  # pair gen runs once, not per round
     )
     labels = (
         edges.select(F.col("src").alias("vec_id"))
@@ -415,15 +398,7 @@ def dedup_clusters_bigstar(spark: SparkSession, sf_dir: str) -> DataFrame:
     diameter — the property that matters when components are long
     chains (crawl mirrors, boilerplate families). Convergence probe is
     a 3-scalar aggregate (count + endpoint sums), never a collect."""
-    # pair generation identical to _cluster_labels
-    from .llm import banded_candidates
-
-    cos = F.expr(_DOT.format(a="ea", b="eb")) / (F.col("na") * F.col("nb"))
-    pairs = (
-        banded_candidates(spark, sf_dir, band=50)
-        .filter(cos >= 0.35)
-        .select("id_a", "id_b")
-    )
+    pairs = sim_edges(spark, sf_dir, 0.35)  # _cluster_labels' pairs
 
     def bidir(df: DataFrame) -> DataFrame:
         return (

@@ -18,9 +18,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..exprs import band_join, cosine, l2_distance, norm, word_trigrams
 from ..plans.registry import register
 from ..session import spread_partitions
-from ..tables import fixture_token, table
+from ..tables import id_stride, table
 
 # Retrieval query panel, shared by every similarity-search op
 # (sim_knn_topk, sim_range_search, sim_ann_lsh, extras.sim_ann_ivf) and
@@ -47,37 +48,16 @@ _QSTRIDE_SQL = (
     " FROM embeddings)"
 )
 
-# stride per fixture IDENTITY (tables.fixture_token: path, mtime, size),
-# computed once per process: every retrieval op and recall companion
-# calls query_panel (sim_ann_lsh twice), and the probe job —
-# metadata-cheap but a real Spark job — used to re-run per call
-# (ADVICE r6). Keying on the mtime token (not the bare path) means a
-# fixture regenerated in-place with a different id span rotates the
-# cache instead of serving a stale stride (ADVICE r7).
-_PANEL_STRIDE: dict[tuple[str, int, int], int] = {}
-
 
 def query_panel(df: DataFrame, spark: SparkSession, sf_dir: str) -> DataFrame:
     """Filter ``df`` (any frame carrying ``vec_id``) to the query
-    panel. The stride is computed EAGERLY from max(vec_id) of the BASE
-    embeddings table — one tiny column-scan job (parquet min/max
-    statistics make it near-metadata; memoized per ``sf_dir`` so it
-    runs once per process however many ops consume the panel) — and
-    folded in as a literal: a literal keeps the op's plan
-    byte-identical to the historical `% 100` one, while the lazy
-    alternative (1-row stride frame joined in) measurably perturbed
-    broadcast-size estimates and added shuffles to every consumer.
-    DuckDB mirror: ``vec_id % {_QSTRIDE_SQL} = 0``."""
-    token = fixture_token(sf_dir, "embeddings")
-    stride = _PANEL_STRIDE.get(token)
-    if stride is None:
-        max_id = (
-            table(spark, sf_dir, "embeddings")
-            .agg(F.max("vec_id").alias("m"))
-            .first()["m"]
-        )
-        stride = 100 * max(1, ((max_id or 0) + 1) // 3200)
-        _PANEL_STRIDE[token] = stride
+    panel: vec_ids divisible by the base embeddings table's
+    ``tables.id_stride`` (100 per 3200 ids of span), computed once per
+    fixture and folded in as a literal, so the op's plan is the
+    historical `% 100` one. Every retrieval op and recall companion
+    calls this (sim_ann_lsh twice); only the first call per fixture
+    runs the max() job. DuckDB mirror: ``vec_id % {_QSTRIDE_SQL} = 0``."""
+    stride = id_stride(spark, sf_dir, "embeddings", "vec_id", 100, 3200)
     return df.filter((F.col("vec_id") % F.lit(stride)) == 0)
 
 
@@ -144,21 +124,10 @@ def _shingled(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("text").isNotNull())  # MinHash of nothing is undefined
     )
     toks = d.withColumn("tokens", F.split("text", " "))
-    # Index-free shingles (zip_with over shifted slices): an indexed
-    # lambda dereferencing `tokens` re-runs the substituted split per
-    # element when the optimizer collapses the alias — O(tokens^2).
-    # zip_with pads the shorter slice with null and concat_ws skips
-    # nulls, reproducing the old <3-token edge cases exactly.
-    return toks.withColumn(
-        "shingles",
-        F.expr(
-            "zip_with(zip_with(slice(tokens, 1, greatest(size(tokens)-2, 1)),"
-            " slice(tokens, 2, greatest(size(tokens)-2, 1)),"
-            " (x, y) -> concat_ws(' ', x, y)),"
-            " slice(tokens, 3, greatest(size(tokens)-2, 1)),"
-            " (x, y) -> concat_ws(' ', x, y))"
-        ),
-    ).select("doc_id", "shingles")
+    # floor 1: a 1- or 2-token doc keeps one padded shingle.
+    return toks.withColumn("shingles", word_trigrams("tokens", 1)).select(
+        "doc_id", "shingles"
+    )
 
 
 def _minhash_sig(shingled: DataFrame) -> DataFrame:
@@ -239,26 +208,19 @@ def _near_pairs(sig: DataFrame) -> DataFrame:
         "band",
         "bkey",
         F.col("rn").alias("rn_a"),
-    ).withColumn(
-        "bkt",
-        F.explode(
-            F.array(F.expr(f"rn_a DIV {nbr}"), F.expr(f"rn_a DIV {nbr} + 1"))
-        ),
     )
     b = ranked.select(
         F.col("doc_id").alias("id_b"),
         F.col("band").alias("band_b"),
         F.col("bkey").alias("bkey_b"),
         F.col("rn").alias("rn_b"),
-    ).withColumn("bkt", F.expr(f"rn_b DIV {nbr}"))
+    )
     cand = (
-        a.join(
+        band_join(
+            a,
             b,
-            (F.col("band") == F.col("band_b"))
-            & (F.col("bkey") == F.col("bkey_b"))
-            & (a["bkt"] == b["bkt"])
-            & (F.col("rn_b") - F.col("rn_a") >= 1)
-            & (F.col("rn_b") - F.col("rn_a") <= nbr),
+            (F.col("band") == F.col("band_b")) & (F.col("bkey") == F.col("bkey_b")),
+            nbr,
         )
         # hash-rank order is NOT id order: normalize to id_a < id_b
         .select(
@@ -431,14 +393,7 @@ def _ngram_candidates(
                 "doc_id",
                 "lang",
                 "source",
-                F.expr(
-                    "array_distinct(zip_with(zip_with("
-                    " slice(tokens, 1, greatest(size(tokens)-2, 0)),"
-                    " slice(tokens, 2, greatest(size(tokens)-2, 0)),"
-                    " (x, y) -> concat_ws(' ', x, y)),"
-                    " slice(tokens, 3, greatest(size(tokens)-2, 0)),"
-                    " (x, y) -> concat_ws(' ', x, y)))"
-                ).alias("shingles"),
+                F.array_distinct(word_trigrams("tokens", 0)).alias("shingles"),
             )
             .withColumn("n", F.size("shingles"))
             # Materialization barrier: sh_arr feeds the rare-shingle
@@ -725,11 +680,6 @@ def text_collocation(spark: SparkSession, sf_dir: str) -> DataFrame:
 # similarity search
 # ---------------------------------------------------------------------------
 
-_DOT = (
-    "aggregate(zip_with({a}, {b}, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)),"
-    " CAST(0 AS DOUBLE), (acc, v) -> acc + v)"
-)
-
 _COSINE_SQL_CTE = """
     WITH pairs AS (
       SELECT a.vec_id AS id_a, b.vec_id AS id_b,
@@ -754,19 +704,6 @@ _COSINE_SQL_CTE = """
     SELECT id_a, id_b, ROUND(dot / (SQRT(na) * SQRT(nb)), 4) + 0 AS cosine
     FROM dots
 """
-
-
-def _norm(vec_col: str):
-    """Per-row vector norm, computed ONCE before pair generation.
-
-    The HOF lambdas (zip_with/aggregate) are interpreted per element,
-    not codegen'd, so recomputing both norms inside every candidate
-    pair costs 3 array passes per pair instead of 1. Precomputing
-    ``sqrt(dot(v, v))`` per row is bit-identical (same expression tree,
-    same summation order, evaluated once) and cuts pair arithmetic 3x —
-    at 100 TB you'd persist the norm (or pre-normalized vectors) as a
-    table column at ingest."""
-    return F.sqrt(F.expr(_DOT.format(a=vec_col, b=vec_col)))
 
 
 def banded_candidates(spark: SparkSession, sf_dir: str, band: int) -> DataFrame:
@@ -795,7 +732,7 @@ def banded_candidates(spark: SparkSession, sf_dir: str, band: int) -> DataFrame:
     join_range_bucketed; the band predicate is re-applied as a
     residual, so the pair set is IDENTICAL to the label-block + filter
     formulation and no oracle changes."""
-    en = table(spark, sf_dir, "embeddings").withColumn("nrm", _norm("embedding"))
+    en = table(spark, sf_dir, "embeddings").withColumn("nrm", norm("embedding"))
     a = (
         en.select(
             F.col("vec_id").alias("id_a"),
@@ -843,9 +780,8 @@ def sim_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     unrelated vectors whose cosine rounds to +/-0.0 — ts_zscore's
     rule)."""
     pairs = banded_candidates(spark, sf_dir, band=20)
-    cos = F.expr(_DOT.format(a="ea", b="eb")) / (F.col("na") * F.col("nb"))
     return pairs.select(
-        "id_a", "id_b", (F.round(cos, 4) + F.lit(0)).alias("cosine")
+        "id_a", "id_b", (F.round(cosine(), 4) + F.lit(0)).alias("cosine")
     )
 
 
@@ -888,7 +824,7 @@ def _panel_cosines(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast query side joined to one spread scan of the corpus, no
     shuffle of the big side. Shared by sim_knn_topk and
     sim_range_search."""
-    en = table(spark, sf_dir, "embeddings").withColumn("nrm", _norm("embedding"))
+    en = table(spark, sf_dir, "embeddings").withColumn("nrm", norm("embedding"))
     q = query_panel(en, spark, sf_dir).select(
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("ea"),
@@ -900,8 +836,7 @@ def _panel_cosines(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("nrm").alias("nb"),
     ).transform(spread_partitions)  # no-op once the scan has >= cores partitions
     pairs = F.broadcast(q).join(c, F.col("neighbor_id") != F.col("query_id"))
-    cos = F.expr(_DOT.format(a="ea", b="eb")) / (F.col("na") * F.col("nb"))
-    return pairs.select("query_id", "neighbor_id", cos.alias("cos"))
+    return pairs.select("query_id", "neighbor_id", cosine().alias("cos"))
 
 
 @register("sim_knn_topk", group="L", oracle=_KNN_SQL)
@@ -1030,18 +965,10 @@ def sim_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     ne = sig.select(
         F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("eb")
     )
-    dist = F.sqrt(
-        F.expr(
-            "aggregate(zip_with(ea, eb,"
-            " (x, y) -> (cast(x AS double) - cast(y AS double))"
-            "          * (cast(x AS double) - cast(y AS double))),"
-            " cast(0 AS double), (a, x) -> a + x)"
-        )
-    )
     scored = (
         cand.join(F.broadcast(qe), "query_id")
         .join(ne, "neighbor_id")
-        .select("query_id", "neighbor_id", dist.alias("d"))
+        .select("query_id", "neighbor_id", l2_distance("ea", "eb").alias("d"))
     )
     w = Window.partitionBy("query_id").orderBy("d", "neighbor_id")
     return (

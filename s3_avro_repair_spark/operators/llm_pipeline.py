@@ -12,8 +12,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..exprs import word_trigrams
 from ..plans.registry import register
-from ..tables import fixture_token, table
+from ..tables import id_stride, table
 
 # 16-bit key-hash bucket, identical on both engines: the first 4 hex
 # chars of md5 parsed as an integer. Spark's conv() and DuckDB's
@@ -62,10 +63,10 @@ _NGRAMS_DUCK = """
 
 
 # The eval-set stand-in is a BOUNDED corpus slice: stride
-# 97 * max(1, (max_doc_id + 1) // 5000) — the historical flat % 97 on
-# the dense fixture id space below 5001 docs (outputs bit-identical),
-# capped at ~51-103 docs as the corpus grows. Derived from the ID SPAN
-# (r7, was count-derived, same fix as llm.query_panel): the span bound
+# 97 * max(1, (max_doc_id + 1) // 5000) (tables.id_stride) — the
+# historical flat % 97 on the dense fixture id space below 5001 docs
+# (outputs bit-identical), capped at ~51-104 docs as the corpus grows.
+# Derived from the ID SPAN (r7, was count-derived): the span bound
 # holds for sparse/aligned id spaces where a count-derived stride
 # reverts to corpus-proportional. A real decontamination run's
 # benchmark side is a FIXED external table (the eval suites), not 1%
@@ -73,25 +74,10 @@ _NGRAMS_DUCK = """
 # unbounded (100 TB corpus -> ~1 TB "benchmark" broadcast) and the r6
 # 100x census measured the semi-join's matched rows growing 1112x from
 # exactly that. Same contract as llm.query_panel.
-_BENCH_STRIDE_DUCK = (
+_DSTRIDE_SQL = (
     "(97 * (SELECT GREATEST(1, (COALESCE(MAX(doc_id), 0) + 1) // 5000)"
     " FROM documents))"
 )
-
-# Keyed on the fixture's (path, mtime, size) token — not the bare sf_dir —
-# so a fixture regenerated in-place with a different id span rotates
-# the cache instead of serving a stale stride (ADVICE r7).
-_BENCH_STRIDE: dict[tuple[str, int, int], int] = {}
-
-
-def _bench_stride(d, sf_dir: str) -> int:
-    token = fixture_token(sf_dir, "documents")
-    stride = _BENCH_STRIDE.get(token)
-    if stride is None:
-        max_id = d.agg(F.max("doc_id").alias("m")).first()["m"]
-        stride = 97 * max(1, ((max_id or 0) + 1) // 5000)
-        _BENCH_STRIDE[token] = stride
-    return stride
 
 
 @register(
@@ -99,21 +85,21 @@ def _bench_stride(d, sf_dir: str) -> int:
     group="L",
     oracle=f"""
     WITH g AS ({_NGRAMS_DUCK}),
-    bench AS (SELECT DISTINCT ng FROM g WHERE doc_id % {_BENCH_STRIDE_DUCK} = 0),
+    bench AS (SELECT DISTINCT ng FROM g WHERE doc_id % {_DSTRIDE_SQL} = 0),
     contaminated AS (
       SELECT DISTINCT g.doc_id FROM g JOIN bench USING (ng)
-      WHERE g.doc_id % {_BENCH_STRIDE_DUCK} <> 0
+      WHERE g.doc_id % {_DSTRIDE_SQL} <> 0
     )
     SELECT d.doc_id, d.lang FROM documents d
     ANTI JOIN contaminated c ON d.doc_id = c.doc_id
-    WHERE d.doc_id % {_BENCH_STRIDE_DUCK} <> 0
+    WHERE d.doc_id % {_DSTRIDE_SQL} <> 0
     """,
 )
 def decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Benchmark decontamination: drop every training document that
     shares an n-gram (trigram here; n is a dial) with the held-out
     eval set (a BOUNDED doc_id-stride slice stands in for it — see
-    _BENCH_STRIDE_DUCK; real benchmarks are fixed-size, so the
+    _DSTRIDE_SQL; real benchmarks are fixed-size, so the
     stand-in must be too or the broadcast below is unbounded). This is the
     standard guard against test-set leakage into a pretraining corpus.
 
@@ -126,17 +112,11 @@ def decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     set) reach the final broadcast anti join, so corpus rows are never
     shuffled at all."""
     d = table(spark, sf_dir, "documents")
-    # Eager literal stride, the query_panel move: one tiny max() job
-    # (parquet column stats), memoized per sf_dir, and the plan stays
+    # Eager literal stride, the query_panel move: the plan stays
     # byte-identical to the flat % 97.
-    stride = _bench_stride(d, sf_dir)
+    stride = id_stride(spark, sf_dir, "documents", "doc_id", 97, 5000)
     toks = d.select("doc_id", F.split("text", " ").alias("tk"))
-    grams = F.expr(
-        "zip_with(zip_with(slice(tk, 1, greatest(size(tk)-2, 0)),"
-        " slice(tk, 2, greatest(size(tk)-2, 0)), (x, y) -> concat_ws(' ', x, y)),"
-        " slice(tk, 3, greatest(size(tk)-2, 0)), (x, y) -> concat_ws(' ', x, y))"
-    )
-    g = toks.select("doc_id", F.explode(grams).alias("ng")).select(
+    g = toks.select("doc_id", F.explode(word_trigrams("tk", 0)).alias("ng")).select(
         "doc_id", F.md5("ng").alias("h")
     )
     bench = g.filter(F.col("doc_id") % stride == 0).select("h").distinct()

@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
+from ..exprs import band_join, normalized_text, word_trigrams
 from ..plans.registry import register
 from ..tables import table
 
@@ -346,13 +347,7 @@ def text_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     stages agree on tokenization. Hash-checked against DuckDB's regex
     engine — the character-class semantics must agree exactly."""
     d = table(spark, sf_dir, "documents")
-    norm = F.trim(
-        F.regexp_replace(
-            F.regexp_replace(F.lower(F.col("text")), "[^a-z0-9 ]+", " "),
-            " +",
-            " ",
-        )
-    )
+    norm = normalized_text("text")
     return d.select(
         "doc_id",
         norm.alias("norm_text"),
@@ -492,7 +487,7 @@ def dedup_levenshtein(spark: SparkSession, sf_dir: str) -> DataFrame:
     the block join is a SORTED NEIGHBORHOOD: members rank by (head,
     doc_id) within each block and only pairs within 16 rank positions
     meet, via the rank-bucket two-sided explode (`rn DIV 16` in the
-    equi-join key, same construction as llm.py::banded_candidates), so
+    equi-join key, exprs.band_join), so
     joined rows are O(16·H) per block — linear in the corpus. Lexical
     rank adjacency keeps recall: near-identical heads sort adjacent,
     and a >16-deep pile of mutual near-dups still chains transitively
@@ -548,11 +543,6 @@ def dedup_levenshtein(spark: SparkSession, sf_dir: str) -> DataFrame:
         "band",
         F.col("head").alias("head_a"),
         F.col("rn").alias("rn_a"),
-    ).withColumn(
-        "bkt",
-        F.explode(
-            F.array(F.expr(f"rn_a DIV {nbr}"), F.expr(f"rn_a DIV {nbr} + 1"))
-        ),
     )
     b = ranked.select(
         F.col("doc_id").alias("did_b"),
@@ -561,7 +551,7 @@ def dedup_levenshtein(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("band").alias("band_b"),
         F.col("head").alias("head_b"),
         F.col("rn").alias("rn_b"),
-    ).withColumn("bkt", F.expr(f"rn_b DIV {nbr}"))
+    )
     # Equal-head fast path: a boilerplate pile is mostly IDENTICAL
     # heads, and Spark's levenshtein is O(len^2) even for equal inputs
     # — the string equality check is O(len) and settles the dominant
@@ -570,14 +560,13 @@ def dedup_levenshtein(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.levenshtein(F.col("head_a"), F.col("head_b"))
     )
     return (
-        a.join(
+        band_join(
+            a,
             b,
             (F.col("lang") == F.col("lang_b"))
             & (F.col("blk") == F.col("blk_b"))
-            & (F.col("band") == F.col("band_b"))
-            & (a["bkt"] == b["bkt"])
-            & (F.col("rn_b") - F.col("rn_a") >= 1)
-            & (F.col("rn_b") - F.col("rn_a") <= nbr),
+            & (F.col("band") == F.col("band_b")),
+            nbr,
         )
         .filter(dist <= 8)
         .select(
@@ -639,12 +628,7 @@ def text_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     engines — bit-identical, no rounding fudge."""
     d = table(spark, sf_dir, "documents")
     toks = d.select("doc_id", F.split("text", " ").alias("t"))
-    tri = F.expr(
-        "zip_with(zip_with(slice(t, 1, greatest(size(t)-2, 0)),"
-        " slice(t, 2, greatest(size(t)-2, 0)), (x, y) -> concat_ws(' ', x, y)),"
-        " slice(t, 3, greatest(size(t)-2, 0)), (x, y) -> concat_ws(' ', x, y))"
-    )
-    out = toks.select("doc_id", tri.alias("tri"))
+    out = toks.select("doc_id", word_trigrams("t", 0).alias("tri"))
     n_tri = F.size("tri").cast("bigint")
     dup = (F.size("tri") - F.size(F.array_distinct("tri"))).cast("bigint")
     return out.select(

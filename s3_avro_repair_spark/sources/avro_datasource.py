@@ -62,21 +62,13 @@ from pyspark.sql.datasource import (
 
 from .avro_jobs import (
     _BATCH_ROWS,
+    AVRO_TO_SPARK,
+    SPARK_TO_AVRO,
     _list_container_files_sized,
     _pa_type,
     arrow_batches,
     split_units,
 )
-
-_PRIMITIVE_DDL = {
-    "boolean": "boolean",
-    "int": "int",
-    "long": "long",
-    "float": "float",
-    "double": "double",
-    "bytes": "binary",
-    "string": "string",
-}
 
 
 def _field_ddl(ftype) -> str:
@@ -88,7 +80,7 @@ def _field_ddl(ftype) -> str:
     reader schema — inference refuses rather than guessing."""
     if isinstance(ftype, str):
         try:
-            return _PRIMITIVE_DDL[ftype]
+            return AVRO_TO_SPARK[ftype]
         except KeyError:
             raise ValueError(f"pass an explicit schema for type {ftype!r}")
     if isinstance(ftype, list):  # union: nullable T is the only shape
@@ -96,8 +88,8 @@ def _field_ddl(ftype) -> str:
         if len(branches) == 1:
             return _field_ddl(branches[0])
         raise ValueError("pass an explicit schema for multi-branch unions")
-    if isinstance(ftype, dict) and ftype.get("type") in _PRIMITIVE_DDL:
-        return _PRIMITIVE_DDL[ftype["type"]]  # logical type -> carrier
+    if isinstance(ftype, dict) and ftype.get("type") in AVRO_TO_SPARK:
+        return AVRO_TO_SPARK[ftype["type"]]  # logical type -> carrier
     raise ValueError(f"pass an explicit schema for type {ftype!r}")
 
 
@@ -270,17 +262,6 @@ class AvroOCFDataSource(DataSource):
 # ---------------------------------------------------------------------------
 # write path
 
-_SPARK_TO_AVRO = {
-    "boolean": "boolean",
-    "integer": "int",
-    "long": "long",
-    "float": "float",
-    "double": "double",
-    "binary": "bytes",
-    "string": "string",
-}
-
-
 def _avro_schema_for(struct) -> dict:
     """Spark StructType -> Avro record schema (write-side inverse of
     _field_ddl): primitives map 1:1, nullable fields become
@@ -290,7 +271,7 @@ def _avro_schema_for(struct) -> dict:
     for f in struct.fields:
         t = f.dataType.typeName()
         try:
-            avro_t = _SPARK_TO_AVRO[t]
+            avro_t = SPARK_TO_AVRO[t]
         except KeyError:
             raise ValueError(
                 f"avro_ocf write: unsupported column type {t!r}; use "

@@ -153,6 +153,23 @@ def _spark_hidden(name: str) -> bool:
     return exclude and not keep
 
 
+# The Avro primitives both Avro paths carry, one row each: (Avro type,
+# Spark DataType.typeName(), which is also its DDL name, pyarrow type
+# constructor). The read path maps Avro to DDL (schema inference) and
+# Spark to Arrow (task batches); the write path maps Spark to Avro.
+PRIMITIVES = (
+    ("boolean", "boolean", "bool_"),
+    ("int", "integer", "int32"),
+    ("long", "long", "int64"),
+    ("float", "float", "float32"),
+    ("double", "double", "float64"),
+    ("bytes", "binary", "binary"),
+    ("string", "string", "string"),
+)
+AVRO_TO_SPARK = {avro: spark for avro, spark, _ in PRIMITIVES}
+SPARK_TO_AVRO = {spark: avro for avro, spark, _ in PRIMITIVES}
+
+
 def _pa_type(spark_type):
     """Spark DataType -> exact pyarrow type. The Arrow batch MUST carry
     the type Spark's vectorized accessor expects — pandas-default int64
@@ -160,19 +177,11 @@ def _pa_type(spark_type):
     schema-drift arm's narrowed generation found exactly that)."""
     import pyarrow as pa
 
-    m = {
-        "boolean": pa.bool_(),
-        "integer": pa.int32(),
-        "long": pa.int64(),
-        "float": pa.float32(),
-        "double": pa.float64(),
-        "binary": pa.binary(),
-        "string": pa.string(),
-    }
     t = spark_type.typeName()
-    if t not in m:
-        raise ValueError(f"unsupported Avro read column type {t!r}")
-    return m[t]
+    for _, spark, arrow in PRIMITIVES:
+        if spark == t:
+            return getattr(pa, arrow)()
+    raise ValueError(f"unsupported Avro read column type {t!r}")
 
 
 def arrow_batches(rows, fields, batch_rows: int):

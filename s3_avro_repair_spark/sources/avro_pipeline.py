@@ -181,8 +181,6 @@ def scratch_dir(name: str) -> str:
     emptied on each call — sinks and round-trip ops write here instead
     of leaking a fresh ``mkdtemp`` per invocation under repeated
     bench/pytest runs."""
-    import shutil
-
     path = os.path.join(_CACHE_ROOT, ".scratch", name)
     shutil.rmtree(path, ignore_errors=True)
     os.makedirs(path, exist_ok=True)

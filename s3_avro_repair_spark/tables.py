@@ -43,11 +43,6 @@ TABLE_NAMES = [
     "embeddings",
 ]
 
-# Dimension tables small enough to broadcast at ANY scale factor —
-# TPC-H dims grow sublinearly; region/nation are constant-size.
-BROADCAST_DIMS = {"region", "nation", "supplier"}
-
-
 # Session confs whose values change the schema Spark infers from
 # Parquet footers; each remembered schema is keyed by their values too.
 _INFER_CONFS = (
@@ -60,7 +55,7 @@ _INFER_CONFS = (
 )
 
 # Inferred schema per (fixture token, inference confs), for the life
-# of the process (the ``llm.query_panel`` stride memo idiom).
+# of the process (the ``id_stride`` memo idiom).
 _SCHEMAS: dict[tuple, StructType] = {}
 
 
@@ -111,6 +106,41 @@ def schema_key(spark: SparkSession, sf_dir: str, name: str) -> tuple | None:
     if not token[1]:
         return None
     return token + tuple(spark.conf.get(k) for k in _INFER_CONFS)
+
+
+def span_stride(max_id: int | None, base: int, per: int) -> int:
+    """``base * max(1, (max_id + 1) // per)``: the stride of a panel of
+    the ids divisible by it. Below ``per`` ids of span it is ``base``
+    (the historical flat stride of the dense fixture id spaces); past
+    it the panel is capped, because the multiples of the stride in
+    ``[0, max_id]`` number at most ``(2 * per - 1) // base + 1`` for
+    ANY id distribution, sparse or stride-aligned spaces included: the
+    bound is over the id span, not the row count."""
+    return base * max(1, ((max_id or 0) + 1) // per)
+
+
+# Stride per (fixture token, column, base, per), for the life of the
+# process: one tiny max() job per fixture, however many ops consume
+# the panel. Keyed on the file token, not the bare sf_dir, so a fixture
+# regenerated in place with a different id span gets a new stride.
+_STRIDES: dict[tuple, int] = {}
+
+
+def id_stride(
+    spark: SparkSession, sf_dir: str, name: str, col: str, base: int, per: int
+) -> int:
+    """``span_stride`` of table ``name``'s ``max(col)``, computed
+    eagerly (one column-scan job, near-metadata under Parquet min/max
+    statistics) and remembered per ``fixture_token``. Callers fold it
+    into their plans as a literal: a literal keeps the op's plan the
+    flat-stride one, where a lazily joined 1-row stride frame perturbed
+    broadcast-size estimates and added shuffles."""
+    key = (fixture_token(sf_dir, name), col, base, per)
+    stride = _STRIDES.get(key)
+    if stride is None:
+        max_id = table(spark, sf_dir, name).agg(F.max(col).alias("m")).first()["m"]
+        stride = _STRIDES[key] = span_stride(max_id, base, per)
+    return stride
 
 
 def fixture_token(sf_dir: str, name: str) -> tuple[str, int, int]:

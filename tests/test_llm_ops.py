@@ -9,6 +9,7 @@ import pytest
 
 from s3_avro_repair_spark.operators.text_quality import simhash64
 from s3_avro_repair_spark.plans.registry import load_all
+from s3_avro_repair_spark.tables import span_stride
 
 _OPS = load_all()
 
@@ -197,33 +198,36 @@ from hypothesis import strategies as st
     align=st.integers(min_value=1, max_value=10**6),
 )
 def test_query_panel_stride_bounds(max_id, align):
-    """The retrieval query-panel contract (llm.query_panel): stride
-    100 * max(1, (max_id + 1) // 3200) keeps the panel BOUNDED — at
-    most 64 queries for ANY id distribution, including the sparse /
-    stride-ALIGNED spaces (all vec_ids multiples of some k) where the
-    old count-derived stride reverted to corpus-proportional (ADVICE
-    r6). The bound is a span argument: the panel is a subset of the
-    multiples of stride inside [0, max_id], of which there are at most
-    floor(max_id / stride) + 1 <= 64 regardless of how many or which
-    ids exist. On a dense space max_id + 1 == n, so the fixture
-    behavior (flat 100 below 3200 vectors, >= 32 queries past it when
-    dense) is unchanged."""
+    """The bounded-panel stride contract (tables.span_stride, the
+    stride of llm.query_panel and decontaminate's bench slice): stride
+    base * max(1, (max_id + 1) // per) keeps the panel BOUNDED for ANY
+    id distribution, including the sparse / stride-ALIGNED spaces (all
+    ids multiples of some k) where the old count-derived stride
+    reverted to corpus-proportional (ADVICE r6). The bound is a span
+    argument: the panel is a subset of the multiples of stride inside
+    [0, max_id], of which there are at most floor(max_id / stride) + 1
+    regardless of how many or which ids exist: 64 for query_panel
+    (100, 3200), 104 for decontaminate (97, 5000). On a dense space
+    max_id + 1 == n, so the fixture behavior (the flat base below per
+    ids, >= per // base panel members past it when dense) is
+    unchanged."""
     span = max_id + 1
-    stride = 100 * max(1, span // 3200)
-    # worst case over EVERY id distribution with this max: all
-    # multiples of stride in [0, max_id] present (alignment `align`
-    # can only thin the panel further, never grow it)
-    panel = max(0, span) // stride + (1 if max_id >= 0 else 0)
-    assert panel <= 64
-    aligned_panel = sum(
-        1 for v in range(0, max(0, max_id) + 1, align * stride) if v % stride == 0
-    ) if 0 <= max_id <= 10**6 else None
-    if aligned_panel is not None:
-        assert aligned_panel <= panel
-    if 0 <= span < 3200:
-        assert stride == 100
-    if span >= 3200:  # dense case keeps the old floor
-        assert span // stride >= 32
+    for base, per, cap in ((100, 3200, 64), (97, 5000, 104)):
+        stride = span_stride(max_id, base, per)
+        # worst case over EVERY id distribution with this max: all
+        # multiples of stride in [0, max_id] present (alignment `align`
+        # can only thin the panel further, never grow it)
+        panel = max(0, span) // stride + (1 if max_id >= 0 else 0)
+        assert panel <= cap
+        aligned_panel = sum(
+            1 for v in range(0, max(0, max_id) + 1, align * stride) if v % stride == 0
+        ) if 0 <= max_id <= 10**6 else None
+        if aligned_panel is not None:
+            assert aligned_panel <= panel
+        if 0 <= span < per:
+            assert stride == base
+        if span >= per:  # dense case keeps the old floor
+            assert span // stride >= per // base
 
 
 @st.composite

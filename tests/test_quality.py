@@ -607,7 +607,7 @@ def test_salted_join_carries_salt_in_join_keys(spark, sf_dir):
 def test_decontaminate_bench_side_stays_broadcast(spark, sf_dir):
     """decontaminate's 100 TB posture is 'corpus rows are never
     shuffled': the bench n-gram set (bounded stand-in slice — see
-    _BENCH_STRIDE_DUCK) must reach the semi join as a BROADCAST, and
+    _DSTRIDE_SQL) must reach the semi join as a BROADCAST, and
     the contaminated-ids anti join likewise — a plan where either
     falls back to a shuffle join means the bench side stopped being
     dim-sized."""
