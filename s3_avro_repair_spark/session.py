@@ -6,6 +6,13 @@ global AWS client (``/root/reference/src/app.ts:6-7``,
 S3A credentials come from the Hadoop credential chain, and every knob
 that matters at cluster scale (AQE, adaptive skew joins, Arrow) is on by
 default.
+
+The generated-code cache (``spark.sql.codegen.cache.maxEntries``) is a
+static conf of a JVM-wide object: it takes effect only when
+``get_session`` creates the JVM's first SparkContext (the CLI, the
+tests, ``bench.py``, the benchmark and ``tools/``). A session built
+without ``get_session`` keeps Spark's default of 100 entries, and so
+recompiles every warm pass of a working set larger than that.
 """
 
 from __future__ import annotations
@@ -14,6 +21,17 @@ import os
 import site
 
 from pyspark.sql import SparkSession
+
+# Spark's LRU cache of the classes Janino compiles is 100 entries by
+# default. One pass of the benchmark's analytics_mix ops needs about 186
+# classes, so at 100 every warm pass compiled all of them again (about
+# 1 s of compile time a pass on 4 cores, and each recompiled class starts
+# over in the JVM's interpreter). Sized as the smallest power of two that
+# holds one pass of the whole registry: 2,503 distinct classes at sf0.001
+# (``tools/codegen_census.py`` over every registered op). The cap bounds
+# the metaspace the cached classes hold: about 65 KB a class, which took
+# 71 to 233 MB over one registry pass.
+CODEGEN_CACHE_ENTRIES = 4096
 
 
 def get_session(
@@ -51,6 +69,8 @@ def get_session(
         # events.parquet carries TIMESTAMP(NANOS), which the vectorized
         # reader rejects; read raw nanos (tables.py truncates to µs).
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+        # Static: see the module doc.
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
     )
     if _workers_import_package():
         # Python workers keep Spark's zip directories across tasks

@@ -455,7 +455,8 @@ def write_avro_dir(
         yield pa.record_batch({"path": [path], "n_records": [n]})
 
     report = df.mapInArrow(write, "path string, n_records long")
-    return report.count()  # materialize -> files committed
+    # One job: a count() under AQE adds a final one-row aggregate job.
+    return len(report.collect())
 
 
 @contextlib.contextmanager

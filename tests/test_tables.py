@@ -224,7 +224,7 @@ _HELPER_BUILD_JOBS = {
     "scan_orc": 0,
     "scan_parquet_partitioned": 0,
     "join_dpp": 0,
-    "sink_avro": 2,
+    "sink_avro": 1,
 }
 
 

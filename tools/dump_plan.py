@@ -7,11 +7,15 @@ files the optimization rounds commit under plans/rN/.
 
 Plans are written normalized: expression ids are renumbered in order
 of first appearance (``#0``, ``#1``, ...; a long's ``L`` suffix
-stays), ``plan_id=`` values and ``RDD[n]`` ids become ``plan_id=_`` and
-``RDD[_]``, and the checkout's own path becomes ``<repo>``. So dumps
-of the same ops from two checkouts compare with ``diff -r``: a
-difference is a difference of plan shape, not of the order in which
-the process minted ids.
+stays), and so are PySpark's lambda variables (``lambda x_20`` becomes
+``lambda x_0``). ``plan_id=`` values and ``RDD[n]`` ids become
+``plan_id=_`` and ``RDD[_]``, an RDD's call-site location
+(``at <unknown>:0`` for a process's first op, ``at
+NativeMethodAccessorImpl.java:0`` later) becomes ``at _``, and the
+checkout's own path becomes ``<repo>``. So dumps of the same ops from
+two checkouts, or made with different op lists, compare with ``diff
+-r``: a difference is a difference of plan shape, not of the order in
+which the process minted ids.
 
 SPARK_GRAFT_DUMP_NOCKPT=1 makes localCheckpoint a no-op for the dump
 ONLY, so the FULL pipeline (normally truncated to `Scan ExistingRDD`
@@ -35,7 +39,14 @@ def normalize(plan: str) -> str:
     plan = re.sub(
         r"#(\d+)", lambda m: f"#{ids.setdefault(m.group(1), len(ids))}", plan
     )
+    lambdas: dict[str, int] = {}
+    plan = re.sub(
+        r"lambda (\w+)_(\d+)\b",
+        lambda m: f"lambda {m.group(1)}_{lambdas.setdefault(m.group(0), len(lambdas))}",
+        plan,
+    )
     plan = re.sub(r"plan_id=\d+", "plan_id=_", plan)
+    plan = re.sub(r"RDD\[\d+\]( at \w+) at \S+:\d+", r"RDD[_]\1 at _", plan)
     plan = re.sub(r"RDD\[\d+\]", "RDD[_]", plan)
     return plan.replace(_REPO, "<repo>")
 
